@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: headline queries on SPARK_GRAFT_SF_DIR, one clean JSON
@@ -14,7 +16,11 @@ import java.nio.file.{Files, Paths}
   *    keeping the per-query minimum;
   *  - fixed alphabetical query order, so rounds are comparable;
   *  - stdout stays clean (log4j2 → stderr, sbt OutputStrategy pass-through);
-  *    the JSON is also written to target/bench.json as a durable artifact.
+  *    the JSON is also written to target/bench.json as a durable artifact;
+  *  - per entry, the full line also carries the generated classes compiled
+  *    and their Janino compile time (`codegen`), split into warmup and timed
+  *    passes: a warm entry that still compiles is missing Spark's codegen
+  *    class cache (sized in [[Sessions]]).
   */
 object Bench {
 
@@ -207,6 +213,33 @@ object Bench {
     f"""{"metric":"total","value":$total%.4f,"unit":"sec","sf":"$sf","n":${results.size},"cpus":$cpus,"master":"${jsonEscape(master)}","queries":$qs,"failed":$failedJson,"failed_n":${failedSeq.size},"loadavg_before":$loadBefore%.2f,"loadavg_after":$loadAfter%.2f,"passes":3,"forked":$forked$pairedPart,"detail":"target/bench.json"}"""
   }
 
+  /** SPARK_GRAFT_CPUS as a positive core count (default 32). Parsed once,
+    * before any work: a malformed value must fail the run at once, not
+    * after every forked family has run and the summary line is lost. */
+  private[graft] def parseCpus(raw: Option[String]): Either[String, Int] =
+    raw.fold[Either[String, Int]](Right(32)) { s =>
+      s.trim.toIntOption.filter(_ > 0)
+        .toRight(s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'")
+    }
+
+  /** JVM-wide codegen counters: generated classes compiled so far, and
+    * their total Janino compile time in ns. A codegen class-cache hit
+    * moves neither. */
+  private def codegenCounters(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+
+  /** Legend of each per-entry `codegen` array in the full JSON line. */
+  private val codegenFields =
+    """"codegen_fields":["warmup_compiles","warmup_compile_ms","timed_compiles","timed_compile_ms"]"""
+
+  /** The per-entry codegen block of the full JSON line: flat arrays (no
+    * nested braces), so the forked parent can lift a child's block with one
+    * regex. */
+  private[graft] def codegenJson(perEntry: Seq[(String, Array[Double])]): String =
+    perEntry.map { case (k, c) =>
+      "\"" + k + f"\":[${c(0).toLong},${c(1)}%.1f,${c(2).toLong},${c(3)}%.1f]"
+    }.mkString(""""codegen":{""", ",", "}")
+
   private def loadavg(): Double =
     try java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .getSystemLoadAverage
@@ -223,7 +256,7 @@ object Bench {
     * cache) intact. HARNESS change, not a perf claim: the artifact says
     * "forked":true so rounds are never compared across modes unlabeled.
     * The paired DuckDB twin runs once in the parent, after all children. */
-  private def runForked(sfDir: String): Unit = {
+  private def runForked(sfDir: String, cpus: Int): Unit = {
     val loadBefore = loadavg()
     val rt = java.lang.management.ManagementFactory.getRuntimeMXBean
     val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
@@ -240,6 +273,7 @@ object Bench {
         s"extra=${familyKeys.toSet -- SparkEntry.queries.keySet}")
     val perQuery = scala.collection.mutable.LinkedHashMap[String, Double]()
     val failed = scala.collection.mutable.LinkedHashSet[String]()
+    val codegenBlocks = Seq.newBuilder[String]
     SparkEntry.families.foreach { case (family, keys) =>
       val cmd = new java.util.ArrayList[String]()
       cmd.add(javaBin)
@@ -264,6 +298,8 @@ object Bench {
       val fBlock = """"failed":\s*\[(.*?)\]""".r.findFirstMatchIn(out)
         .map(_.group(1)).getOrElse("")
       """"([^"]+)"""".r.findAllMatchIn(fBlock).foreach(m => failed += m.group(1))
+      """"codegen":\{([^{}]*)\}""".r.findFirstMatchIn(out)
+        .map(_.group(1)).filter(_.nonEmpty).foreach(codegenBlocks += _)
       if (rc != 0)
         System.err.println(s"[bench] forked family $family exited rc=$rc")
       // EVERY key must be accounted (timed or failed) regardless of rc: a
@@ -288,7 +324,7 @@ object Bench {
     val paired = pairedFields(results, sfDir)
     val loadAfter = loadavg()
     val json =
-      f"""{"metric":"total","value":$total%.4f,"unit":"sec","queries":$qs,"sf":"$sf","failed":$failedJson,"loadavg_before":$loadBefore%.2f,"loadavg_after":$loadAfter%.2f,"passes":3,"forked":true,"families":${SparkEntry.families.size},"train_vs_apply":$trainVsApplyJson,"declared_naive":$declaredNaiveJson${paired.map(_.fragment).getOrElse("")}}"""
+      f"""{"metric":"total","value":$total%.4f,"unit":"sec","queries":$qs,"sf":"$sf","failed":$failedJson,"loadavg_before":$loadBefore%.2f,"loadavg_after":$loadAfter%.2f,"passes":3,"forked":true,"families":${SparkEntry.families.size},"train_vs_apply":$trainVsApplyJson,"declared_naive":$declaredNaiveJson${paired.map(_.fragment).getOrElse("")},$codegenFields,"codegen":{${codegenBlocks.result().mkString(",")}}}"""
     println(json)
     try {
       Files.createDirectories(Paths.get("target"))
@@ -296,7 +332,6 @@ object Bench {
     } catch { case _: Throwable => () }
     // LAST line: compact summary under the driver's tail-capture budget.
     // cpus/master echo what each child ran with (children inherit the env).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
     println(compactSummary(results, failed, sf, loadBefore, loadAfter,
       forked = true, paired, cpus, master))
@@ -308,12 +343,17 @@ object Bench {
     // one-line JSON contract the driver parses
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = parseCpus(sys.env.get("SPARK_GRAFT_CPUS")) match {
+      case Right(n) => n
+      case Left(msg) =>
+        System.err.println(s"[bench] $msg")
+        sys.exit(2)
+    }
     if (sys.env.get("SPARK_GRAFT_FORK").contains("1") &&
         sys.env.get("SPARK_GRAFT_ONLY").isEmpty) {
-      runForked(sfDir)
+      runForked(sfDir, cpus)
       return
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = Sessions.build(s"local[$cpus]", cpus, "graft-bench")
 
     // host-load metadata (VERDICT r8 #5: a bench artifact from a
@@ -326,8 +366,12 @@ object Bench {
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     val failed = scala.collection.mutable.LinkedHashSet[String]()
+    // per entry: warmup compiles, warmup compile ms, timed compiles, timed ms
+    val codegen = queries.map { case (name, _) => name -> new Array[Double](4) }.toMap
 
-    def runOne(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
+    def runOne(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
+        timed: Boolean): Unit = {
+      val (compiles0, ns0) = codegenCounters()
       try materialize(fn(spark, sfDir))
       catch { case e: Throwable =>
         // a silently-swallowed failure would masquerade as a FAST query —
@@ -353,7 +397,12 @@ object Bench {
           .filterNot(r => graft.operators.Materialize.isPinned(r.id))
           .foreach(_.unpersist(blocking = false))
         spark.sharedState.cacheManager.clearCache()
+        val (compiles1, ns1) = codegenCounters()
+        val slot = if (timed) 2 else 0
+        codegen(name)(slot) += compiles1 - compiles0
+        codegen(name)(slot + 1) += (ns1 - ns0) / 1e6
       }
+    }
 
     // Warmup: run everything once (codegen, parquet footer cache, JIT).
     // SPARK_GRAFT_WARMUP raises the pass count — a FRESH JVM needs ~3
@@ -364,7 +413,7 @@ object Bench {
     // families, a forked child does not. runForked sets 3 for children.
     val warmups = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1").toInt
     (1 to warmups).foreach { _ =>
-      queries.foreach { case (name, fn) => runOne(name, fn) }
+      queries.foreach { case (name, fn) => runOne(name, fn, timed = false) }
     }
 
     // Three timed passes, keep the per-query minimum: steady-state
@@ -376,7 +425,7 @@ object Bench {
     // min-of-3 discipline so the ratio stays apples-to-apples.
     def timedPass(): Map[String, Double] = queries.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      runOne(name, fn)
+      runOne(name, fn, timed = true)
       name -> (System.nanoTime() - t0) / 1e9
     }.toMap
     val passes = Seq.fill(3)(timedPass())
@@ -403,7 +452,7 @@ object Bench {
       else pairedFields(results, sfDir)
     val loadAfter = loadavg()
     val json =
-      f"""{"metric":"total","value":$total%.4f,"unit":"sec","queries":$qs,"sf":"$sf","failed":$failedJson,"loadavg_before":$loadBefore%.2f,"loadavg_after":$loadAfter%.2f,"passes":3,"train_vs_apply":$trainVsApplyJson,"declared_naive":$declaredNaiveJson${paired.map(_.fragment).getOrElse("")}}"""
+      f"""{"metric":"total","value":$total%.4f,"unit":"sec","queries":$qs,"sf":"$sf","failed":$failedJson,"loadavg_before":$loadBefore%.2f,"loadavg_after":$loadAfter%.2f,"passes":3,"train_vs_apply":$trainVsApplyJson,"declared_naive":$declaredNaiveJson${paired.map(_.fragment).getOrElse("")},$codegenFields,${codegenJson(queries.map { case (n, _) => n -> codegen(n) })}}"""
     println(json)
     try {
       Files.createDirectories(Paths.get("target"))

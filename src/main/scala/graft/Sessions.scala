@@ -17,6 +17,20 @@ import org.apache.spark.sql.SparkSession
   *  - UTC session timezone: oracle (DuckDB) parity for timestamp math.
   *  - legacy.parquet.nanosAsLong: the events table ships TIMESTAMP(NANOS);
   *    Tables.events() rebuilds a TimestampType column from the raw longs.
+  *  - codegen.cache.maxEntries = 4096: Spark keeps compiled generated
+  *    classes in one JVM-wide LRU cache, default 100 entries. One sf0.1
+  *    pass over the full catalog compiles about 1,720 distinct classes
+  *    (16-27 ms of Janino each on the driver), and the three driver-loop
+  *    entries q95/q101/q120 alone 107. At 100 entries a warm session
+  *    therefore recompiles most of them on every pass and hands the JIT
+  *    fresh bytecode each time; 4096 holds the whole catalog's working
+  *    set with about 2x headroom. The cost is retained driver memory for
+  *    the cached classes (README, session tuning). This is a STATIC conf:
+  *    the cache is sized once per JVM, from the active session's conf, at
+  *    the first codegen. Codegen that runs before the first session is
+  *    built (an encoder's projection, say) fixes the cache at the default
+  *    100, so every JVM must build its session through here before any
+  *    Dataset work.
   */
 object Sessions {
   def build(master: String, shufflePartitions: Int, appName: String = "graft"): SparkSession = {
@@ -56,6 +70,7 @@ object Sessions {
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.ui.enabled", "false")
     sys.env.get("SPARK_GRAFT_EXECUTOR_CP").foreach { cp =>
       builder = builder.config("spark.executor.extraClassPath", cp)

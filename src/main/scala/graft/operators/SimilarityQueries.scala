@@ -1166,7 +1166,6 @@ object SimilarityQueries {
       .orderBy(col("query_id").asc, col("dot").desc, col("neighbor_id").asc)
   }
 
-
   def q45EmbeddingNearDup(spark: SparkSession, dir: String): DataFrame = {
     val emb = quantized(spark, dir).withColumn("bucket", intBucketCol)
     val l = emb.select(col("bucket").as("bucket_l"), col("vec_id").as("id_a"), col("qv").as("qa"))

@@ -477,7 +477,9 @@ object TextQueries {
     bpeTrain(Tables.documents(spark, dir).filter(col("text").isNotNull), BpeRounds)
 
   /** The q101 body over ANY (text) frame — tools/BpeSmoke races its
-    * per-round cost across corpus scales. */
+    * per-round cost across corpus scales. At [[BpeRounds]] = 8 a call pays
+    * 3 checkpoint jobs: the vocab census, then the vocab after rounds 3
+    * and 6 (none after the final round). */
   private[graft] def bpeTrain(docs: DataFrame, rounds: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -544,9 +546,7 @@ object TextQueries {
     * e(r) is referenced by both p(r+1) and e(r+1) and inlining would
     * double the expression tree per round. */
   private[operators] def bpeOracleSql(rounds: Int): String = {
-    val norm = s"trim(regexp_replace(regexp_replace(translate(text, " +
-      s"'${WebCurationQueries.Upper}', '${WebCurationQueries.Lower}'), " +
-      "'[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))"
+    val norm = AsciiFold.normalizeSql("text")
     val head = Seq(
       s"w AS (SELECT $norm AS t FROM documents WHERE text IS NOT NULL)",
       "v0 AS (SELECT word, COUNT(*) AS freq FROM (SELECT unnest(string_split(t, ' ')) AS word FROM w) WHERE word <> '' GROUP BY word)",
@@ -738,9 +738,7 @@ object TextQueries {
     * the per-(doc, word) census (`pd`). Sentinel-guarded against early
     * exhaustion; generated by the same Scala loop as the engine's chain. */
   private def bpeApplyCtes(rounds: Int): Seq[String] = {
-    val norm = s"trim(regexp_replace(regexp_replace(translate(text, " +
-      s"'${WebCurationQueries.Upper}', '${WebCurationQueries.Lower}'), " +
-      "'[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))"
+    val norm = AsciiFold.normalizeSql("text")
     val head = Seq(
       s"w AS (SELECT doc_id, $norm AS t FROM documents WHERE text IS NOT NULL)",
       "pd AS MATERIALIZED (SELECT doc_id, word, COUNT(*) AS cnt FROM (SELECT doc_id, unnest(string_split(t, ' ')) AS word FROM w) WHERE word <> '' GROUP BY doc_id, word)",
@@ -908,9 +906,7 @@ object TextQueries {
     * aggregates the SAME census over word, so both tokenizers are
     * identical by construction. Generated by the same Scala loop. */
   private[operators] def bpeFertilityOracleSql(rounds: Int): String = {
-    val norm = s"trim(regexp_replace(regexp_replace(translate(text, " +
-      s"'${WebCurationQueries.Upper}', '${WebCurationQueries.Lower}'), " +
-      "'[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))"
+    val norm = AsciiFold.normalizeSql("text")
     val head = Seq(
       s"w AS (SELECT lang, $norm AS t FROM documents WHERE text IS NOT NULL)",
       "pl AS MATERIALIZED (SELECT lang, word, COUNT(*) AS cnt FROM (SELECT lang, unnest(string_split(t, ' ')) AS word FROM w) WHERE word <> '' GROUP BY lang, word)",

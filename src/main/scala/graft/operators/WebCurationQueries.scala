@@ -29,6 +29,7 @@ import org.apache.spark.sql.functions._
   * None of these collects to the driver.
   */
 object WebCurationQueries {
+  import AsciiFold.{Lower, Upper}
 
   // ---- detection patterns (Java ∩ RE2; single-quoted-safe for DuckDB) ----
   // Deliberately conservative, boundary-free patterns: no lookaround (RE2
@@ -452,9 +453,6 @@ object WebCurationQueries {
   }
 
   // ---- Q89: normalization-aware exact dedup ----
-
-  private[operators] val Lower = "abcdefghijklmnopqrstuvwxyz"
-  private[operators] val Upper = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
 
   /** Canonical text normalization before exact hashing (the C4 / Lee et
     * al. pre-dedup normalization: case-fold, strip punctuation, collapse
@@ -1263,8 +1261,7 @@ object WebCurationQueries {
          |       ELSE regexp_replace(text, ' ', '  ', 'g') END AS vtext
          |  FROM documents WHERE text IS NOT NULL),
          |h AS (SELECT doc_id, md5(vtext) AS raw_h,
-         |  md5(trim(regexp_replace(regexp_replace(translate(vtext, '$Upper', '$Lower'),
-         |    '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))) AS norm_h
+         |  md5(${AsciiFold.normalizeSql("vtext")}) AS norm_h
          |  FROM v),
          |r AS (SELECT raw_h, COUNT(*) AS raw_n FROM h GROUP BY raw_h),
          |n AS (SELECT norm_h, COUNT(*) AS norm_n, MIN(doc_id) AS norm_keeper
@@ -1309,7 +1306,7 @@ object WebCurationQueries {
     * (doc_id, curated, b). */
   private def qcGramCtes: String =
     s"""WITH d AS (SELECT doc_id, CAST(replace(source, 'src', '') AS INT) < 10 AS curated,
-       |  trim(regexp_replace(regexp_replace(translate(text, '$Upper', '$Lower'), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')) AS t
+       |  ${AsciiFold.normalizeSql("text")} AS t
        |  FROM documents WHERE text IS NOT NULL),
        |s AS (SELECT doc_id, curated, string_split(t, ' ') AS w FROM d),
        |g AS (SELECT doc_id, curated, unnest(list_transform(range(len(w)-1), i -> w[i+1] || ' ' || w[i+2])) AS gram
@@ -1371,7 +1368,7 @@ object WebCurationQueries {
          |FROM w$t w JOIN m$t m USING (source)""".stripMargin
     }.mkString("\nUNION ALL\n")
     s"""WITH d AS MATERIALIZED (SELECT source,
-       |  trim(regexp_replace(regexp_replace(translate(text, '$Upper', '$Lower'), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')) AS t
+       |  ${AsciiFold.normalizeSql("text")} AS t
        |  FROM documents WHERE text IS NOT NULL),
        |s AS MATERIALIZED (SELECT source, string_split(t, ' ') AS w FROM d),
        |g AS MATERIALIZED (SELECT source, unnest(list_transform(range(len(w)-1), i -> w[i+1] || ' ' || w[i+2])) AS gram

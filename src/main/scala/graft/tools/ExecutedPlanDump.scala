@@ -1,33 +1,52 @@
 package graft.tools
 
 import graft.{Sessions, SparkEntry}
+import org.apache.spark.sql.DataFrame
 
-/** Post-execution plan dump: run the named catalog queries through the noop
-  * sink, then print the FINAL adaptive physical plan (isFinalPlan=true) —
-  * the one place AQE's runtime decisions (ReusedQueryStage /
-  * AQEShuffleRead / runtime join rewrites) are visible, which the
-  * pre-execution `explain` in [[graft.PlanAudit]] cannot show (r17; guide
-  * §7.2's "the SQL tab shows the final re-optimised plan", reproduced
-  * headlessly).
+/** Post-execution plan dump: run the named catalog queries, then print the
+  * FINAL adaptive physical plan (isFinalPlan=true) — the one place AQE's
+  * runtime decisions (ReusedQueryStage / AQEShuffleRead / runtime join
+  * rewrites) are visible, which the pre-execution `explain` in
+  * [[graft.PlanAudit]] cannot show (guide §7.2's "the SQL tab shows the
+  * final re-optimised plan", reproduced headlessly).
+  *
+  * Exits 1 if any query fails or leaves a non-final adaptive plan.
   *
   * Usage: runMain graft.tools.ExecutedPlanDump [sfDir] [queryName...]
   */
 object ExecutedPlanDump {
+
+  /** Execute `df` through its OWN QueryExecution and return the executed
+    * plan's text. A sink write (noop, parquet) would plan and run a new
+    * QueryExecution around the frame, leaving `df.queryExecution`'s
+    * adaptive plan unexecuted (isFinalPlan=false); `collect` runs the
+    * frame's own. Throws unless every adaptive node in the plan is final;
+    * a plan with no adaptive node was never re-planned, so it is final as
+    * planned. */
+  def executedPlan(df: DataFrame): String = {
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    if (plan.contains("isFinalPlan=false"))
+      throw new IllegalStateException(s"executed plan is not final:\n$plan")
+    plan
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = args.drop(1).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
     val spark = Sessions.build(s"local[$cpus]", cpus, "graft-executed-plan")
-    SparkEntry.queries.toSeq.sortBy(_._1)
+    val failed = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => names.isEmpty || names.contains(n) }
-      .foreach { case (name, fn) =>
+      .flatMap { case (name, fn) =>
         println(s"\n===== $name (executed) =====")
-        try {
-          val df = fn(spark, sfDir)
-          df.write.format("noop").mode("overwrite").save()
-          println(df.queryExecution.executedPlan.toString)
-        } catch { case e: Throwable => println(s"run failed: $e") }
+        try { println(executedPlan(fn(spark, sfDir))); None }
+        catch { case e: Throwable => println(s"run failed: $e"); Some(name) }
       }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[executed-plan] ${failed.size} failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

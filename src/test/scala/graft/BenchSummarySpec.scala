@@ -93,4 +93,36 @@ class BenchSummarySpec extends AnyFunSuite {
     assert(line.contains("\"metric\":\"total\""))
     assert(line.getBytes("UTF-8").length < 1024)
   }
+
+  test("SPARK_GRAFT_CPUS parses to a positive core count, default 32") {
+    assert(Bench.parseCpus(None) == Right(32))
+    assert(Bench.parseCpus(Some("8")) == Right(8))
+    Seq("eight", "8x", "", "0", "-4").foreach { bad =>
+      val err = Bench.parseCpus(Some(bad))
+      assert(err.left.exists(_.contains("SPARK_GRAFT_CPUS")), s"'$bad' -> $err")
+    }
+  }
+
+  test("forked bench exits at once on a malformed SPARK_GRAFT_CPUS") {
+    // before any family is forked: the run must not be spent first
+    val sfDir = java.nio.file.Files.createTempDirectory("bench-sf")
+    val result =
+      try ChildJvm.run("graft.Bench", timeoutS = 60, env = Map(
+        "SPARK_GRAFT_FORK" -> "1", "SPARK_GRAFT_CPUS" -> "eight",
+        "SPARK_GRAFT_SF_DIR" -> sfDir.toString))
+      finally java.nio.file.Files.delete(sfDir)
+    assert(result.isDefined, "bench ran on instead of failing")
+    val (rc, out) = result.get
+    assert(rc == 2, out)
+    assert(out.contains("SPARK_GRAFT_CPUS must be a positive integer, got 'eight'"), out)
+    assert(!out.contains("forked family"), out)
+  }
+
+  test("codegen block renders per-entry arrays with no nested braces") {
+    val block = Bench.codegenJson(Seq(
+      "q01_scan_count" -> Array(12.0, 190.26, 0.0, 0.0),
+      "q95_pagerank" -> Array(11.0, 402.0, 3.0, 41.55)))
+    assert(block ==
+      """"codegen":{"q01_scan_count":[12,190.3,0,0.0],"q95_pagerank":[11,402.0,3,41.6]}""")
+  }
 }

@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.{SparkEntry, SparkTestSession}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Meta-property over the whole catalog: every query entry is
@@ -15,6 +17,39 @@ class CatalogDeterminismSpec extends AnyFunSuite with SparkTestSession {
   /** q34 lists freshly-saved files: its modified_time/size columns are
     * wall-clock-dependent by nature, so compare its stable columns only. */
   private val unstableColumns = Map("q34_saved_runs_list" -> Set("modified_time", "size_bytes"))
+
+  test("a repeated run of catalog entries reuses their generated classes") {
+    // Spark keeps compiled classes in one JVM-wide LRU cache (default 100
+    // entries). These entries compile about 230 distinct classes per run,
+    // so a cache at the default thrashes and recompiles most of them on
+    // the repeat; Sessions.build sizes it to hold the catalog. The
+    // cache is sized at its first use, so the session must exist before
+    // CodeGenerator is touched. Earlier suites may have cached these
+    // classes: start from an empty cache.
+    assert(!spark.sparkContext.isStopped)
+    val cache = CodeGenerator.getClass.getDeclaredMethod("cache")
+    cache.setAccessible(true)
+    val classes = cache.invoke(CodeGenerator)
+    classes.getClass.getMethod("invalidateAll").invoke(classes)
+    // entries whose generated code is the same on every run: some others
+    // (q120/q124 DoReMi, q112, q116) vary, so part of their code
+    // recompiles at any cache size
+    val entries = Seq("q94_perplexity", "q95_pagerank", "q101_bpe_train",
+      "q103_video_fingerprint", "q110_minhash_audit",
+      "q122_neardup_canonical_pairs")
+    def compiles(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      entries.foreach { k =>
+        SparkEntry.queries(k)(spark, dir).write.format("noop").mode("overwrite").save()
+      }
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val first = compiles()
+    val repeat = compiles()
+    info(s"first run compiled $first classes, the repeat $repeat")
+    assert(first > 150, s"the set must outgrow the default cache: $first classes")
+    assert(repeat <= first / 10, s"repeat recompiled $repeat of $first classes")
+  }
 
   test("Bench families partition the query catalog exactly") {
     // the forked bench mode times SparkEntry.families; an entry present

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.SessionArtifacts
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
@@ -213,15 +214,6 @@ object Bench {
     f"""{"metric":"total","value":$total%.4f,"unit":"sec","sf":"$sf","n":${results.size},"cpus":$cpus,"master":"${jsonEscape(master)}","queries":$qs,"failed":$failedJson,"failed_n":${failedSeq.size},"loadavg_before":$loadBefore%.2f,"loadavg_after":$loadAfter%.2f,"passes":3,"forked":$forked$pairedPart,"detail":"target/bench.json"}"""
   }
 
-  /** SPARK_GRAFT_CPUS as a positive core count (default 32). Parsed once,
-    * before any work: a malformed value must fail the run at once, not
-    * after every forked family has run and the summary line is lost. */
-  private[graft] def parseCpus(raw: Option[String]): Either[String, Int] =
-    raw.fold[Either[String, Int]](Right(32)) { s =>
-      s.trim.toIntOption.filter(_ > 0)
-        .toRight(s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'")
-    }
-
   /** JVM-wide codegen counters: generated classes compiled so far, and
     * their total Janino compile time in ns. A codegen class-cache hit
     * moves neither. */
@@ -239,6 +231,15 @@ object Bench {
     perEntry.map { case (k, c) =>
       "\"" + k + f"\":[${c(0).toLong},${c(1)}%.1f,${c(2).toLong},${c(3)}%.1f]"
     }.mkString(""""codegen":{""", ",", "}")
+
+  /** Legend of each `artifacts` array: [[SessionArtifacts.counters]] deltas. */
+  private val artifactsFields = """"artifacts_fields":["hits","misses","rebuilds"]"""
+
+  /** Per "entry/kind", the session-artifact lookups an entry made over all
+    * its passes; flat like [[codegenJson]]. */
+  private[graft] def artifactsJson(perEntry: Seq[(String, Seq[Long])]): String =
+    perEntry.map { case (k, c) => "\"" + k + "\":" + c.mkString("[", ",", "]") }
+      .mkString(""""artifacts":{""", ",", "}")
 
   private def loadavg(): Double =
     try java.lang.management.ManagementFactory.getOperatingSystemMXBean
@@ -273,7 +274,7 @@ object Bench {
         s"extra=${familyKeys.toSet -- SparkEntry.queries.keySet}")
     val perQuery = scala.collection.mutable.LinkedHashMap[String, Double]()
     val failed = scala.collection.mutable.LinkedHashSet[String]()
-    val codegenBlocks = Seq.newBuilder[String]
+    val blocks = Seq("codegen", "artifacts").map(_ -> Seq.newBuilder[String]).toMap
     SparkEntry.families.foreach { case (family, keys) =>
       val cmd = new java.util.ArrayList[String]()
       cmd.add(javaBin)
@@ -298,8 +299,10 @@ object Bench {
       val fBlock = """"failed":\s*\[(.*?)\]""".r.findFirstMatchIn(out)
         .map(_.group(1)).getOrElse("")
       """"([^"]+)"""".r.findAllMatchIn(fBlock).foreach(m => failed += m.group(1))
-      """"codegen":\{([^{}]*)\}""".r.findFirstMatchIn(out)
-        .map(_.group(1)).filter(_.nonEmpty).foreach(codegenBlocks += _)
+      blocks.foreach { case (b, acc) =>
+        ("\"" + b + "\":\\{([^{}]*)\\}").r.findFirstMatchIn(out)
+          .map(_.group(1)).filter(_.nonEmpty).foreach(acc += _)
+      }
       if (rc != 0)
         System.err.println(s"[bench] forked family $family exited rc=$rc")
       // EVERY key must be accounted (timed or failed) regardless of rc: a
@@ -324,7 +327,7 @@ object Bench {
     val paired = pairedFields(results, sfDir)
     val loadAfter = loadavg()
     val json =
-      f"""{"metric":"total","value":$total%.4f,"unit":"sec","queries":$qs,"sf":"$sf","failed":$failedJson,"loadavg_before":$loadBefore%.2f,"loadavg_after":$loadAfter%.2f,"passes":3,"forked":true,"families":${SparkEntry.families.size},"train_vs_apply":$trainVsApplyJson,"declared_naive":$declaredNaiveJson${paired.map(_.fragment).getOrElse("")},$codegenFields,"codegen":{${codegenBlocks.result().mkString(",")}}}"""
+      f"""{"metric":"total","value":$total%.4f,"unit":"sec","queries":$qs,"sf":"$sf","failed":$failedJson,"loadavg_before":$loadBefore%.2f,"loadavg_after":$loadAfter%.2f,"passes":3,"forked":true,"families":${SparkEntry.families.size},"train_vs_apply":$trainVsApplyJson,"declared_naive":$declaredNaiveJson${paired.map(_.fragment).getOrElse("")},$codegenFields,"codegen":{${blocks("codegen").result().mkString(",")}},$artifactsFields,"artifacts":{${blocks("artifacts").result().mkString(",")}}}"""
     println(json)
     try {
       Files.createDirectories(Paths.get("target"))
@@ -343,12 +346,8 @@ object Bench {
     // one-line JSON contract the driver parses
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = parseCpus(sys.env.get("SPARK_GRAFT_CPUS")) match {
-      case Right(n) => n
-      case Left(msg) =>
-        System.err.println(s"[bench] $msg")
-        sys.exit(2)
-    }
+    val cpus = Env.positiveInt("SPARK_GRAFT_CPUS", 32)
+    val warmups = Env.positiveInt("SPARK_GRAFT_WARMUP", 1)
     if (sys.env.get("SPARK_GRAFT_FORK").contains("1") &&
         sys.env.get("SPARK_GRAFT_ONLY").isEmpty) {
       runForked(sfDir, cpus)
@@ -368,10 +367,13 @@ object Bench {
     val failed = scala.collection.mutable.LinkedHashSet[String]()
     // per entry: warmup compiles, warmup compile ms, timed compiles, timed ms
     val codegen = queries.map { case (name, _) => name -> new Array[Double](4) }.toMap
+    // per "entry/kind": session-artifact hits, misses, rebuilds
+    val artifacts = scala.collection.mutable.Map[String, Seq[Long]]()
 
     def runOne(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
         timed: Boolean): Unit = {
       val (compiles0, ns0) = codegenCounters()
+      val artifacts0 = SessionArtifacts.counters
       try materialize(fn(spark, sfDir))
       catch { case e: Throwable =>
         // a silently-swallowed failure would masquerade as a FAST query —
@@ -390,17 +392,16 @@ object Bench {
         // query's own checkpoints are garbage the moment its sink returns,
         // so dropping them here is cleanup, not caching policy; the
         // non-blocking unpersist costs ~ms inside the measured window.
-        // PINNED ids are session-cache frames (signedUniquesFor): a
-        // localCheckpoint's only copy dies on unpersist (truncated
-        // lineage), killing every later consumer — r12.
-        spark.sparkContext.getPersistentRDDs.valuesIterator
-          .filterNot(r => graft.operators.Materialize.isPinned(r.id))
-          .foreach(_.unpersist(blocking = false))
-        spark.sharedState.cacheManager.clearCache()
+        // The session artifacts stay pinned.
+        SessionArtifacts.sweep(spark)
         val (compiles1, ns1) = codegenCounters()
         val slot = if (timed) 2 else 0
         codegen(name)(slot) += compiles1 - compiles0
         codegen(name)(slot + 1) += (ns1 - ns0) / 1e6
+        for ((kind, c) <- SessionArtifacts.counters; c0 = artifacts0.getOrElse(kind, c.map(_ => 0L))
+             if c != c0)
+          artifacts(s"$name/$kind") = artifacts.getOrElse(s"$name/$kind", c.map(_ => 0L))
+            .lazyZip(c).lazyZip(c0).map(_ + _ - _)
       }
     }
 
@@ -411,7 +412,6 @@ object Bench {
     // one JVM), which is exactly the forked-mode small-entry penalty the
     // r11 verdict flagged: a shared-session JVM arrives hot from earlier
     // families, a forked child does not. runForked sets 3 for children.
-    val warmups = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1").toInt
     (1 to warmups).foreach { _ =>
       queries.foreach { case (name, fn) => runOne(name, fn, timed = false) }
     }
@@ -452,7 +452,7 @@ object Bench {
       else pairedFields(results, sfDir)
     val loadAfter = loadavg()
     val json =
-      f"""{"metric":"total","value":$total%.4f,"unit":"sec","queries":$qs,"sf":"$sf","failed":$failedJson,"loadavg_before":$loadBefore%.2f,"loadavg_after":$loadAfter%.2f,"passes":3,"train_vs_apply":$trainVsApplyJson,"declared_naive":$declaredNaiveJson${paired.map(_.fragment).getOrElse("")},$codegenFields,${codegenJson(queries.map { case (n, _) => n -> codegen(n) })}}"""
+      f"""{"metric":"total","value":$total%.4f,"unit":"sec","queries":$qs,"sf":"$sf","failed":$failedJson,"loadavg_before":$loadBefore%.2f,"loadavg_after":$loadAfter%.2f,"passes":3,"train_vs_apply":$trainVsApplyJson,"declared_naive":$declaredNaiveJson${paired.map(_.fragment).getOrElse("")},$codegenFields,${codegenJson(queries.map { case (n, _) => n -> codegen(n) })},$artifactsFields,${artifactsJson(artifacts.toSeq.sortBy(_._1))}}"""
     println(json)
     try {
       Files.createDirectories(Paths.get("target"))

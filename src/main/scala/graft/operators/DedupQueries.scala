@@ -61,32 +61,14 @@ object DedupQueries {
   private def withShinglesAndSignature(docs: DataFrame): DataFrame =
     Materialize.materialize(signedDocs(docs))
 
-  /** Session-scoped sign-once cache for the UNIQUE-TEXT corpus frame
-    * (r12, VERDICT r11 #7): q24, q79, q110 and q113 all sign the
-    * identical `groupBy(text).agg(min(doc_id))` frame of the same corpus
-    * — four signing passes per session for one table. The signature is a
-    * deterministic function of the text, and the testdata dirs are
-    * immutable inputs (the tokenizerFor precedent), so the materialized
-    * frame is shared per (session, dir); keying by the SESSION instance
-    * keeps a frame's localCheckpoint RDDs from leaking across session
-    * lifetimes. q62 signs a different frame (multiplicity column, no
-    * null-text filter) and stays independent. */
-  private val signedUniqueCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
+  /** The signed unique-text frame ([[SessionArtifacts]]): q24, q79, q110
+    * and q113 all sign the identical `groupBy(text).agg(min(doc_id))` frame
+    * of the same corpus. q62 signs a different frame (multiplicity column,
+    * no null-text filter) and stays independent. */
   private[graft] def signedUniquesFor(spark: SparkSession, dir: String): DataFrame =
-    signedUniqueCache.getOrElseUpdate((spark, dir), {
-      val uniq = Tables.documents(spark, dir).filter(col("text").isNotNull)
-        .groupBy(col("text")).agg(min(col("doc_id")).as("doc_id"))
-      // PINNED materialization: the bench's between-queries unpersist
-      // sweep would otherwise destroy the cached localCheckpoint's only
-      // copy and crash every later consumer (measured r12 — see
-      // Materialize.materializePinned)
-      Materialize.materializePinned(signedDocs(uniq))
-    })
-
-  /** Test hook (the clearTokenizerCache twin). */
-  private[graft] def clearSignedUniqueCache(): Unit = signedUniqueCache.clear()
+    SessionArtifacts.frame(spark, SessionArtifacts.SignedUniques, dir)(
+      signedDocs(Tables.documents(spark, dir).filter(col("text").isNotNull)
+        .groupBy(col("text")).agg(min(col("doc_id")).as("doc_id"))))
 
   /** The shingle/sign transform itself, WITHOUT the materialization —
     * streaming-safe (checkpointing is illegal on a streaming frame, and a

@@ -42,47 +42,6 @@ object Materialize {
     conf.getOption(ConfKey).orElse(conf.getOption(LegacyConfKey))
   }
 
-  /** RDD ids that SESSION CACHES depend on. Sweep-style cleanup (the
-    * bench unpersists every persistent RDD between queries so per-query
-    * checkpoint garbage cannot pollute later timings) must spare these:
-    * unpersisting a localCheckpoint destroys its ONLY copy — the lineage
-    * is truncated and cannot recompute — so every later consumer of the
-    * cached frame dies with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (measured
-    * r12: the signedUniquesFor cache failed all four of its consumers in
-    * the first sf0.1 bench run exactly this way). */
-  private val pinnedIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-
-  /** [[materialize]], shielded from sweep-style cleanup: registers the
-    * checkpointed plan's RDD ids as pinned. ONLY for session-cache frames
-    * (one per (session, corpus) by construction) — pinning per-query
-    * intermediates would defeat the cleanup that keeps a 114-entry bench
-    * session honest. */
-  def materializePinned(df: DataFrame): DataFrame = {
-    val out = materialize(df)
-    out.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD => pinnedIds.add(l.rdd.id)
-      case _ => ()
-    }
-    out
-  }
-
-  /** True if sweep-style cleanup must leave this RDD persisted. */
-  def isPinned(id: Int): Boolean = pinnedIds.contains(id)
-
-  /** Release a frame produced by [[materializePinned]]: unpin its RDD ids
-    * and drop the checkpoint blocks (non-blocking). For cache EVICTION
-    * (ADVICE r14: an in-place corpus rewrite must be able to invalidate a
-    * pinned (session, dir) frame without leaking its blocks). Callers own
-    * the invariant that no live consumer still needs the frame — a
-    * localCheckpoint's only copy dies here. */
-  def releasePinned(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        pinnedIds.remove(l.rdd.id)
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Eagerly materialize `df`, truncating lineage. Reliable when a
     * checkpoint dir is configured, executor-local otherwise. */
   def materialize(df: DataFrame): DataFrame =

@@ -636,35 +636,20 @@ object TextQueries {
     BpeMerge(r.getAs[Int]("step"), r.getAs[String]("pair"),
       r.getAs[String]("merged"), r.getAs[Long]("n"))
 
-  /** Session-scoped train-once cache for the catalog entries: q104, q106
-    * and q108 all tokenize the SAME corpus with the SAME tokenizer, so
-    * training runs once per (corpus dir, rounds) per JVM instead of once
-    * per entry (VERDICT r10 "What's wrong" #1 — the trio used to retrain
-    * inline, 3 × 8 Materialize rounds in their timed windows). Keyed by
-    * the corpus PATH: the testdata dirs are immutable inputs, and the
-    * merge sequence is a deterministic function of (corpus, rounds), so
-    * a cached tokenizer is bit-identical to a retrained one (BpeSpec pins
-    * the round trip). q101 — the entry whose JOB is to time training —
-    * calls [[bpeTrain]] directly and never reads this cache. */
-  private val trainedTokenizers =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), Seq[BpeMerge]]
-
-  /** Resolve the tokenizer for a catalog entry: the frozen artifact when
-    * [[BpeDirKey]] is set, else the session cache (training on first
-    * touch). */
+  /** The tokenizer for a catalog entry: the frozen artifact when
+    * [[BpeDirKey]] is set, else trained once per session
+    * ([[SessionArtifacts]]). q104, q106 and q108 tokenize the same corpus
+    * with the same tokenizer; retraining inline cost them 3 × 8 Materialize
+    * rounds in their timed windows (VERDICT r10 #1). q101, whose job is to
+    * time training, calls [[bpeTrain]] directly. */
   private[graft] def tokenizerFor(spark: SparkSession, dir: String,
       rounds: Int): Seq[BpeMerge] =
     spark.conf.getOption(BpeDirKey) match {
       case Some(td) => loadBpeMerges(spark, td)
-      case None => trainedTokenizers.getOrElseUpdate((dir, rounds),
+      case None => SessionArtifacts.value(spark, SessionArtifacts.tokenizer(rounds), dir)(
         bpeTrain(Tables.documents(spark, dir).filter(col("text").isNotNull), rounds)
           .collect().map(rowToMerge).toSeq)
     }
-
-  /** Test hook: drop cached tokenizers (specs that train on constructed
-    * corpora go through the explicit-merges forms and never need this;
-    * it exists so a spec can pin that the cache is a pure memoization). */
-  private[graft] def clearTokenizerCache(): Unit = trainedTokenizers.clear()
 
   /** The q104 catalog body: resolve the tokenizer (artifact / cache),
     * then pure apply. */

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Sessions, SparkEntry}
+import graft.{Env, Sessions, SparkEntry}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   */
 object ScaleSmoke {
   private val Src = "/root/testdata/sf0.1"
-  private val Replicas = sys.env.getOrElse("SPARK_GRAFT_REPLICAS", "10").toInt
+  private val Replicas = Env.positiveInt("SPARK_GRAFT_REPLICAS", 10)
   private val Out = s"/tmp/graft_sfbig_x$Replicas"
   private val Shift = 10000000L
 

@@ -1,27 +1,18 @@
 package graft.tools
 
-import graft.operators.Materialize
+import graft.operators.SessionArtifacts
 import org.apache.spark.sql.SparkSession
 
 /** The shared measurement discipline of the scale smokes (Scale100Smoke,
-  * FamilyScaleSmoke): between-run cache cleanup that respects pinned
-  * materializations, and warmup + 2 timed passes taking the min — pared
-  * down from Bench's min-of-3 because smoke legs run minutes, not seconds.
-  * One implementation so a future change to the discipline (like the r15
-  * pinned-RDD exemption) cannot land in one smoke and not the other. */
+  * FamilyScaleSmoke): warmup + 2 timed passes taking the min, with the
+  * between-run [[SessionArtifacts.sweep]] after each — pared down from
+  * Bench's min-of-3 because smoke legs run minutes, not seconds. */
 object SmokeHarness {
-  def cleanup(spark: SparkSession): Unit = {
-    spark.sparkContext.getPersistentRDDs.valuesIterator
-      .filterNot(r => Materialize.isPinned(r.id))
-      .foreach(_.unpersist(blocking = false))
-    spark.sharedState.cacheManager.clearCache()
-  }
-
   def timed(spark: SparkSession)(f: => Unit): Double = {
-    f; cleanup(spark)
+    f; SessionArtifacts.sweep(spark)
     val ts = (1 to 2).map { _ =>
       val t0 = System.nanoTime(); f; val t = (System.nanoTime() - t0) / 1e9
-      cleanup(spark); t
+      SessionArtifacts.sweep(spark); t
     }
     ts.min
   }

@@ -95,11 +95,18 @@ class BenchSummarySpec extends AnyFunSuite {
   }
 
   test("SPARK_GRAFT_CPUS parses to a positive core count, default 32") {
-    assert(Bench.parseCpus(None) == Right(32))
-    assert(Bench.parseCpus(Some("8")) == Right(8))
-    Seq("eight", "8x", "", "0", "-4").foreach { bad =>
-      val err = Bench.parseCpus(Some(bad))
-      assert(err.left.exists(_.contains("SPARK_GRAFT_CPUS")), s"'$bad' -> $err")
+    def cpus(raw: Option[String]) = Env.parsePositive("SPARK_GRAFT_CPUS", raw, 32)
+    assert(cpus(None) == Right(32))
+    assert(cpus(Some("8")) == Right(8))
+    assert(cpus(Some(" 8 ")) == Right(8))
+    // the other reads keep their own defaults
+    assert(Env.parsePositive("SPARK_GRAFT_WARMUP", None, 1) == Right(1))
+    assert(Env.parsePositive("SPARK_GRAFT_WARMUP", Some("3"), 1) == Right(3))
+    assert(Env.parsePositive("SPARK_GRAFT_REPLICAS", None, 10) == Right(10))
+    for (name <- Seq("SPARK_GRAFT_CPUS", "SPARK_GRAFT_WARMUP", "SPARK_GRAFT_REPLICAS");
+         bad <- Seq("eight", "8x", "", "0", "-4")) {
+      val err = Env.parsePositive(name, Some(bad), 1)
+      assert(err == Left(s"$name must be a positive integer, got '$bad'"), s"$name='$bad' -> $err")
     }
   }
 
@@ -124,5 +131,11 @@ class BenchSummarySpec extends AnyFunSuite {
       "q95_pagerank" -> Array(11.0, 402.0, 3.0, 41.55)))
     assert(block ==
       """"codegen":{"q01_scan_count":[12,190.3,0,0.0],"q95_pagerank":[11,402.0,3,41.6]}""")
+    // the session-artifact counters ride beside it in the same flat shape
+    val artifacts = Bench.artifactsJson(Seq(
+      "q24_dedup_jaccard/signed_uniques" -> Seq(3L, 1L, 0L),
+      "q82_ann_ivfpq/quantized" -> Seq(4L, 0L, 0L)))
+    assert(artifacts ==
+      """"artifacts":{"q24_dedup_jaccard/signed_uniques":[3,1,0],"q82_ann_ivfpq/quantized":[4,0,0]}""")
   }
 }

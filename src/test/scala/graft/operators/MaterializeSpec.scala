@@ -45,15 +45,15 @@ class MaterializeSpec extends AnyFunSuite with SparkTestSession {
   // the signature-table / IVF / CC cases below
 
   test("IVF quantized frame checkpoints reliably (q42)") {
-    // the quantized frame memoizes per (session, dir) since r14 — clear it
+    // the quantized frame is a session artifact — clear it
     // so BOTH legs materialize fresh under their own checkpoint mode (a
     // warm cache would serve the default-mode localCheckpoint and write
     // nothing reliable; mode is fixed at cache-fill time by design)
-    SimilarityQueries.clearQuantizedCache()
+    SessionArtifacts.clear()
     try assertReliableParity("q42") { () =>
-      SimilarityQueries.clearQuantizedCache()
+      SessionArtifacts.clear()
       SimilarityQueries.q42IvfAnn(spark, dir)
-    } finally SimilarityQueries.clearQuantizedCache()
+    } finally SessionArtifacts.clear()
   }
 
   test("legacy cc conf key still switches the shared helper") {
@@ -91,25 +91,23 @@ class MaterializeSpec extends AnyFunSuite with SparkTestSession {
       "unpinned frames are swept") {
     import spark.implicits._
     // the session-cache shape: one pinned frame that later entries reuse
-    DedupQueries.clearSignedUniqueCache()
+    SessionArtifacts.clear()
     val cached = DedupQueries.signedUniquesFor(spark, dir)
     val before = cached.count()
     assert(before > 0)
     val unpinned = Materialize.materialize(Seq(1, 2, 3).toDF("v"))
-    // the exact Bench cleanup
-    spark.sparkContext.getPersistentRDDs.valuesIterator
-      .filterNot(r => Materialize.isPinned(r.id))
-      .foreach(_.unpersist(blocking = true))
-    spark.sharedState.cacheManager.clearCache()
+    // the sweep Bench runs after every entry
+    SessionArtifacts.sweep(spark, blocking = true)
     // the pinned frame is still consumable (an unpinned localCheckpoint
     // would die here: truncated lineage cannot recompute — the r12
     // bench failure this guards); same rows as before the sweep
     assert(cached.count() == before)
     // and the sweep DID do its job on the per-query garbage
+    val pinned = SessionArtifacts.pinnedIds
     val persisted = spark.sparkContext.getPersistentRDDs.keySet
-    assert(persisted.forall(Materialize.isPinned),
-      s"unpinned ids survived the sweep: ${persisted.filterNot(Materialize.isPinned)}")
+    assert(persisted.forall(pinned),
+      s"unpinned ids survived the sweep: ${persisted.filterNot(pinned)}")
     unpinned // silence unused warning; its blocks are gone by design
-    DedupQueries.clearSignedUniqueCache()
+    SessionArtifacts.clear()
   }
 }

@@ -183,40 +183,45 @@ class SimilaritySpec extends AnyFunSuite with SparkTestSession {
   test("q82 session caches are pure memoization: cold (cleared) and warm " +
       "runs are row-identical") {
     // the r14 serving shape trains codebooks + encodes the corpus once per
-    // (session, dir); this pins that a cache hit is bit-identical to a
+    // (session, dir); this pins that an artifact hit is bit-identical to a
     // cold retrain (the tokenizerFor/BpeSpec discipline)
-    SimilarityQueries.clearPqCodebookCache()
-    SimilarityQueries.clearQuantizedCache()
-    SimilarityQueries.clearEncodedPqCache()
+    SessionArtifacts.clear()
     val cold = SimilarityQueries.q82IvfPqAnn(spark, dir).collect()
       .map(_.toString).toSeq
     val warm = SimilarityQueries.q82IvfPqAnn(spark, dir).collect()
       .map(_.toString).toSeq
-    SimilarityQueries.clearPqCodebookCache()
-    SimilarityQueries.clearQuantizedCache()
-    SimilarityQueries.clearEncodedPqCache()
+    SessionArtifacts.clear()
     val cold2 = SimilarityQueries.q82IvfPqAnn(spark, dir).collect()
       .map(_.toString).toSeq
     assert(cold == warm, "cache hit must equal the run that filled it")
     assert(cold == cold2, "retrain after clear must reproduce the result")
   }
 
-  test("invalidateCorpus evicts the (session, dir) caches and the next call " +
+  test("invalidate evicts every (session, dir) artifact and the next call " +
       "re-derives cleanly") {
     // ADVICE r14: the caches had clear-all test hooks but no public
-    // per-corpus invalidation — an in-place rewrite of a corpus dir would
-    // silently serve stale codebooks/encodings. This pins the eviction
-    // path end-to-end: warm → invalidate (releases the pinned checkpoint
-    // blocks) → rerun must recompute from parquet and reproduce the result,
-    // not die on a released block or serve a dangling frame.
+    // per-corpus invalidation. This pins the eviction path end-to-end:
+    // warm → invalidate (releases the pinned checkpoint blocks) → rerun
+    // must recompute from parquet and reproduce the result, not die on a
+    // released block or serve a dangling frame.
     val warm = SimilarityQueries.q82IvfPqAnn(spark, dir).collect()
       .map(_.toString).toSeq
-    SimilarityQueries.invalidateCorpus(spark, dir)
+    DedupQueries.signedUniquesFor(spark, dir)
+    TextQueries.tokenizerFor(spark, dir, TextQueries.BpeRounds)
+    val misses0 = SessionArtifacts.counters.map { case (k, c) => k -> c(1) }
+    SessionArtifacts.invalidate(spark, dir)
     val rederived = SimilarityQueries.q82IvfPqAnn(spark, dir).collect()
       .map(_.toString).toSeq
     assert(warm == rederived, "post-invalidation rerun must reproduce")
+    // every kind was dropped, not only the three the q82 path reads
+    DedupQueries.signedUniquesFor(spark, dir)
+    TextQueries.tokenizerFor(spark, dir, TextQueries.BpeRounds)
+    val misses = SessionArtifacts.counters.map { case (k, c) => k -> (c(1) - misses0(k)) }
+    Seq("quantized", "pq_codebooks", "encoded_pq", "signed_uniques",
+      s"tokenizer_r${TextQueries.BpeRounds}")
+      .foreach(k => assert(misses(k) == 1, s"$k was not dropped: $misses"))
     // scoped: invalidating a dir this session never touched is a no-op
-    SimilarityQueries.invalidateCorpus(spark, "/nonexistent/dir")
+    SessionArtifacts.invalidate(spark, "/nonexistent/dir")
     val still = SimilarityQueries.q82IvfPqAnn(spark, dir).collect()
       .map(_.toString).toSeq
     assert(still == warm)

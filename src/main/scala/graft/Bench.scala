@@ -346,7 +346,7 @@ object Bench {
     // one-line JSON contract the driver parses
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = Env.positiveInt("SPARK_GRAFT_CPUS", 32)
+    val cpus = Env.cpus
     val warmups = Env.positiveInt("SPARK_GRAFT_WARMUP", 1)
     if (sys.env.get("SPARK_GRAFT_FORK").contains("1") &&
         sys.env.get("SPARK_GRAFT_ONLY").isEmpty) {

@@ -16,4 +16,9 @@ object Env {
   def positiveInt(name: String, default: Int): Int =
     parsePositive(name, sys.env.get(name), default).fold(
       msg => { System.err.println(s"[env] $msg"); sys.exit(2) }, identity)
+
+  /** `SPARK_GRAFT_CPUS`, the `local[N]` core count of every main; defaults
+    * to the host's available processors. */
+  def cpus: Int =
+    positiveInt("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors)
 }

@@ -41,7 +41,7 @@ object Sessions {
     // points those executor JVMs at the application jar, which local mode
     // never needs.
     val effectiveMaster = sys.env.getOrElse("SPARK_GRAFT_MASTER", master)
-    // loud provenance: a leftover export must not let bench/smoke numbers
+    // loud provenance: a leftover export must not let bench numbers
     // from a different execution mode land in artifacts unannounced
     if (effectiveMaster != master)
       System.err.println(

@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = Env.positiveInt("SPARK_GRAFT_CPUS", 4)
+    val cpus = Env.cpus
     val spark = Sessions.build(s"local[$cpus]", cpus, "graft-verify")
     new java.io.File(outDir).mkdirs()
     // Dev-only filter for single-query iteration (unset in driver runs).

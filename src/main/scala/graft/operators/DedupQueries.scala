@@ -899,7 +899,7 @@ object DedupQueries {
     * visible at sf0.01 while the plan shape is length-independent. Override
     * per session with `spark.graft.spans.tokens` (VERDICT r6 #7) — the
     * oracle entries pin the default, so the conf is for production runs
-    * and the 50-token smoke, not the gate. */
+    * and 50-token Bench runs, not the gate. */
   val SpanTokens = 8
   private[graft] val SpanTokensKey = "spark.graft.spans.tokens"
 
@@ -955,8 +955,8 @@ object DedupQueries {
   def q71ExactSpans(spark: SparkSession, dir: String): DataFrame =
     spanDupFlags(Tables.documents(spark, dir)).orderBy(col("doc_id").asc)
 
-  /** Per-doc-distinct (doc_id, h) span-hash stream — step 1 of q77's
-    * window twin and the [[SkewProbe]]-style sampling in tools. */
+  /** Per-doc-distinct (doc_id, h) span-hash stream — step 1 of the q71
+    * window twin DedupSpec checks [[spanDupFlags]] against. */
   private[graft] def docSpans(docs: DataFrame): DataFrame =
     docs.filter(col("text").isNotNull)
       .select(col("doc_id"), explode(array_distinct(

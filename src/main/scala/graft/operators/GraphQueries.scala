@@ -56,10 +56,10 @@ object GraphQueries {
       .filter(col("src") =!= col("dst"))
 
   /** The damped-power-iteration core over ANY pre-materialized (src, dst)
-    * Long-keyed edge frame — shared verbatim by q95 (the %23 oracle graph)
-    * and [[graft.tools.PageRankSmoke]] (the real sf1.0 doc↔domain graph,
-    * |V| ≥ 10⁴), so the shuffle-scale smoke exercises the exact code path
-    * the catalog entry ships (VERDICT r8 #4). Per iteration: edges⋈ranks
+    * Long-keyed edge frame: the distributed reference q95 is checked
+    * against (GraphSpec compares the two over the same edges and pins this
+    * loop's reliable checkpoints), and the shape a graph too large for the
+    * driver needs (VERDICT r8 #4). Per iteration: edges⋈ranks
     * equi-join on src, map-side-partial groupBy(dst), node-table rejoin;
     * each iteration's ranks go through [[Materialize.materialize]] to keep
     * plan depth constant and be cluster-restartable. Returns one (node, r)
@@ -69,9 +69,10 @@ object GraphQueries {
     * `scale` is the total rank mass in integer units. Truncating DIVs lose
     * up to ~1 unit per node per truncation site, so granularity must suit
     * |V|: q95's oracle-pinned 10^6 micro is exact-reproducible but loses
-    * ~2% mass per iteration at |V| ~ 2.5×10^4 (the r9 smoke measured it);
-    * at real graph sizes pass a finer scale (the smoke uses 10^12 — still
-    * Long-safe: contrib sums are bounded by the scale itself). */
+    * ~2% mass per iteration at |V| ~ 2.5×10^4 (measured in r9 on the real
+    * sf1.0 doc↔domain graph, artifacts/PAGERANK_SMOKE_sf1.0_r09.json); at
+    * real graph sizes pass a finer scale (10^12 is still Long-safe:
+    * contrib sums are bounded by the scale itself). */
   private[graft] def powerIteration(edges: DataFrame, iters: Int,
       scale: Long = Scale): DataFrame = {
     val basePerN = scale * (100 - DampPct) / 100
@@ -116,9 +117,9 @@ object GraphQueries {
     * (shared-session bench, this host): 2.08 → 0.35 s; plan goes from
     * 6 checkpoints + 5 join rounds to ONE distinct shuffle + a 23-row
     * local sort (plans/r16/q95_pagerank_{before,after}.txt).
-    * [[powerIteration]] itself is unchanged and stays the REAL-graph
-    * path (tools/PageRankSmoke drives it over the |V| ≥ 10⁴ doc↔domain
-    * graph, where the distributed loop is the only shape that scales). */
+    * [[powerIteration]] itself is unchanged and stays the distributed
+    * reference, the only shape that scales to a graph the driver cannot
+    * hold. */
   def q95PageRank(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val docs = Tables.documents(spark, dir)

@@ -476,10 +476,10 @@ object TextQueries {
   def q101BpeTrain(spark: SparkSession, dir: String): DataFrame =
     bpeTrain(Tables.documents(spark, dir).filter(col("text").isNotNull), BpeRounds)
 
-  /** The q101 body over ANY (text) frame — tools/BpeSmoke races its
-    * per-round cost across corpus scales. At [[BpeRounds]] = 8 a call pays
-    * 3 checkpoint jobs: the vocab census, then the vocab after rounds 3
-    * and 6 (none after the final round). */
+  /** The q101 body over ANY (text) frame: the tokenizer builds and
+    * BpeSpec's hand-computed corpora train through it. At [[BpeRounds]] = 8
+    * a call pays 3 checkpoint jobs: the vocab census, then the vocab after
+    * rounds 3 and 6 (none after the final round). */
   private[graft] def bpeTrain(docs: DataFrame, rounds: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -1047,14 +1047,8 @@ object TextQueries {
     * the corpus once. Intentional: the offsets cannot be known without
     * running the rank partitioning (the same trade as the IVF index
     * builds, which are eager for the same reason). */
-  def q94Perplexity(spark: SparkSession, dir: String): DataFrame =
-    perplexitySplit(Tables.documents(spark, dir))
-
-  /** The q94 body over ANY (doc_id, text) frame — q94 routes the corpus
-    * here; tools/PerplexitySmoke races it against the retired r8
-    * formulation on a vocab-heavy synthetic corpus. */
-  private[graft] def perplexitySplit(docs: DataFrame): DataFrame = {
-    val toks = docs.filter(col("text").isNotNull)
+  def q94Perplexity(spark: SparkSession, dir: String): DataFrame = {
+    val toks = Tables.documents(spark, dir).filter(col("text").isNotNull)
       .select(col("doc_id"), expr("filter(split(text, ' '), x -> x <> '')").as("toks"))
       .filter(size(col("toks")) > 0)
     val tokenOcc = toks.select(col("doc_id"), explode(col("toks")).as("token"))

@@ -34,7 +34,7 @@ object ExecutedPlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = args.drop(1).toSet
-    val cpus = Env.positiveInt("SPARK_GRAFT_CPUS", 8)
+    val cpus = Env.cpus
     val spark = Sessions.build(s"local[$cpus]", cpus, "graft-executed-plan")
     val failed = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => names.isEmpty || names.contains(n) }

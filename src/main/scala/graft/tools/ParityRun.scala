@@ -43,7 +43,7 @@ object ParityRun {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: ParityRun <inputs.jsonl> <outputs.jsonl>")
     val Array(inPath, outPath) = args
-    val cpus = graft.Env.positiveInt("SPARK_GRAFT_CPUS", 8)
+    val cpus = graft.Env.cpus
     val spark = graft.Sessions.build(s"local[$cpus]", cpus, "graft-parity")
     import spark.implicits._
 

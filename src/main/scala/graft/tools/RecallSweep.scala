@@ -1,13 +1,14 @@
 package graft.tools
 
-import graft.Sessions
+import graft.{Env, Sessions}
 import graft.operators.SimilarityQueries
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
+import org.apache.commons.io.FileUtils
 
 /** Recall/candidate-count curve for the ANN tunables (dev tool; VERDICT r4
   * next-round #9): sweep sign-LSH plane counts and IVF (cells, probes)
-  * against the exact brute-force top-k on a given corpus — by default the
-  * 30x replicated one from [[ScaleSmoke]] — and print one JSON line per
+  * against the exact brute-force top-k on a given corpus (default sf0.1;
+  * `tools/gen_scale.py` writes larger ones) and print one JSON line per
   * config: wall time, candidate-pair count, and mean recall@k.
   *
   * This is the evidence behind the scaladoc claims that the demo-scale
@@ -20,11 +21,9 @@ import java.nio.file.{Files, Paths}
 object RecallSweep {
 
   def main(args: Array[String]): Unit = {
-    val spark = Sessions.build("local[32]", 32, "graft-recall-sweep")
-    val dir = args.headOption.getOrElse {
-      val big = s"/tmp/graft_sfbig_x30"
-      if (Files.exists(Paths.get(big, "_OK"))) big else "/root/testdata/sf0.1"
-    }
+    val cpus = Env.cpus
+    val spark = Sessions.build(s"local[$cpus]", cpus, "graft-recall-sweep")
+    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     System.err.println(s"[sweep] corpus: $dir")
 
     // exact top-k per query — the recall denominator
@@ -104,15 +103,17 @@ object RecallSweep {
         pairRecall(got), (System.nanoTime() - t0) / 1e9)
     }
     for ((cells, probes) <- Seq((8, 1), (8, 2), (8, 4), (16, 2), (16, 4))) {
-      val idx = Files.createTempDirectory(s"q65idx_$cells").toString
-      SimilarityQueries.buildIvfIndex(spark, dir, idx, cells = cells)
-      val t0 = System.nanoTime()
-      val got = SimilarityQueries
-        .semanticDedupFromIvfIndex(spark, dir, idx, probes = probes)
-        .select("id_a", "id_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      emit("q65-ivf", s"cells=$cells,probes=$probes", got.length,
-        pairRecall(got), (System.nanoTime() - t0) / 1e9)
+      val idx = Files.createTempDirectory(s"q65idx_$cells")
+      try {
+        SimilarityQueries.buildIvfIndex(spark, dir, idx.toString, cells = cells)
+        val t0 = System.nanoTime()
+        val got = SimilarityQueries
+          .semanticDedupFromIvfIndex(spark, dir, idx.toString, probes = probes)
+          .select("id_a", "id_b").collect()
+          .map(r => (r.getLong(0), r.getLong(1)))
+        emit("q65-ivf", s"cells=$cells,probes=$probes", got.length,
+          pairRecall(got), (System.nanoTime() - t0) / 1e9)
+      } finally FileUtils.deleteDirectory(idx.toFile)
     }
     spark.stop()
   }

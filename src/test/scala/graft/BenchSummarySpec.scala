@@ -102,8 +102,7 @@ class BenchSummarySpec extends AnyFunSuite {
     // the other reads keep their own defaults
     assert(Env.parsePositive("SPARK_GRAFT_WARMUP", None, 1) == Right(1))
     assert(Env.parsePositive("SPARK_GRAFT_WARMUP", Some("3"), 1) == Right(3))
-    assert(Env.parsePositive("SPARK_GRAFT_REPLICAS", None, 10) == Right(10))
-    for (name <- Seq("SPARK_GRAFT_CPUS", "SPARK_GRAFT_WARMUP", "SPARK_GRAFT_REPLICAS");
+    for (name <- Seq("SPARK_GRAFT_CPUS", "SPARK_GRAFT_WARMUP");
          bad <- Seq("eight", "8x", "", "0", "-4")) {
       val err = Env.parsePositive(name, Some(bad), 1)
       assert(err == Left(s"$name must be a positive integer, got '$bad'"), s"$name='$bad' -> $err")

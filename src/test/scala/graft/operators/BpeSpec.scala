@@ -43,6 +43,18 @@ class BpeSpec extends AnyFunSuite with SparkTestSession {
     assert(train(Seq("ab"), 8) === Seq((1, "<a><b>", "ab", 1L)))
   }
 
+  test("exact 4x duplication keeps the merge sequence and scales every count 4x") {
+    // duplication multiplies every pair count by 4, so neither a round's
+    // argmax nor its tie-break (pair ascending) can change
+    val texts = Seq("low lower", "low newest", "low", "widest newer wider",
+      "the lowest tower")
+    val once = train(texts, 8)
+    val four = train(Seq.fill(4)(texts).flatten, 8)
+    assert(once.length == 8, s"corpus exhausted early: $once")
+    assert(four.map(m => (m._1, m._2, m._3)) === once.map(m => (m._1, m._2, m._3)))
+    assert(four.map(_._4) === once.map(_._4 * 4))
+  }
+
   test("normalization front end folds case and strips punctuation before training") {
     // 'LOW!' and 'low' are the same word post-normalization
     val got = train(Seq("LOW! low", "l-o-w"), 1)

@@ -9,7 +9,7 @@ echo -n '{' > "$OUT"
 first=1
 for q in "$@"; do
   echo "=== $q (spark alone) ===" >&2
-  SPARK_GRAFT_ONLY=$q SPARK_GRAFT_SF_DIR=$SF_DIR SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_ONLY=$q SPARK_GRAFT_SF_DIR=$SF_DIR \
     sbt -batch "runMain graft.Bench" > /tmp/bench_alone_$q.log 2>&1
   spark=$(python3 -c "
 import json,re

@@ -111,11 +111,10 @@ def gate():
     for sf, sf_dir in sfs:
         out_dir = f"/tmp/verify_gate_{sf}"
         print(f"\n=== {sf}: graft.Verify -> {out_dir} ===", flush=True)
-        env = dict(os.environ, SPARK_GRAFT_CPUS="16")
         subprocess.run(
             ["java", *JAVA_OPENS, "-cp", f"{JAR}:/opt/spark/jars/*",
              "graft.Verify", sf_dir, out_dir],
-            cwd=REPO, check=True, env=env)
+            cwd=REPO, check=True)
         skip = ()
         if sf == "sf1.0":
             # giant-component corpus: q56/q122 check via union-find

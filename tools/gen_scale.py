@@ -2,8 +2,8 @@
 """Generate a true 10x multi-file corpus from sf0.1 (VERDICT r7 next-round
 #3): the sf1.0-scale gate evidence input.
 
-Unlike ScaleSmoke's identical-text replication (the 90%-duplicate
-adversary), this produces a REALISTIC 10x corpus: every replica shifts its
+Unlike identical-text replication (every replica an exact copy: the
+90%-duplicate adversary), this produces a REALISTIC 10x corpus: every replica shifts its
 keys into a disjoint id range with foreign keys shifted consistently
 (orders->customer, lineitem->orders/part/supplier), documents get
 replica-tagged text except a deterministic ~14% slice kept as exact

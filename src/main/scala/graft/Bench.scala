@@ -124,13 +124,12 @@ object Bench {
       ratioExNaive: Option[Double], ratioExTva: Option[Double])
 
   /** Render the paired-baseline JSON fields from the Spark per-query
-    * minima + the DuckDB twin run — shared by the forked and same-JVM
-    * paths. Carries the full paired ratio, the ex-naive ratio
-    * (declared-naive baselines excluded on BOTH sides; VERDICT r12 #3:
-    * q20 alone is ~28x and poisons the full ratio), and the ex-tva ratio
-    * (train-vs-apply-asymmetric entries excluded: their Spark side serves
-    * from session caches while the DuckDB twin retrains inline, so the
-    * pair is structurally not like-for-like — ADVICE r14). */
+    * minima + the DuckDB twin run. Carries the full paired ratio, the
+    * ex-naive ratio (declared-naive baselines excluded on BOTH sides;
+    * VERDICT r12 #3: q20 alone is ~28x and poisons the full ratio), and
+    * the ex-tva ratio (train-vs-apply-asymmetric entries excluded: their
+    * Spark side serves from session caches while the DuckDB twin retrains
+    * inline, so the pair is structurally not like-for-like — ADVICE r14). */
   private def pairedFields(results: Seq[(String, Double)], sfDir: String): Option[Paired] =
     pairedDuckdb(sfDir).map { case (duckTotal, n, duckQueries) =>
       val pairedKeys: String => Boolean =
@@ -169,16 +168,16 @@ object Bench {
         exTvaPair.map { case (s, d) => s / d })
     }
 
-  /** The LAST stdout line of a full bench run: a compact (<1 KB) summary
+  /** The LAST stdout line of every bench run: a compact (<1 KB) summary
     * the driver's ~2 KB tail capture can always hold. Five consecutive
     * rounds of `parsed: null` traced to the full per-query line (~3.5 KB
     * at 124 entries) being truncated mid-`ratios` (VERDICT r14 #1). The
-    * full detail line still goes to stdout FIRST (forked children and dev
-    * flows parse it) and to target/bench.json (the committed artifact);
-    * only this summary is guaranteed to be the final line. */
+    * full detail line still goes to stdout FIRST (dev flows parse it) and
+    * to target/bench.json (the committed artifact); only this summary is
+    * guaranteed to be the final line. */
   private[graft] def compactSummary(results: Seq[(String, Double)],
       failed: Iterable[String], sf: String, loadBefore: Double,
-      loadAfter: Double, forked: Boolean, paired: Option[Paired],
+      loadAfter: Double, paired: Option[Paired],
       cpus: Int, master: String): String = {
     val total = results.map(_._2).sum
     // a handful of stable headline entries so the line still carries a
@@ -211,7 +210,7 @@ object Bench {
     // comparison concluded `suspect_cpus_ignored` against a bench that DOES
     // honor $SPARK_GRAFT_CPUS — echoing both makes the 8-vs-32-core legs
     // adjudicable from the artifact alone
-    f"""{"metric":"total","value":$total%.4f,"unit":"sec","sf":"$sf","n":${results.size},"cpus":$cpus,"master":"${jsonEscape(master)}","queries":$qs,"failed":$failedJson,"failed_n":${failedSeq.size},"loadavg_before":$loadBefore%.2f,"loadavg_after":$loadAfter%.2f,"passes":3,"forked":$forked$pairedPart,"detail":"target/bench.json"}"""
+    f"""{"metric":"total","value":$total%.4f,"unit":"sec","sf":"$sf","n":${results.size},"cpus":$cpus,"master":"${jsonEscape(master)}","queries":$qs,"failed":$failedJson,"failed_n":${failedSeq.size},"loadavg_before":$loadBefore%.2f,"loadavg_after":$loadAfter%.2f,"passes":3$pairedPart,"detail":"target/bench.json"}"""
   }
 
   /** JVM-wide codegen counters: generated classes compiled so far, and
@@ -225,8 +224,7 @@ object Bench {
     """"codegen_fields":["warmup_compiles","warmup_compile_ms","timed_compiles","timed_compile_ms"]"""
 
   /** The per-entry codegen block of the full JSON line: flat arrays (no
-    * nested braces), so the forked parent can lift a child's block with one
-    * regex. */
+    * nested braces), so one regex lifts an entry's counts. */
   private[graft] def codegenJson(perEntry: Seq[(String, Array[Double])]): String =
     perEntry.map { case (k, c) =>
       "\"" + k + f"\":[${c(0).toLong},${c(1)}%.1f,${c(2).toLong},${c(3)}%.1f]"
@@ -246,100 +244,6 @@ object Bench {
       .getSystemLoadAverage
     catch { case _: Throwable => -1.0 }
 
-  /** Forked per-family mode (SPARK_GRAFT_FORK=1; VERDICT r10 #5): run each
-    * [[SparkEntry.families]] group in its OWN child JVM — the in-harness
-    * reproduction of the "subset alone in a fresh JVM" control that
-    * adjudicated r10's bench drift. A single shared JVM accumulates
-    * code-cache/JIT state across 110+ Materialize/codegen-heavy entries ×
-    * 4 passes (a measured ~10% residual on late entries even after the
-    * per-query unpersist); one JVM per family bounds that pollution to a
-    * module while keeping deliberate intra-family sharing (the tokenizer
-    * cache) intact. HARNESS change, not a perf claim: the artifact says
-    * "forked":true so rounds are never compared across modes unlabeled.
-    * The paired DuckDB twin runs once in the parent, after all children. */
-  private def runForked(sfDir: String, cpus: Int): Unit = {
-    val loadBefore = loadavg()
-    val rt = java.lang.management.ManagementFactory.getRuntimeMXBean
-    val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
-    val jvmArgs = rt.getInputArguments
-    // families must partition the query set: an entry registered in
-    // queries but missing from every family would be silently unmeasured
-    // (neither timed nor failed) — the truncation class the per-child
-    // rc guard below exists to prevent (review r11)
-    val familyKeys = SparkEntry.families.flatMap(_._2)
-    require(familyKeys.toSet == SparkEntry.queries.keySet &&
-        familyKeys.length == familyKeys.distinct.length,
-      "SparkEntry.families must cover every queries key exactly once; " +
-        s"missing=${SparkEntry.queries.keySet -- familyKeys.toSet} " +
-        s"extra=${familyKeys.toSet -- SparkEntry.queries.keySet}")
-    val perQuery = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val failed = scala.collection.mutable.LinkedHashSet[String]()
-    val blocks = Seq("codegen", "artifacts").map(_ -> Seq.newBuilder[String]).toMap
-    SparkEntry.families.foreach { case (family, keys) =>
-      val cmd = new java.util.ArrayList[String]()
-      cmd.add(javaBin)
-      jvmArgs.forEach(a => cmd.add(a))
-      cmd.add("-cp"); cmd.add(sys.props("java.class.path"))
-      cmd.add("graft.Bench")
-      val pb = new ProcessBuilder(cmd)
-      pb.environment().put("SPARK_GRAFT_ONLY", keys.mkString(","))
-      // children start JIT-cold: 3 warmup passes before timing (see the
-      // warmup note in main) so forked numbers are comparable to a hot
-      // shared session
-      pb.environment().put("SPARK_GRAFT_WARMUP", "3")
-      pb.environment().remove("SPARK_GRAFT_FORK")
-      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-      val proc = pb.start()
-      val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
-      val rc = proc.waitFor()
-      val qBlock = """"queries":\s*\{(.*?)\}""".r.findFirstMatchIn(out)
-        .map(_.group(1)).getOrElse("")
-      """"([^"]+)":\s*([0-9.]+)""".r.findAllMatchIn(qBlock)
-        .foreach(m => perQuery(m.group(1)) = m.group(2).toDouble)
-      val fBlock = """"failed":\s*\[(.*?)\]""".r.findFirstMatchIn(out)
-        .map(_.group(1)).getOrElse("")
-      """"([^"]+)"""".r.findAllMatchIn(fBlock).foreach(m => failed += m.group(1))
-      blocks.foreach { case (b, acc) =>
-        ("\"" + b + "\":\\{([^{}]*)\\}").r.findFirstMatchIn(out)
-          .map(_.group(1)).filter(_.nonEmpty).foreach(acc += _)
-      }
-      if (rc != 0)
-        System.err.println(s"[bench] forked family $family exited rc=$rc")
-      // EVERY key must be accounted (timed or failed) regardless of rc: a
-      // child that exits 0 but whose stdout fails the regex parse (format
-      // drift, truncated pipe) would otherwise leave its family silently
-      // unmeasured — the truncation class the families-partition require
-      // exists to prevent (ADVICE r11)
-      val unaccounted = keys.filterNot(k => perQuery.contains(k) || failed(k))
-      if (unaccounted.nonEmpty) {
-        unaccounted.foreach(failed += _)
-        System.err.println(
-          s"[bench] forked family $family rc=$rc left unparsed keys: " +
-            unaccounted.mkString(","))
-      }
-    }
-    val results = perQuery.toSeq.sortBy(_._1)
-    val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.4f" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val sf = sfDir.split('/').last.stripPrefix("sf")
-    val paired = pairedFields(results, sfDir)
-    val loadAfter = loadavg()
-    val json =
-      f"""{"metric":"total","value":$total%.4f,"unit":"sec","queries":$qs,"sf":"$sf","failed":$failedJson,"loadavg_before":$loadBefore%.2f,"loadavg_after":$loadAfter%.2f,"passes":3,"forked":true,"families":${SparkEntry.families.size},"train_vs_apply":$trainVsApplyJson,"declared_naive":$declaredNaiveJson${paired.map(_.fragment).getOrElse("")},$codegenFields,"codegen":{${blocks("codegen").result().mkString(",")}},$artifactsFields,"artifacts":{${blocks("artifacts").result().mkString(",")}}}"""
-    println(json)
-    try {
-      Files.createDirectories(Paths.get("target"))
-      Files.writeString(Paths.get("target/bench.json"), json + "\n")
-    } catch { case _: Throwable => () }
-    // LAST line: compact summary under the driver's tail-capture budget.
-    // cpus/master echo what each child ran with (children inherit the env).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    println(compactSummary(results, failed, sf, loadBefore, loadAfter,
-      forked = true, paired, cpus, master))
-  }
-
   def main(args: Array[String]): Unit = {
     // the f-interpolator formats doubles with the DEFAULT locale — on a
     // comma-decimal JVM (de_DE etc.) every %.4f below would corrupt the
@@ -348,11 +252,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Env.cpus
     val warmups = Env.positiveInt("SPARK_GRAFT_WARMUP", 1)
-    if (sys.env.get("SPARK_GRAFT_FORK").contains("1") &&
-        sys.env.get("SPARK_GRAFT_ONLY").isEmpty) {
-      runForked(sfDir, cpus)
-      return
-    }
     val spark = Sessions.build(s"local[$cpus]", cpus, "graft-bench")
 
     // host-load metadata (VERDICT r8 #5: a bench artifact from a
@@ -409,9 +308,8 @@ object Bench {
     // SPARK_GRAFT_WARMUP raises the pass count — a FRESH JVM needs ~3
     // passes before the codegen-heavy entries reach steady state
     // (measured r12: q109 14.2 -> 4.9 -> 2.8 -> 2.4 s across repeats in
-    // one JVM), which is exactly the forked-mode small-entry penalty the
-    // r11 verdict flagged: a shared-session JVM arrives hot from earlier
-    // families, a forked child does not. runForked sets 3 for children.
+    // one JVM). A full run's late entries arrive hot from earlier ones; a
+    // SPARK_GRAFT_ONLY subset in a fresh JVM does not and wants 3.
     (1 to warmups).foreach { _ =>
       queries.foreach { case (name, fn) => runOne(name, fn, timed = false) }
     }
@@ -459,13 +357,9 @@ object Bench {
       Files.writeString(Paths.get("target/bench.json"), json + "\n")
     } catch { case _: Throwable => () }
     // LAST stdout line: compact summary under the driver's ~2 KB tail
-    // capture. Dev runs (SPARK_GRAFT_ONLY set, including forked children)
-    // skip it — their full line is already small, and the forked parent
-    // regex takes the FIRST "queries" match, which must stay the full map.
-    if (only.isEmpty)
-      println(compactSummary(results, failed, sf, loadBefore, loadAfter,
-        forked = false, paired, cpus,
-        sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")))
+    // capture.
+    println(compactSummary(results, failed, sf, loadBefore, loadAfter,
+      paired, cpus, sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")))
     spark.stop()
   }
 }

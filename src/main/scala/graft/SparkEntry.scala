@@ -19,68 +19,54 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     CurationPipeline.q52Curation(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    (RelationalQueries.all ++ DedupQueries.all ++ SimilarityQueries.all ++
+  /** One (key, fn) pair per implemented operator from SURVEY.md §2, in
+    * registration order. `queries` is its map; a key listed twice here
+    * would silently lose one entry there (CatalogDeterminismSpec pins
+    * every key unique). */
+  private[graft] def catalog: Seq[(String, (SparkSession, String) => DataFrame)] =
+    RelationalQueries.all ++ DedupQueries.all ++ SimilarityQueries.all ++
       TextQueries.all ++ FunctionQueries.all ++ AsOfQueries.all ++
       AnalyticsQueries.all ++ CurationPipeline.all ++ WebCurationQueries.all ++
-      LineCurationQueries.all ++ GraphQueries.all).toMap +
-      // Estimator sweep: non-SQL-expressible (rows-only check); the kernel is
-      // value-pinned by the ScalaTest parity suite instead.
-      ("q21_estimator_sweep" -> (Engine.sweepQuery _)) +
-      // Kernel non-loop passes over the same grid: ORACLE-CHECKED (r13 —
-      // the straight-line sizing math DuckDB can re-derive; the fixpoint
-      // stays rows-only in q21).
-      ("q121_kernel_passes" -> (Engine.kernelPassesQuery _)) +
-      // A8 TM fixpoint over the same grid: ORACLE-CHECKED (r14 — the
-      // <=12-iteration loop unrolls into generated CTE stages; only the
-      // data-dependent placement/growth loops stay rows-only in q21).
-      ("q123_tm_fixpoint" -> (Engine.tmFixpointQuery _)) +
-      // A13/A14 greedy packing + node growth over the placement grid:
-      // ORACLE-CHECKED (r16 — the greedy is slot-sort-equivalent because
-      // all non-JM nodes are identical, and growth has closed forms; the
-      // last estimator math that was rows-only in q21).
-      ("q127_greedy_placement" -> (Engine.placementQuery _)) +
-      // B5 list pipeline over a deterministic demo run store (rows-only:
-      // file sizes/mtimes are machine-dependent; pinned by RunStoreSpec).
-      ("q34_saved_runs_list" -> (Engine.savedRunsListQuery _)) +
-      // Multimodal decode census (r4: oracle-checked — the deterministic
-      // fake encoder lets DuckDB recompute expected metadata from documents).
-      ("q38_media_meta" -> (graft.multimodal.MultimodalOps.q38MediaMeta _)) +
-      // Perceptual image near-dup (r9: dHash over decoded BMP pixels,
-      // banded LSH + exact hamming verify — oracle re-derives the pixel
-      // arithmetic from the deterministic layout).
-      ("q98_image_phash" -> (graft.multimodal.MultimodalOps.q98ImagePhash _)) +
-      // Audio fingerprint near-dup (r9: the WAV twin of q98 — energy-
-      // envelope hash through the real header, same banded census).
-      ("q99_audio_fingerprint" -> (graft.multimodal.MultimodalOps.q99AudioFingerprint _)) +
-      // Video fingerprint near-dup (r10: frame-sampled twin over the
-      // GRFT multi-frame stub — per-frame envelope hash, same census).
-      ("q103_video_fingerprint" -> (graft.multimodal.MultimodalOps.q103VideoFingerprint _)) +
-      // PNG perceptual near-dup (r15: q98 through a REAL compressed
-      // container — chunk walk, CRC32, Inflater, all five defilters).
-      ("q126_png_phash" -> (graft.multimodal.MultimodalOps.q126PngPhash _))
+      LineCurationQueries.all ++ GraphQueries.all ++ Seq(
+        // Estimator sweep: non-SQL-expressible (rows-only check); the kernel
+        // is value-pinned by the ScalaTest parity suite instead.
+        "q21_estimator_sweep" -> (Engine.sweepQuery _),
+        // Kernel non-loop passes over the same grid: ORACLE-CHECKED (r13 —
+        // the straight-line sizing math DuckDB can re-derive; the fixpoint
+        // stays rows-only in q21).
+        "q121_kernel_passes" -> (Engine.kernelPassesQuery _),
+        // A8 TM fixpoint over the same grid: ORACLE-CHECKED (r14 — the
+        // <=12-iteration loop unrolls into generated CTE stages; only the
+        // data-dependent placement/growth loops stay rows-only in q21).
+        "q123_tm_fixpoint" -> (Engine.tmFixpointQuery _),
+        // A13/A14 greedy packing + node growth over the placement grid:
+        // ORACLE-CHECKED (r16 — the greedy is slot-sort-equivalent because
+        // all non-JM nodes are identical, and growth has closed forms; the
+        // last estimator math that was rows-only in q21).
+        "q127_greedy_placement" -> (Engine.placementQuery _),
+        // B5 list pipeline over a deterministic demo run store (rows-only:
+        // file sizes/mtimes are machine-dependent; pinned by RunStoreSpec).
+        "q34_saved_runs_list" -> (Engine.savedRunsListQuery _),
+        // Multimodal decode census (r4: oracle-checked — the deterministic
+        // fake encoder lets DuckDB recompute expected metadata from
+        // documents).
+        "q38_media_meta" -> (graft.multimodal.MultimodalOps.q38MediaMeta _),
+        // Perceptual image near-dup (r9: dHash over decoded BMP pixels,
+        // banded LSH + exact hamming verify — oracle re-derives the pixel
+        // arithmetic from the deterministic layout).
+        "q98_image_phash" -> (graft.multimodal.MultimodalOps.q98ImagePhash _),
+        // Audio fingerprint near-dup (r9: the WAV twin of q98 — energy-
+        // envelope hash through the real header, same banded census).
+        "q99_audio_fingerprint" -> (graft.multimodal.MultimodalOps.q99AudioFingerprint _),
+        // Video fingerprint near-dup (r10: frame-sampled twin over the
+        // GRFT multi-frame stub — per-frame envelope hash, same census).
+        "q103_video_fingerprint" -> (graft.multimodal.MultimodalOps.q103VideoFingerprint _),
+        // PNG perceptual near-dup (r15: q98 through a REAL compressed
+        // container — chunk walk, CRC32, Inflater, all five defilters).
+        "q126_png_phash" -> (graft.multimodal.MultimodalOps.q126PngPhash _))
 
-  /** Query keys grouped by catalog module — the per-family isolation unit
-    * of Bench's forked mode (SPARK_GRAFT_FORK=1): one JVM per family kills
-    * cross-entry JVM pressure (code-cache/JIT growth at 110+ entries)
-    * while entries that deliberately share session state (the q101/q104/
-    * q106/q108 tokenizer cache) stay together in their module's JVM. */
-  def families: Seq[(String, Seq[String])] = Seq(
-    "relational" -> RelationalQueries.all.map(_._1),
-    "dedup" -> DedupQueries.all.map(_._1),
-    "similarity" -> SimilarityQueries.all.map(_._1),
-    "text" -> TextQueries.all.map(_._1),
-    "functions" -> FunctionQueries.all.map(_._1),
-    "asof" -> AsOfQueries.all.map(_._1),
-    "analytics" -> AnalyticsQueries.all.map(_._1),
-    "curation" -> (CurationPipeline.all.map(_._1) ++
-      WebCurationQueries.all.map(_._1) ++ LineCurationQueries.all.map(_._1)),
-    "graph" -> GraphQueries.all.map(_._1),
-    "engine" -> Seq("q21_estimator_sweep", "q34_saved_runs_list",
-      "q121_kernel_passes", "q123_tm_fixpoint", "q127_greedy_placement"),
-    "multimodal" -> Seq("q38_media_meta", "q98_image_phash",
-      "q99_audio_fingerprint", "q103_video_fingerprint", "q126_png_phash"))
+  /** The catalog by key: operator name -> (spark, sfDir) -> DataFrame. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] = catalog.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a rows-only check. */

@@ -51,9 +51,9 @@ final class HttpApi(store: RunStore, port: Int = 0) {
   private val server: HttpServer = {
     // TCP_NODELAY on the JDK server: without it, every response pays the
     // Nagle + delayed-ACK stall — measured 44 ms p50 flat at any
-    // concurrency vs 0.5 ms with it (tools/http_bench.py, round 8). The
-    // property is read when the server implementation classes first load,
-    // so it must be set before the first HttpServer.create in the JVM.
+    // concurrency vs 0.5 ms with it (round 8). The property is read when
+    // the server implementation classes first load, so it must be set
+    // before the first HttpServer.create in the JVM.
     System.setProperty("sun.net.httpserver.nodelay", "true")
     val s = HttpServer.create(new InetSocketAddress(port), 0)
     s.createContext("/", (ex: HttpExchange) => route(ex))

@@ -47,7 +47,7 @@ object CurationPipeline {
 
     // stage 1: exact dedup — canonical representative per content hash,
     // through the shared skew-safe form (VERDICT r6 #1)
-    val deduped = DedupQueries.withCanonicalFlagAuto(docs)
+    val deduped = DedupQueries.withCanonicalFlag(docs, skewSafe = true)
 
     // stage 2: quality predicates
     val qualified = col("is_canonical") &&
@@ -151,8 +151,9 @@ object CurationPipeline {
     // stages 1 + 3: shared skew-safe canonical selection (VERDICT r6 #1)
     // + repetition projection
     val g2 = graft.functions.WordNGrams(col("text"), 2)
-    val flagged = DedupQueries.withCanonicalFlagAuto(docs
-      .withColumn("n_tokens", size(split(col("text"), " ")).cast("long")))
+    val flagged = DedupQueries.withCanonicalFlag(docs
+      .withColumn("n_tokens", size(split(col("text"), " ")).cast("long")),
+      skewSafe = true)
       .withColumn("repetitive",
         when(size(g2) === 0, lit(false)).otherwise(
           (size(g2) - size(array_distinct(g2))).cast("long") * 1000L >=

@@ -125,11 +125,6 @@ object DedupQueries {
         countDistinct(md5(col("text"))).as("n_unique"),
         (count(lit(1)) - countDistinct(md5(col("text")))).cast("long").as("n_dup"))
 
-  /** Conf for [[withCanonicalFlag]]'s form: `"true"` (default — the
-    * census+rejoin form, skew-safe), `"false"` (keyed window), `"auto"`
-    * ([[SkewProbe]] decides per corpus). */
-  private[graft] val CanonicalSkewSafeKey = "spark.graft.canonical.skewSafe"
-
   /** Canonical-copy selection — `is_canonical` = "this doc is the lowest
     * doc_id of its exact-duplicate family (md5 of text)" — the stage-1
     * primitive of both curation pipelines (q52/q75). Shared here so the
@@ -138,7 +133,8 @@ object DedupQueries {
     *
     * Two output-identical forms (DedupSpec pins parity on a hot-family
     * corpus):
-    *  - census+rejoin (DEFAULT): `groupBy(md5(text)).agg(min(doc_id))`
+    *  - census+rejoin (`skewSafe = true`, what every catalog caller
+    *    runs): `groupBy(md5(text)).agg(min(doc_id))`
     *    then an equi-rejoin on the hash. Map-side partials collapse a hot
     *    family to one row per map task before the census shuffle, and the
     *    rejoin is AQE-skew-splittable. This is the form that survives the
@@ -149,6 +145,8 @@ object DedupQueries {
     *  - keyed window (`row_number() OVER (PARTITION BY md5(text))`): one
     *    shuffle instead of two — marginally cheaper on a skew-free corpus,
     *    but the hot family lands whole in one AQE-unsplittable partition.
+    *    Kept only as the reference DedupSpec checks the census form
+    *    against.
     *
     * The hash key is `coalesce(md5(text), '')` — null texts form one
     * family in BOTH forms ('' can never collide with a 32-hex digest; a
@@ -210,19 +208,6 @@ object DedupQueries {
         "__cf_h")
       .filter(col("doc_id") =!= col("canon"))
       .select(col("doc_id"), col("canon"))
-  }
-
-  /** [[withCanonicalFlag]] with the form resolved from the session conf
-    * ([[CanonicalSkewSafeKey]]); `"auto"` probes a doc sample's text
-    * hashes — one row per sampled doc, the cheapest probe in the family. */
-  private[graft] def withCanonicalFlagAuto(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val skewSafe = SkewProbe.resolve(spark, CanonicalSkewSafeKey, "true") {
-      SkewProbe.hasHotKey(
-        SkewProbe.sampleByHash(docs, "doc_id", SkewProbe.sampleFraction(spark))
-          .select(coalesce(md5(col("text")), lit("")).as("h")))
-    }
-    withCanonicalFlag(docs, skewSafe)
   }
 
   /** LSH bands exploded to (doc_id, band, band-signature) rows — the bucket
@@ -943,9 +928,7 @@ object DedupQueries {
     * span stream twice); census-arithmetic 2.18 s AND skew-safe by
     * construction — a universal boilerplate span collapses to one census
     * row per map task and is DROPPED by the count-1 filter before any
-    * further movement. The [[SkewProbe]] auto-pick q71 carried while two
-    * forms coexisted is retired with them (the probe lives on in q22's
-    * canonical-pick); DedupSpec pins this form against an in-spec window
+    * further movement. DedupSpec pins this form against an in-spec window
     * twin on the hot-span corpus and a plain-Scala reference on a seeded
     * random one.
     * At 100 TB every shuffle key here is either a hash or doc_id — uniform

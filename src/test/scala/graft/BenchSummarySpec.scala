@@ -22,7 +22,7 @@ class BenchSummarySpec extends AnyFunSuite {
 
   test("compact summary stays under 1 KB at full catalog size") {
     val line = Bench.compactSummary(fullResults, Nil, "0.1",
-      loadBefore = 31.97, loadAfter = 32.01, forked = true, Some(paired),
+      loadBefore = 31.97, loadAfter = 32.01, Some(paired),
       cpus = 32, master = "local[32]")
     assert(line.getBytes("UTF-8").length < 1024,
       s"compact line must fit the driver's tail capture, was ${line.length}B: $line")
@@ -31,7 +31,7 @@ class BenchSummarySpec extends AnyFunSuite {
   test("compact summary stays bounded even when many queries fail") {
     val failed = SparkEntry.queries.keys.toSeq.sorted // disaster run: all fail
     val line = Bench.compactSummary(fullResults, failed, "1.0",
-      loadBefore = 0.0, loadAfter = 0.0, forked = false, Some(paired),
+      loadBefore = 0.0, loadAfter = 0.0, Some(paired),
       cpus = 8, master = "local[8]")
     assert(line.getBytes("UTF-8").length < 1400,
       s"failed-list must be truncated, was ${line.length}B")
@@ -40,7 +40,7 @@ class BenchSummarySpec extends AnyFunSuite {
 
   test("compact summary is one line of well-formed JSON with the driver's fields") {
     val line = Bench.compactSummary(fullResults, Seq("q99_x"), "0.1",
-      31.5, 30.2, forked = false, Some(paired), cpus = 32,
+      31.5, 30.2, Some(paired), cpus = 32,
       master = "local-cluster[2,16,8192]")
     assert(!line.contains("\n"))
     // structural JSON check without a JSON library: balanced braces/brackets
@@ -69,7 +69,7 @@ class BenchSummarySpec extends AnyFunSuite {
 
   test("compact summary headline queries are real catalog keys") {
     val line = Bench.compactSummary(fullResults, Nil, "0.1", 0, 0,
-      forked = false, None, cpus = 32, master = "local[32]")
+      None, cpus = 32, master = "local[32]")
     val qBlock = """"queries":\{(.*?)\}""".r.findFirstMatchIn(line)
       .map(_.group(1)).getOrElse(fail("no queries object"))
     val keys = """"([^"]+)":""".r.findAllMatchIn(qBlock).map(_.group(1)).toSeq
@@ -86,7 +86,7 @@ class BenchSummarySpec extends AnyFunSuite {
 
   test("unpaired summary omits ratio fields but keeps the core shape") {
     val line = Bench.compactSummary(fullResults, Nil, "0.01", 1, 1,
-      forked = false, None, cpus = 32, master = "local[32]")
+      None, cpus = 32, master = "local[32]")
     // field-name match, not a bare substring: the headline key
     // q88_web_cuRATIOn would otherwise trip this
     assert(!line.contains("\"ratio\":") && !line.contains("\"ratio_ex"))
@@ -109,19 +109,18 @@ class BenchSummarySpec extends AnyFunSuite {
     }
   }
 
-  test("forked bench exits at once on a malformed SPARK_GRAFT_CPUS") {
-    // before any family is forked: the run must not be spent first
+  test("bench exits at once on a malformed SPARK_GRAFT_CPUS") {
+    // before a session is built: the run must not be spent first
     val sfDir = java.nio.file.Files.createTempDirectory("bench-sf")
     val result =
       try ChildJvm.run("graft.Bench", timeoutS = 60, env = Map(
-        "SPARK_GRAFT_FORK" -> "1", "SPARK_GRAFT_CPUS" -> "eight",
+        "SPARK_GRAFT_CPUS" -> "eight",
         "SPARK_GRAFT_SF_DIR" -> sfDir.toString))
       finally java.nio.file.Files.delete(sfDir)
     assert(result.isDefined, "bench ran on instead of failing")
     val (rc, out) = result.get
     assert(rc == 2, out)
     assert(out.contains("SPARK_GRAFT_CPUS must be a positive integer, got 'eight'"), out)
-    assert(!out.contains("forked family"), out)
   }
 
   test("codegen block renders per-entry arrays with no nested braces") {

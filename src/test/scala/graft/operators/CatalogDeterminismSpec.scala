@@ -51,15 +51,14 @@ class CatalogDeterminismSpec extends AnyFunSuite with SparkTestSession {
     assert(repeat <= first / 10, s"repeat recompiled $repeat of $first classes")
   }
 
-  test("Bench families partition the query catalog exactly") {
-    // the forked bench mode times SparkEntry.families; an entry present
-    // in queries but absent from every family would be silently
-    // unmeasured (neither timed nor failed) — pin coverage here so the
-    // gap fails CI before it fails a bench artifact (review r11)
-    val familyKeys = SparkEntry.families.flatMap(_._2)
-    assert(familyKeys.length === familyKeys.distinct.length,
-      "duplicate keys across families")
-    assert(familyKeys.toSet === SparkEntry.queries.keySet)
+  test("catalog registers every query key exactly once") {
+    // SparkEntry.queries is SparkEntry.catalog.toMap: a key listed twice
+    // (two modules reusing a name) would silently drop one entry from
+    // Bench, Verify and this suite alike, so pin it here
+    val keys = SparkEntry.catalog.map(_._1)
+    val twice = keys.diff(keys.distinct)
+    assert(twice.isEmpty, s"keys registered more than once: $twice")
+    assert(SparkEntry.queries.size === keys.length)
   }
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

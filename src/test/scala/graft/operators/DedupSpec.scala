@@ -621,45 +621,6 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     assert(plan.contains("HashAggregate"), plan)
   }
 
-  test("canonical auto mode probes the corpus: census+rejoin on a hot " +
-      "family, window form when skew-free") {
-    import spark.implicits._
-    val hot = (0L until 300L).map { id =>
-      if (id % 2 == 0) (id, "the same boilerplate error page text")
-      else (id, s"unique text for doc $id")
-    }.toDF("doc_id", "text")
-    val skewFree = (0L until 300L).map(id => (id, s"unique text for doc $id"))
-      .toDF("doc_id", "text")
-    // probe conf for the 4-partition test session: the criterion is
-    // partition-relative (top * P >= factor * total), so at P=4 the
-    // default factor 4 only fires on a 100%-share key; factor 1 puts the
-    // bar at a 25% share — hot family (50%) trips it, unique corpus can't.
-    // fraction=1.0 removes sampling noise at 300 rows.
-    spark.conf.set("spark.graft.skew.sampleFraction", "1.0")
-    spark.conf.set("spark.graft.skew.partitionFactor", "1")
-    spark.conf.set("spark.graft.canonical.skewSafe", "auto")
-    try {
-      def planOf(frame: org.apache.spark.sql.DataFrame): String =
-        DedupQueries.withCanonicalFlagAuto(frame)
-          .queryExecution.executedPlan.toString
-      assert(!planOf(hot).contains("Window"), "hot family must pick census+rejoin")
-      assert(planOf(skewFree).contains("Window"), "skew-free must pick the window form")
-      // outputs identical either way (the parity test above); spot-check auto
-      val n = DedupQueries.withCanonicalFlagAuto(hot)
-        .filter($"is_canonical").count()
-      assert(n == 151) // 1 hot family + 150 unique
-    } finally {
-      spark.conf.unset("spark.graft.skew.sampleFraction")
-      spark.conf.unset("spark.graft.skew.partitionFactor")
-      spark.conf.unset("spark.graft.canonical.skewSafe")
-    }
-  }
-
-  // the q71 probe-picks-a-form test retired with the probe itself (r13:
-  // the census-arithmetic form is unconditional and skew-safe by
-  // construction; the SkewProbe mechanism remains covered by the q22
-  // canonical-pick tests in ScaleToolsSpec)
-
   test("spark.graft.spans.tokens re-parameterizes q71/q77 span length " +
       "(oracle default 8 untouched)") {
     import spark.implicits._
@@ -756,20 +717,6 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
       .map(r => r.getLong(2)).headOption
       .getOrElse(fail("expected the pair to be an LSH candidate"))
     assert(got == expected, s"got $got expected $expected")
-  }
-
-  test("skew probe's hash sample is layout-independent: same decision " +
-      "under any repartitioning of the same rows") {
-    import spark.implicits._
-    val docs = (1L to 400L).map(i =>
-      (i, if (i % 2 == 0) "the one hot boilerplate page" else s"unique text $i"))
-      .toDF("doc_id", "text")
-    def sampled(df: org.apache.spark.sql.DataFrame): Set[Long] =
-      SkewProbe.sampleByHash(df, "doc_id", 0.25)
-        .select($"doc_id").collect().map(_.getLong(0)).toSet
-    val a = sampled(docs.repartition(3))
-    val b = sampled(docs.repartition(11))
-    assert(a == b && a.nonEmpty, s"${a.size} vs ${b.size}")
   }
 
   test("edit verify catches a word reordering that shingle-jaccard washes out") {

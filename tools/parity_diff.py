@@ -34,7 +34,8 @@ Usage:
   python3 tools/parity_diff.py [--n 5000] [--seed 8] [--reuse-scala]
 
 Run from the repo root after `sbt compile`. Writes target/parity/{inputs,
-scala_out,python_out}.jsonl + report.json; exit 1 on any mismatch.
+scala_out,python_out}.jsonl + report.json; exit 1 on any mismatch, exit 2
+before any run when the reference kernel checkout (REF_SRC) is absent.
 """
 import argparse
 import json
@@ -356,6 +357,12 @@ def main():
     ap.add_argument("--reuse-scala", action="store_true",
                     help="reuse target/parity/scala_out.jsonl from a prior run")
     args = ap.parse_args()
+
+    # the reference half runs last: check for it before the Scala half
+    if not os.path.isdir(os.path.join(REF_SRC, "flink_estimator")):
+        print(f"[parity] reference kernel not found: {REF_SRC}/flink_estimator "
+              "is missing; nothing to compare against", file=sys.stderr)
+        sys.exit(2)
 
     os.makedirs(PARITY_DIR, exist_ok=True)
     inputs_path = os.path.join(PARITY_DIR, "inputs.jsonl")

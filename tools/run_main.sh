@@ -4,7 +4,9 @@
 #   tools/run_main.sh graft.Bench [args...]
 # Env passthrough: SPARK_GRAFT_* / SPARK_DRIVER_MEM as usual.
 set -euo pipefail
-CLASSES=/root/repo/target/scala-2.13/classes
+# the checkout this script lives in, so a copy runs its own classes
+REPO="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+CLASSES="$REPO/target/scala-2.13/classes"
 JARS=/opt/spark/jars/'*'
 ADD_OPENS=(
   java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect
@@ -21,5 +23,5 @@ exec java "${OPENS[@]}" \
   -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   ${SPARK_GRAFT_JAVA_OPTS:-} \
-  -cp "$CLASSES:$JARS:/root/repo/src/main/resources" \
+  -cp "$CLASSES:$JARS:$REPO/src/main/resources" \
   "$@"

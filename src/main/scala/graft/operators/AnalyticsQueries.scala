@@ -262,15 +262,7 @@ object AnalyticsQueries {
     * above. Floor at ~1.1 s absolute. */
   def q119ShardDrift(spark: SparkSession, dir: String): DataFrame = {
     val big = DecimalType(38, 0)
-    val sb = Materialize.materialize(
-      Tables.documents(spark, dir)
-        .filter(col("text").isNotNull)
-        .select(shardCol.as("shard"),
-          explode(expr("filter(split(text, ' '), x -> x <> '')")).as("token"))
-        .select(col("shard"),
-          conv(substring(md5(col("token")), 1, WebCurationQueries.QcHexChars), 16, 10)
-            .cast("int").as("b"))
-        .groupBy(col("shard"), col("b")).agg(count(lit(1)).as("c_sb")))
+    val sb = Materialize.materialize(shardBucketCensus(spark, dir))
     val cb = sb.groupBy(col("b")).agg(sum(col("c_sb")).as("c_b"))
     val ns = sb.groupBy(col("shard"))
       .agg(sum(col("c_sb")).as("n_s"), count(lit(1)).as("n_buckets"))
@@ -292,6 +284,18 @@ object AnalyticsQueries {
           .as("kl_nats"))
       .orderBy(col("shard").asc)
   }
+
+  /** q119's (shard, bucket) token census, `shard, b, c_sb`, as q119
+    * reads it before materializing it. */
+  private[operators] def shardBucketCensus(spark: SparkSession, dir: String): DataFrame =
+    Tables.documents(spark, dir)
+      .filter(col("text").isNotNull)
+      .select(shardCol.as("shard"),
+        explode(TextQueries.tokens(col("text"))).as("token"))
+      .select(col("shard"),
+        conv(substring(md5(col("token")), 1, WebCurationQueries.QcHexChars), 16, 10)
+          .cast("int").as("b"))
+      .groupBy(col("shard"), col("b")).agg(count(lit(1)).as("c_sb"))
 
   /** The q119 oracle: the same census/margin chain with the shared
     * [[shardOracleExpr]] and bucket hash. */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -8,9 +8,12 @@ import org.apache.spark.sql.types.DecimalType
   * `events.props` — the quality/language/token layer of a training-data
   * pipeline (VERDICT r1 "next round" #6).
   *
-  * Every per-doc computation here is a narrow, codegen'd projection (split /
-  * filter / aggregate higher-order functions, no UDFs): at 100 TB these ride
-  * the scan for free; the only shuffles are the final small aggregations.
+  * Every per-doc computation here is a narrow projection over built-in
+  * functions (no UDFs): at 100 TB these ride the scan for free; the only
+  * shuffles are the final small aggregations. Corpus-path tokenization goes
+  * through [[tokens]] and [[adjacentGrams]], which stay inside whole-stage
+  * codegen; Spark 4.1 evaluates higher-order functions (`filter`,
+  * `transform`, `aggregate` with a lambda) interpreted, once per element.
   */
 object TextQueries {
 
@@ -35,6 +38,41 @@ object TextQueries {
     * runs, or single punctuation marks — the usual pre-merge split). Same
     * RE2/Java-compatible pattern on both engines. */
   val TokenRegex = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
+
+  /** Whitespace tokens of `text`: its single-space split with the empty
+    * pieces (from leading, trailing or doubled spaces) removed. Null text
+    * gives null, and no token is null. Same arrays as dropping the empty
+    * pieces with a `filter` lambda (split yields no null element for
+    * non-null text), but both built-ins are codegen'd, where the lambda
+    * runs interpreted once per token. */
+  private[operators] def tokens(text: Column): Column =
+    array_remove(split(text, " "), "")
+
+  /** Every token position of `df`'s `toks` array (no null element, as
+    * [[tokens]] builds it), one row each in position order: the `keep` columns, the 0-based
+    * position `i`, the token `a`, and its next `width` neighbours `b` (and
+    * `c`), null past the end of the array. A null or empty array gives no
+    * row. Codegen'd `posexplode` plus bounds-safe `get`. */
+  private[operators] def tokenNeighbours(df: DataFrame, width: Int,
+      keep: String*): DataFrame = {
+    val next = Seq("b", "c").take(width).zipWithIndex.map { case (name, k) =>
+      get(col("toks"), col("i") + lit(k + 1)).as(name)
+    }
+    df.select(keep.map(col) :+ col("toks") :+
+        posexplode(col("toks")).as(Seq("i", "a")): _*)
+      .select(keep.map(col) ++ Seq(col("i"), col("a")) ++ next: _*)
+  }
+
+  /** The adjacent n-grams (n = 2 or 3) of `df`'s `toks` array, one row per
+    * gram in position order: the `keep` columns, then `a`, `b` (and `c`).
+    * Arrays shorter than n give no row. */
+  private[operators] def adjacentGrams(df: DataFrame, n: Int,
+      keep: String*): DataFrame = {
+    val gram = Seq("a", "b", "c").take(n)
+    tokenNeighbours(df, n - 1, keep: _*)
+      .filter(col(gram.last).isNotNull)
+      .select((keep ++ gram).map(col): _*)
+  }
 
   /** Q29 — per-document token/length/quality stats: whitespace token count,
     * regex (BPE-ish) token count, mean token length, stopword ratio. One
@@ -503,6 +541,11 @@ object TextQueries {
     // — and the oracle hashes — are bit-for-bit unchanged.
     var sinceCheckpoint = 0
     while (r <= rounds && !exhausted) {
+      // The pair lambda stays here: routing this vocab-sized census through
+      // adjacentGrams measured q101 no faster (perfbench batch_loops, median
+      // 0.96 -> 1.02 s over 6 interleaved pairs). Each round's plan is new
+      // code (the merged literals change), so the likely cause is compiling
+      // the larger fused stage every round.
       val top = vocab
         .select(col("freq"),
           split(expr("substring(enc, 2, length(enc) - 2)"), "><").as("s"))
@@ -1049,7 +1092,7 @@ object TextQueries {
     * builds, which are eager for the same reason). */
   def q94Perplexity(spark: SparkSession, dir: String): DataFrame = {
     val toks = Tables.documents(spark, dir).filter(col("text").isNotNull)
-      .select(col("doc_id"), expr("filter(split(text, ' '), x -> x <> '')").as("toks"))
+      .select(col("doc_id"), tokens(col("text")).as("toks"))
       .filter(size(col("toks")) > 0)
     val tokenOcc = toks.select(col("doc_id"), explode(col("toks")).as("token"))
     // r16: the vocab census has two consumers (the 1-row total and the
@@ -1171,13 +1214,9 @@ object TextQueries {
   private final case class BigramCensuses(cp: DataFrame, ra: DataFrame,
       uni: DataFrame, tot: DataFrame)
 
-  private def lmPairExpr = expr(
-    "transform(sequence(1, size(toks) - 1), i -> struct(element_at(toks, i) AS a, element_at(toks, i + 1) AS b))")
-
   private def lmToks(docs: DataFrame): DataFrame =
     docs.filter(col("text").isNotNull)
-      .select(col("doc_id"),
-        expr("filter(split(text, ' '), x -> x <> '')").as("toks"))
+      .select(col("doc_id"), tokens(col("text")).as("toks"))
 
   /** The training censuses as LAZY frames — the fused q109's shape. The
     * double evaluation this allows (ra aggregates cp, tot aggregates uni,
@@ -1189,7 +1228,7 @@ object TextQueries {
     // q102's deterministic curated-vs-crawl split (src0–src9 = curated)
     val train = docs.filter(col("text").isNotNull)
       .filter(replace(col("source"), lit("src"), lit("")).cast("int") < 10)
-      .select(expr("filter(split(text, ' '), x -> x <> '')").as("toks"))
+      .select(tokens(col("text")).as("toks"))
       .filter(size(col("toks")) > 0)
     // r17 (VERDICT r16 #4): the checkpoint-FREE marked-census fold (the
     // domainExcess marker algebra — one explode carrying pair + unigram
@@ -1204,9 +1243,7 @@ object TextQueries {
     // fold flips (censuses ≪ occurrences) — documented scale lever.
     val uni = train.select(explode(col("toks")).as("b"))
       .groupBy(col("b")).agg(count(lit(1)).as("c_b"))
-    val cp = train.filter(size(col("toks")) >= 2)
-      .select(explode(lmPairExpr).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
+    val cp = adjacentGrams(train, 2)
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("c_ab"))
     val ra = cp.groupBy(col("a")).agg(sum(col("c_ab")).as("r_a"))
     val tot = uni.agg(sum(col("c_b")).as("nn"), count(lit(1)).as("vv"))
@@ -1273,9 +1310,7 @@ object TextQueries {
     * EXACT integers (a rounded per-doc h would not re-aggregate). */
   private def bigramTermSums(docs: DataFrame,
       m: BigramLmModel): DataFrame = {
-    lmToks(docs).filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), explode(lmPairExpr).as("p"))
-      .select(col("doc_id"), col("p.a").as("a"), col("p.b").as("b"))
+    adjacentGrams(lmToks(docs), 2, "doc_id")
       .join(m.pairTerm, Seq("a", "b"), "left")
       .join(m.uni, Seq("b"), "left")
       .crossJoin(broadcast(m.tot))
@@ -1371,15 +1406,14 @@ object TextQueries {
     val docs = Tables.documents(spark, dir)
     val big = DecimalType(38, 0)
     val toks = docs.filter(col("text").isNotNull)
-      .select(col("source"),
-        expr("filter(split(text, ' '), x -> x <> '')").as("toks"))
+      .select(col("source"), tokens(col("text")).as("toks"))
     // r16 (guide §1.2 step 1, §2.3 "aggregate before you shuffle"): the r15
     // form ran FOUR corpus-sized tokenize+explode passes per call — the pair
     // census, the lazy unigram census TWICE (its `tot` aggregate and the
     // scoring join are separate consumers), and the n_docs groupBy. All
     // three censuses are derivable from ONE marked explode: position i of an
-    // n-token doc emits the (tokᵢ, tokᵢ₊₁) pair struct for i < n (kind 0 —
-    // exactly lmPairExpr), and position n emits a last-token marker (kind 2
+    // n-token doc emits the (tokᵢ, tokᵢ₊₁) pair for i < n (kind 0 — exactly
+    // adjacentGrams), and position n emits a last-token marker (kind 2
     // when the doc has ≥ 2 tokens, kind 3 for 1-token docs). From the ONE
     // materialized (source, kind, a, b) census:
     //   pair census  = kind 0 rows verbatim;
@@ -1394,15 +1428,6 @@ object TextQueries {
     // integer are unchanged (PerplexitySpec's independent plain-Scala
     // recomputation pins n_docs/n_bigrams/tsum/weights; the 4-SF gate pins
     // the hashes).
-    val markedPairExpr = expr(
-      """transform(sequence(1, size(toks)), i ->
-        |  CASE WHEN i < size(toks) THEN
-        |    struct(element_at(toks, i) AS a, element_at(toks, i + 1) AS b, 0 AS kind)
-        |  WHEN size(toks) >= 2 THEN
-        |    struct(element_at(toks, i) AS a, CAST(NULL AS STRING) AS b, 2 AS kind)
-        |  ELSE
-        |    struct(element_at(toks, i) AS a, CAST(NULL AS STRING) AS b, 3 AS kind)
-        |  END)""".stripMargin)
     val isTrain = replace(col("source"), lit("src"), lit("")).cast("int") < 10
     // r17 (VERDICT r16 #6): dropping this Materialize in favor of a lazy
     // census (relying on AQE runtime stage reuse across the ~6 consumer
@@ -1413,10 +1438,14 @@ object TextQueries {
     // collect actions cannot reuse q116-style stages across their separate
     // jobs. The checkpoint stays.
     val census = Materialize.materialize(
-      toks.filter(size(col("toks")) >= 1)
-        .select(col("source"), explode(markedPairExpr).as("p"))
-        .groupBy(col("source"), col("p.kind").as("kind"),
-          col("p.a").as("a"), col("p.b").as("b"))
+      tokenNeighbours(toks, 1, "source")
+        .select(col("source"),
+          // the last position of a doc has no right neighbour; it is the
+          // doc's first position (i = 0) only in a 1-token doc
+          when(col("b").isNotNull, lit(0)).when(col("i") > 0, lit(2))
+            .otherwise(lit(3)).as("kind"),
+          col("a"), col("b"))
+        .groupBy(col("source"), col("kind"), col("a"), col("b"))
         .agg(count(lit(1)).as("cnt")))
     // Also A/B'd for VERDICT r16 #6 and REJECTED (interleaved, min-of-3
     // fresh JVMs, trio-sum): repartitioning the checkpoint by `a` so the
@@ -1623,13 +1652,8 @@ object TextQueries {
 
   /** The q112 body over ANY (doc_id, source, text) frame. */
   private[graft] def trigramLmScores(docs: DataFrame): DataFrame = {
-    val pairExpr = expr(
-      "transform(sequence(1, size(toks) - 1), i -> struct(element_at(toks, i) AS a, element_at(toks, i + 1) AS b))")
-    val triExpr = expr(
-      "transform(sequence(1, size(toks) - 2), i -> struct(element_at(toks, i) AS a, element_at(toks, i + 1) AS b, element_at(toks, i + 2) AS c))")
     val toksAll = docs.filter(col("text").isNotNull)
-      .select(col("doc_id"), col("source"),
-        expr("filter(split(text, ' '), x -> x <> '')").as("toks"))
+      .select(col("doc_id"), col("source"), tokens(col("text")).as("toks"))
     val train = toksAll
       .filter(replace(col("source"), lit("src"), lit("")).cast("int") < 10)
       .filter(size(col("toks")) > 0)
@@ -1645,14 +1669,11 @@ object TextQueries {
     // see the ruling note in bigramLmCensuses; the separate explodes stay.
     val uni = train.select(explode(col("toks")).as("c"))
       .groupBy(col("c")).agg(count(lit(1)).as("c_c"))
-    val cbg = train.filter(size(col("toks")) >= 2)
-      .select(explode(pairExpr).as("p"))
-      .select(col("p.a").as("b"), col("p.b").as("c"))
+    val cbg = adjacentGrams(train, 2)
+      .select(col("a").as("b"), col("b").as("c"))
       .groupBy(col("b"), col("c")).agg(count(lit(1)).as("c_bc"))
     val rb = cbg.groupBy(col("b")).agg(sum(col("c_bc")).as("r_b"))
-    val ct = train.filter(size(col("toks")) >= 3)
-      .select(explode(triExpr).as("g"))
-      .select(col("g.a").as("a"), col("g.b").as("b"), col("g.c").as("c"))
+    val ct = adjacentGrams(train, 3)
       .groupBy(col("a"), col("b"), col("c")).agg(count(lit(1)).as("c_abc"))
     val rab = ct.groupBy(col("a"), col("b")).agg(sum(col("c_abc")).as("r_ab"))
     val tot = uni.agg(sum(col("c_c")).as("nn"), count(lit(1)).as("vv"))
@@ -1673,10 +1694,7 @@ object TextQueries {
       .select(col("b"), col("c"),
         (log((col("c_bc") * lit(2L)).cast("double")) -
           log((col("r_b") * lit(5L)).cast("double"))).as("t_bc"))
-    toksAll.filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), explode(triExpr).as("g"))
-      .select(col("doc_id"),
-        col("g.a").as("a"), col("g.b").as("b"), col("g.c").as("c"))
+    adjacentGrams(toksAll, 3, "doc_id")
       .join(triTerm, Seq("a", "b", "c"), "left")
       .join(biTerm, Seq("b", "c"), "left")
       .join(uni, Seq("c"), "left")
@@ -1718,14 +1736,9 @@ object TextQueries {
     * corpus totals ~1e13 at 10x). Low-support pairs (< [[PmiMinCount]])
     * are dropped before ranking, the standard PMI-vs-noise guard. */
   def q97PmiPairs(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.documents(spark, dir)
+    val pairs = adjacentGrams(Tables.documents(spark, dir)
       .filter(col("text").isNotNull)
-      .select(expr("filter(split(text, ' '), x -> x <> '')").as("toks"))
-      .filter(size(col("toks")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(1, size(toks) - 1), i -> struct(element_at(toks, i) AS a, element_at(toks, i + 1) AS b))"))
-        .as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
+      .select(tokens(col("text")).as("toks")), 2)
     val cp = pairs.groupBy(col("a"), col("b")).agg(count(lit(1)).as("c_ab"))
     val ca = cp.groupBy(col("a")).agg(sum(col("c_ab")).as("c_a"))
     val cb = cp.groupBy(col("b")).agg(sum(col("c_ab")).as("c_b"))

@@ -20,6 +20,13 @@ class BenchSummarySpec extends AnyFunSuite {
     n = 122, ratio = 1.250, ratioExNaive = Some(0.931),
     ratioExTva = Some(0.912))
 
+  /** The entry keys of a summary line's `queries` object, in line order. */
+  private def queryKeys(line: String): Seq[String] = {
+    val qBlock = """"queries":\{(.*?)\}""".r.findFirstMatchIn(line)
+      .map(_.group(1)).getOrElse(fail(s"no queries object in $line"))
+    """"([^"]+)":""".r.findAllMatchIn(qBlock).map(_.group(1)).toSeq
+  }
+
   test("compact summary stays under 1 KB at full catalog size") {
     val line = Bench.compactSummary(fullResults, Nil, "0.1",
       loadBefore = 31.97, loadAfter = 32.01, Some(paired),
@@ -70,18 +77,39 @@ class BenchSummarySpec extends AnyFunSuite {
   test("compact summary headline queries are real catalog keys") {
     val line = Bench.compactSummary(fullResults, Nil, "0.1", 0, 0,
       None, cpus = 32, master = "local[32]")
-    val qBlock = """"queries":\{(.*?)\}""".r.findFirstMatchIn(line)
-      .map(_.group(1)).getOrElse(fail("no queries object"))
-    val keys = """"([^"]+)":""".r.findAllMatchIn(qBlock).map(_.group(1)).toSeq
+    val keys = queryKeys(line)
     // all 14 headline keys must resolve — a stale key silently drops out of
-    // the flatMap (r15: q12_window_rank was a phantom name and the line
+    // the line (r15: q12_window_rank was a phantom name and the line
     // shipped with 5 entries before this pin; r17 expanded 6 -> 14 per
     // VERDICT r16 #1, keeping the original 6)
-    assert(keys.size == 14, s"headline keys drifted from the catalog: $keys")
+    Bench.headlineKeys.foreach(k =>
+      assert(SparkEntry.queries.contains(k), s"headline key $k not in catalog"))
+    assert(Bench.headlineKeys.size == 14, s"headline keys changed: ${Bench.headlineKeys}")
+    // a full run lists exactly the headline set, nothing in its place
+    assert(keys == Bench.headlineKeys, s"headline keys drifted from the catalog: $keys")
     Seq("q01_scan_count", "q09_hash_agg", "q12_topk_per_group",
       "q22_dedup_exact_hash", "q23_dedup_minhash_lsh", "q27_ann_lsh")
       .foreach(k => assert(keys.contains(k), s"original headline key $k removed"))
-    keys.foreach(k => assert(SparkEntry.queries.contains(k), s"$k not in catalog"))
+    // a full run whose headline entry failed leaves a gap, not a stand-in
+    val gapLine = Bench.compactSummary(fullResults.filterNot(_._1 == "q95_pagerank"),
+      Seq("q95_pagerank"), "0.1", 0, 0, None, cpus = 32, master = "local[32]")
+    assert(queryKeys(gapLine) == Bench.headlineKeys.filterNot(_ == "q95_pagerank"), gapLine)
+  }
+
+  test("subset summary lists the subset's own entries when it has no headline key") {
+    def queries(results: Seq[(String, Double)]): Seq[String] =
+      queryKeys(Bench.compactSummary(results, Nil, "0.1", 0, 0, None,
+        cpus = 4, master = "local[4]"))
+    // no headline key among them: every entry, in run order
+    assert(queries(Seq("q97_pmi_pairs" -> 1.5, "q109_bigram_lm" -> 2.25)) ==
+      Seq("q97_pmi_pairs", "q109_bigram_lm"))
+    // a subset with a headline key lists only its headline keys
+    assert(queries(Seq("q109_bigram_lm" -> 2.0, "q112_trigram_lm" -> 3.0,
+      "q94_perplexity" -> 1.0)) == Seq("q112_trigram_lm"))
+    // a large non-headline subset stays within the headline count
+    val many = fullResults.map(_._1).filterNot(Bench.headlineKeys.contains)
+      .take(40).map(_ -> 1.0)
+    assert(queries(many) == many.map(_._1).take(14))
   }
 
   test("unpaired summary omits ratio fields but keeps the core shape") {

@@ -123,6 +123,24 @@ class PlanInvariantSpec extends AnyFunSuite with SparkTestSession {
       s"benchmark probe should be map-side (eval suites are small):\n$plan")
   }
 
+  /** These corpus-path entries build token arrays and adjacent grams with
+    * [[TextQueries.tokens]] / [[TextQueries.adjacentGrams]]. A higher-order
+    * function in their plans is a lambda Spark 4.1 runs interpreted, once
+    * per token, per document. q119 materializes its token census when the
+    * entry is built, so its census input is checked in place of the entry. */
+  test("tokenizer entries plan no higher-order function") {
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    val frames = Seq("q97_pmi_pairs", "q109_bigram_lm", "q112_trigram_lm")
+      .map(name => name -> SparkEntry.queries(name)(spark, dir)) :+
+      ("q119_shard_drift census" -> AnalyticsQueries.shardBucketCensus(spark, dir))
+    val offenders = frames.flatMap { case (name, df) =>
+      df.queryExecution.sparkPlan.collect { case p => p.expressions }.flatten
+        .flatMap(_.collect { case h: HigherOrderFunction => s"$name: ${h.prettyName}" })
+        .distinct
+    }
+    assert(offenders.isEmpty, s"interpreted lambdas on the corpus path: $offenders")
+  }
+
   /** The r16 sort-below-projection entries (OPTIMIZATION_r16.md §1.7): each
     * evaluates its heavy projection ONCE, above a pinned-width range sort of
     * the raw rows. Their global-order contract rests on the optimizer NOT

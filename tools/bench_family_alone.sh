@@ -4,6 +4,10 @@
 # with its DuckDB twin alone on the same host, back to back. Usage:
 #   tools/bench_family_alone.sh SF_DIR ORACLE_SQL.json OUT.json name1 name2 ...
 set -euo pipefail
+# three warmup passes unless the caller set SPARK_GRAFT_WARMUP: with one,
+# a fresh single-entry JVM still compiles and JITs inside the timed passes
+# and overstates codegen-heavy entries about 3x
+export SPARK_GRAFT_WARMUP="${SPARK_GRAFT_WARMUP:-3}"
 SF_DIR=$1; ORACLES=$2; OUT=$3; shift 3
 echo -n '{' > "$OUT"
 first=1

@@ -259,6 +259,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Env.cpus
     val warmups = Env.positiveInt("SPARK_GRAFT_WARMUP", 1)
+    // Dev-only filter for single-query iteration (unset in driver runs).
+    val only = Env.only
     val spark = Sessions.build(s"local[$cpus]", cpus, "graft-bench")
 
     // host-load metadata (VERDICT r8 #5: a bench artifact from a
@@ -266,8 +268,6 @@ object Bench {
     // alone). 1-minute loadavg before and after the whole run.
     val loadBefore = loadavg()
 
-    // Dev-only filter for single-query iteration (unset in driver runs).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     val failed = scala.collection.mutable.LinkedHashSet[String]()

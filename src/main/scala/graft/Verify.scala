@@ -7,10 +7,10 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = Env.cpus
+    // Dev-only filter for single-query iteration (unset in driver runs).
+    val only = Env.only
     val spark = Sessions.build(s"local[$cpus]", cpus, "graft-verify")
     new java.io.File(outDir).mkdirs()
-    // Dev-only filter for single-query iteration (unset in driver runs).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
     SparkEntry.queries
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .foreach { case (name, fn) =>

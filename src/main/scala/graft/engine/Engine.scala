@@ -63,20 +63,6 @@ object Engine {
     scenarios.map(estimateOne)
   }
 
-  /** Successful results only (the common sweep consumer). */
-  def sweepResults(scenarios: Dataset[EstimationInput]): Dataset[EstimationResult] = {
-    val spark = scenarios.sparkSession
-    import spark.implicits._
-    scenarios.flatMap(in => estimateOne(in).result)
-  }
-
-  /** Rejected rows with their reasons — the 400/422 path as a Dataset. */
-  def sweepRejects(scenarios: Dataset[EstimationInput]): Dataset[(EstimationInput, String)] = {
-    val spark = scenarios.sparkSession
-    import spark.implicits._
-    scenarios.flatMap(in => estimateOne(in).error.map(e => (in, e)))
-  }
-
   /** Register `flink_estimate(struct(...))` for SQL access: takes a struct
     * column shaped like EstimationInput, returns the full nested
     * EstimationResult struct (NULL on validation/sizing failure — SQL callers

@@ -47,7 +47,7 @@ object CurationPipeline {
 
     // stage 1: exact dedup — canonical representative per content hash,
     // through the shared skew-safe form (VERDICT r6 #1)
-    val deduped = DedupQueries.withCanonicalFlag(docs, skewSafe = true)
+    val deduped = DedupQueries.withCanonicalFlag(docs)
 
     // stage 2: quality predicates
     val qualified = col("is_canonical") &&
@@ -152,8 +152,7 @@ object CurationPipeline {
     // + repetition projection
     val g2 = graft.functions.WordNGrams(col("text"), 2)
     val flagged = DedupQueries.withCanonicalFlag(docs
-      .withColumn("n_tokens", size(split(col("text"), " ")).cast("long")),
-      skewSafe = true)
+      .withColumn("n_tokens", size(split(col("text"), " ")).cast("long")))
       .withColumn("repetitive",
         when(size(g2) === 0, lit(false)).otherwise(
           (size(g2) - size(array_distinct(g2))).cast("long") * 1000L >=
@@ -221,7 +220,7 @@ object CurationPipeline {
     // null-text arrivals exempt, mirroring cleanIngestBatchWithBands —
     // distinct metadata-only docs are not copies of one page
     val batchDup = DedupQueries.withCanonicalFlag(
-        arrivals.filter(col("text").isNotNull), skewSafe = true)
+        arrivals.filter(col("text").isNotNull))
       .filter(!col("is_canonical"))
       .select(col("doc_id")).withColumn("batch_dup", lit(true))
     arrivals.select(col("doc_id"))

@@ -131,69 +131,52 @@ object DedupQueries {
     * flagship path and the dedup family use ONE implementation with ONE
     * skew story (VERDICT r6 next-round #1).
     *
-    * Two output-identical forms (DedupSpec pins parity on a hot-family
-    * corpus):
-    *  - census+rejoin (`skewSafe = true`, what every catalog caller
-    *    runs): `groupBy(md5(text)).agg(min(doc_id))`
-    *    then an equi-rejoin on the hash. Map-side partials collapse a hot
-    *    family to one row per map task before the census shuffle, and the
-    *    rejoin is AQE-skew-splittable. This is the form that survives the
-    *    corpora curation actually targets — web crawls where one
-    *    boilerplate page (error page, empty template) is duplicated across
-    *    a large fraction of 100 TB: precisely the family the pipeline
-    *    exists to collapse, and precisely the key a window cannot split.
-    *  - keyed window (`row_number() OVER (PARTITION BY md5(text))`): one
-    *    shuffle instead of two — marginally cheaper on a skew-free corpus,
-    *    but the hot family lands whole in one AQE-unsplittable partition.
-    *    Kept only as the reference DedupSpec checks the census form
-    *    against.
+    * Census+rejoin: `groupBy(md5(text)).agg(min(doc_id))` then an
+    * equi-rejoin on the hash. Map-side partials collapse a hot family to
+    * one row per map task before the census shuffle, and the rejoin is
+    * AQE-skew-splittable. This is the form that survives the corpora
+    * curation actually targets — web crawls where one boilerplate page
+    * (error page, empty template) is duplicated across a large fraction of
+    * 100 TB: precisely the family the pipeline exists to collapse, and
+    * precisely the key a keyed window cannot split. DedupSpec pins it
+    * against an in-spec window twin (`row_number() OVER (PARTITION BY
+    * md5(text))`) on a hot-family corpus.
     *
     * The hash key is `coalesce(md5(text), '')` — null texts form one
-    * family in BOTH forms ('' can never collide with a 32-hex digest; a
-    * plain equi-join on a nullable key would silently DROP null-text rows,
-    * the classic null-key join trap). DuckDB's `PARTITION BY md5(text)`
-    * groups NULLs together, so the oracle agrees.
+    * family ('' can never collide with a 32-hex digest; a plain equi-join
+    * on a nullable key would silently DROP null-text rows, the classic
+    * null-key join trap). DuckDB's `PARTITION BY md5(text)` groups NULLs
+    * together, so the oracle agrees.
     *
     * `priority` prepends rank columns to the keeper order (the q81
     * priority-canonical form): the keeper is the family minimum of
-    * `struct(priority..., doc_id)` in the census form and the first row of
-    * `ORDER BY priority..., doc_id` in the window form — Spark sorts and
-    * struct-compares both nulls-FIRST field-wise, so the two forms always
-    * agree; callers wanting nulls-last semantics pass an explicit
+    * `struct(priority..., doc_id)` — Spark struct-compares nulls-FIRST
+    * field-wise, so callers wanting nulls-last semantics pass an explicit
     * `isNull` flag column first (see [[q81CanonicalPriority]]). One body
     * serves q52/q75/q81, keeping the ONE-implementation promise. */
-  private[graft] def withCanonicalFlag(docs: DataFrame, skewSafe: Boolean,
+  private[graft] def withCanonicalFlag(docs: DataFrame,
       priority: Seq[org.apache.spark.sql.Column] = Nil): DataFrame = {
     val withH = docs.withColumn("__cf_h", coalesce(md5(col("text")), lit("")))
-    val flagged =
-      if (skewSafe) {
-        // no-priority callers keep the plain min(doc_id): it hash-aggregates
-        // (mutable buffer), while min(struct(...)) falls to SortAggregate —
-        // still map-side-partial (the skew story holds) but with a
-        // per-partition sort the flagship path shouldn't pay for free
-        val census =
-          if (priority.isEmpty)
-            withH.groupBy(col("__cf_h"))
-              .agg(min(col("doc_id")).as("__cf_canon"))
-          else
-            withH.groupBy(col("__cf_h"))
-              .agg(min(struct((priority :+ col("doc_id")): _*)).as("__cf_keep"))
-              .select(col("__cf_h"),
-                col("__cf_keep").getField("doc_id").as("__cf_canon"))
-        withH.join(census, "__cf_h")
-          .withColumn("is_canonical", col("doc_id") === col("__cf_canon"))
-          .drop("__cf_canon")
-      } else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("__cf_h"))
-          .orderBy((priority :+ col("doc_id")).map(_.asc): _*)
-        withH.withColumn("is_canonical", row_number().over(w) === 1)
-      }
-    flagged.drop("__cf_h")
+    // no-priority callers keep the plain min(doc_id): it hash-aggregates
+    // (mutable buffer), while min(struct(...)) falls to SortAggregate —
+    // still map-side-partial (the skew story holds) but with a
+    // per-partition sort the flagship path shouldn't pay for free
+    val census =
+      if (priority.isEmpty)
+        withH.groupBy(col("__cf_h"))
+          .agg(min(col("doc_id")).as("__cf_canon"))
+      else
+        withH.groupBy(col("__cf_h"))
+          .agg(min(struct((priority :+ col("doc_id")): _*)).as("__cf_keep"))
+          .select(col("__cf_h"),
+            col("__cf_keep").getField("doc_id").as("__cf_canon"))
+    withH.join(census, "__cf_h")
+      .withColumn("is_canonical", col("doc_id") === col("__cf_canon"))
+      .drop("__cf_canon", "__cf_h")
   }
 
   /** The (non-canonical doc → family canonical) projection of
-    * [[withCanonicalFlag]]'s skew-safe no-priority census — ONE canonical
+    * [[withCanonicalFlag]]'s no-priority census — ONE canonical
     * rule (min doc_id per md5(text) family) shared by the ingest drop
     * chain's batch-dedup stage and the streaming pair surface
     * ([[graft.streaming.StreamingOps.ingestDropPairs]]), so the doc the
@@ -938,14 +921,6 @@ object DedupQueries {
   def q71ExactSpans(spark: SparkSession, dir: String): DataFrame =
     spanDupFlags(Tables.documents(spark, dir)).orderBy(col("doc_id").asc)
 
-  /** Per-doc-distinct (doc_id, h) span-hash stream — step 1 of the q71
-    * window twin DedupSpec checks [[spanDupFlags]] against. */
-  private[graft] def docSpans(docs: DataFrame): DataFrame =
-    docs.filter(col("text").isNotNull)
-      .select(col("doc_id"), explode(array_distinct(
-        graft.functions.WordNGrams(col("text"), spanTokens(docs.sparkSession)))).as("span"))
-      .select(col("doc_id"), md5(col("span")).as("h"))
-
   /** q71's census-arithmetic body over any document frame (see
     * [[q71ExactSpans]] for the derivation and the r13 ruling). */
   private[graft] def spanDupFlags(docs: DataFrame): DataFrame = {
@@ -1012,14 +987,14 @@ object DedupQueries {
     * load). Unlike q89's one-row-per-doc stream, the per-occurrence
     * stream here is token-stream-sized, and the window's full sort of
     * ~30M (doc, pos, h) rows by a 32-char key costs more than the second
-    * projection pass + hash rejoin it saves. Both forms stay in
-    * [[spanDedup]] (spec'd row-identical); census is the default and the
-    * shipped plan. */
+    * projection pass + hash rejoin it saves. The census is the shipped
+    * plan; DedupSpec keeps the window twin and pins the two
+    * row-identical. */
   def q77SpanDedup(spark: SparkSession, dir: String): DataFrame =
     spanDedup(Tables.documents(spark, dir)).orderBy(col("doc_id").asc)
 
   /** Positional per-occurrence span-hash stream — step 1 of q77. */
-  private def occurrenceSpans(docs: DataFrame, nTokens: Int): DataFrame =
+  private[graft] def occurrenceSpans(docs: DataFrame, nTokens: Int): DataFrame =
     docs.filter(col("text").isNotNull)
       .select(col("doc_id"),
         posexplode(graft.functions.WordNGrams(col("text"), nTokens))
@@ -1027,33 +1002,29 @@ object DedupQueries {
       .select(col("doc_id"), col("spos"), md5(col("span")).as("h"))
 
   /** The drop stage over any document frame — (doc_id, n_words, n_removed,
-    * cleaned_text), one row per non-null-text doc. Both formulations are
-    * output-identical (DedupSpec pins them row-equal). */
-  private[graft] def spanDedup(docs: DataFrame, skewSafe: Boolean = true): DataFrame = {
+    * cleaned_text), one row per non-null-text doc. */
+  private[graft] def spanDedup(docs: DataFrame): DataFrame = {
     val nTokens = spanTokens(docs.sparkSession)
     val text = docs.filter(col("text").isNotNull)
       .select(col("doc_id"), col("text"))
     val spanStarts = occurrenceSpans(text, nTokens)
-    val removedOcc =
-      if (skewSafe) {
-        // "shared by >= 2 distinct docs" only needs min != max — a
-        // single-phase, fully map-side-combinable aggregate, where
-        // countDistinct(doc_id) paid a two-phase expand (r14 ruling;
-        // same trick as the window twin's maxd check below)
-        val census = spanStarts.groupBy(col("h"))
-          .agg(min(col("doc_id")).as("keeper"),
-            max(col("doc_id")).as("maxd"))
-          .filter(col("maxd") =!= col("keeper"))
-          .select(col("h"), col("keeper"))
-        spanStarts.join(census, "h")
-          .filter(col("doc_id") =!= col("keeper"))
-      } else {
-        val w = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
-        spanStarts
-          .withColumn("keeper", min(col("doc_id")).over(w))
-          .withColumn("maxd", max(col("doc_id")).over(w))
-          .filter(col("maxd") =!= col("keeper") && col("doc_id") =!= col("keeper"))
-      }
+    // "shared by >= 2 distinct docs" only needs min != max — a
+    // single-phase, fully map-side-combinable aggregate, where
+    // countDistinct(doc_id) paid a two-phase expand (r14 ruling)
+    val census = spanStarts.groupBy(col("h"))
+      .agg(min(col("doc_id")).as("keeper"),
+        max(col("doc_id")).as("maxd"))
+      .filter(col("maxd") =!= col("keeper"))
+      .select(col("h"), col("keeper"))
+    removeCovered(text, spanStarts.join(census, "h")
+      .filter(col("doc_id") =!= col("keeper")), nTokens)
+  }
+
+  /** The rebuild stage of [[spanDedup]]: drop every word position a
+    * removed occurrence (doc_id, spos) covers, given the (doc_id, text)
+    * rows. */
+  private[graft] def removeCovered(text: DataFrame, removedOcc: DataFrame,
+      nTokens: Int): DataFrame = {
     // Rebuild stage (r14, VERDICT r13 #5): the document never needs
     // EXPLODING to drop positions. The r10-r13 form materialized the full
     // positional word stream (corpus-token-scale rows), anti-joined it
@@ -1475,16 +1446,6 @@ object DedupQueries {
     }
   }
 
-  /** The un-gated twin of [[q80BloomDedup]] — plain exact-membership via a
-    * corpus-side semi/anti join. DedupSpec pins q80 output-identical to
-    * this; it is also the honest fallback when the corpus side is SMALL
-    * enough that a bloom build isn't worth a pass. */
-  private[graft] def membershipPlain(probes: DataFrame, keys: DataFrame): DataFrame =
-    probes
-      .join(keys.select(col("tkey")).distinct().withColumn("is_dup", lit(true)),
-        Seq("tkey"), "left")
-      .select(col("doc_id"), coalesce(col("is_dup"), lit(false)).as("is_dup"))
-
   /** Q81 — PRIORITY-aware canonical selection: within each exact-duplicate
     * family keep the copy from the best SOURCE (ties broken by doc_id),
     * not blindly the lowest id — what production dedup actually does when
@@ -1492,7 +1453,7 @@ object DedupQueries {
     * (keep the curated dump's copy, drop the CommonCrawl one). The keeper
     * is `min(struct(priority..., doc_id))` — one census aggregate whose
     * field-wise struct ordering IS the priority order — followed by the
-    * same skew-safe equi-rejoin as [[withCanonicalFlag]]'s census form:
+    * same skew-safe equi-rejoin as [[withCanonicalFlag]]:
     * map-side partials collapse a hot boilerplate family per map task, and
     * no window ever sees the family in one partition. The catalog entry
     * ranks by `source` ascending with nulls LAST as the demo priority —
@@ -1505,7 +1466,6 @@ object DedupQueries {
   def q81CanonicalPriority(spark: SparkSession, dir: String): DataFrame =
     withCanonicalFlag(
         Tables.documents(spark, dir).filter(col("text").isNotNull),
-        skewSafe = true,
         priority = Seq(col("source").isNull, col("source")))
       .select(col("doc_id"), col("is_canonical"))
       .orderBy(col("doc_id").asc)

@@ -71,7 +71,7 @@ object FunctionQueries {
     * oracle. Every stage is codegen (no TypedImperativeAggregate buffering
     * raw rows — the builtin's cost); the window runs over distinct values
     * only, which bounded-domain measure columns keep small at any SF. */
-  private def exactPercentileByCounting(
+  private[graft] def exactPercentileByCounting(
       df: DataFrame, group: String, value: String, p: Double, out: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val counts = df.filter(col(value).isNotNull)
@@ -107,7 +107,7 @@ object FunctionQueries {
     * min/max pruning at scale) and ranks only those ~100 rows. Interpolation
     * is the same lo + (hi-lo)*frac double formula as Spark `percentile` /
     * DuckDB `quantile_cont` => bit-stable vs the oracle. */
-  private def exactPercentileByHistogram(
+  private[graft] def exactPercentileByHistogram(
       df: DataFrame, group: String, value: String, p: Double, out: String,
       bucketWidth: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -137,14 +137,6 @@ object FunctionQueries {
       .select(col(group),
         (col("lov") + (col("hiv") - col("lov")) * (col("kk") - floor(col("kk")))).as(out))
   }
-
-  /** Test seams for the differential property suite (FunctionSpec). */
-  private[graft] def countingPercentileForTest(
-      df: DataFrame, group: String, value: String, p: Double): DataFrame =
-    exactPercentileByCounting(df, group, value, p, "v")
-  private[graft] def histogramPercentileForTest(
-      df: DataFrame, group: String, value: String, p: Double): DataFrame =
-    exactPercentileByHistogram(df, group, value, p, "v", bucketWidth = 16.0)
 
   /** Q43 — exact interpolated percentiles per group (the order-statistics
     * family of "advanced analytical queries"). r4: replaces the builtin

@@ -17,16 +17,12 @@ import org.apache.spark.sql.functions._
   * iteration count, unrolled identically in the DuckDB oracle's CTE
   * chain.
   *
-  * Scale shape: per iteration, one equi-join edges⋈ranks on src (shuffle
-  * on integer keys; at web scale both sides are big and this is the
-  * canonical shuffle join), one map-side-partial groupBy(dst), one
-  * node-table rejoin. Edges are materialized ONCE via
-  * [[Materialize.materialize]] (the q56 discipline — executor-local by
-  * default, RELIABLE checkpoint files when `spark.graft.checkpointDir`
-  * is set, so executor loss mid-iteration is restartable on a cluster;
-  * VERDICT r8 #3) so the corpus is scanned once, not once per iteration,
-  * and each iteration's ranks are materialized the same way to keep the
-  * plan depth constant. No driver-side collect anywhere.
+  * Scale shape: one distributed pass (the distinct edge census, bounded
+  * by construction), then the iterations on the driver — see
+  * [[q95PageRank]]. GraphSpec keeps the distributed per-iteration form
+  * (edges⋈ranks join, map-side-partial groupBy(dst), node-table rejoin,
+  * ranks checkpointed through [[Materialize.materialize]]) as q95's
+  * reference.
   *
   * Variant note (ADVICE r8): this is the NO-DANGLING-REDISTRIBUTION form
   * of the damped iteration — a sink node (no out-edges) contributes
@@ -55,48 +51,6 @@ object GraphQueries {
       .distinct()
       .filter(col("src") =!= col("dst"))
 
-  /** The damped-power-iteration core over ANY pre-materialized (src, dst)
-    * Long-keyed edge frame: the distributed reference q95 is checked
-    * against (GraphSpec compares the two over the same edges and pins this
-    * loop's reliable checkpoints), and the shape a graph too large for the
-    * driver needs (VERDICT r8 #4). Per iteration: edges⋈ranks
-    * equi-join on src, map-side-partial groupBy(dst), node-table rejoin;
-    * each iteration's ranks go through [[Materialize.materialize]] to keep
-    * plan depth constant and be cluster-restartable. Returns one (node, r)
-    * row per node. Caller materializes `edges` (both consumers also derive
-    * degrees from it).
-    *
-    * `scale` is the total rank mass in integer units. Truncating DIVs lose
-    * up to ~1 unit per node per truncation site, so granularity must suit
-    * |V|: q95's oracle-pinned 10^6 micro is exact-reproducible but loses
-    * ~2% mass per iteration at |V| ~ 2.5×10^4 (measured in r9 on the real
-    * sf1.0 doc↔domain graph, artifacts/PAGERANK_SMOKE_sf1.0_r09.json); at
-    * real graph sizes pass a finer scale (10^12 is still Long-safe:
-    * contrib sums are bounded by the scale itself). */
-  private[graft] def powerIteration(edges: DataFrame, iters: Int,
-      scale: Long = Scale): DataFrame = {
-    val basePerN = scale * (100 - DampPct) / 100
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node"))).distinct()
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val cnt = nodes.agg(count(lit(1)).as("nn"))
-
-    var ranks = Materialize.materialize(nodes.crossJoin(broadcast(cnt))
-      .select(col("node"), expr(s"CAST($scale DIV nn AS BIGINT)").as("r")))
-    for (_ <- 1 to iters) {
-      val contribs = edges
-        .join(ranks, edges("src") === ranks("node"))
-        .join(deg, "src")
-        .select(col("dst").as("node"), expr("r DIV outdeg").as("contrib"))
-      val sums = contribs.groupBy(col("node")).agg(sum(col("contrib")).as("c"))
-      ranks = Materialize.materialize(nodes.crossJoin(broadcast(cnt))
-        .join(sums, Seq("node"), "left")
-        .select(col("node"),
-          expr(s"CAST($basePerN DIV nn + $DampPct * COALESCE(c, 0L) DIV 100 AS BIGINT)").as("r")))
-    }
-    ranks
-  }
-
   /** Q95 — damped PageRank over the domain link graph, [[PrIters]] exact
     * integer power iterations; emits each domain's micro-rank and its
     * in/out-degree, hubs first.
@@ -106,7 +60,7 @@ object GraphQueries {
     * — src, dst ∈ (−23, 23) for any doc_id — so after the one distributed
     * pass (the distinct edge census, ≤ 23·22 rows at ANY corpus scale)
     * the whole graph is a codebook, not a corpus relation. The previous
-    * form ran [[powerIteration]]'s 5 distributed join+aggregate rounds,
+    * form ran 5 distributed join+aggregate rounds,
     * each through a [[Materialize]] checkpoint, to move ≤ 23 longs per
     * round — exactly the shape the q120/q125 bounded-collect rulings
     * retire (a checkpoint round-trip per round to move kilobytes). The
@@ -116,10 +70,10 @@ object GraphQueries {
     * and its unrolled CTE chain are untouched. Measured at sf0.1
     * (shared-session bench, this host): 2.08 → 0.35 s; plan goes from
     * 6 checkpoints + 5 join rounds to ONE distinct shuffle + a 23-row
-    * local sort (plans/r16/q95_pagerank_{before,after}.txt).
-    * [[powerIteration]] itself is unchanged and stays the distributed
-    * reference, the only shape that scales to a graph the driver cannot
-    * hold. */
+    * local sort (plans/r16/q95_pagerank_{before,after}.txt). The
+    * distributed form lives on in GraphSpec as the reference q95 is
+    * checked against, and is the shape a graph the driver cannot hold
+    * needs. */
   def q95PageRank(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val docs = Tables.documents(spark, dir)

@@ -343,17 +343,10 @@ object SimilarityQueries {
       import spark.implicits._
       return Seq.empty[(Long, Long, Long)].toDF("query_id", "neighbor_id", "dot")
     }
-    val assigned = emb.withColumn("cell", nearestCellExpr(centroids))
-    val corpus = assigned.select(col("vec_id").as("neighbor_id"),
-      col("qv").as("qb"), col("cell"))
-    ivfProbeScore(emb, corpus, centroids, probes)
-  }
-
-  /** The probe/score stage shared by the inline pipeline and the persisted
-    * index: per-query probe cells ranked by the exact distance expression,
-    * cell equi-join against the assigned corpus, integer dot scoring. */
-  private def ivfProbeScore(emb: DataFrame, corpus: DataFrame,
-      centroids: Array[(Int, Array[Long])], probes: Int): DataFrame = {
+    val corpus = emb.withColumn("cell", nearestCellExpr(centroids))
+      .select(col("vec_id").as("neighbor_id"), col("qv").as("qb"), col("cell"))
+    // per-query probe cells ranked by the exact distance expression, cell
+    // equi-join against the assigned corpus, integer dot scoring
     val queries = emb.filter(col("vec_id") < QueryCount)
       .select(col("vec_id").as("query_id"), col("qv").as("qa"),
         explode(slice(sort_array(array(cellScores(centroids): _*)), 1, probes)).as("probe"))
@@ -364,15 +357,13 @@ object SimilarityQueries {
       .withColumn("dot", graft.functions.DotProductLong(col("qa"), col("qb")))
   }
 
-  /** Build-once/query-many IVF index: persists the codebook (cell ->
-    * centroid) and the corpus cell assignment as parquet — the production
-    * ANN serving shape (training + the full-corpus assignment scan are a
-    * batch job whose cost amortizes over every query that follows; q42
-    * re-derives both per call, which is the right shape for a one-shot
-    * benchmark but not for a serving path). The assignment table carries
-    * only (vec_id, cell) — vectors stay in the source table and re-join by
-    * id at query time, so the index is tiny relative to the corpus.
-    * Like [[q42IvfAnn]], throws IllegalStateException when a non-empty
+  /** Build-once IVF index: persists the codebook (cell -> centroid) and
+    * the corpus cell assignment as parquet, so training and the
+    * full-corpus assignment scan run once for every consumer that follows
+    * ([[semanticDedupFromIvfIndex]], tools/RecallSweep); q42 re-derives
+    * both per call. The assignment table carries only (vec_id, cell) —
+    * vectors stay in the source table and re-join by id, so the index is
+    * tiny relative to the corpus. Like [[q42IvfAnn]], throws IllegalStateException when a non-empty
     * corpus has fewer than `cells` vectors (ADVICE r6: intentional loud
     * failure — pass a smaller `cells` for legitimately tiny corpora). */
   def buildIvfIndex(spark: SparkSession, dir: String, indexDir: String,
@@ -386,97 +377,13 @@ object SimilarityQueries {
     val assigned =
       if (centroids.isEmpty) emb.select(col("vec_id"), lit(0).as("cell")) // empty corpus
       else emb.withColumn("cell", nearestCellExpr(centroids)).select(col("vec_id"), col("cell"))
-    // batch_id-partitioned like the band index (base build = -1) so the
-    // delta-assign path can append with idempotent replay
-    assigned.withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite")
-      // STATIC pin, mirroring buildNearDupIndex: a rebuild replaces the
-      // whole assignment table even when the session default is dynamic
-      .option("partitionOverwriteMode", "static")
-      .partitionBy("batch_id")
-      .parquet(DedupQueries.currentGeneration(spark, s"$indexDir/assignments"))
+    assigned.write.mode("overwrite").parquet(s"$indexDir/assignments")
   }
 
-  /** Incremental index maintenance: assign NEW vectors against the
-    * persisted codebook (no retraining — the standard IVF ingest path:
-    * centroids stay fixed between rebuilds, deltas append to the
-    * assignment table). One bounded codebook collect, then the same
-    * native [[graft.functions.NearestCellLong]] assignment the builder
-    * used — appended rows are bit-identical to what a full rebuild with
-    * the same codebook would produce (pinned by SimilaritySpec). Input:
-    * any frame with (vec_id, embedding); output: (vec_id, cell).
-    *
-    * `appendBatchId = Some(n)` persists the delta into the index as
-    * partition `batch_id = n` via dynamic partition overwrite — the same
-    * exactly-once replay discipline as the band index's
-    * appendToNearDupIndex: a crash-replayed batch replaces its own
-    * previous rows and touches nothing else. */
-  def assignToIvfIndex(newVectors: DataFrame, indexDir: String,
-      appendBatchId: Option[Long] = None): DataFrame = {
-    val spark = newVectors.sparkSession
-    val centroids = spark.read.parquet(s"$indexDir/codebook")
-      .collect().map(r => (r.getInt(0), r.getSeq[Long](1).toArray)).sortBy(_._1)
-    val assigned =
-      if (centroids.isEmpty) newVectors.select(col("vec_id"), lit(0).as("cell"))
-      else newVectors
-        .withColumn("qv", quantizeExpr(col("embedding")))
-        .withColumn("cell", nearestCellExpr(centroids))
-        .select(col("vec_id"), col("cell"))
-    appendBatchId.foreach { b =>
-      assigned.withColumn("batch_id", lit(b))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(DedupQueries.currentGeneration(spark, s"$indexDir/assignments"))
-    }
-    assigned
-  }
-
-  /** Fold appended assignment partitions back into the base (-1) — the
-    * IVF twin of DedupQueries.compactNearDupIndex, sharing its
-    * generation-rollover write (the new generation is fully on disk
-    * before the live directory is touched). The codebook is untouched:
-    * compaction is a layout operation, retraining ([[buildIvfIndex]]) is
-    * a different decision. */
-  /** The IVF index's current-generation assignment table — the read-side
-    * twin of [[buildIvfIndex]]/[[assignToIvfIndex]] (generation-managed,
-    * see DedupQueries.currentGeneration). */
+  /** The IVF index's (vec_id, cell) assignment table, as [[buildIvfIndex]]
+    * wrote it. */
   def readIvfAssignments(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(
-      DedupQueries.currentGeneration(spark, s"$indexDir/assignments"))
-
-  def compactIvfIndex(spark: SparkSession, indexDir: String): Unit =
-    DedupQueries.compactGeneration(spark, s"$indexDir/assignments",
-      // re-delivered vectors may sit in several batch partitions with the
-      // same assignment; compaction is the place to collapse them instead
-      // of baking duplicates into the base generation
-      df => df.select(col("vec_id"), col("cell")).dropDuplicates("vec_id", "cell"))
-
-  /** IVF top-k served from a persisted index: one bounded collect of the
-    * cells-row codebook, an id equi-join to re-attach vectors to their
-    * precomputed cells, then the same probe/score/top-k as q42. Output is
-    * row-identical to the inline pipeline at equal (cells, probes) —
-    * pinned by SimilaritySpec. */
-  def ivfAnnTopKFromIndex(spark: SparkSession, dir: String, indexDir: String,
-      probes: Int = IvfProbes): DataFrame = {
-    val centroids = spark.read.parquet(s"$indexDir/codebook")
-      .collect().map(r => (r.getInt(0), r.getSeq[Long](1).toArray)).sortBy(_._1)
-    if (centroids.isEmpty) {
-      import spark.implicits._
-      return Seq.empty[(Long, Long, Long)].toDF("query_id", "neighbor_id", "dot")
-    }
-    val emb = quantized(spark, dir)
-    // dropDuplicates: a vec_id can legitimately appear in several batch_id
-    // partitions (re-delivered feed under a new appendBatchId — replay
-    // only guards the SAME batch id); duplicate assignment rows would put
-    // the same neighbor into top-k twice and displace a genuine one
-    val corpus = emb.join(
-        readIvfAssignments(spark, indexDir)
-          .select(col("vec_id"), col("cell")).dropDuplicates("vec_id", "cell"),
-        "vec_id")
-      .select(col("vec_id").as("neighbor_id"), col("qv").as("qb"), col("cell"))
-    topKScored(ivfProbeScore(emb, corpus, centroids, probes))
-  }
+    spark.read.parquet(s"$indexDir/assignments")
 
   private[graft] def ivfAnnTopK(spark: SparkSession, dir: String,
       cells: Int, probes: Int, lloydRounds: Int = 1): DataFrame =
@@ -750,8 +657,7 @@ object SimilarityQueries {
     * query, ranked by the exact re-rank score. */
   def q82IvfPqAnn(spark: SparkSession, dir: String): DataFrame = {
     val emb = quantizedFor(spark, dir)
-    // the codebooks and the encoded corpus are session artifacts, the twins
-    // of [[buildPqIndex]]'s persisted codebooks and assignment table:
+    // the codebooks and the encoded corpus are session artifacts:
     // training inline put two collect-terminated aggregations in every
     // serving window (VERDICT r13 #3), and (cell, 8 code argmins) per
     // vector is the pipeline's expensive projection
@@ -770,8 +676,7 @@ object SimilarityQueries {
   }
 
   /** The per-vector PQ serving state: coarse cell + the PqM code ids —
-    * one codegen'd projection (coarse argmin + PqM sub-argmins), shared by
-    * the inline q82 pipeline and the index builder. */
+    * one codegen'd projection (coarse argmin + PqM sub-argmins). */
   private def encodePq(emb: DataFrame, coarse: Array[(Int, Array[Long])],
       pq: Array[Array[(Int, Array[Long])]]): DataFrame =
     emb.withColumn("cell", nearestCellExpr(coarse))
@@ -780,8 +685,7 @@ object SimilarityQueries {
           nearestSubCodeExpr(pq(m), slice(col("qv"), m * PqSubDim + 1, PqSubDim))): _*)
           .as("codes"))
 
-  /** The IVF-PQ serving tail shared by the inline pipeline and the
-    * persisted index: probe cells, ADC-score the candidates' codes through
+  /** The IVF-PQ serving tail: probe cells, ADC-score the candidates' codes through
     * per-query lookup tables, shortlist, exact re-rank. `corpus` carries
     * only (neighbor_id, cell, codes); `emb` supplies query vectors and the
     * shortlist's re-rank vectors. */
@@ -840,102 +744,6 @@ object SimilarityQueries {
       .orderBy(col("query_id").asc, col("dot").desc, col("neighbor_id").asc)
   }
 
-  /** Build-once/query-many IVF-PQ index — the PQ twin of [[buildIvfIndex]].
-    * Persists the coarse codebook, the per-subspace PQ codebooks, and the
-    * per-vector (cell, codes) serving state. Unlike the plain IVF index
-    * (ids only — vectors re-join at query time), the PQ assignment table
-    * IS the compressed corpus representation: the serving scan reads only
-    * it, and original vectors are touched for nothing but the
-    * [[PqRerank]]x[[TopK]]-row re-rank shortlist. Same generation
-    * management, batch_id append discipline, and static-overwrite rebuild
-    * pin as the IVF/band indexes. */
-  def buildPqIndex(spark: SparkSession, dir: String, indexDir: String): Unit = {
-    import spark.implicits._
-    val emb = Materialize.materialize(quantized(spark, dir))
-    val coarse = trainCodebook(emb, IvfCells, 1)
-    val pq = trainPqCodebooks(emb)
-    coarse.toSeq.map { case (cell, c) => (cell, c.toSeq) }
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/codebook")
-    pq.zipWithIndex.flatMap { case (cb, m) =>
-      cb.map { case (code, c) => (m, code, c.toSeq) }
-    }.toSeq.toDF("m", "code", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/pq_codebooks")
-    val assigned =
-      if (coarse.isEmpty || pq.isEmpty)
-        emb.select(col("vec_id"), lit(0).as("cell"),
-          array_repeat(lit(0), PqM).as("codes")) // empty corpus: no rows
-      else encodePq(emb, coarse, pq)
-    assigned.withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "static")
-      .partitionBy("batch_id")
-      .parquet(DedupQueries.currentGeneration(spark, s"$indexDir/assignments"))
-  }
-
-  /** Read back the two persisted codebooks (bounded collects — cells rows
-    * and PqM x PqK rows). */
-  private def readPqCodebooks(spark: SparkSession, indexDir: String)
-      : (Array[(Int, Array[Long])], Array[Array[(Int, Array[Long])]]) = {
-    val coarse = spark.read.parquet(s"$indexDir/codebook")
-      .collect().map(r => (r.getInt(0), r.getSeq[Long](1).toArray)).sortBy(_._1)
-    val pqRows = spark.read.parquet(s"$indexDir/pq_codebooks")
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toArray))
-    val pq = Array.tabulate(PqM)(m =>
-      pqRows.filter(_._1 == m).map { case (_, code, c) => (code, c) }.sortBy(_._1))
-    (coarse, pq)
-  }
-
-  /** IVF-PQ top-k served from a persisted index: bounded codebook collects,
-    * the compressed assignment table as the candidate corpus, then the same
-    * probe/ADC/shortlist/re-rank as q82 — row-identical to the inline
-    * pipeline (pinned by SimilaritySpec). */
-  def ivfPqTopKFromIndex(spark: SparkSession, dir: String,
-      indexDir: String): DataFrame = {
-    val (coarse, pq) = readPqCodebooks(spark, indexDir)
-    if (coarse.isEmpty || pq.forall(_.isEmpty)) return emptyPqResult(spark)
-    val emb = quantized(spark, dir)
-    // dropDuplicates: re-delivered vectors may sit in several batch
-    // partitions with the same (cell, codes) — same guard as the IVF index
-    val corpus = readIvfAssignments(spark, indexDir)
-      .select(col("vec_id").as("neighbor_id"), col("cell"), col("codes"))
-      .dropDuplicates("neighbor_id", "cell", "codes")
-    ivfPqServe(emb, corpus, coarse, pq)
-  }
-
-  /** Incremental PQ index maintenance: encode NEW vectors against the
-    * persisted codebooks (no retraining — centroids stay fixed between
-    * rebuilds). Appended rows are bit-identical to what a full rebuild
-    * with the same codebooks would produce. Same batch_id exactly-once
-    * replay discipline as [[assignToIvfIndex]]. */
-  def assignToPqIndex(newVectors: DataFrame, indexDir: String,
-      appendBatchId: Option[Long] = None): DataFrame = {
-    val spark = newVectors.sparkSession
-    val (coarse, pq) = readPqCodebooks(spark, indexDir)
-    val assigned =
-      if (coarse.isEmpty || pq.forall(_.isEmpty))
-        newVectors.select(col("vec_id"), lit(0).as("cell"),
-          array_repeat(lit(0), PqM).as("codes"))
-      else encodePq(
-        newVectors.withColumn("qv", quantizeExpr(col("embedding"))), coarse, pq)
-    appendBatchId.foreach { b =>
-      assigned.withColumn("batch_id", lit(b))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(DedupQueries.currentGeneration(spark, s"$indexDir/assignments"))
-    }
-    assigned
-  }
-
-  /** Fold appended PQ assignment partitions into the base generation —
-    * same generation-rollover write as [[compactIvfIndex]]; codebooks are
-    * untouched (compaction is layout, retraining is [[buildPqIndex]]). */
-  def compactPqIndex(spark: SparkSession, indexDir: String): Unit =
-    DedupQueries.compactGeneration(spark, s"$indexDir/assignments",
-      df => df.select(col("vec_id"), col("cell"), col("codes"))
-        .dropDuplicates("vec_id", "cell", "codes"))
-
   // ---- Hybrid (lexical + vector) retrieval fusion ----
 
   /** Fusion depth per leg and the classic RRF dampening constant. */
@@ -958,7 +766,7 @@ object SimilarityQueries {
     * window over the BOUNDED FusionDepth-row result, and the fusion is a
     * full-outer join of two 20-row frames. At 100 TB each leg's scoring
     * stage is the member that scales (tf-idf's shuffle is token-pruned,
-    * the vector leg composes with the persisted IVF/PQ index instead of
+    * the vector leg composes with a persisted IVF index instead of
     * the exact scan used here); the fusion itself stays constant-size. A
     * missing leg reports rank 0 (absent), keeping the rank columns
     * non-null BIGINT on both engines.
@@ -971,7 +779,7 @@ object SimilarityQueries {
     * lexical leg's token shuffle; no stage is corpus-quadratic or
     * unpruned. DuckDB clears both legs in one vectorized process. The
     * scale lever is already documented above: compose the vector leg
-    * with the persisted IVF/PQ index. Floor. */
+    * with a persisted IVF index. Floor. */
   def q83HybridSearch(spark: SparkSession, dir: String): DataFrame = {
     val lexTop = TextQueries.lexicalScores(spark, dir)
       .orderBy(col("score_milli").desc, col("doc_id").asc)

@@ -1,16 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, TimeMode, TimerValues, ExpiredTimerInfo, ValueState, TTLConfig}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.DecimalType
 
 /** Structured Streaming operators for the priced Flink workload classes
   * (SURVEY.md §2.C streaming rows; reference estimation.html:225,239-240,
   * considerations.html:31-32): tumble/hop/session windows with watermarks,
-  * dedup-within-watermark, stream-stream left join, and stateful pattern
-  * matching via flatMapGroupsWithState.
+  * stream-stream left join, and stateful pattern matching via
+  * flatMapGroupsWithState.
   *
   * Every transform takes a DataFrame and works identically on a batch or a
   * streaming frame (the micro-batch model's core promise) — the batch
@@ -59,15 +58,6 @@ object StreamingOps {
       .select(col("w.start").as("ws"), col("w.end").as("we"),
         col("user_id"), col("cnt"))
 
-  /** Exactly-once dedup on event_id with bounded state: ids older than the
-    * watermark are evicted (the streaming form of q10's dropDuplicates —
-    * the unbounded-state version is a leak at 100 TB/day). */
-  def dedupWithinWatermark(events: DataFrame,
-      watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("event_id")
-
   /** Stream-stream LEFT OUTER join: view-events enriched with purchase
     * events for the same user within [0, +10 min]. Both sides watermarked;
     * unmatched left rows emit with nulls only after the watermark proves no
@@ -115,17 +105,6 @@ object StreamingOps {
     * drives both forms (StreamingSpec pins replay == batch). */
   def scrubArrivals(docsStream: DataFrame): DataFrame =
     graft.operators.WebCurationQueries.piiScrub(docsStream)
-
-  /** Stateless C4 line cleaning at ingest (q90's rules as a stream
-    * projection): drop pages failing the page gate, strip rule-failing
-    * lines from the survivors — before anything reaches an index, shard,
-    * or log. Runs AFTER [[scrubArrivals]] in a production chain: each PII
-    * token redacts to exactly one placeholder, so line word counts and
-    * terminal punctuation are stable through the scrub (the q88
-    * stage-independence argument). Null-text docs pass through untouched,
-    * like the scrub. No state, no watermark, no shuffle. */
-  def cleanArrivals(docsStream: DataFrame): DataFrame =
-    graft.operators.LineCurationQueries.cleanPages(docsStream)
 
   /** Stream-static near-dup INGEST probe: a stream of arriving documents is
     * shingled/signed/banded per micro-batch (the streaming-safe
@@ -488,68 +467,6 @@ object StreamingOps {
 
   final case class UserSession(user_id: Long, n_events: Long, sum_value: Double,
       closed_at_ms: Long)
-
-  // ---- transformWithState (Spark 4 arbitrary-state API) ----
-
-  /** Per-user running totals through the Spark 4 transformWithState API:
-    * ValueState keyed by user, an event-time timer re-armed on every batch,
-    * totals emitted (and state dropped) when the watermark passes
-    * last-event + gap. Functionally the TWS twin of [[userSessions]] —
-    * kept side by side because TWS is the forward-looking state API
-    * (RocksDB-backed, per-state TTL, multiple typed state variables) while
-    * flatMapGroupsWithState remains the stable classic one. */
-  final class UserTotalsProcessor(gapMs: Long)
-      extends StatefulProcessor[Long, Ev, UserSession] {
-    @transient private var state: ValueState[SessionState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[SessionState](
-        "session", Encoders.product[SessionState], TTLConfig.NONE)
-
-    override def handleInputRows(user: Long, rows: Iterator[Ev],
-        timers: TimerValues): Iterator[UserSession] = {
-      val sorted = rows.toSeq.sortBy(_.ts.getTime)
-      val prev = Option(state.get()).getOrElse(SessionState(0L, 0.0, Long.MinValue))
-      // the timer armed for the superseded state is explicitly deleted —
-      // re-arming without deleting accumulates one stale timer per batch
-      // per active user in the timer store (each costing a spurious
-      // expiry callback later), against the bounded-state contract
-      if (prev.count > 0) getHandle.deleteTimer(prev.lastTsMs + gapMs)
-      val (closed, open) = sorted.foldLeft(
-        (Vector.empty[UserSession], prev)) { case ((out, s), e) =>
-        val t = e.ts.getTime
-        if (s.count > 0 && t - s.lastTsMs > gapMs)
-          (out :+ UserSession(user, s.count, s.sumValue, s.lastTsMs + gapMs),
-            SessionState(1L, e.value, t))
-        else
-          (out, SessionState(s.count + 1, s.sumValue + e.value, t))
-      }
-      state.update(open)
-      getHandle.registerTimer(open.lastTsMs + gapMs)
-      closed.iterator
-    }
-
-    override def handleExpiredTimer(user: Long, timers: TimerValues,
-        expired: ExpiredTimerInfo): Iterator[UserSession] =
-      Option(state.get()) match {
-        case Some(s) if expired.getExpiryTimeInMs >= s.lastTsMs + gapMs =>
-          state.clear()
-          Iterator.single(UserSession(user, s.count, s.sumValue, s.lastTsMs + gapMs))
-        case _ => Iterator.empty // stale timer from a superseded session
-      }
-  }
-
-  /** [[userSessions]] through transformWithState (requires the RocksDB
-    * state store provider — see StreamingSpec for the config). */
-  def userSessionsTws(events: Dataset[Ev], gapMs: Long = 5 * 60 * 1000): Dataset[UserSession] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.user_id)
-      .transformWithState(new UserTotalsProcessor(gapMs),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
 
   // ---- streaming temporal (as-of) join ----
 

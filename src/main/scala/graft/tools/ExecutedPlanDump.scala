@@ -3,14 +3,22 @@ package graft.tools
 import graft.{Env, Sessions, SparkEntry}
 import org.apache.spark.sql.DataFrame
 
-/** Post-execution plan dump: run the named catalog queries, then print the
-  * FINAL adaptive physical plan (isFinalPlan=true) — the one place AQE's
-  * runtime decisions (ReusedQueryStage / AQEShuffleRead / runtime join
-  * rewrites) are visible, which the pre-execution `explain` in
-  * [[graft.PlanAudit]] cannot show (guide §7.2's "the SQL tab shows the
-  * final re-optimised plan", reproduced headlessly).
+/** The catalog's plan-printing main: run the named catalog queries (all
+  * when none is named), then print the FINAL adaptive physical plan
+  * (isFinalPlan=true) — the one place AQE's runtime decisions
+  * (ReusedQueryStage / AQEShuffleRead / runtime join rewrites) are
+  * visible, which a pre-execution `explain` cannot show (guide §7.2's
+  * "the SQL tab shows the final re-optimised plan", reproduced
+  * headlessly). Scan pruning, pushed filters, join strategies and window
+  * limits read off the same plan.
   *
-  * Exits 1 if any query fails or leaves a non-final adaptive plan.
+  * Entries that are eager at DataFrame construction (driver loops and
+  * training collects; each scaladoc says so) run Spark jobs inside
+  * `fn(...)`, so the printed plan covers only the final assembled frame;
+  * their distributed halves are pinned by their specs.
+  *
+  * Exits 2 on an unknown query name, 1 if any query fails or leaves a
+  * non-final adaptive plan.
   *
   * Usage: runMain graft.tools.ExecutedPlanDump [sfDir] [queryName...]
   */
@@ -33,7 +41,9 @@ object ExecutedPlanDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = args.drop(1).toSet
+    val names =
+      if (args.length > 1) Env.catalogNames("ExecutedPlanDump", args.drop(1).toSeq)
+      else Set.empty[String]
     val cpus = Env.cpus
     val spark = Sessions.build(s"local[$cpus]", cpus, "graft-executed-plan")
     val failed = SparkEntry.queries.toSeq.sortBy(_._1)

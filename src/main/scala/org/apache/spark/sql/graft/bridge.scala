@@ -14,13 +14,6 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Natural ordering over a type's internal representation (AtomicType
-    * keeps it private[sql]); needed by custom physical operators that merge
-    * sorted streams. */
-  def orderingFor(dt: org.apache.spark.sql.types.DataType): Ordering[Any] =
-    org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt)
-      .asInstanceOf[Ordering[Any]]
-
   /** The analyzed logical plan behind a DataFrame. */
   def analyzedPlan(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed

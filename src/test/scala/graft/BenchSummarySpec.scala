@@ -137,6 +137,22 @@ class BenchSummarySpec extends AnyFunSuite {
     }
   }
 
+  test("SPARK_GRAFT_ONLY keys are trimmed and every unknown key is named") {
+    val known = Set("q95_pagerank", "q101_bpe_train")
+    def only(raw: String) =
+      Env.parseNames("SPARK_GRAFT_ONLY", raw.split(',').toSeq, known)
+    assert(only("q95_pagerank, q101_bpe_train") ==
+      Right(Set("q95_pagerank", "q101_bpe_train")))
+    assert(only(" q95_pagerank ,") == Right(Set("q95_pagerank")))
+    assert(only("q95_pagerank,q101_bpe,q9") ==
+      Left("SPARK_GRAFT_ONLY names unknown catalog entries: q101_bpe, q9"))
+    assert(only(" , ") == Left("SPARK_GRAFT_ONLY names no catalog entry"))
+    // the real catalog: a headline key passes, a misspelt one does not
+    val catalog = SparkEntry.queries.keySet
+    assert(Env.parseNames("x", Seq("q95_pagerank"), catalog).isRight)
+    assert(Env.parseNames("x", Seq("q95_page_rank"), catalog).isLeft)
+  }
+
   test("bench exits at once on a malformed SPARK_GRAFT_CPUS") {
     // before a session is built: the run must not be spent first
     val sfDir = java.nio.file.Files.createTempDirectory("bench-sf")

@@ -41,11 +41,12 @@ class EngineSpec extends AnyFunSuite with SparkTestSession {
       EstimationInput(project_name = "neg", messages_per_second = -1),
       EstimationInput(project_name = "vm no size", worker_node_type = "VM"))
     val ds = spark.createDataset(scala.util.Random.shuffle(good ++ bad))
-    val results = Engine.sweepResults(ds).collect()
-    val rejects = Engine.sweepRejects(ds).collect()
+    val (results, rejects) = Engine.sweep(ds).collect().partition(_.ok)
     assert(results.length == good.size)
     assert(rejects.length == bad.size)
-    assert(rejects.map(_._1.project_name).toSet == Set("   ", "neg", "vm no size"))
+    assert(rejects.forall(o => o.result.isEmpty && o.error.isDefined))
+    assert(results.forall(_.error.isEmpty))
+    assert(rejects.map(_.input.project_name).toSet == Set("   ", "neg", "vm no size"))
   }
 
   test("flink_estimate UDF returns the golden struct in SQL") {
@@ -151,8 +152,9 @@ class EngineSpec extends AnyFunSuite with SparkTestSession {
     val in = EstimationInput(project_name = "VM Test",
       worker_node_type = "VM", worker_node_t_size = Some("S"))
     import spark.implicits._
-    val viaSpark = Engine.sweepResults(spark.createDataset(Seq(in))).head()
-    assert(Right(viaSpark) == Estimator.estimate(in))
+    val viaSpark = Engine.sweep(spark.createDataset(Seq(in))).head().result
+    assert(viaSpark == Estimator.estimate(in).toOption)
+    assert(viaSpark.isDefined)
   }
 
   test("flink_estimate on a NULL struct returns NULL, not an executor NPE") {

@@ -85,9 +85,10 @@ class FunctionSpec extends AnyFunSuite with SparkTestSession {
     }
     val df = rows.toDF("grp", "x")
     for (p <- Seq(0.0, 0.5, 0.9, 0.95, 1.0)) {
-      val viaCounting = FunctionQueries.countingPercentileForTest(df, "grp", "x", p)
+      val viaCounting = FunctionQueries.exactPercentileByCounting(df, "grp", "x", p, "v")
         .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-      val viaHistogram = FunctionQueries.histogramPercentileForTest(df, "grp", "x", p)
+      val viaHistogram = FunctionQueries.exactPercentileByHistogram(df, "grp", "x", p, "v",
+          bucketWidth = 16.0)
         .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
       val viaBuiltin = df.groupBy(col("grp"))
         .agg(expr(s"percentile(x, ${p}D)").as("v"))

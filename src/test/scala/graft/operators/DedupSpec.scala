@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.SparkTestSession
+import org.apache.spark.sql.{Column, DataFrame, functions => F}
+import org.apache.spark.sql.expressions.Window
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Dedup-family semantics beyond what the DuckDB oracle pins: LSH candidate
@@ -10,6 +12,50 @@ import org.scalatest.funsuite.AnyFunSuite
 class DedupSpec extends AnyFunSuite with SparkTestSession {
 
   private val dir = "/root/testdata/sf0.001"
+
+  // ---- parity references: the forms the shipped census plans replaced ----
+
+  /** Keyed-window canonical selection: one shuffle instead of
+    * [[DedupQueries.withCanonicalFlag]]'s two, but a hot family lands whole
+    * in one AQE-unsplittable partition. The keeper is the first row of
+    * `ORDER BY priority..., doc_id` — nulls-FIRST, like the census form's
+    * struct minimum. */
+  private def canonicalFlagWindow(docs: DataFrame,
+      priority: Seq[Column] = Nil): DataFrame = {
+    val w = Window.partitionBy(F.coalesce(F.md5(F.col("text")), F.lit("")))
+      .orderBy((priority :+ F.col("doc_id")).map(_.asc): _*)
+    docs.withColumn("is_canonical", F.row_number().over(w) === 1)
+  }
+
+  /** Per-doc-distinct (doc_id, h) span-hash stream — step 1 of the q71
+    * window twin [[DedupQueries.spanDupFlags]] is checked against. */
+  private def docSpans(docs: DataFrame): DataFrame =
+    docs.filter(F.col("text").isNotNull)
+      .select(F.col("doc_id"), F.explode(F.array_distinct(graft.functions.WordNGrams(
+        F.col("text"), DedupQueries.spanTokens(docs.sparkSession)))).as("span"))
+      .select(F.col("doc_id"), F.md5(F.col("span")).as("h"))
+
+  /** q77's window twin: keeper and duplicated-ness from window aggregates
+    * over the h-partition instead of the census rejoin, then the same
+    * rebuild stage as [[DedupQueries.spanDedup]]. */
+  private def spanDedupWindow(docs: DataFrame): DataFrame = {
+    val nTokens = DedupQueries.spanTokens(docs.sparkSession)
+    val text = docs.filter(F.col("text").isNotNull).select(F.col("doc_id"), F.col("text"))
+    val w = Window.partitionBy(F.col("h"))
+    val removed = DedupQueries.occurrenceSpans(text, nTokens)
+      .withColumn("keeper", F.min(F.col("doc_id")).over(w))
+      .withColumn("maxd", F.max(F.col("doc_id")).over(w))
+      .filter(F.col("maxd") =!= F.col("keeper") && F.col("doc_id") =!= F.col("keeper"))
+    DedupQueries.removeCovered(text, removed, nTokens)
+  }
+
+  /** The un-gated twin of [[DedupQueries.q80BloomDedup]]: plain
+    * exact-membership via a corpus-side left join. */
+  private def membershipPlain(probes: DataFrame, keys: DataFrame): DataFrame =
+    probes
+      .join(keys.select(F.col("tkey")).distinct().withColumn("is_dup", F.lit(true)),
+        Seq("tkey"), "left")
+      .select(F.col("doc_id"), F.coalesce(F.col("is_dup"), F.lit(false)).as("is_dup"))
 
   test("exact dedup census is internally consistent") {
     val r = DedupQueries.q22ExactDedup(spark, dir).head()
@@ -486,7 +532,7 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     // independent window twin, built in-spec (the retired formulation,
     // kept here as the differential reference)
     import org.apache.spark.sql.functions.{count, expr, lit, sum, when}
-    val spans = DedupQueries.docSpans(frame)
+    val spans = docSpans(frame)
     val w = org.apache.spark.sql.expressions.Window.partitionBy($"h")
     val window = spans.withColumn("n_docs_with", count(lit(1)).over(w))
       .groupBy($"doc_id")
@@ -597,12 +643,11 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
       else if (id % 7 == 3) (id, null: String)
       else (id, s"unique text for doc $id")
     }.toDF("doc_id", "text")
-    def flags(skewSafe: Boolean): Seq[(Long, Boolean)] =
-      DedupQueries.withCanonicalFlag(docs, skewSafe)
-        .select($"doc_id", $"is_canonical")
+    def flags(df: DataFrame): Seq[(Long, Boolean)] =
+      df.select($"doc_id", $"is_canonical")
         .collect().map(r => (r.getLong(0), r.getBoolean(1))).sortBy(_._1).toSeq
-    val window = flags(skewSafe = false)
-    val census = flags(skewSafe = true)
+    val window = flags(canonicalFlagWindow(docs))
+    val census = flags(DedupQueries.withCanonicalFlag(docs))
     assert(census == window)
     // no row dropped (300 in, 300 out — the null-key trap would eat the
     // null-text family silently)
@@ -615,7 +660,7 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     assert(census.filter(t => nullIds.contains(t._1)).count(_._2) == 1)
     assert(census.find(_._1 == nullIds.min).exists(_._2))
     // plan shape: the census form must carry no Window operator
-    val plan = DedupQueries.withCanonicalFlag(docs, skewSafe = true)
+    val plan = DedupQueries.withCanonicalFlag(docs)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), plan)
     assert(plan.contains("HashAggregate"), plan)
@@ -650,9 +695,9 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
 
   test("q77 census and window formulations are row-identical on the real corpus") {
     val docs = graft.operators.Tables.documents(spark, "/root/testdata/sf0.001")
-    val census = DedupQueries.spanDedup(docs, skewSafe = true)
+    val census = DedupQueries.spanDedup(docs)
       .collect().map(_.toString).sorted
-    val window = DedupQueries.spanDedup(docs, skewSafe = false)
+    val window = spanDedupWindow(docs)
       .collect().map(_.toString).sorted
     assert(census.nonEmpty && census.sameElements(window))
   }
@@ -796,14 +841,13 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
       (4L, "another text", null: String))
       .toDF("doc_id", "text", "source")
     val priority = Seq(c("source").isNull, c("source"))
-    def flags(skewSafe: Boolean): Map[Long, Boolean] =
-      DedupQueries.withCanonicalFlag(docs, skewSafe, priority)
-        .select(c("doc_id"), c("is_canonical")).collect()
+    def flags(df: DataFrame): Map[Long, Boolean] =
+      df.select(c("doc_id"), c("is_canonical")).collect()
         .map(r => (r.getLong(0), r.getBoolean(1))).toMap
-    val census = flags(skewSafe = true)
+    val census = flags(DedupQueries.withCanonicalFlag(docs, priority))
     assert(census == Map(1L -> false, 2L -> true, 3L -> true, 4L -> false),
       census.toString)
-    assert(census == flags(skewSafe = false), "forms must agree")
+    assert(census == flags(canonicalFlagWindow(docs, priority)), "forms must agree")
   }
 
   test("bloom membership with stale expectedKeys over an actually-empty " +
@@ -835,7 +879,7 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
       .map(r => (r.getLong(0), r.getBoolean(1))).sortBy(_._1).toSeq
     import org.apache.spark.sql.functions.{col, md5}
     val docs = Tables.documents(spark, dir).filter(col("text").isNotNull)
-    val plain = DedupQueries.membershipPlain(
+    val plain = membershipPlain(
         docs.filter(col("doc_id") % DedupQueries.IncrMod === DedupQueries.IncrRes)
           .select(col("doc_id"), md5(col("text")).as("tkey")),
         docs.filter(col("doc_id") % DedupQueries.IncrMod =!= DedupQueries.IncrRes)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkTestSession
+import org.apache.spark.sql.{DataFrame, functions => F}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins for q95 (integer PageRank): exact equality with a direct JVM
@@ -23,6 +24,37 @@ class GraphSpec extends AnyFunSuite with SparkTestSession {
       r = nodes.map(n => n -> (150000L / nn + 85L * contrib.getOrElse(n, 0L) / 100L)).toMap
     }
     r
+  }
+
+  /** The distributed damped power iteration over a pre-materialized
+    * (src, dst) Long-keyed edge frame — the form q95 ran before its
+    * driver-side rewrite, and the shape a graph too large for the driver
+    * needs. Per iteration: edges⋈ranks equi-join on src, map-side-partial
+    * groupBy(dst), node-table rejoin; each iteration's ranks go through
+    * [[Materialize.materialize]] to keep plan depth constant and be
+    * cluster-restartable. Returns one (node, r) row per node, with q95's
+    * scale and damping. */
+  private def powerIteration(edges: DataFrame, iters: Int): DataFrame = {
+    val scale = GraphQueries.Scale
+    val basePerN = scale * (100 - GraphQueries.DampPct) / 100
+    val nodes = edges.select(F.col("src").as("node"))
+      .union(edges.select(F.col("dst").as("node"))).distinct()
+    val deg = edges.groupBy(F.col("src")).agg(F.count(F.lit(1)).as("outdeg"))
+    val cnt = nodes.agg(F.count(F.lit(1)).as("nn"))
+    var ranks = Materialize.materialize(nodes.crossJoin(F.broadcast(cnt))
+      .select(F.col("node"), F.expr(s"CAST($scale DIV nn AS BIGINT)").as("r")))
+    for (_ <- 1 to iters) {
+      val contribs = edges
+        .join(ranks, edges("src") === ranks("node"))
+        .join(deg, "src")
+        .select(F.col("dst").as("node"), F.expr("r DIV outdeg").as("contrib"))
+      val sums = contribs.groupBy(F.col("node")).agg(F.sum(F.col("contrib")).as("c"))
+      ranks = Materialize.materialize(nodes.crossJoin(F.broadcast(cnt))
+        .join(sums, Seq("node"), "left")
+        .select(F.col("node"), F.expr(s"CAST($basePerN DIV nn + " +
+          s"${GraphQueries.DampPct} * COALESCE(c, 0L) DIV 100 AS BIGINT)").as("r")))
+    }
+    ranks
   }
 
   test("q95 equals a driver-side integer power iteration on sf0.001") {
@@ -64,8 +96,8 @@ class GraphSpec extends AnyFunSuite with SparkTestSession {
     // r16: q95 itself no longer iterates distributed (the %23 graph is
     // bounded by construction and runs driver-side after one distinct
     // census — see its scaladoc), so the reliable-checkpoint pin moves to
-    // [[GraphQueries.powerIteration]], the distributed reference and the
-    // shape a real-size graph runs, which is where restartability matters
+    // [[powerIteration]], the distributed reference and the shape a
+    // real-size graph runs, which is where restartability matters
     // on a cluster.
     import org.apache.spark.sql.functions._
     def partFiles(d: java.io.File): Long =
@@ -76,13 +108,13 @@ class GraphSpec extends AnyFunSuite with SparkTestSession {
         (col("doc_id") % 23).as("src"),
         (((col("doc_id") % 19) * (col("doc_id") % 23) + col("doc_id") % 11) % 23).as("dst"))
       .distinct().filter(col("src") =!= col("dst"))
-    val baseline = GraphQueries.powerIteration(Materialize.materialize(edges), 5)
+    val baseline = powerIteration(Materialize.materialize(edges), 5)
       .collect().map(_.toString).sorted
     val ckptDir =
       java.nio.file.Files.createTempDirectory("graft_ckpt_q95").toString
     spark.conf.set(Materialize.ConfKey, ckptDir)
     try {
-      val reliable = GraphQueries.powerIteration(Materialize.materialize(edges), 5)
+      val reliable = powerIteration(Materialize.materialize(edges), 5)
         .collect().map(_.toString).sorted
       assert(reliable.sameElements(baseline),
         "reliable-mode PageRank differs from default mode")
@@ -100,7 +132,7 @@ class GraphSpec extends AnyFunSuite with SparkTestSession {
         (col("doc_id") % 23).as("src"),
         (((col("doc_id") % 19) * (col("doc_id") % 23) + col("doc_id") % 11) % 23).as("dst"))
       .distinct().filter(col("src") =!= col("dst")))
-    val dist = GraphQueries.powerIteration(edges, 5)
+    val dist = powerIteration(edges, 5)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val got = GraphQueries.q95PageRank(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap

@@ -3,7 +3,8 @@ package graft.operators
 import graft.{SparkEntry, SparkTestSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The PlanAudit sweep as a permanent test: no catalog query may plan a
+/** The catalog plan sweep as a permanent test (tools.ExecutedPlanDump
+  * prints each entry's executed plan by hand): no catalog query may plan a
   * CartesianProduct, and BroadcastNestedLoopJoin is allowed ONLY where the
   * cross product IS the declared semantics (q26/q28 brute-force baselines).
   * This is the 100 TB survival property — a refactor that silently turns a

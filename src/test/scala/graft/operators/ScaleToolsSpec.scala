@@ -4,87 +4,10 @@ import graft.SparkTestSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The 100 TB levers: salted joins keep semantics while splitting hot keys;
-  * bucketed tables join with zero exchanges.
+/** The 100 TB lever on a partitioned fact table: a selective dim filter
+  * prunes the fact scan at runtime (dynamic partition pruning).
   */
 class ScaleToolsSpec extends AnyFunSuite with SparkTestSession {
-
-  test("salted join equals the plain join on skewed data") {
-    import spark.implicits._
-    // 90% of fact rows hit key 1 — the classic hot key
-    val fact = (1 to 2000).map { i =>
-      (if (i % 10 == 0) (i % 50) + 1 else 1, s"payload_$i")
-    }.toDF("k", "payload")
-    val dim = (1 to 50).map(k => (k, s"dim_$k")).toDF("dk", "dname")
-
-    val plain = fact.join(dim, col("k") === col("dk"), "inner")
-    val salted = SkewJoin.saltedJoin(fact, dim, "k", "dk", saltFactor = 8)
-    assert(salted.count() == plain.count())
-    // spot-check content equality, not just counts
-    val sortCols = Seq(col("k"), col("payload"), col("dname"))
-    assert(salted.select("k", "payload", "dname").orderBy(sortCols: _*).collect().toSeq ==
-      plain.select("k", "payload", "dname").orderBy(sortCols: _*).collect().toSeq)
-  }
-
-  test("salted left join preserves unmatched fact rows exactly once") {
-    import spark.implicits._
-    val fact = Seq((1, "a"), (1, "b"), (99, "orphan")).toDF("k", "payload")
-    val dim = Seq((1, "dim_1")).toDF("dk", "dname")
-    val out = SkewJoin.saltedJoin(fact, dim, "k", "dk", 4, "left_outer")
-      .select("k", "payload", "dname").collect()
-      .map(r => (r.getInt(0), r.getString(1), if (r.isNullAt(2)) null else r.getString(2)))
-    assert(out.toSet == Set((1, "a", "dim_1"), (1, "b", "dim_1"), (99, "orphan", null)))
-    assert(out.length == 3)
-  }
-
-  test("salted join rejects semantics-breaking join types") {
-    import spark.implicits._
-    val df = Seq((1, "x")).toDF("k", "v")
-    intercept[IllegalArgumentException] {
-      SkewJoin.saltedJoin(df, df.toDF("dk", "dv"), "k", "dk", 4, "full_outer")
-    }
-  }
-
-  /** Drop a managed table AND its location (a crashed previous run can
-    * leave the dir behind, which fails LOCATION_ALREADY_EXISTS). */
-  private def dropManaged(table: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-      .stripPrefix("file:")
-    val dir = new java.io.File(warehouse, table)
-    if (dir.exists()) {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(dir)
-    }
-  }
-
-  test("bucketed tables join with zero shuffle exchanges") {
-    val lineitem = Tables.lineitem(spark, "/root/testdata/sf0.001")
-    val orders = Tables.orders(spark, "/root/testdata/sf0.001")
-    dropManaged("li_bucketed")
-    dropManaged("ord_bucketed")
-    Bucketing.writeBucketed(lineitem, "li_bucketed", "l_orderkey", 4)
-    Bucketing.writeBucketed(orders, "ord_bucketed", "o_orderkey", 4)
-    // disable broadcast so the plan is the big-big (SortMergeJoin) shape
-    // bucketing exists for — at sf0.001 the optimizer would broadcast
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = Bucketing.bucketedJoin(spark, "li_bucketed", "ord_bucketed",
-        "l_orderkey", "o_orderkey")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), plan)
-      assert(!plan.contains("ShuffleExchange") && !plan.contains("Exchange hashpartitioning"),
-        s"bucketed join must not shuffle:\n$plan")
-      // correctness: same count as the plain shuffled join
-      val plainCount = lineitem.join(orders,
-        col("l_orderkey") === col("o_orderkey")).count()
-      assert(joined.count() == plainCount)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
 
   test("dynamic partition pruning fires for a selective dim filter") {
     import graft.sources.Sinks

@@ -283,57 +283,6 @@ class SimilaritySpec extends AnyFunSuite with SparkTestSession {
     rows.foreach { case (_, (lr, vr, rrf)) => assert(rrf == term(lr) + term(vr)) }
   }
 
-  test("persisted IVF-PQ index serves row-identical results to the inline " +
-      "q82 pipeline; appends encode bit-identically; compaction preserves " +
-      "contents") {
-    val dir = "/root/testdata/sf0.001"
-    val idx = java.nio.file.Files.createTempDirectory("pqidx").toString
-    SimilarityQueries.buildPqIndex(spark, dir, idx)
-    val fromIndex = SimilarityQueries.ivfPqTopKFromIndex(spark, dir, idx)
-      .collect().map(_.toString).toSeq
-    val inline = SimilarityQueries.q82IvfPqAnn(spark, dir)
-      .collect().map(_.toString).toSeq
-    assert(fromIndex == inline)
-    assert(fromIndex.nonEmpty)
-    // the index is the COMPRESSED corpus: bounded codebooks plus one
-    // (cell + PqM codes) row per vector — no full vectors anywhere
-    assert(spark.read.parquet(s"$idx/codebook").count() <= SimilarityQueries.IvfCells)
-    assert(spark.read.parquet(s"$idx/pq_codebooks").count() <=
-      SimilarityQueries.PqM * SimilarityQueries.PqK)
-    assert(spark.read.parquet(s"$idx/assignments").columns.toSeq ==
-      Seq("vec_id", "cell", "codes", "batch_id"))
-
-    // delta-encoding the same vectors against the persisted codebooks
-    // reproduces the builder's assignment bit-for-bit
-    val emb = Tables.embeddings(spark, dir)
-    val delta = SimilarityQueries.assignToPqIndex(emb, idx)
-      .collect().map(r => r.getLong(0) -> (r.getInt(1), r.getSeq[Int](2))).toMap
-    val built = spark.read.parquet(s"$idx/assignments")
-      .collect().map(r => r.getLong(0) -> (r.getInt(1), r.getSeq[Int](2))).toMap
-    assert(delta == built)
-    // append with shifted ids; crash-replay of the same batch replaces
-    val shifted = emb.select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-    SimilarityQueries.assignToPqIndex(shifted, idx, appendBatchId = Some(0L))
-    SimilarityQueries.assignToPqIndex(shifted, idx, appendBatchId = Some(0L))
-    assert(spark.read.parquet(s"$idx/assignments").count() == 2L * built.size)
-    // compaction folds appends into the base generation, contents unchanged
-    val preCompact = spark.read.parquet(s"$idx/assignments")
-      .select(col("vec_id"), col("cell"), col("codes"))
-      .collect().map(_.toString).sorted.toSeq
-    SimilarityQueries.compactPqIndex(spark, idx)
-    val compacted = SimilarityQueries.readIvfAssignments(spark, idx)
-    assert(compacted.select(col("vec_id"), col("cell"), col("codes"))
-      .collect().map(_.toString).sorted.toSeq == preCompact)
-    assert(compacted.select(col("batch_id")).distinct().collect()
-      .map(_.getAs[Number](0).longValue()).toSeq == Seq(-1L))
-    // the index still serves identically after append + compaction for the
-    // original id range's queries (appended ids joined the corpus, but all
-    // sit in the same cells with the same codes under shifted ids)
-    val served = SimilarityQueries.ivfPqTopKFromIndex(spark, dir, idx)
-    assert(served.count() ==
-      SimilarityQueries.QueryCount.toLong * SimilarityQueries.TopK)
-  }
-
   test("cosine fold agrees with plain-Scala double math") {
     import org.apache.spark.sql.functions._
     val df = Tables.embeddings(spark, dir).filter(col("vec_id") < 10)
@@ -407,53 +356,6 @@ class SimilaritySpec extends AnyFunSuite with SparkTestSession {
     top1.foreach { p =>
       top4Scores.get(p).foreach(s4 => assert(s4 == scored1(p), s"score drift for $p"))
     }
-  }
-
-  test("persisted IVF index serves row-identical results to the inline " +
-      "q42 pipeline (build-once/query-many)") {
-    val dir = "/root/testdata/sf0.001"
-    val idx = java.nio.file.Files.createTempDirectory("ivfidx").toString
-    SimilarityQueries.buildIvfIndex(spark, dir, idx)
-    val fromIndex = SimilarityQueries.ivfAnnTopKFromIndex(spark, dir, idx)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val inline = SimilarityQueries.q42IvfAnn(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(fromIndex == inline)
-    assert(fromIndex.nonEmpty)
-    // the index itself is what it claims: a bounded codebook + id->cell map
-    val cb = spark.read.parquet(s"$idx/codebook")
-    assert(cb.count() <= SimilarityQueries.IvfCells)
-    assert(spark.read.parquet(s"$idx/assignments").columns.toSeq ==
-      Seq("vec_id", "cell", "batch_id"))
-
-    // incremental maintenance: delta-assigning the same vectors against the
-    // persisted codebook reproduces the builder's assignment bit-for-bit
-    val emb = graft.operators.Tables.embeddings(spark, dir)
-    val delta = SimilarityQueries.assignToIvfIndex(emb, idx)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val built = spark.read.parquet(s"$idx/assignments")
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(delta == built)
-    // append mode extends the assignment table with shifted ids, and the
-    // served top-k still matches (old ids unchanged, new ids queryable)
-    val shifted = emb.select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-    SimilarityQueries.assignToIvfIndex(shifted, idx, appendBatchId = Some(0L))
-    val after = spark.read.parquet(s"$idx/assignments")
-    assert(after.count() == 2 * built.size)
-    assert(after.filter(col("vec_id") >= 1000000L).count() == built.size)
-    // crash-replay of the same append batch replaces, never duplicates
-    SimilarityQueries.assignToIvfIndex(shifted, idx, appendBatchId = Some(0L))
-    assert(spark.read.parquet(s"$idx/assignments").count() == 2 * built.size)
-    // compaction folds appends into the base partition, contents unchanged
-    val preCompact = spark.read.parquet(s"$idx/assignments")
-      .select(col("vec_id"), col("cell")).collect().map(_.toString).sorted.toSeq
-    SimilarityQueries.compactIvfIndex(spark, idx)
-    // post-compaction the live generation is manifest-addressed
-    val compacted = SimilarityQueries.readIvfAssignments(spark, idx)
-    assert(compacted.select(col("vec_id"), col("cell")).collect()
-      .map(_.toString).sorted.toSeq == preCompact)
-    assert(compacted.select(col("batch_id")).distinct().collect()
-      .map(_.getAs[Number](0).longValue()).toSeq == Seq(-1L))
   }
 
   test("q114 cluster balance matches a plain-Scala recomputation of the full IVF pipeline") {
@@ -673,17 +575,18 @@ class SimilaritySpec extends AnyFunSuite with SparkTestSession {
       spark.read.parquet(s"$idx/assignments").collect()
         .map(r => (r.getLong(0) - shift) -> r.getInt(1)).toMap
     assert(assignments(idxShift, offset) == assignments(idxDense, 0L))
-    // serving: delta-assign the dense corpus against the shift-trained
-    // codebook (the incremental ingest path), then the shift-trained index
-    // answers the dense corpus's queries identically to the dense-trained
-    // index — pins the full probe/score/top-k path end-to-end
-    SimilarityQueries.assignToIvfIndex(
-      graft.operators.Tables.embeddings(spark, dir), idxShift,
-      appendBatchId = Some(0L))
-    def serve(idx: String) = SimilarityQueries.ivfAnnTopKFromIndex(spark, dir, idx)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val served = serve(idxShift)
-    assert(served == serve(idxDense) && served.nonEmpty)
+    // serving: semantic dedup drawn from the shift-trained index over the
+    // shifted corpus (documents shifted with it, doc_id == vec_id) names
+    // the same pairs, with the same values, as the dense-trained index —
+    // pins the home-cell join and the probe path end-to-end
+    spark.read.parquet(s"$dir/documents.parquet")
+      .withColumn("doc_id", col("doc_id") + lit(offset))
+      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    def serve(corpus: String, idx: String, shift: Long) = SimilarityQueries
+      .semanticDedupFromIvfIndex(spark, corpus, idx).collect()
+      .map(r => (r.getLong(0) - shift, r.getLong(1) - shift) +: r.toSeq.drop(2)).toSeq
+    val served = serve(tmp, idxShift, offset)
+    assert(served == serve(dir, idxDense, 0L) && served.nonEmpty)
   }
 
   test("q65 from a persisted IVF index: exact on the constructed corpus, " +

@@ -144,7 +144,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
   test("dropDuplicatesWithinWatermark keeps one row per event_id") {
     import spark.implicits._
     val stream = MemoryStream[Ev](spark)
-    val (q, name) = runToMemory(StreamingOps.dedupWithinWatermark(stream.toDF()))
+    val (q, name) = runToMemory(stream.toDF()
+      .withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark("event_id"))
     stream.addData(Seq(
       ev(1, "2026-01-01 10:00:00", value = 1.0),
       ev(1, "2026-01-01 10:00:30", value = 1.0), // same id, within watermark
@@ -267,7 +268,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       .withColumn("text", graft.operators.LineCurationQueries.cleanLines(col("text"))))
 
     val stream = MemoryStream[StreamingSpec.Doc](spark)
-    val (q, name) = runToMemory(StreamingOps.cleanArrivals(stream.toDF()))
+    val (q, name) = runToMemory(
+      graft.operators.LineCurationQueries.cleanPages(stream.toDF()))
     stream.addData(docs)
     q.processAllAvailable()
     q.stop()
@@ -285,7 +287,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     val ckpt = java.nio.file.Files.createTempDirectory("stream_ckpt").toString
     val out = java.nio.file.Files.createTempDirectory("stream_out").toString
     val stream = MemoryStream[Ev](spark)
-    def start() = StreamingOps.dedupWithinWatermark(stream.toDF())
+    def start() = stream.toDF()
+      .withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark("event_id")
       .writeStream.format("parquet")
       .option("path", out).option("checkpointLocation", ckpt)
       .start()
@@ -309,35 +312,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     val ids = spark.read.parquet(out).collect().map(_.getLong(0)).sorted.toSeq
     assert(ids == Seq(1L, 2L, 3L),
       s"exactly-once across restart violated: $ids")
-  }
-
-  test("transformWithState sessionization matches the flatMapGroupsWithState twin") {
-    import spark.implicits._
-    // TWS requires the RocksDB state store provider
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val stream = MemoryStream[Ev](spark)
-      val sessions = StreamingOps.userSessionsTws(stream.toDS(), gapMs = 5 * 60 * 1000)
-      val (q, name) = runToMemory(sessions.toDF())
-      stream.addData(Seq(
-        ev(1, "2026-01-01 10:00:00", user = 1, value = 1.0),
-        ev(2, "2026-01-01 10:02:00", user = 1, value = 2.0),
-        ev(3, "2026-01-01 10:20:00", user = 1, value = 4.0),
-        ev(4, "2026-01-01 10:00:00", user = 2, value = 8.0)))
-      q.processAllAvailable()
-      stream.addData(Seq(ev(9, "2026-01-01 12:00:00", user = 99)))
-      q.processAllAvailable()
-      q.stop()
-      val got = spark.table(name).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .filter(_._1 != 99L).toSet
-      assert(got == Set((1L, 2L, 3.0), (1L, 1L, 4.0), (2L, 1L, 8.0)))
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
   }
 
   test("flatMapGroupsWithState sessionization: gaps close sessions with totals") {
@@ -478,7 +452,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_e2e_ckpt").toString
     val stream = MemoryStream[Ev](spark)
     val piped = StreamingOps.tumble(
-      StreamingOps.dedupWithinWatermark(stream.toDF(), watermark = "2 hours"),
+      stream.toDF().withWatermark("ts", "2 hours")
+        .dropDuplicatesWithinWatermark("event_id"),
       watermark = None) // dedup already set it: one watermark per pipeline
     val q = graft.sources.Sinks.streamToParquetExactlyOnce(piped, sink, ckpt)
     stream.addData(batch1); q.processAllAvailable()

@@ -190,8 +190,9 @@ object CurationPipeline {
     * (exact copy of a lower-id arrival in the SAME batch — the backlog
     * blind spot the index probe can't see), and `kept`,
     * where kept is the conjunction of the three verdicts — exactly the
-    * drop chain's survival predicate ([[graft.streaming.StreamingOps
-    * .cleanIngestBatch]] drops iff ANY verdict fires; StreamingSpec pins
+    * drop chain's survival predicate
+    * ([[graft.streaming.StreamingOps.cleanIngestBatch]] drops iff ANY
+    * verdict fires; StreamingSpec pins
     * column-derived kept == the real chain's survivor set row-for-row, so
     * the production path stays checked without running it twice).
     *
@@ -199,9 +200,8 @@ object CurationPipeline {
     * is the q74 incremental probe (built once, probed ONCE per batch —
     * never a corpus self-join); the benchmark grams broadcast. Each
     * verdict's subplan runs once and lands as a column in one pass over
-    * the arrival ids (VERDICT r15 #4 — previously the entry re-ran the
-    * chain's two probes a second time inside cleanIngestBatch just to
-    * produce `kept`). */
+    * the arrival ids (VERDICT r15 #4): the entry does not run
+    * cleanIngestBatch's probes a second time just to produce `kept`. */
   def q78IngestClean(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val arrivals = docs.filter(
@@ -217,7 +217,7 @@ object CurationPipeline {
     val dup = graft.streaming.StreamingOps.nearDupArrivals(arrivals, index)
       .select(col("new_doc").as("doc_id")).distinct()
       .withColumn("near_dup", lit(true))
-    // null-text arrivals exempt, mirroring cleanIngestBatchWithBands —
+    // null-text arrivals exempt, mirroring cleanIngestBatch —
     // distinct metadata-only docs are not copies of one page
     val batchDup = DedupQueries.withCanonicalFlag(
         arrivals.filter(col("text").isNotNull))

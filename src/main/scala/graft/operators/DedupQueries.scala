@@ -1126,12 +1126,12 @@ object DedupQueries {
     * against itself — the production ingest path (q23 is the full-corpus
     * batch job; re-running it per arrival batch re-does O(corpus) candidate
     * work for O(batch) new docs). Both sides band from one signature pass
-    * here so the oracle can re-derive them; [[buildNearDupIndex]] /
-    * [[nearDupAgainstIndex]] below are the same probe against a PERSISTED
-    * band table (spec-pinned identical). The join is new-bands x
-    * corpus-bands on (band, bsig) — at 100 TB the corpus side is the big
-    * fixed relation shuffled once into the index layout, and the batch side
-    * is small; never a corpus self-join. */
+    * here so the oracle can re-derive them; [[probeBands]] over
+    * [[readNearDupIndex]] (a [[buildNearDupIndex]] table) is the same probe
+    * against a PERSISTED band table (DedupSpec pins it identical). The
+    * join is new-bands x corpus-bands on (band, bsig) — at 100 TB the
+    * corpus side is the big fixed relation shuffled once into the index
+    * layout, and the batch side is small; never a corpus self-join. */
   def q74IncrementalNearDup(spark: SparkSession, dir: String): DataFrame = {
     val b = bands(withShinglesAndSignature(Tables.documents(spark, dir)))
     probeBands(
@@ -1141,8 +1141,9 @@ object DedupQueries {
       .orderBy(col("new_doc").asc, col("corpus_doc").asc)
   }
 
-  /** THE ingest probe join, shared by the inline split (q74), the persisted
-    * index ([[nearDupAgainstIndex]]), and the streaming form
+  /** THE ingest probe join, shared by the inline split (q74), the
+    * streaming ingest lifecycle's probe of the persisted index
+    * (StreamingOps.ingestLifecycle), and the stream-static form
     * (StreamingOps.nearDupArrivals) — one definition, three execution
     * modes, so the spec-pinned equivalence between them cannot drift.
     * (new_doc, corpus_doc) pairs, NOT deduplicated — each caller applies
@@ -1185,22 +1186,17 @@ object DedupQueries {
   /** Append one ingest batch's band rows to a persisted
     * [[buildNearDupIndex]] — the index MAINTENANCE path: accepted arrivals
     * join the corpus, so tomorrow's batch dedups against today's accepted
-    * docs without ever re-signing the standing corpus. Dynamic partition
-    * overwrite of the batch's OWN partition only: a crash-replayed batch
-    * replaces its previous (possibly partial) append instead of
-    * duplicating it, and every other partition — the base build and all
-    * other batches — is untouched. The caller probing during replay must
-    * exclude the current batch's partition (see
-    * StreamingOps.ingestLifecycleGrowing) so the probe sees the exact
-    * pre-append state. */
-  def appendToNearDupIndex(docs: DataFrame, indexDir: String, batchId: Long): Unit =
-    appendBandsToNearDupIndex(bandDocs(docs), indexDir, batchId)
-
-  /** Band-level append — for callers that already computed the batch's
-    * band rows (the growing lifecycle signs each batch exactly once and
-    * reuses the rows for probe and append). `bands` must be (doc_id,
-    * band, bsig)-shaped, i.e. [[bandDocs]] output or a subset of it. */
-  def appendBandsToNearDupIndex(bands: DataFrame, indexDir: String,
+    * docs without ever re-signing the standing corpus. `bands` must be
+    * (doc_id, band, bsig)-shaped, i.e. [[bandDocs]] output or a subset of
+    * it (the ingest lifecycle signs each batch exactly once and reuses the
+    * rows for probe and append). Dynamic partition overwrite of the
+    * batch's OWN partition only: a crash-replayed batch replaces its
+    * previous (possibly partial) append instead of duplicating it, and
+    * every other partition — the base build and all other batches — is
+    * untouched. The caller probing during replay must exclude the current
+    * batch's partition (see StreamingOps.ingestLifecycle) so the probe
+    * sees the exact pre-append state. */
+  def appendToNearDupIndex(bands: DataFrame, indexDir: String,
       batchId: Long): Unit =
     bands.select(col("doc_id"), col("band"), col("bsig"))
       .withColumn("batch_id", lit(batchId))
@@ -1327,17 +1323,6 @@ object DedupQueries {
         System.err.println(s"[compact] stale-generation sweep failed (harmless): ${e.getMessage}")
     }
   }
-
-  /** Probe newly-arrived docs against a persisted [[buildNearDupIndex]]:
-    * shingle/sign/band ONLY the batch, equi-join its bands against the index
-    * table. Returns distinct (new_doc, corpus_doc) candidate pairs — feed
-    * them to a Jaccard verify (the q24 shape) or straight into cluster
-    * resolution. Reproduces [[q74IncrementalNearDup]] bit-for-bit when the
-    * index holds the corpus split (DedupSpec). */
-  def nearDupAgainstIndex(spark: SparkSession, newDocs: DataFrame, indexDir: String): DataFrame =
-    // single consumer of the signature pass -> no materialization needed
-    probeBands(bandDocs(newDocs), readNearDupIndex(spark, indexDir))
-      .distinct()
 
   /** The index's current-generation band table — the read-side twin of
     * [[buildNearDupIndex]]/[[appendToNearDupIndex]]. */

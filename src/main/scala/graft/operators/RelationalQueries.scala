@@ -248,20 +248,17 @@ object RelationalQueries {
         round($"l_discount".cast(dec) * 100, 1).cast("double").as("pct"))
       .orderBy($"l_orderkey".asc)
 
-  /** Q19 — batch-equivalent tumbling window: hour buckets over events
-    * ("TUMBLE/HOP windows", estimation.html:225); the streaming variant
-    * lives in graft.streaming. */
+  /** Q19 — tumbling window ("TUMBLE/HOP windows", estimation.html:225):
+    * the streaming operator [[graft.streaming.StreamingOps.tumble]] over a
+    * batch scan, so the catalog entry and the stream leg are one
+    * definition. */
   def q19Tumble(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      // null event times are excluded from every time-windowed operator —
-      // the streaming twin's semantics (a watermarked window drops them);
-      // also sidesteps a DuckDB 1.0 quirk where ORDER BY ... NULLS FIRST
-      // over a grouped trunc sorts the null group as epoch zero
-      .filter($"ts".isNotNull)
-      .groupBy(
-        date_trunc("hour", $"ts").as("h"),
-        $"event_type")
-      .agg(count(lit(1)).as("cnt"), dsum($"value").as("sv"))
+    graft.streaming.StreamingOps.tumble(
+        // null event times are excluded from every time-windowed operator
+        // (a watermarked window drops them); also sidesteps a DuckDB 1.0
+        // quirk where ORDER BY ... NULLS FIRST over a grouped trunc sorts
+        // the null group as epoch zero
+        Tables.events(spark, dir).filter($"ts".isNotNull), watermark = None)
       .orderBy($"h".asc, $"event_type".asc)
 
   /** Q20 — fan-out join + agg (generator-equivalent correlated duplication).

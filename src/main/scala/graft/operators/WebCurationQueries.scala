@@ -219,8 +219,9 @@ object WebCurationQueries {
     patterns.foldLeft(c) { case (acc, (re, tag)) => regexp_replace(acc, re, tag) }
 
   /** Production entry: scrub the `text` column of any document frame in
-    * place. A pure projection — streaming-safe with no state or watermark
-    * ([[graft.streaming.StreamingOps.scrubArrivals]] is the stream twin). */
+    * place. A pure projection — streaming-safe with no state or watermark,
+    * so the same call scrubs an arriving document stream (StreamingSpec
+    * pins replay == batch). */
   def piiScrub(docs: DataFrame): DataFrame =
     docs.withColumn("text", scrubText(col("text")))
 

@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions.{col, pmod, xxhash64}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Partitioned-parquet sink utilities: the write-side discipline that makes
   * 100 TB readable. Two failure modes this prevents:
@@ -23,12 +24,27 @@ import org.apache.spark.sql.functions.{col, pmod, xxhash64}
   */
 object Sinks {
 
-  /** One micro-batch of [[streamToParquetExactlyOnce]]: the batch lands in
-    * its own `batch_id=<id>` partition via DYNAMIC partition overwrite, so
-    * a replayed batch (foreachBatch is at-least-once: the sink write can
-    * succeed and the checkpoint commit still fail) REPLACES its own
-    * partition instead of appending duplicates. Exposed separately so the
-    * replay path is directly testable. */
+  /** THE streaming sink: every streaming leg lands through here. The
+    * stream runs as append-mode micro-batches with checkpointed offsets,
+    * and `land` receives each batch with its id. foreachBatch is
+    * at-least-once (the sink write can succeed and the checkpoint commit
+    * still fail, or a restart re-runs the last uncommitted batch), so
+    * exactly-once-observable output is `land`'s half of the contract:
+    * re-running a batch id must reproduce and REPLACE that batch's output,
+    * which the batch-id-keyed dynamic overwrites below
+    * ([[writeBatchIdempotent]], [[writeShardedBatchIdempotent]]) give. */
+  def exactlyOnce(stream: DataFrame, checkpointDir: String)(
+      land: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .outputMode("append")
+      .foreachBatch((batch: Dataset[Row], batchId: Long) => land(batch, batchId))
+      .start()
+
+  /** One micro-batch landing in its own `batch_id=<id>` partition via
+    * DYNAMIC partition overwrite, so a replayed batch REPLACES its own
+    * partition instead of appending duplicates; the batch_id column
+    * doubles as an audit trail of which micro-batch delivered which rows. */
   def writeBatchIdempotent(batch: DataFrame, batchId: Long, path: String): Unit =
     batch.withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
       .write.mode("overwrite")
@@ -36,29 +52,14 @@ object Sinks {
       .partitionBy("batch_id")
       .parquet(path)
 
-  /** Streaming parquet sink with exactly-once-observable output — the
-    * foreachBatch idempotence pattern (batch-id-keyed dynamic partition
-    * overwrite + checkpointed offsets). This is the persistence leg of the
-    * streaming module: readers see each input row exactly once across any
-    * combination of retries and restarts, and the batch_id partition column
-    * doubles as an audit trail of which micro-batch delivered which rows. */
-  def streamToParquetExactlyOnce(
-      df: DataFrame, path: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        writeBatchIdempotent(batch, batchId, path)
-      }
-      .start()
-
-  /** One micro-batch of [[streamShardedExactlyOnce]]: hash-shard
+  /** One micro-batch as `shard=<k>/batch_id=<id>/part-*.parquet` training
+    * shards — the streaming leg of the q73 shard discipline: hash-shard
     * assignment (the SAME expression as the q73 manifest and the batch
     * writer — graft.operators.AnalyticsQueries.shardCol) plus batch-id
     * keyed dynamic overwrite, so the layout is both balanced for
     * downstream readers and replay-idempotent: a re-delivered batch
-    * replaces exactly its own (shard, batch_id) partitions. */
+    * replaces exactly its own (shard, batch_id) partitions. Requires a
+    * `doc_id` column for the assignment. */
   def writeShardedBatchIdempotent(batch: DataFrame, batchId: Long, path: String): Unit =
     batch
       .withColumn("shard", graft.operators.AnalyticsQueries.shardCol)
@@ -67,23 +68,6 @@ object Sinks {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("shard", "batch_id")
       .parquet(path)
-
-  /** Streaming SHARDED corpus writer — the streaming leg of the q73 shard
-    * discipline: a document stream lands as
-    * `shard=<k>/batch_id=<id>/part-*.parquet` training shards,
-    * exactly-once-observable across retries (the [[writeBatchIdempotent]]
-    * pattern, partitioned additionally by the shard hash). Requires a
-    * `doc_id` column for the assignment. */
-  def streamShardedExactlyOnce(
-      docs: DataFrame, path: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        writeShardedBatchIdempotent(batch, batchId, path)
-      }
-      .start()
 
   /** Compact a parquet directory's small files into ~`targetRecordsPerFile`
     * files — the maintenance half of the small-files discipline: streaming

@@ -96,16 +96,6 @@ object StreamingOps {
       .select(col("doc_id"))
       .dropDuplicates("doc_id")
 
-  /** Ingest-time PII scrub: q84's redaction chain over an arriving
-    * document stream. A stateless projection — no watermark, no state, no
-    * shuffle; it rides every micro-batch's scan for free, which is why a
-    * production ingest runs the scrub FIRST (before any text lands in an
-    * index, a shard, or a log line). Batch-equivalent by construction:
-    * the same [[graft.operators.WebCurationQueries.scrubText]] column
-    * drives both forms (StreamingSpec pins replay == batch). */
-  def scrubArrivals(docsStream: DataFrame): DataFrame =
-    graft.operators.WebCurationQueries.piiScrub(docsStream)
-
   /** Stream-static near-dup INGEST probe: a stream of arriving documents is
     * shingled/signed/banded per micro-batch (the streaming-safe
     * [[graft.operators.DedupQueries.bandDocs]] transform) and equi-joined
@@ -123,56 +113,38 @@ object StreamingOps {
       .probeBands(graft.operators.DedupQueries.bandDocs(docsStream), bandIndex)
       .dropDuplicates("new_doc", "corpus_doc")
 
-  // ---- composed ingest lifecycle (VERDICT r5 #7 / r6 #3) ----
+  // ---- the ingest lifecycle (VERDICT r5 #7 / r6 #3, r15) ----
 
-  /** The per-micro-batch DROP CHAIN of the composed ingest lifecycle — a
-    * batch transform, shared verbatim by [[ingestLifecycle]]'s foreachBatch
-    * and its batch twin (StreamingSpec pins the equivalence), so the
-    * streaming and nightly-batch forms cannot drift:
+  /** The per-micro-batch DROP CHAIN of [[ingestLifecycle]] — a batch
+    * transform shared verbatim by the lifecycle's foreachBatch and any
+    * nightly twin (StreamingSpec pins replay == batch), so the streaming
+    * and batch forms cannot drift. Drop stages, each computed over the
+    * FULL batch:
     *   1. decontamination — drop docs sharing any 3-gram with the static
-    *      benchmark set ([[contaminatedDocs]]'s probe as an anti-join;
-    *      benchmark side broadcast — eval suites stay MBs at any scale);
-    *   2. near-dup — drop arrivals LSH-colliding with the standing
-    *      corpus' persisted band index ([[nearDupArrivals]]'s probe as an
-    *      anti-join on the arrival id; the index side is corpus-sized and
-    *      therefore NOT broadcast).
-    * Anti-joins key on doc_id — uniform; per batch the arrival side is
+    *      benchmark set ([[contaminatedDocs]]'s probe; benchmark side
+    *      broadcast — eval suites stay MBs at any scale);
+    *   2. near-dup — drop arrivals LSH-colliding with the standing band
+    *      index: `probed` is the index-probe RESULT,
+    *      `probeBands(bandDocs(batch), index)` ([[nearDupArrivals]]'s
+    *      probe). The caller probes the corpus-sized index ONCE per batch
+    *      and shares the frame with [[ingestDropPairs]] (review r15: the
+    *      probe is the dominant per-batch cost; computing it twice doubled
+    *      it);
+    *   3. WITHIN-BATCH exact dedup — keep the lowest doc_id per md5(text)
+    *      among the batch's own arrivals: a backlog drain delivering N
+    *      copies of one page in a single micro-batch must land one, not N,
+    *      and the index probe cannot catch them because the batch's own
+    *      bands are not in the index yet. Within-batch NEAR-dups (distinct
+    *      texts, colliding bands, same batch) are deliberately NOT
+    *      collapsed here: they need a batch self-join plus cluster
+    *      resolution — the periodic q23/q61/q56 batch job's work, not a
+    *      per-micro-batch stage; exact copies are the dominant real case
+    *      and are exact to drop.
+    * Anti-join keys on doc_id — uniform; per batch the arrival side is
     * small, so at 100 TB/day the cost is dominated by the index probe,
     * which is the q74 incremental shape (never a corpus self-join). */
-  def cleanIngestBatch(batch: DataFrame, benchGrams: DataFrame,
-      bandIndex: DataFrame): DataFrame =
-    cleanIngestBatchWithBands(batch,
-      graft.operators.DedupQueries.bandDocs(batch), benchGrams, bandIndex)
-
-  /** [[cleanIngestBatch]] with the batch's band rows supplied by the
-    * caller — the growing lifecycle computes them ONCE (the minhash
-    * signature loop is the CPU-dominant stage) and reuses them for both
-    * the probe and the index append; the plain form derives them inline.
-    * `batchBands` must be `bandDocs(batch)` (or a cached/materialized copy
-    * of it) — supplying anything else breaks the q74 probe contract. */
-  /** Drop stages, in order: benchmark contamination, near-dup vs the
-    * standing index, and WITHIN-BATCH exact dedup (keep the lowest doc_id
-    * per md5(text) among the batch's own arrivals — a backlog drain
-    * delivering N copies of one page in a single micro-batch must land
-    * one, not N; the index probe cannot catch them because the batch's
-    * own bands are not in the index yet). Within-batch NEAR-dups (distinct
-    * texts, colliding bands, same batch) are deliberately NOT collapsed
-    * here: they need a batch self-join plus cluster resolution — the
-    * periodic q23/q61/q56 batch job's work, not a per-micro-batch stage;
-    * exact copies are the dominant real case and are exact to drop. */
-  def cleanIngestBatchWithBands(batch: DataFrame, batchBands: DataFrame,
-      benchGrams: DataFrame, bandIndex: DataFrame): DataFrame =
-    cleanIngestBatchWithProbe(batch,
-      graft.operators.DedupQueries.probeBands(batchBands, bandIndex),
-      benchGrams)
-
-  /** The drop chain given the index-probe RESULT — the shared core: the
-    * growing-with-pairs lifecycle probes the corpus-sized index ONCE per
-    * batch and feeds the same frame to this chain and to
-    * [[ingestDropPairs]] (review r15: the probe is the documented
-    * dominant per-batch cost; computing it twice doubled it). */
-  private[graft] def cleanIngestBatchWithProbe(batch: DataFrame,
-      probed: DataFrame, benchGrams: DataFrame): DataFrame = {
+  def cleanIngestBatch(batch: DataFrame, probed: DataFrame,
+      benchGrams: DataFrame): DataFrame = {
     val contaminated = contaminatedDocs(batch, benchGrams)
     // no per-set distinct: the union-level distinct below subsumes both the
     // probe's pair-level dedup and each set's own
@@ -196,82 +168,6 @@ object StreamingOps {
     batch.join(dropIds, Seq("doc_id"), "left_anti")
   }
 
-  /** The COMPOSED streaming ingest lifecycle, end to end (VERDICT r5 #7 /
-    * r6 #3): a document stream runs through decontamination
-    * ([[contaminatedDocs]]) and index-backed near-dup filtering
-    * ([[nearDupArrivals]]) and lands as hash-sharded training shards with
-    * exactly-once-observable semantics
-    * ([[graft.sources.Sinks.writeShardedBatchIdempotent]] — a re-delivered
-    * batch replaces exactly its own (shard, batch_id) partitions).
-    *
-    * Composition is foreachBatch-shaped on purpose: the drop chain needs
-    * two ANTI-joins against per-batch-derived id sets, which streaming
-    * stream-stream join support can't express — while every transform
-    * inside is the SAME batch-identical code path the nightly job runs
-    * ([[cleanIngestBatch]]), which is what makes the replay-equals-batch
-    * pin possible. State: none beyond the sink's (shard, batch_id) layout —
-    * the probes are stream-static, recovery is checkpoint + idempotent
-    * overwrite. */
-  def ingestLifecycle(docs: DataFrame, benchGrams: DataFrame,
-      bandIndex: DataFrame, path: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.sources.Sinks.writeShardedBatchIdempotent(
-          cleanIngestBatch(batch, benchGrams, bandIndex), batchId, path)
-      }
-      .start()
-
-  /** [[ingestLifecycle]] with a GROWING index — the standing deployment's
-    * actual shape: every batch's ACCEPTED docs join the persisted band
-    * index ([[graft.operators.DedupQueries.appendToNearDupIndex]]), so
-    * batch N+1 near-dups against the base corpus AND every doc accepted in
-    * batches 0..N, while the expensive signature pass still runs only over
-    * each batch once.
-    *
-    * Replay discipline (the part that makes growth exactly-once-safe): the
-    * per-batch probe reads the index EXCLUDING the current batch's own
-    * partition — a crash between the shard landing and the index append
-    * (or after both) re-runs the batch against the exact pre-append index
-    * state, reproducing the same kept set, whose landing and append both
-    * idempotently replace their own partitions. The filter is partition
-    * pruning on the `batch_id` directory key, so exclusion costs a listing,
-    * not a scan. */
-  def ingestLifecycleGrowing(docs: DataFrame, benchGrams: DataFrame,
-      indexDir: String, path: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val sp = batch.sparkSession
-        val index = graft.operators.DedupQueries.readNearDupIndex(sp, indexDir)
-          .filter(col("batch_id") =!= lit(batchId))
-        // the batch is signed ONCE (the minhash loop is the CPU-dominant
-        // stage): the cached band rows feed both the probe and the index
-        // append. persist(), not checkpoint: a per-micro-batch reliable
-        // checkpoint on an unbounded stream is unbounded disk growth, and
-        // within one foreachBatch invocation cached blocks (with lineage
-        // retained for executor-loss recompute) are the right pin.
-        // kept carries the batch's FULL schema (lang/source/metadata land
-        // in the shards exactly as the non-growing lifecycle lands them);
-        // only the index append narrows to band rows
-        val bands = graft.operators.DedupQueries.bandDocs(batch).persist()
-        val kept = cleanIngestBatchWithBands(batch, bands, benchGrams, index)
-          .persist()
-        try {
-          graft.sources.Sinks.writeShardedBatchIdempotent(kept, batchId, path)
-          graft.operators.DedupQueries.appendBandsToNearDupIndex(
-            bands.join(kept.select(col("doc_id")), Seq("doc_id"), "left_semi"),
-            indexDir, batchId)
-        } finally { kept.unpersist(); bands.unpersist() }
-      }
-      .start()
-
-  // ---- q122 pair surface at ingest time (r15, VERDICT r14 #8) ----
-
   /** The per-batch (doc_a, doc_b) DEDUP-PROVENANCE pairs of the ingest
     * drop chain — q122's canonical-pair contract emitted incrementally, so
     * the production pair surface exists AT INGEST TIME instead of waiting
@@ -294,12 +190,9 @@ object StreamingOps {
     * dedup provenance is real), and a doc_b may itself be dropped by
     * another stage (it lands only if nothing else flags it).
     * Contamination ITSELF contributes no rows — that audit surface is
-    * q66's. A batch transform shared by
-    * [[ingestLifecycleGrowingWithPairs]]'s foreachBatch and any nightly
-    * twin — StreamingSpec pins replay == batch. `probed` must be
-    * `probeBands(bandDocs(batch), index)` (the
-    * [[cleanIngestBatchWithProbe]] contract — computed ONCE per batch
-    * and shared with the drop chain). */
+    * q66's. A batch transform shared by [[ingestLifecycle]]'s
+    * foreachBatch and any nightly twin — StreamingSpec pins replay ==
+    * batch. `probed` is the same probe result [[cleanIngestBatch]] takes. */
   def ingestDropPairs(batch: DataFrame, probed: DataFrame): DataFrame = {
     val near = probed
       .groupBy(col("new_doc"))
@@ -314,44 +207,64 @@ object StreamingOps {
       exact.join(near.select(col("doc_a")), Seq("doc_a"), "left_anti"))
   }
 
-  /** [[ingestLifecycleGrowing]] that ALSO lands the incremental q122 pair
-    * surface: each batch's dedup-drop pairs ([[ingestDropPairs]], probed
-    * against the same pre-append index state as the drop chain itself)
-    * write to `pairsPath` with the same batch-id-keyed idempotent
-    * overwrite as the shards — a replayed batch replaces exactly its own
-    * pairs partition, so the pair table is exactly-once-observable too.
-    * Consumers get q122's keep/drop provenance without scanning the
-    * corpus: the nightly q122 job remains the FAMILY-complete surface
-    * (it also pairs docs that arrived before the index existed); this is
-    * its arrival-time increment. */
-  def ingestLifecycleGrowingWithPairs(docs: DataFrame, benchGrams: DataFrame,
+  /** The streaming INGEST LIFECYCLE, end to end: a document stream runs
+    * through [[cleanIngestBatch]]'s drop chain against a GROWING band index
+    * and lands, per micro-batch:
+    *  - the kept docs, in their FULL schema, as hash-sharded training
+    *    shards at `path` ([[graft.sources.Sinks.writeShardedBatchIdempotent]]);
+    *  - the batch's dedup-drop pairs ([[ingestDropPairs]]) at `pairsPath`
+    *    ([[graft.sources.Sinks.writeBatchIdempotent]]) — the arrival-time
+    *    increment of q122's keep/drop provenance (the nightly q122 job
+    *    remains the FAMILY-complete surface: it also pairs docs that
+    *    arrived before the index existed);
+    *  - the kept docs' band rows, appended to the index at `indexDir`
+    *    ([[graft.operators.DedupQueries.appendToNearDupIndex]]), so batch
+    *    N+1 near-dups against the base corpus AND every doc accepted in
+    *    batches 0..N.
+    * Each of the three writes is a batch-id-keyed dynamic overwrite of its
+    * own partition.
+    *
+    * Replay discipline (the part that makes growth exactly-once-safe): the
+    * per-batch probe reads the index EXCLUDING the current batch's own
+    * partition — a crash between the shard landing and the index append
+    * (or after both) re-runs the batch against the exact pre-append index
+    * state, reproducing the same kept set and pairs, whose writes all
+    * idempotently replace their own partitions (StreamingSpec restarts
+    * from a checkpoint with the last commit removed). The filter is
+    * partition pruning on the `batch_id` directory key, so exclusion costs
+    * a listing, not a scan.
+    *
+    * Composition is foreachBatch-shaped on purpose: the drop chain needs
+    * ANTI-joins against per-batch-derived id sets, which stream-stream
+    * joins cannot express. State: none beyond the checkpointed offsets —
+    * the probes are stream-static. */
+  def ingestLifecycle(docs: DataFrame, benchGrams: DataFrame,
       indexDir: String, path: String, pairsPath: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val sp = batch.sparkSession
-        val index = graft.operators.DedupQueries.readNearDupIndex(sp, indexDir)
-          .filter(col("batch_id") =!= lit(batchId))
-        val bands = graft.operators.DedupQueries.bandDocs(batch).persist()
-        // ONE probe of the corpus-sized index per batch (review r15: it
-        // is the documented dominant per-batch cost) — cached and shared
-        // by the drop chain and the pair surface
-        val probed = graft.operators.DedupQueries.probeBands(bands, index)
-          .persist()
-        val kept = cleanIngestBatchWithProbe(batch, probed, benchGrams)
-          .persist()
-        try {
-          graft.sources.Sinks.writeShardedBatchIdempotent(kept, batchId, path)
-          graft.sources.Sinks.writeBatchIdempotent(
-            ingestDropPairs(batch, probed), batchId, pairsPath)
-          graft.operators.DedupQueries.appendBandsToNearDupIndex(
-            bands.join(kept.select(col("doc_id")), Seq("doc_id"), "left_semi"),
-            indexDir, batchId)
-        } finally { kept.unpersist(); probed.unpersist(); bands.unpersist() }
-      }
-      .start()
+    graft.sources.Sinks.exactlyOnce(docs, checkpointDir) { (batch, batchId) =>
+      val index = graft.operators.DedupQueries
+        .readNearDupIndex(batch.sparkSession, indexDir)
+        .filter(col("batch_id") =!= lit(batchId))
+      // the batch is signed ONCE (the minhash loop is the CPU-dominant
+      // stage) and the corpus-sized index probed ONCE: the cached frames
+      // feed the drop chain, the pair surface and the index append.
+      // persist(), not checkpoint: a per-micro-batch reliable checkpoint
+      // on an unbounded stream is unbounded disk growth, and within one
+      // foreachBatch invocation cached blocks (with lineage retained for
+      // executor-loss recompute) are the right pin.
+      val bands = graft.operators.DedupQueries.bandDocs(batch).persist()
+      val probed = graft.operators.DedupQueries.probeBands(bands, index)
+        .persist()
+      val kept = cleanIngestBatch(batch, probed, benchGrams).persist()
+      try {
+        graft.sources.Sinks.writeShardedBatchIdempotent(kept, batchId, path)
+        graft.sources.Sinks.writeBatchIdempotent(
+          ingestDropPairs(batch, probed), batchId, pairsPath)
+        graft.operators.DedupQueries.appendToNearDupIndex(
+          bands.join(kept.select(col("doc_id")), Seq("doc_id"), "left_semi"),
+          indexDir, batchId)
+      } finally { kept.unpersist(); probed.unpersist(); bands.unpersist() }
+    }
 
   // ---- scored ingest (frozen classifier + LM per micro-batch) ----
 
@@ -407,14 +320,10 @@ object StreamingOps {
       lm: graft.operators.TextQueries.BigramLmModel, dsir: DataFrame,
       path: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.sources.Sinks.writeShardedBatchIdempotent(
-          scoreIngestBatch(batch, classifierWeights, lm, dsir), batchId, path)
-      }
-      .start()
+    graft.sources.Sinks.exactlyOnce(docs, checkpointDir) { (batch, batchId) =>
+      graft.sources.Sinks.writeShardedBatchIdempotent(
+        scoreIngestBatch(batch, classifierWeights, lm, dsir), batchId, path)
+    }
 
   // ---- BPE-budgeted ingest (frozen tokenizer at the landing edge) ----
 
@@ -449,14 +358,10 @@ object StreamingOps {
   def tokenizedArrivals(docs: DataFrame,
       merges: Seq[graft.operators.TextQueries.BpeMerge], path: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.sources.Sinks.writeShardedBatchIdempotent(
-          tokenizeIngestBatch(batch, merges), batchId, path)
-      }
-      .start()
+    graft.sources.Sinks.exactlyOnce(docs, checkpointDir) { (batch, batchId) =>
+      graft.sources.Sinks.writeShardedBatchIdempotent(
+        tokenizeIngestBatch(batch, merges), batchId, path)
+    }
 
   // ---- stateful pattern matching (flatMapGroupsWithState) ----
 

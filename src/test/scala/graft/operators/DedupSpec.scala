@@ -605,9 +605,10 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     val idxDir = java.nio.file.Files.createTempDirectory("q74idx").toString
     val docs = spark.read.parquet(s"$tmp/documents.parquet")
     DedupQueries.buildNearDupIndex(spark, docs.filter($"doc_id" % 10 =!= 3), idxDir)
-    val viaIndex = DedupQueries
-      .nearDupAgainstIndex(spark, docs.filter($"doc_id" % 10 === 3), idxDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val viaIndex = DedupQueries.probeBands(
+        DedupQueries.bandDocs(docs.filter($"doc_id" % 10 === 3)),
+        DedupQueries.readNearDupIndex(spark, idxDir))
+      .distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(viaIndex == got, s"index probe $viaIndex != inline $got")
   }
 

@@ -90,7 +90,7 @@ class SinksSpec extends AnyFunSuite with SparkTestSession with AdaptiveSparkPlan
       spark.read.parquet(sink).select("value").as[Long].collect().toSeq.sorted
 
     val s1 = MemoryStream[Long](spark)
-    val q1 = Sinks.streamToParquetExactlyOnce(s1.toDF(), sink, ckpt)
+    val q1 = Sinks.exactlyOnce(s1.toDF(), ckpt)(Sinks.writeBatchIdempotent(_, _, sink))
     s1.addData(1L, 2L, 3L)
     q1.processAllAvailable()
     assert(readBack() == Seq(1L, 2L, 3L))
@@ -105,7 +105,7 @@ class SinksSpec extends AnyFunSuite with SparkTestSession with AdaptiveSparkPlan
     // prior output intact — each input row appears exactly once overall
     val s2 = MemoryStream[Long](spark)
     s2.addData(1L, 2L, 3L) // offsets 0-2 already committed for the OLD source
-    val q2 = Sinks.streamToParquetExactlyOnce(s2.toDF(), sink, ckpt)
+    val q2 = Sinks.exactlyOnce(s2.toDF(), ckpt)(Sinks.writeBatchIdempotent(_, _, sink))
     s2.addData(4L, 5L)
     q2.processAllAvailable()
     q2.stop()
@@ -125,8 +125,8 @@ class SinksSpec extends AnyFunSuite with SparkTestSession with AdaptiveSparkPlan
         .as[(Long, Long)].collect().toSeq.sortBy(_._1)
 
     val s = MemoryStream[(Long, String)](spark)
-    val q = Sinks.streamShardedExactlyOnce(
-      s.toDF().toDF("doc_id", "text"), sink, ckpt)
+    val q = Sinks.exactlyOnce(s.toDF().toDF("doc_id", "text"), ckpt)(
+      Sinks.writeShardedBatchIdempotent(_, _, sink))
     s.addData(docs.take(25))
     q.processAllAvailable()
     s.addData(docs.drop(25))

@@ -234,7 +234,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       .collect().map(r => (r.getLong(0), Option(r.getString(1)))).toSet
 
     val stream = MemoryStream[StreamingSpec.Doc](spark)
-    val (q, name) = runToMemory(StreamingOps.scrubArrivals(stream.toDF()))
+    val (q, name) = runToMemory(
+      graft.operators.WebCurationQueries.piiScrub(stream.toDF()))
     stream.addData(docs)
     q.processAllAvailable()
     q.stop()
@@ -455,7 +456,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       stream.toDF().withWatermark("ts", "2 hours")
         .dropDuplicatesWithinWatermark("event_id"),
       watermark = None) // dedup already set it: one watermark per pipeline
-    val q = graft.sources.Sinks.streamToParquetExactlyOnce(piped, sink, ckpt)
+    val q = graft.sources.Sinks.exactlyOnce(piped, ckpt)(
+      graft.sources.Sinks.writeBatchIdempotent(_, _, sink))
     stream.addData(batch1); q.processAllAvailable()
     stream.addData(batch2); q.processAllAvailable()
     stream.addData(Seq(sentinel)); q.processAllAvailable()
@@ -544,71 +546,93 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     assert(got.length == got.toSet.size, s"duplicate emission: ${got.toSeq}")
     assert(got.toSet == first, s"clean doc 13 must add nothing: ${got.toSeq}")
     // replay == the same probe over the arrivals as one batch frame
-    val batch = DedupQueries.nearDupAgainstIndex(
-      spark, arrivals.map(d => (d.doc_id, d.text)).toDF("doc_id", "text"), idxDir)
-      .as[(Long, Long)].collect().toSet
+    val batch = DedupQueries.probeBands(
+        DedupQueries.bandDocs(
+          arrivals.map(d => (d.doc_id, d.text)).toDF("doc_id", "text")),
+        DedupQueries.readNearDupIndex(spark, idxDir))
+      .distinct().as[(Long, Long)].collect().toSet
     assert(batch == got.toSet, s"batch $batch != replay ${got.toSet}")
+  }
+
+  /** Benchmark grams and a freshly built band index over the standing
+    * corpus of the ingest lifecycle tests. */
+  private def ingestFixture(tag: String): (DataFrame, String) = {
+    import spark.implicits._
+    val bench = graft.operators.TextQueries.docGrams3(
+      Seq(7L -> "held out evaluation prompt text").toDF("doc_id", "text"))
+      .select($"gram").distinct()
+    val idxDir = java.nio.file.Files.createTempDirectory(s"${tag}_idx").toString
+    graft.operators.DedupQueries.buildNearDupIndex(
+      spark, StreamingSpec.IngestCorpus.toDF("doc_id", "text"), idxDir)
+    (bench, idxDir)
+  }
+
+  /** Run [[StreamingOps.ingestLifecycle]] over the given arrival batches,
+    * one micro-batch per `addData`. */
+  private def runIngest(bench: DataFrame, idxDir: String, sink: String,
+      pairsDir: String, ckpt: String, batches: Seq[StreamingSpec.Doc]*): Unit = {
+    import spark.implicits._
+    val stream = MemoryStream[StreamingSpec.Doc](spark)
+    val q = StreamingOps.ingestLifecycle(
+      stream.toDF(), bench, idxDir, sink, pairsDir, ckpt)
+    batches.foreach { b => stream.addData(b); q.processAllAvailable() }
+    q.stop()
+  }
+
+  private def ingestFrame(b: Seq[StreamingSpec.Doc]): DataFrame = {
+    import spark.implicits._
+    b.map(d => (d.doc_id, d.text)).toDF("doc_id", "text")
+  }
+
+  /** `b`'s band probe against the index state a micro-batch with id
+    * `batchId` saw: every partition below it (the base is -1). */
+  private def probedAt(idxDir: String, b: DataFrame, batchId: Long): DataFrame = {
+    import graft.operators.DedupQueries
+    DedupQueries.probeBands(DedupQueries.bandDocs(b),
+      DedupQueries.readNearDupIndex(spark, idxDir)
+        .filter(org.apache.spark.sql.functions.col("batch_id") < batchId))
   }
 
   test("composed ingest lifecycle: stream -> decontaminate -> near-dup " +
       "filter -> sharded exactly-once landing equals the batch drop chain") {
     import spark.implicits._
-    import graft.operators.{AnalyticsQueries, DedupQueries, TextQueries}
-    // standing corpus (near-dup source) + benchmark (contamination source)
-    val corpus = Seq(
-      1L -> "alpha beta gamma delta epsilon zeta eta theta iota kappa",
-      4L -> "one two three four five six seven eight nine ten")
-    val bench = TextQueries.docGrams3(
-      Seq(7L -> "held out evaluation prompt text").toDF("doc_id", "text"))
-      .select($"gram").distinct()
-    val idxDir = java.nio.file.Files.createTempDirectory("ingest_idx").toString
-    DedupQueries.buildNearDupIndex(spark, corpus.toDF("doc_id", "text"), idxDir)
-    val index = spark.read.parquet(s"$idxDir/bands.parquet")
-
-    val arrivals = Seq(
-      // near-dup of corpus doc 1 -> dropped
-      StreamingSpec.Doc(20L, "alpha beta gamma delta epsilon zeta eta theta iota lambda"),
-      // contains a benchmark 3-gram -> dropped
-      StreamingSpec.Doc(21L, "contains the held out evaluation prompt inside it"),
-      // clean -> lands
-      StreamingSpec.Doc(22L, "totally fresh document with new words never seen before"),
-      StreamingSpec.Doc(23L, "another clean arrival of unremarkable novel content here"))
-
+    import graft.operators.AnalyticsQueries
+    import StreamingSpec.{IngestBatch0 => batch0, IngestBatch1 => batch1}
+    val (bench, idxDir) = ingestFixture("ingest")
     val sink = java.nio.file.Files.createTempDirectory("ingest_sink").toString + "/out"
+    val pairsDir = java.nio.file.Files.createTempDirectory("ingest_pairs").toString + "/pairs"
     val ckpt = java.nio.file.Files.createTempDirectory("ingest_ckpt").toString
-    val stream = MemoryStream[StreamingSpec.Doc](spark)
-    val q = StreamingOps.ingestLifecycle(stream.toDF(), bench, index, sink, ckpt)
-    stream.addData(arrivals.take(2)) // batch 0: both dropped
-    q.processAllAvailable()
-    stream.addData(arrivals.drop(2)) // batch 1: both land
-    q.processAllAvailable()
-    q.stop()
+    runIngest(bench, idxDir, sink, pairsDir, ckpt, batch0, batch1)
 
     def landed() = spark.read.parquet(sink)
       .select($"doc_id", $"text", $"shard").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getAs[Number](2).longValue()))
+      .map(r => (r.getLong(0), Option(r.getString(1)), r.getAs[Number](2).longValue()))
       .toSet
     val got = landed()
-    // batch twin: the SAME drop chain over all arrivals as one frame
-    val twin = StreamingOps.cleanIngestBatch(
-      arrivals.map(d => (d.doc_id, d.text)).toDF("doc_id", "text"), bench, index)
-      .withColumn("shard", AnalyticsQueries.shardCol)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-    assert(got == twin, s"landed $got != batch twin $twin")
-    assert(got.map(_._1) == Set(22L, 23L), got)
+    assert(got.map(_._1) == Set(30L, 32L, 34L, 35L),
+      s"20 near-dups the corpus, 21 is contaminated, 31 near-dups accepted " +
+        s"doc 30, 33 is a within-batch copy; BOTH null-text docs land: $got")
     // shard assignment is the q73 manifest hash, not arrival order
     assert(got.forall { case (id, _, s) =>
       s == java.lang.Long.parseLong(
         org.apache.commons.codec.digest.DigestUtils.md5Hex(id.toString).take(1), 16)
     }, got)
+
+    // replay == batch: per batch, the SAME drop chain against the
+    // pre-append index state reproduces the landed shards exactly
+    val keptTwin = Seq(batch0, batch1).zipWithIndex.flatMap { case (b, i) =>
+      val f = ingestFrame(b)
+      StreamingOps.cleanIngestBatch(f, probedAt(idxDir, f, i.toLong), bench)
+        .withColumn("shard", AnalyticsQueries.shardCol)
+        .collect().map(r => (r.getLong(0), Option(r.getString(1)), r.getLong(2)))
+    }.toSet
+    assert(got == keptTwin, s"landed $got != batch twin $keptTwin")
+
     // exactly-once: re-deliver the last batch (crash-replay) -> unchanged
-    val lastBatch = spark.read.parquet(sink)
-      .select(org.apache.spark.sql.functions.max($"batch_id"))
-      .head().getAs[Number](0).longValue()
     graft.sources.Sinks.writeShardedBatchIdempotent(
       spark.read.parquet(sink)
-        .filter($"batch_id" === lastBatch).select($"doc_id", $"text"),
-      lastBatch, sink)
+        .filter($"batch_id" === 1L).select($"doc_id", $"text"),
+      1L, sink)
     assert(landed() == got, "replayed batch must not duplicate landed docs")
   }
 
@@ -616,41 +640,12 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       "a later near-dup of them is dropped, and replayed appends are idempotent") {
     import spark.implicits._
     import graft.operators.DedupQueries
-    val corpus = Seq(
-      1L -> "alpha beta gamma delta epsilon zeta eta theta iota kappa")
-    val bench = graft.operators.TextQueries.docGrams3(
-      Seq(7L -> "held out evaluation prompt text").toDF("doc_id", "text"))
-      .select($"gram").distinct()
-    val idxDir = java.nio.file.Files.createTempDirectory("grow_idx").toString
-    DedupQueries.buildNearDupIndex(spark, corpus.toDF("doc_id", "text"), idxDir)
-
-    val fresh = "totally fresh document with new words never seen before"
-    val batch0 = Seq(StreamingSpec.Doc(30L, fresh))
-    // near-dup of doc 30 (LAST word changed — only the final shingle
-    // differs, so band signatures still collide) — dropped ONLY if doc
-    // 30's acceptance grew the index; the frozen lifecycle would keep it
-    val batch1 = Seq(
-      StreamingSpec.Doc(31L, fresh.replace("before", "previously")),
-      StreamingSpec.Doc(32L, "independent clean arrival with other novel vocabulary"),
-      // exact copy of doc 32 in the SAME batch — the within-batch blind
-      // spot: the index can't catch it (batch bands aren't appended yet),
-      // the batch-internal exact dedup stage must
-      StreamingSpec.Doc(33L, "independent clean arrival with other novel vocabulary"),
-      // two DISTINCT metadata-only (null-text) arrivals in one batch:
-      // exempt from every drop stage — the md5(text) family key must not
-      // collapse them into one "duplicate" family
-      StreamingSpec.Doc(34L, null),
-      StreamingSpec.Doc(35L, null))
-
+    import StreamingSpec.{IngestBatch0 => batch0, IngestBatch1 => batch1}
+    val (bench, idxDir) = ingestFixture("grow")
     val sink = java.nio.file.Files.createTempDirectory("grow_sink").toString + "/out"
+    val pairsDir = java.nio.file.Files.createTempDirectory("grow_pairs").toString + "/pairs"
     val ckpt = java.nio.file.Files.createTempDirectory("grow_ckpt").toString
-    val stream = MemoryStream[StreamingSpec.Doc](spark)
-    val q = StreamingOps.ingestLifecycleGrowing(stream.toDF(), bench, idxDir, sink, ckpt)
-    stream.addData(batch0)
-    q.processAllAvailable()
-    stream.addData(batch1)
-    q.processAllAvailable()
-    q.stop()
+    runIngest(bench, idxDir, sink, pairsDir, ckpt, batch0, batch1)
 
     val landed = spark.read.parquet(sink).select($"doc_id")
       .collect().map(_.getLong(0)).toSet
@@ -658,13 +653,13 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       s"doc 31 must near-dup against accepted doc 30; 33 is a within-batch " +
         s"copy; BOTH null-text docs land: $landed")
     // the frozen chain against the BASE index alone would have kept 31
-    val frozenKept = StreamingOps.cleanIngestBatch(
-      batch1.map(d => (d.doc_id, d.text)).toDF("doc_id", "text"), bench,
-      spark.read.parquet(s"$idxDir/bands.parquet")
-        .filter($"batch_id" === -1L))
+    val b1 = ingestFrame(batch1)
+    val frozenKept = StreamingOps.cleanIngestBatch(b1, probedAt(idxDir, b1, 0L), bench)
       .select($"doc_id").collect().map(_.getLong(0)).toSet
     assert(frozenKept == Set(31L, 32L, 34L, 35L), s"frozen twin sanity: $frozenKept")
+
     // index holds base + one partition per batch, only accepted docs' bands
+    // (null-text docs have none)
     val idx = spark.read.parquet(s"$idxDir/bands.parquet")
       .select($"doc_id", $"band", $"bsig", $"batch_id").collect()
       .map(r => (r.getLong(0), r.getAs[Number](3).longValue()))
@@ -674,8 +669,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     val before = spark.read.parquet(s"$idxDir/bands.parquet").collect()
       .map(_.toString).sorted.toSeq
     DedupQueries.appendToNearDupIndex(
-      Seq(32L -> "independent clean arrival with other novel vocabulary")
-        .toDF("doc_id", "text"), idxDir, 1L)
+      DedupQueries.bandDocs(
+        Seq(32L -> "independent clean arrival with other novel vocabulary")
+          .toDF("doc_id", "text")), idxDir, 1L)
     val after = spark.read.parquet(s"$idxDir/bands.parquet").collect()
       .map(_.toString).sorted.toSeq
     assert(after == before, "replayed append must replace, not duplicate")
@@ -735,8 +731,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
 
     // append lands in the CURRENT generation, and probes keep seeing it
     DedupQueries.appendToNearDupIndex(
-      Seq(90L -> "fresh doc appended after two compactions with new words")
-        .toDF("doc_id", "text"), idxDir, 7L)
+      DedupQueries.bandDocs(
+        Seq(90L -> "fresh doc appended after two compactions with new words")
+          .toDF("doc_id", "text")), idxDir, 7L)
     assert(DedupQueries.readNearDupIndex(spark, idxDir)
       .filter($"batch_id" === 7L).select($"doc_id").distinct().collect()
       .map(_.getLong(0)).toSeq == Seq(90L))
@@ -745,70 +742,45 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
   test("growing lifecycle with pairs: the incremental q122 surface lands " +
       "exactly-once, replay equals the batch twin, pairs explain the drops") {
     import spark.implicits._
-    import graft.operators.DedupQueries
-    val corpus = Seq(
-      1L -> "alpha beta gamma delta epsilon zeta eta theta iota kappa")
-    val bench = graft.operators.TextQueries.docGrams3(
-      Seq(7L -> "held out evaluation prompt text").toDF("doc_id", "text"))
-      .select($"gram").distinct()
-    val idxDir = java.nio.file.Files.createTempDirectory("gp_idx").toString
-    DedupQueries.buildNearDupIndex(spark, corpus.toDF("doc_id", "text"), idxDir)
-
-    val fresh = "totally fresh document with new words never seen before"
-    val batch0 = Seq(StreamingSpec.Doc(30L, fresh))
-    val batch1 = Seq(
-      // near-dup of accepted doc 30 (grown index) — pair (31 -> 30)
-      StreamingSpec.Doc(31L, fresh.replace("before", "previously")),
-      StreamingSpec.Doc(32L, "independent clean arrival with other novel vocabulary"),
-      // within-batch exact copy — pair (33 -> 32, exact_batch)
-      StreamingSpec.Doc(33L, "independent clean arrival with other novel vocabulary"),
-      StreamingSpec.Doc(34L, null))
-
+    import StreamingSpec.{IngestBatch0 => batch0, IngestBatch1 => batch1}
+    val (bench, idxDir) = ingestFixture("gp")
     val sink = java.nio.file.Files.createTempDirectory("gp_sink").toString + "/out"
     val pairsDir = java.nio.file.Files.createTempDirectory("gp_pairs").toString + "/pairs"
     val ckpt = java.nio.file.Files.createTempDirectory("gp_ckpt").toString
-    val stream = MemoryStream[StreamingSpec.Doc](spark)
-    val q = StreamingOps.ingestLifecycleGrowingWithPairs(
-      stream.toDF(), bench, idxDir, sink, pairsDir, ckpt)
-    stream.addData(batch0)
-    q.processAllAvailable()
-    stream.addData(batch1)
-    q.processAllAvailable()
-    q.stop()
+    runIngest(bench, idxDir, sink, pairsDir, ckpt, batch0, batch1)
 
     val landed = spark.read.parquet(sink).select($"doc_id")
       .collect().map(_.getLong(0)).toSet
-    assert(landed == Set(30L, 32L, 34L), s"kept set: $landed")
     val pairs = spark.read.parquet(pairsDir)
       .select($"doc_a", $"doc_b", $"reason",
         $"batch_id".cast("long").as("batch_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
       .toSet
     // the q122 contract at ingest time: one pair per dedup-dropped doc,
-    // doc_b = its standing canonical, tagged with the stage that caught it
+    // doc_b = its standing canonical, tagged with the stage that caught it;
+    // contamination (doc 21) contributes no rows
     assert(pairs == Set(
+      (20L, 1L, "near_dup_index", 0L),
       (31L, 30L, "near_dup_index", 1L),
       (33L, 32L, "exact_batch", 1L)), s"pairs: $pairs")
-    // every dedup-dropped arrival is explained; no kept doc appears as doc_a
-    val droppedByDedup = Set(31L, 33L)
-    assert(pairs.map(_._1) == droppedByDedup)
-    assert(pairs.map(_._1).intersect(landed).isEmpty)
+    assert(pairs.map(_._1).intersect(landed).isEmpty,
+      "no kept doc appears as doc_a")
 
-    // replay == batch: the batch-twin transform over batch1 against the
-    // same pre-append index state reproduces the landed pairs exactly
-    val b1 = batch1.map(d => (d.doc_id, d.text)).toDF("doc_id", "text")
-    val preIdx = DedupQueries.readNearDupIndex(spark, idxDir)
-      .filter($"batch_id" =!= 1L)
-    def b1Probed = DedupQueries.probeBands(DedupQueries.bandDocs(b1), preIdx)
-    val twin = StreamingOps.ingestDropPairs(b1, b1Probed)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-    assert(twin == pairs.map(p => (p._1, p._2, p._3)), s"batch twin: $twin")
+    // replay == batch: per batch, the pair surface against the pre-append
+    // index state reproduces the landed pairs exactly
+    val pairsTwin = Seq(batch0, batch1).zipWithIndex.flatMap { case (b, i) =>
+      val f = ingestFrame(b)
+      StreamingOps.ingestDropPairs(f, probedAt(idxDir, f, i.toLong))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), i.toLong))
+    }.toSet
+    assert(pairsTwin == pairs, s"pairs batch twin: $pairsTwin")
 
     // exactly-once: re-landing batch 1's pairs replaces its partition
+    val b1 = ingestFrame(batch1)
     graft.sources.Sinks.writeBatchIdempotent(
-      StreamingOps.ingestDropPairs(b1, b1Probed), 1L, pairsDir)
-    val after = spark.read.parquet(pairsDir).collect().map(_.toString).sorted
-    assert(after.length == 2, s"replayed pairs must replace, not duplicate")
+      StreamingOps.ingestDropPairs(b1, probedAt(idxDir, b1, 1L)), 1L, pairsDir)
+    assert(spark.read.parquet(pairsDir).count() == pairs.size,
+      "replayed pairs must replace, not duplicate")
 
     // precise contamination semantics (review r15): the drop sets are
     // computed independently over the full batch, so a CONTAMINATED
@@ -818,14 +790,46 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     val contaminatedText = "held out evaluation prompt text padded with words"
     val cb = Seq(50L -> contaminatedText, 51L -> contaminatedText)
       .toDF("doc_id", "text")
-    val cbPairs = StreamingOps.ingestDropPairs(
-      cb, DedupQueries.probeBands(DedupQueries.bandDocs(cb), preIdx))
+    val cbPairs = StreamingOps.ingestDropPairs(cb, probedAt(idxDir, cb, 0L))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     assert(cbPairs == Set((51L, 50L, "exact_batch")), s"contaminated dup: $cbPairs")
-    val cbKept = StreamingOps.cleanIngestBatch(cb, bench,
-      spark.read.parquet(s"$idxDir/bands.parquet").filter($"batch_id" === -1L))
+    val cbKept = StreamingOps.cleanIngestBatch(cb, probedAt(idxDir, cb, 0L), bench)
       .select($"doc_id").collect()
     assert(cbKept.isEmpty, "both copies are contamination-dropped")
+  }
+
+  test("ingest lifecycle restart: re-running a batch whose index append " +
+      "already landed reproduces the shards, pairs and index rows") {
+    import spark.implicits._
+    import StreamingSpec.{IngestBatch0 => batch0, IngestBatch1 => batch1}
+    val (bench, idxDir) = ingestFixture("restart")
+    val sink = java.nio.file.Files.createTempDirectory("restart_sink").toString + "/out"
+    val pairsDir = java.nio.file.Files.createTempDirectory("restart_pairs").toString + "/pairs"
+    val ckpt = java.nio.file.Files.createTempDirectory("restart_ckpt").toString
+    def snapshot(): Seq[Seq[String]] =
+      Seq(spark.read.parquet(sink), spark.read.parquet(pairsDir),
+          graft.operators.DedupQueries.readNearDupIndex(spark, idxDir))
+        .map(_.collect().map(_.toString).sorted.toSeq)
+    runIngest(bench, idxDir, sink, pairsDir, ckpt, batch0, batch1)
+    val first = snapshot()
+    assert(first(2).exists(_.endsWith(",1]")), "batch 1 appended to the index")
+
+    // lose batch 1's commit: the crash after every write of the batch but
+    // before the checkpoint commit. The restarted query re-runs batch 1
+    // with batch 1's partition already in the index.
+    val commits = new java.io.File(ckpt, "commits")
+    Seq("1", ".1.crc").map(new java.io.File(commits, _)).filter(_.exists())
+      .foreach(f => assert(f.delete(), f))
+    val stream = MemoryStream[StreamingSpec.Doc](spark)
+    stream.addData(batch0)
+    stream.addData(batch1)
+    val q = StreamingOps.ingestLifecycle(
+      stream.toDF(), bench, idxDir, sink, pairsDir, ckpt)
+    q.processAllAvailable()
+    q.stop()
+    assert(q.recentProgress.exists(p => p.batchId == 1L && p.numInputRows > 0),
+      "the restart must re-run batch 1")
+    assert(snapshot() == first, "a re-run batch must reproduce its output")
   }
 
   test("train/serve split: frozen-weight scoring reproduces the fused q102 scorer") {
@@ -1037,7 +1041,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     val bench = TextQueries.benchmarkGrams(docs.filter(
       col("doc_id") % TextQueries.DecontamMod === TextQueries.DecontamRes))
     val index = DedupQueries.bandDocs(corpus)
-    val chain = StreamingOps.cleanIngestBatch(arrivals, bench, index)
+    val chain = StreamingOps.cleanIngestBatch(arrivals,
+        DedupQueries.probeBands(DedupQueries.bandDocs(arrivals), index), bench)
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
     val entry = CurationPipeline.q78IngestClean(spark, dir)
     val cols = entry.filter(col("kept"))
@@ -1053,4 +1058,32 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
 object StreamingSpec {
   final case class Doc(doc_id: Long, text: String)
   final case class LDoc(doc_id: Long, lang: String, text: String)
+
+  /** The ingest lifecycle tests' standing corpus (the near-dup source). */
+  val IngestCorpus = Seq(
+    1L -> "alpha beta gamma delta epsilon zeta eta theta iota kappa",
+    4L -> "one two three four five six seven eight nine ten")
+  private val Fresh = "totally fresh document with new words never seen before"
+  val IngestBatch0 = Seq(
+    // near-dup of corpus doc 1 -> dropped, pair (20 -> 1)
+    Doc(20L, "alpha beta gamma delta epsilon zeta eta theta iota lambda"),
+    // contains a benchmark 3-gram -> dropped, no pair
+    Doc(21L, "contains the held out evaluation prompt inside it"),
+    // clean -> lands, and its bands join the index
+    Doc(30L, Fresh))
+  val IngestBatch1 = Seq(
+    // near-dup of doc 30 (LAST word changed — only the final shingle
+    // differs, so band signatures still collide) — dropped ONLY because
+    // doc 30's acceptance grew the index; pair (31 -> 30)
+    Doc(31L, Fresh.replace("before", "previously")),
+    Doc(32L, "independent clean arrival with other novel vocabulary"),
+    // exact copy of doc 32 in the SAME batch — the within-batch blind
+    // spot: the index can't catch it (batch bands aren't appended yet),
+    // the batch-internal exact dedup stage must; pair (33 -> 32)
+    Doc(33L, "independent clean arrival with other novel vocabulary"),
+    // two DISTINCT metadata-only (null-text) arrivals in one batch:
+    // exempt from every drop stage — the md5(text) family key must not
+    // collapse them into one "duplicate" family
+    Doc(34L, null),
+    Doc(35L, null))
 }

@@ -4,21 +4,23 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column handling: image/audio/video as opaque BINARY columns
-  * with typed metadata, plus decode / feature-extract / resize /
-  * frame-sample operators (the training-pipeline requirement beyond the
-  * reference's surface).
+  * with typed metadata, decoded and fingerprinted by the media catalog
+  * entries (q38 metadata census, q98/q126 image near-dup, q99 audio
+  * near-dup, q103 video near-dup).
   *
-  * The container ships no image/audio codecs, so the DECODE STEP IS A
-  * DETERMINISTIC STUB: media payloads carry a fake fixed-layout header
-  * (magic "GRFT" + big-endian dims/frames) that [[decodeMeta]] parses the
-  * way a real decoder would parse a PNG/WAV header. Everything around the
-  * stub — the binary schema, the mapPartitions batch shape (the Scala
-  * equivalent of an Arrow-batched pandas UDF), per-media-id partitioning,
-  * and the frame explode — is real Spark plumbing and is tested.
+  * Images and audio are REAL containers: 24bpp BMP, PCM16 WAV and 8-bit RGB
+  * PNG are byte layouts (PNG adds CRC32 and zlib, both in the JDK), so the
+  * encoders and the header/pixel decoders here need no codec library.
+  * [[mediaFromDocumentsReal]] derives each asset deterministically from a
+  * document, so every oracle re-derives the same bytes in DuckDB. Video has
+  * no such container: q103 runs over the GRFT stub ([[encodeFake]] /
+  * [[decodeFake]], magic "GRFT" + big-endian kind/dims/frames), the fixture
+  * a real frame decoder would replace.
   *
-  * Scale design: decode is a narrow mapPartitions (one pass, no shuffle);
-  * only [[frameSample]]'s optional repartition moves data, and it keys by
-  * media_id so frames of one asset stay together for downstream encoders.
+  * Scale design: each decode or fingerprint is one narrow mapPartitions
+  * (one pass, no shuffle); malformed rows drop, like a tolerant reader's
+  * permissive mode. Only the near-dup census tail ([[fingerprintCensus]])
+  * shuffles, by band.
   */
 object MultimodalOps {
 
@@ -27,9 +29,6 @@ object MultimodalOps {
 
   final case class MediaMeta(kind: String, width: Int, height: Int, n_frames: Int)
   final case class Media(media_id: Long, content: Array[Byte])
-  final case class DecodedMedia(media_id: Long, kind: String, width: Int,
-      height: Int, n_frames: Int, payload_bytes: Long)
-  final case class Frame(media_id: Long, frame_idx: Int, frame: Array[Byte])
 
   private val Kinds = Array("imag", "audi", "vide")
 
@@ -69,78 +68,6 @@ object MultimodalOps {
     else Some(MediaMeta(
       new String(content.slice(4, 8), "US-ASCII"),
       getInt(content, 8), getInt(content, 12), getInt(content, 16)))
-
-  /** Build a media table from the documents testdata: text bytes become the
-    * payload (deterministic; no external fixtures needed). */
-  def mediaFromDocuments(spark: SparkSession, dir: String): Dataset[Media] = {
-    import spark.implicits._
-    graft.operators.Tables.documents(spark, dir)
-      .filter(col("text").isNotNull) // null text = no media asset (NullInputSpec)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .map { case (id, text) => Media(id, encodeFake(id, text.getBytes("UTF-8"))) }
-  }
-
-  /** Decode metadata partition-wise — the mapPartitions batch shape a
-    * vectorized decode UDF would use (amortized per-partition setup, e.g.
-    * a codec context, happens once per iterator). Malformed rows are
-    * dropped, like a tolerant reader's permissive mode. */
-  def decodeMeta(media: Dataset[Media]): Dataset[DecodedMedia] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { it =>
-      // per-partition decoder setup would go here (once, not per row)
-      it.flatMap { m =>
-        decodeFake(m.content).map(meta => DecodedMedia(
-          m.media_id, meta.kind, meta.width, meta.height, meta.n_frames,
-          (m.content.length - HeaderLen).toLong))
-      }
-    }
-  }
-
-  /** Stub resize: rewrite the header dims and decimate the payload by the
-    * width ratio (a real implementation swaps only the inner loop). */
-  def resize(media: Dataset[Media], newWidth: Int, newHeight: Int): Dataset[Media] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { it =>
-      it.flatMap { m =>
-        decodeFake(m.content).map { meta =>
-          val payload = m.content.drop(HeaderLen)
-          val ratio = math.max(1, meta.width / math.max(1, newWidth))
-          val resized = payload.indices.collect {
-            case i if i % ratio == 0 => payload(i)
-          }.toArray
-          val out = encodeFake(m.media_id, resized)
-          putInt(out, 8, newWidth); putInt(out, 12, newHeight)
-          Media(m.media_id, out)
-        }
-      }
-    }
-  }
-
-  /** Sample every Nth frame: header frame count -> exploded (media_id,
-    * frame_idx, frame-payload-slice) rows. The explode multiplies rows
-    * without shuffling; the optional repartition co-locates one asset's
-    * frames. */
-  def frameSample(media: Dataset[Media], everyN: Int,
-      repartitionByMedia: Boolean = false): Dataset[Frame] = {
-    // driver-side, like decimateWav: everyN=0 would otherwise throw
-    // "step cannot be 0" per row inside executors
-    require(everyN >= 1, s"everyN must be >= 1, got $everyN")
-    val spark = media.sparkSession
-    import spark.implicits._
-    val frames = media.flatMap { m =>
-      decodeFake(m.content).toSeq.flatMap { meta =>
-        val payload = m.content.drop(HeaderLen)
-        val per = math.max(1, payload.length / math.max(1, meta.n_frames))
-        (0 until meta.n_frames by everyN).map { f =>
-          Frame(m.media_id, f, payload.slice(f * per, (f + 1) * per))
-        }
-      }
-    }
-    if (repartitionByMedia) frames.repartition(col("media_id")) else frames
-  }
 
   // ---- Real file formats (r4): BMP and WAV are pure byte layouts, so the
   // encode/parse path needs no codec library — the payloads stay synthetic
@@ -518,8 +445,8 @@ object MultimodalOps {
   }
 
   /** Container-sniffing decode (magic bytes pick the parser — what a real
-    * tolerant media reader does), partition-wise like [[decodeMeta]].
-    * Unrecognized/malformed rows drop. */
+    * tolerant media reader does), partition-wise. Unrecognized/malformed
+    * rows drop. */
   def decodeRealMeta(media: Dataset[Media]): Dataset[DecodedReal] = {
     val spark = media.sparkSession
     import spark.implicits._
@@ -537,147 +464,6 @@ object MultimodalOps {
           decodePngMeta(b).map(x => DecodedReal(m.media_id, "png", x.width,
             x.height, 0, 0, 1, x.idat_bytes))
         else None
-      }
-    }
-  }
-
-  /** Nearest-neighbor resize of a REAL 24bpp BMP: reads pixels through the
-    * actual header (bottom-up rows, 4-byte row padding) and re-encodes a
-    * valid BMP at the new dims. Narrow mapPartitions — the per-row work is
-    * the pixel loop a real resampler runs, with the codec part being plain
-    * byte layout instead of a library call. */
-  def resizeBmp(media: Dataset[Media], newWidth: Int, newHeight: Int): Dataset[Media] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { it =>
-      it.flatMap { m =>
-        decodeBmpMeta(m.content).filter(x => x.bpp == 24 && x.width > 0 && x.height > 0)
-          .map { meta =>
-            val srcRow = (meta.width * 3 + 3) & ~3
-            val dstRow = (newWidth * 3 + 3) & ~3
-            val out = new Array[Byte](dstRow * newHeight)
-            var y = 0
-            while (y < newHeight) {
-              val sy = y * meta.height / newHeight
-              var x = 0
-              while (x < newWidth) {
-                val sx = x * meta.width / newWidth
-                val src = 54 + sy * srcRow + sx * 3
-                val dst = y * dstRow + x * 3
-                if (src + 3 <= m.content.length) {
-                  out(dst) = m.content(src)
-                  out(dst + 1) = m.content(src + 1)
-                  out(dst + 2) = m.content(src + 2)
-                }
-                x += 1
-              }
-              y += 1
-            }
-            Media(m.media_id, encodeBmp(newWidth, newHeight, out))
-          }
-      }
-    }
-  }
-
-  /** Nearest-neighbor resize of a REAL PNG: full decode
-    * ([[decodePngPixels]] — inflate + defilter), NN-sample the RGB grid,
-    * re-encode through [[encodePng]]. The PNG twin of [[resizeBmp]],
-    * completing decode/resize/re-encode for the compressed container web
-    * corpora actually ship. Narrow mapPartitions — per-row codec work,
-    * no shuffle; malformed/out-of-scope assets drop. */
-  def resizePng(media: Dataset[Media], newWidth: Int, newHeight: Int): Dataset[Media] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { it =>
-      it.flatMap { m =>
-        decodePngPixels(m.content).map { img =>
-          val out = new Array[Byte](newWidth * newHeight * 3)
-          var y = 0
-          while (y < newHeight) {
-            val sy = y.toLong * img.height / newHeight
-            var x = 0
-            while (x < newWidth) {
-              val sx = x.toLong * img.width / newWidth
-              val src = ((sy * img.width + sx) * 3).toInt
-              val dst = (y * newWidth + x) * 3
-              out(dst) = img.rgb(src)
-              out(dst + 1) = img.rgb(src + 1)
-              out(dst + 2) = img.rgb(src + 2)
-              x += 1
-            }
-            y += 1
-          }
-          Media(m.media_id, encodePng(newWidth, newHeight, out))
-        }
-      }
-    }
-  }
-
-  /** Time-range clip extraction over real PCM-WAV bytes — the audio
-    * counterpart of [[resizeBmp]] (segment extraction before a
-    * feature-extract stage). Frame arithmetic through the actual header
-    * (sample_rate * ms / 1000, clamped to the data chunk; block-aligned by
-    * construction since frames are sliced whole), re-emitting a valid WAV
-    * with the same rate/channels. Non-WAV or out-of-range rows drop.
-    * Narrow mapPartitions, no shuffle — byte surgery is imperative JVM
-    * work, the documented mapPartitions criterion. */
-  def clipWav(media: Dataset[Media], startMs: Int, durMs: Int): Dataset[Media] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { it =>
-      it.flatMap { m =>
-        decodeWavMeta(m.content).flatMap { meta =>
-          val frameBytes = math.max(1, meta.channels * (meta.bits / 8))
-          val startFrame = meta.sample_rate.toLong * startMs / 1000
-          val endFrame = math.min(meta.n_frames.toLong,
-            meta.sample_rate.toLong * (startMs.toLong + durMs) / 1000)
-          if (startFrame >= endFrame) None
-          else {
-            val from = 44 + (startFrame * frameBytes).toInt
-            val until = 44 + (endFrame * frameBytes).toInt
-            if (until > m.content.length) None
-            else Some(Media(m.media_id,
-              encodeWavPcm16(meta.sample_rate, meta.channels,
-                java.util.Arrays.copyOfRange(m.content, from, until))))
-          }
-        }
-      }
-    }
-  }
-
-  /** Frame decimation over real PCM-WAV bytes — the real-container twin of
-    * the stub-based [[frameSample]]: keep every Nth frame (whole frames, so
-    * channel interleaving survives) and emit a valid WAV at sample_rate/N.
-    * This is NAIVE decimation (no anti-aliasing low-pass — that needs a
-    * filter kernel this container-math module deliberately stops short of);
-    * the Spark-side shape is the point: narrow mapPartitions byte surgery,
-    * no shuffle, frames addressed through the actual header. */
-  def decimateWav(media: Dataset[Media], everyN: Int): Dataset[Media] = {
-    require(everyN >= 1, s"everyN must be >= 1, got $everyN")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { it =>
-      it.flatMap { m =>
-        decodeWavMeta(m.content).filter { x =>
-          // header must be honest about the bytes present: a truncated WAV
-          // (dataLen claims more than the array holds) drops, the module's
-          // malformed-row contract — same guard clipWav applies
-          val fb = math.max(1, x.channels * (x.bits / 8))
-          x.sample_rate >= everyN &&
-            44L + x.n_frames.toLong * fb <= m.content.length
-        }.map { meta =>
-          val frameBytes = math.max(1, meta.channels * (meta.bits / 8))
-          val kept = (meta.n_frames + everyN - 1) / everyN
-          val out = new Array[Byte](kept * frameBytes)
-          var i = 0
-          while (i < kept) {
-            System.arraycopy(m.content, 44 + i * everyN * frameBytes,
-              out, i * frameBytes, frameBytes)
-            i += 1
-          }
-          Media(m.media_id,
-            encodeWavPcm16(meta.sample_rate / everyN, meta.channels, out))
-        }
       }
     }
   }
@@ -737,10 +523,10 @@ object MultimodalOps {
   /** 64-bit difference hash of a 24bpp BMP, returned as four 16-bit bands
     * (band k = bits 16k..16k+15, bit j of the hash at position j%16):
     * sample a 9×8 nearest-neighbor luma grid through the REAL header
-    * (bottom-up rows, 4-byte row padding — the [[resizeBmp]] pixel
-    * addressing), then bit (x, y) = lum(x,y) < lum(x+1,y) — the classic
-    * gradient fingerprint that survives re-encodes and small edits (the
-    * image-side analogue of q25's text SimHash). Bands are the LSH unit:
+    * (bottom-up rows, 4-byte row padding — the [[encodeBmp]] layout), then
+    * bit (x, y) = lum(x,y) < lum(x+1,y) — the classic gradient fingerprint
+    * that survives re-encodes and small edits (the image-side analogue of
+    * q25's text SimHash). Bands are the LSH unit:
     * by pigeonhole a pair within hamming 3 MUST agree on ≥1 of the 4
     * bands; at the operator's radius [[PhHamT]] band agreement is the
     * standard high-recall (not guaranteed-complete) candidate filter —
@@ -749,7 +535,7 @@ object MultimodalOps {
     * drop (the module's tolerant-reader contract). */
   def dHashBands(b: Array[Byte]): Option[Array[Int]] =
     decodeBmpMeta(b).filter { m =>
-      // header must be honest about the bytes present (the decimateWav
+      // header must be honest about the bytes present (the envFingerprint
       // guard): Long arithmetic so a hostile width field cannot overflow
       // stride/base into negative Int indexing — a malformed asset DROPS,
       // per the tolerant-reader contract, instead of throwing (review r9)
@@ -1196,10 +982,9 @@ object MultimodalOps {
 
   /** 32-bit frame-sampled video fingerprint over the GRFT multi-frame
     * stub, as four 8-bit bands: sample frames 0 and 2 (every-2nd-frame
-    * sampling — the [[frameSample]] stride applied to the dedup path),
-    * hash each frame's bytes with the q99 envelope-gradient kernel (17
-    * equal windows → truncating mean → 16 bits), and concatenate the two
-    * frame hashes. This is the video-side shot-fingerprint idea (TMK/
+    * sampling), hash each frame's bytes with the q99 envelope-gradient
+    * kernel (17 equal windows → truncating mean → 16 bits), and concatenate
+    * the two frame hashes. This is the video-side shot-fingerprint idea (TMK/
     * videntifier-style frame-level hashing reduced to its exact-integer
     * core): near-dup videos share most frame envelopes, re-encodes and
     * trims disturb few bits. The CODEC is the documented GRFT stub — a

@@ -70,6 +70,22 @@ class ValidationSpec extends AnyFunSuite {
       worker_node_t_size = Some("XL"))).nonEmpty)
   }
 
+  test("range rules reject zero/NaN latency, zero keys and out-of-range cpu " +
+      "with the rule's own message (models.py:19-59)") {
+    // NaN > 0 is false, so only the `!(x > 0)` form rejects NaN; `x <= 0`
+    // would let it through
+    val latency = "expected_latency_seconds: must be greater than 0"
+    val cpu = "worker_node_cpu_max: must be in [2, 256]"
+    val table = Seq(
+      EstimationInput(project_name = "T", expected_latency_seconds = 0.0) -> latency,
+      EstimationInput(project_name = "T", expected_latency_seconds = Double.NaN) -> latency,
+      EstimationInput(project_name = "T", num_distinct_keys = 0L) ->
+        "num_distinct_keys: must be >= 1",
+      EstimationInput(project_name = "T", worker_node_cpu_max = 1) -> cpu,
+      EstimationInput(project_name = "T", worker_node_cpu_max = 257) -> cpu)
+    table.foreach { case (in, msg) => assert(bad(in) == List(msg), in) }
+  }
+
   test("worker node memory upper bound 512 GiB (models.py:35-40)") {
     assert(bad(EstimationInput(project_name = "T",
       worker_node_memory_mb = 512 * 1024 + 1)).nonEmpty)

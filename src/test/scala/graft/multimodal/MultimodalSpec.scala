@@ -4,9 +4,10 @@ import graft.SparkTestSession
 import graft.multimodal.MultimodalOps._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The multimodal plumbing around the stubbed decode: header round trip,
-  * partition-wise decode, resize header rewrite, frame-sampling shape, and
-  * malformed-input tolerance.
+/** The media catalog entries' codecs and fingerprints: the GRFT stub
+  * header round trip, the real BMP/WAV/PNG containers through a distributed
+  * decode, the fingerprint kernels' hand math, and malformed-input
+  * tolerance (a bad asset drops, never throws).
   */
 class MultimodalSpec extends AnyFunSuite with SparkTestSession {
 
@@ -24,39 +25,6 @@ class MultimodalSpec extends AnyFunSuite with SparkTestSession {
   test("malformed binary is dropped, not thrown") {
     assert(decodeFake(Array[Byte](1, 2, 3)).isEmpty)
     assert(decodeFake("XXXX0000000000000000".getBytes).isEmpty)
-  }
-
-  test("decodeMeta over the synthetic media table") {
-    val decoded = decodeMeta(mediaFromDocuments(spark, dir)).collect()
-    assert(decoded.length == 500)
-    decoded.foreach { d =>
-      assert(Set("imag", "audi", "vide").contains(d.kind))
-      assert(d.width == 16 + (d.media_id % 64) && d.n_frames == 1 + (d.media_id % 10))
-      assert(d.payload_bytes > 0)
-    }
-  }
-
-  test("resize rewrites dims and shrinks payload monotonically") {
-    import spark.implicits._
-    val media = spark.createDataset(Seq(
-      Media(40L, encodeFake(40L, Array.fill[Byte](1000)(7)))))
-    val resized = resize(media, newWidth = 8, newHeight = 4).collect().head
-    val meta = decodeFake(resized.content).get
-    assert(meta.width == 8 && meta.height == 4)
-    assert(resized.content.length < 1000 + HeaderLen)
-  }
-
-  test("frameSample explodes every Nth frame with sliced payloads") {
-    import spark.implicits._
-    val media = spark.createDataset(Seq(
-      Media(9L, encodeFake(9L, Array.tabulate[Byte](100)(_.toByte)))))
-    // media 9: n_frames = 1 + 9%10 = 10
-    val all = frameSample(media, everyN = 1).collect()
-    assert(all.map(_.frame_idx).sorted.toSeq == (0 until 10))
-    val sampled = frameSample(media, everyN = 3).collect()
-    assert(sampled.map(_.frame_idx).sorted.toSeq == Seq(0, 3, 6, 9))
-    // frames partition the payload without overlap
-    assert(all.map(_.frame.length).sum <= 100)
   }
 
   test("q38 real-container media census is deterministic and grouped by kind") {
@@ -92,26 +60,6 @@ class MultimodalSpec extends AnyFunSuite with SparkTestSession {
     assert(decodeRealMeta(junk).collect().isEmpty)
   }
 
-  test("resizeBmp resamples real pixel rows through the actual header") {
-    import spark.implicits._
-    // 4x2 image, distinct pixel values: row padding makes srcRow = 12
-    val w = 4; val h = 2
-    val pixels = Array.tabulate[Byte](((w * 3 + 3) & ~3) * h)(_.toByte)
-    val media = spark.createDataset(Seq(Media(5L, MultimodalOps.encodeBmp(w, h, pixels))))
-    val out = MultimodalOps.resizeBmp(media, newWidth = 2, newHeight = 1).collect().head
-    val meta = MultimodalOps.decodeBmpMeta(out.content).get
-    assert(meta.width == 2 && meta.height == 1 && meta.bpp == 24)
-    assert(out.content.length == 54 + ((2 * 3 + 3) & ~3) * 1)
-    // nearest-neighbor: dst(0,0) <- src(0,0) bytes 0..2, dst(1,0) <- src(2,0) bytes 6..8
-    val body = out.content.drop(54)
-    assert(body.slice(0, 3).toSeq == pixels.slice(0, 3).toSeq)
-    assert(body.slice(3, 6).toSeq == pixels.slice(6, 9).toSeq)
-    // non-BMP input drops instead of throwing
-    val wav = spark.createDataset(Seq(Media(6L,
-      MultimodalOps.encodeWavPcm16(8000, 1, new Array[Byte](8)))))
-    assert(MultimodalOps.resizeBmp(wav, 2, 2).collect().isEmpty)
-  }
-
   test("real BMP container round-trips through a distributed decode") {
     import spark.implicits._
     val media = (1L to 40L).map { id =>
@@ -145,79 +93,6 @@ class MultimodalSpec extends AnyFunSuite with SparkTestSession {
       assert(bits == 16 && frames == 100 + (id % 50).toInt, s"media $id")
     }
     assert(MultimodalOps.decodeWavMeta(new Array[Byte](10)).isEmpty)
-  }
-
-  test("clipWav extracts the exact frame range, block-aligned, re-decodable") {
-    import spark.implicits._
-    import MultimodalOps.Media
-    // 1 kHz mono: frame i carries sample value i (LE int16) -> the clip's
-    // payload identifies exactly which frames were taken
-    val rate = 1000; val frames = 500
-    val samples = new Array[Byte](frames * 2)
-    (0 until frames).foreach { i =>
-      samples(2 * i) = (i & 0xff).toByte; samples(2 * i + 1) = ((i >> 8) & 0xff).toByte
-    }
-    val media = Seq(
-      Media(1L, MultimodalOps.encodeWavPcm16(rate, 1, samples)),
-      Media(2L, Array[Byte](1, 2, 3)), // not a WAV -> dropped
-    ).toDS()
-    // clip [100 ms, 350 ms) = frames [100, 350)
-    val got = MultimodalOps.clipWav(media, 100, 250).collect()
-    assert(got.map(_.media_id).toSeq == Seq(1L))
-    val clip = got.head.content
-    val meta = MultimodalOps.decodeWavMeta(clip).get
-    assert(meta.sample_rate == rate && meta.channels == 1 && meta.n_frames == 250)
-    val first = (clip(44) & 0xff) | ((clip(45) & 0xff) << 8)
-    val last = (clip(44 + 249 * 2) & 0xff) | ((clip(44 + 249 * 2 + 1) & 0xff) << 8)
-    assert(first == 100 && last == 349, s"$first..$last")
-    // clip beyond the end clamps; fully-out-of-range drops
-    assert(MultimodalOps.clipWav(media, 400, 10000).collect()
-      .map(m => MultimodalOps.decodeWavMeta(m.content).get.n_frames).toSeq == Seq(100))
-    assert(MultimodalOps.clipWav(media, 600, 100).collect().isEmpty)
-  }
-
-  test("decimateWav keeps every Nth whole frame and divides the rate") {
-    import spark.implicits._
-    import MultimodalOps.Media
-    // stereo so whole-frame copying is observable: frame i = (i, -i) int16
-    val rate = 1000; val frames = 101
-    val samples = new Array[Byte](frames * 4)
-    (0 until frames).foreach { i =>
-      samples(4 * i) = (i & 0xff).toByte; samples(4 * i + 1) = ((i >> 8) & 0xff).toByte
-      val neg = -i
-      samples(4 * i + 2) = (neg & 0xff).toByte; samples(4 * i + 3) = ((neg >> 8) & 0xff).toByte
-    }
-    val media = Seq(Media(1L, MultimodalOps.encodeWavPcm16(rate, 2, samples))).toDS()
-    val got = MultimodalOps.decimateWav(media, 4).collect().head.content
-    val meta = MultimodalOps.decodeWavMeta(got).get
-    assert(meta.sample_rate == 250 && meta.channels == 2 && meta.n_frames == 26)
-    // frame j of the output is source frame 4j, both channels intact
-    (0 until 26).foreach { j =>
-      val off = 44 + j * 4
-      val l = ((got(off) & 0xff) | ((got(off + 1) & 0xff) << 8)).toShort.toInt
-      val r = ((got(off + 2) & 0xff) | ((got(off + 3) & 0xff) << 8)).toShort.toInt
-      assert(l == 4 * j && r == -(4 * j), s"frame $j: ($l, $r)")
-    }
-    // N=1 is the identity on the data chunk
-    val id1 = MultimodalOps.decimateWav(media, 1).collect().head.content
-    assert(java.util.Arrays.equals(id1, media.collect().head.content))
-  }
-
-  test("decimateWav drops a truncated WAV instead of crashing the task") {
-    import spark.implicits._
-    import MultimodalOps.Media
-    val whole = MultimodalOps.encodeWavPcm16(1000, 2, new Array[Byte](100 * 4))
-    // truncated read: header still claims 100 frames, bytes end earlier —
-    // the malformed-row contract says drop, like clipWav (a missing guard
-    // here was an ArrayIndexOutOfBounds task failure)
-    val truncated = java.util.Arrays.copyOfRange(whole, 0, whole.length - 40)
-    val got = MultimodalOps.decimateWav(
-      Seq(Media(1L, truncated), Media(2L, whole)).toDS(), 4).collect()
-    assert(got.map(_.media_id).toSeq == Seq(2L), got.mkString(","))
-    // and everyN is validated at the driver, not per-row on executors
-    intercept[IllegalArgumentException] {
-      MultimodalOps.frameSample(Seq(Media(1L, whole)).toDS(), 0)
-    }
   }
 
   test("dHashBands reads the real header: gradient bits match hand math") {
@@ -296,6 +171,13 @@ class MultimodalSpec extends AnyFunSuite with SparkTestSession {
     assert(MultimodalOps.envFingerprint(
       MultimodalOps.encodeWavPcm16(8000, 1, new Array[Byte](32 * 2))).isEmpty)
     assert(MultimodalOps.envFingerprint("BMnotawav".getBytes("US-ASCII")).isEmpty)
+    // truncated read: the header still claims 100 stereo frames, the bytes
+    // end 40 short. q99's guard drops it; without the guard the envelope
+    // loop reads past the array
+    val whole = MultimodalOps.encodeWavPcm16(1000, 2, new Array[Byte](100 * 4))
+    val truncated = java.util.Arrays.copyOfRange(whole, 0, whole.length - 40)
+    assert(MultimodalOps.envFingerprint(whole).isDefined)
+    assert(MultimodalOps.envFingerprint(truncated).isEmpty)
   }
 
   test("q99 family and near censuses are internally consistent on sf0.001") {
@@ -499,39 +381,24 @@ class MultimodalSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
-  test("resizePng NN-resamples through the real codec; sniffing meta decode " +
-      "handles all three containers") {
+  test("decodeRealMeta sniffs BMP/WAV/PNG; junk and a CRC-flipped PNG drop") {
     import spark.implicits._
-    // 2x2 distinct-color image upscaled 2x: each source pixel becomes a
-    // 2x2 block (NN), verified through a full decode of the re-encoded PNG
-    val px = Array[Byte](10, 11, 12, 20, 21, 22, 30, 31, 32, 40, 41, 42)
-    val media = Seq(MultimodalOps.Media(1L, MultimodalOps.encodePng(2, 2, px))).toDS()
-    val up = MultimodalOps.resizePng(media, 4, 4).collect().head
-    val img = MultimodalOps.decodePngPixels(up.content).get
-    assert(img.width == 4 && img.height == 4)
-    def at(x: Int, y: Int) = (0 until 3).map(k => img.rgb((y * 4 + x) * 3 + k))
-    assert(at(0, 0) == at(1, 1) && at(0, 0) == Seq[Byte](10, 11, 12))
-    assert(at(3, 3) == Seq[Byte](40, 41, 42))
-    // malformed input drops (no row), never throws
-    assert(MultimodalOps.resizePng(
-      Seq(MultimodalOps.Media(2L, "junk".getBytes)).toDS(), 4, 4).count() == 0)
-
-    // the sniffing meta decoder now covers BMP + WAV + PNG
-    val mixed = Seq(
-      MultimodalOps.Media(10L, MultimodalOps.encodeBmp(4, 3, new Array[Byte](48))),
-      MultimodalOps.Media(11L, MultimodalOps.encodeWavPcm16(8000, 1, new Array[Byte](80))),
-      MultimodalOps.Media(12L, MultimodalOps.encodePng(5, 4, new Array[Byte](60))),
-      MultimodalOps.Media(13L, "GRFTnope".getBytes)).toDS()
-    val metas = MultimodalOps.decodeRealMeta(mixed).collect()
-      .map(d => d.media_id -> (d.kind, d.width, d.height)).toMap
-    assert(metas.keySet == Set(10L, 11L, 12L))
-    assert(metas(12L) == (("png", 5, 4)))
     // meta parse never inflates but still verifies structure: a flipped
     // IDAT bit fails the CRC and drops
     val png = MultimodalOps.encodePng(5, 4, new Array[Byte](60))
     val bad = png.clone(); bad(png.length - 20) = (bad(png.length - 20) ^ 1).toByte
     assert(MultimodalOps.decodePngMeta(bad).isEmpty)
     assert(MultimodalOps.decodePngMeta(png).exists(m => m.idat_bytes > 0))
+    val mixed = Seq(
+      MultimodalOps.Media(10L, MultimodalOps.encodeBmp(4, 3, new Array[Byte](48))),
+      MultimodalOps.Media(11L, MultimodalOps.encodeWavPcm16(8000, 1, new Array[Byte](80))),
+      MultimodalOps.Media(12L, png),
+      MultimodalOps.Media(13L, "GRFTnope".getBytes),
+      MultimodalOps.Media(14L, bad)).toDS()
+    val metas = MultimodalOps.decodeRealMeta(mixed).collect()
+      .map(d => d.media_id -> (d.kind, d.width, d.height)).toMap
+    assert(metas.keySet == Set(10L, 11L, 12L))
+    assert(metas(12L) == (("png", 5, 4)))
   }
 
   test("q126 family and near censuses are internally consistent on sf0.001") {

@@ -235,15 +235,6 @@ class TextEdgeSpec extends AnyFunSuite with SparkTestSession {
     assert(r.resource_estimates.total_memory_mb == 6144)
   }
 
-  test("multimodal resize preserves decodability over the real corpus") {
-    import graft.multimodal.MultimodalOps
-    val media = MultimodalOps.mediaFromDocuments(spark, "/root/testdata/sf0.001").limit(50)
-    val resized = MultimodalOps.resize(media, newWidth = 8, newHeight = 8)
-    val metas = MultimodalOps.decodeMeta(resized).collect()
-    assert(metas.length == 50)
-    assert(metas.forall(m => m.width == 8 && m.height == 8))
-  }
-
   test("sequence packing fills each bin to the budget (contiguous invariant)") {
     val w = TextQueries.PackBudget
     val bins = TextQueries.q63SequencePacking(spark, "/root/testdata/sf0.001").collect()

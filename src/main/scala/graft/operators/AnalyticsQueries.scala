@@ -186,26 +186,26 @@ object AnalyticsQueries {
   }
 
   /** Shard-count knob: shards = 16^digits. A production run sizes this to
-    * the cluster (e.g. 3-4 hex digits = 2^12-2^16 shards); [[NumShards]]
-    * and [[shardCol]] both derive from it, so the manifest's range and the
-    * writer's layout cannot diverge. */
+    * the cluster (e.g. 3-4 hex digits = 2^12-2^16 shards); [[shardCol]]
+    * and its DuckDB twin both derive from it, so the manifest's range and
+    * the writer's layout cannot diverge. */
   val ShardHexDigits = 1
-  val NumShards: Int = 1 << (4 * ShardHexDigits)
 
   /** Q73 — deterministic shard manifest: the WRITER step of a training-data
-    * pipeline — every doc is assigned to one of [[NumShards]] output shards
-    * by a pure hash of its key (decorrelated from doc_id order, so time- or
-    * source-clustered corpora spread uniformly), and the manifest records
-    * per-shard doc/token/char volume + language spread — the numbers a
-    * downstream loader needs to plan balanced reads. Hash sharding is the
-    * q50/q57 discipline again (stable across engines, runs, retries;
-    * a doc never changes shard when the corpus grows). One map-side-partial
-    * aggregate over [[NumShards]] uniform groups; the actual write is
-    * `df.repartition(col("shard")).write.partitionBy("shard")` — same
-    * assignment expression, shuffle-partitioned by the same key. */
+    * pipeline — every doc is assigned to one of 16^[[ShardHexDigits]]
+    * output shards by a pure hash of its key (decorrelated from doc_id
+    * order, so time- or source-clustered corpora spread uniformly), and the
+    * manifest records per-shard doc/token/char volume + language spread —
+    * the numbers a downstream loader needs to plan balanced reads. Hash
+    * sharding is the q50/q57 discipline again (stable across engines, runs,
+    * retries; a doc never changes shard when the corpus grows). One
+    * map-side-partial aggregate over 16^[[ShardHexDigits]] uniform groups;
+    * the actual write is `df.repartition(col("shard")).write.partitionBy("shard")`
+    * — same assignment expression, shuffle-partitioned by the same key. */
   /** The shard-assignment expression shared by the manifest (q73) and the
-    * real writer ([[writeShardedCorpus]]): the first [[ShardHexDigits]]
-    * md5 hex digits of the doc key. */
+    * streaming shard writer
+    * ([[graft.sources.Sinks.writeShardedBatchIdempotent]]): the first
+    * [[ShardHexDigits]] md5 hex digits of the doc key. */
   def shardCol: org.apache.spark.sql.Column =
     conv(substring(md5(col("doc_id").cast("string")), 1, ShardHexDigits), 16, 10)
       .cast("long")
@@ -247,11 +247,11 @@ object AnalyticsQueries {
     * doubles in the same expression shape on both engines.
     *
     * Scale shape: one explode → (shard, bucket) census with map-side
-    * partials (key space ≤ [[NumShards]]·4096 — bounded, uniform); the
-    * census [[Materialize]]s ONCE and feeds the corpus margin, the
+    * partials (key space ≤ 16^[[ShardHexDigits]]·4096 — bounded,
+    * uniform); the census [[Materialize]]s ONCE and feeds the corpus margin, the
     * per-shard totals, and the term join; the bucket margin is ≤ 4096
-    * rows (AQE broadcasts it); output is [[NumShards]] rows. Eager at
-    * build (the Materialize).
+    * rows (AQE broadcasts it); output is 16^[[ShardHexDigits]] rows.
+    * Eager at build (the Materialize).
     *
     * sf1.0 ruling (r15, benched alone min-of-3): 1.12 s vs DuckDB 0.31 s
     * (3.5×) — notably BELOW the 1.54 s the r14 shared-session artifact
@@ -317,20 +317,6 @@ object AnalyticsQueries {
        |    CAST(floor((ln(CAST(n.nn AS DOUBLE)) - ln(CAST(ns.n_s AS DOUBLE))) * 1000000000.0) AS BIGINT))
        |    / 1000000000.0 / ns.n_s, 6) AS kl_nats
        |FROM agg a JOIN ns USING (shard), n ORDER BY a.shard NULLS FIRST""".stripMargin
-
-  /** The actual sharded WRITE the q73 manifest plans for: the same
-    * assignment expression, shuffle-partitioned by it and written as
-    * partitioned parquet through [[graft.sources.Sinks.writePartitioned]]
-    * (salt-bounded file counts, idempotent overwrite). Reading
-    * `path/shard=K/` back gives exactly the docs the manifest counted for
-    * shard K (AnalyticsSpec reconciles them). */
-  def writeShardedCorpus(spark: SparkSession, dir: String, path: String,
-      filesPerPartition: Int = 1): Unit =
-    graft.sources.Sinks.writePartitioned(
-      Tables.documents(spark, dir)
-        .filter(col("text").isNotNull)
-        .withColumn("shard", shardCol),
-      path, Seq("shard"), filesPerPartition)
 
   def q73ShardStats(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)

@@ -734,12 +734,11 @@ object DedupQueries {
     * Per-round materialization goes through the shared
     * [[Materialize.materialize]] helper: `localCheckpoint` by default
     * (executor block store — fine single-JVM), RELIABLE `checkpoint` when
-    * `spark.graft.checkpointDir` (or the legacy `spark.graft.cc.checkpointDir`)
-    * is set — on a real cluster localCheckpoint blocks die with their executor
-    * and a lost round would fail the whole iterative job, while reliable
-    * checkpoints survive executor loss and cap recovery at one round of
-    * recompute (r5, VERDICT r4 next-round #7; generalized to every
-    * materialization site in r6). */
+    * `spark.graft.checkpointDir` is set — on a real cluster localCheckpoint
+    * blocks die with their executor and a lost round would fail the whole
+    * iterative job, while reliable checkpoints survive executor loss and
+    * cap recovery at one round of recompute (r5, VERDICT r4 next-round #7;
+    * generalized to every materialization site in r6). */
   private[operators] def resolveClusters(pairs: DataFrame): DataFrame = {
     val MaxRounds = 20
     import Materialize.materialize
@@ -1158,12 +1157,11 @@ object DedupQueries {
   }
 
   /** Persist the corpus' LSH band table as the near-dup INDEX — (doc_id,
-    * band, bsig) parquet, the minhash twin of SimilarityQueries'
-    * buildIvfIndex: shingling/signing the standing corpus is the expensive
-    * pass, and it happens once here instead of once per ingest batch. The
-    * index carries ids + band signatures only (no text, no shingle arrays),
-    * so its size is a small constant factor of the doc count regardless of
-    * document length.
+    * band, bsig) parquet: shingling/signing the standing corpus is the
+    * expensive pass, and it happens once here instead of once per ingest
+    * batch. The index carries ids + band signatures only (no text, no
+    * shingle arrays), so its size is a small constant factor of the doc
+    * count regardless of document length.
     *
     * Layout: partitioned by `batch_id` (the base build is partition -1) so
     * [[appendToNearDupIndex]] can grow the index one ingest batch at a time

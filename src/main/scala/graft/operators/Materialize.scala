@@ -12,9 +12,6 @@ import org.apache.spark.sql.DataFrame
   *  - `spark.graft.checkpointDir` set: RELIABLE `checkpoint()` into that
   *    directory (HDFS/S3 on a cluster). Survives executor loss; recovery
   *    cost is bounded by one materialization instead of the whole lineage.
-  *    `spark.graft.cc.checkpointDir` is honored as a legacy alias (it
-  *    predates this helper; the connected-components loop introduced the
-  *    pattern in r5).
   *
   * One helper, used by every site — the minhash signature table, the rarity
   * tf collapse, the IVF quantized-embedding frame, and each
@@ -34,13 +31,10 @@ import org.apache.spark.sql.DataFrame
   */
 object Materialize {
   private[graft] val ConfKey = "spark.graft.checkpointDir"
-  private[graft] val LegacyConfKey = "spark.graft.cc.checkpointDir"
 
   /** Directory for reliable mode, if configured. */
-  private def reliableDir(df: DataFrame): Option[String] = {
-    val conf = df.sparkSession.conf
-    conf.getOption(ConfKey).orElse(conf.getOption(LegacyConfKey))
-  }
+  private def reliableDir(df: DataFrame): Option[String] =
+    df.sparkSession.conf.getOption(ConfKey)
 
   /** Eagerly materialize `df`, truncating lineage. Reliable when a
     * checkpoint dir is configured, executor-local otherwise. */

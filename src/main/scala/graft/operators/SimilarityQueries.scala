@@ -98,16 +98,11 @@ object SimilarityQueries {
   /** Deterministic pseudo-random hyperplane signs for (plane p, dim i):
     * +1/-1 from the first md5 hex digit of "p:i" — computed ONCE at plan
     * time and embedded as literal arrays, so the per-row bucket computation
-    * is pure arithmetic (no per-row hashing). Parameterized by plane count
-    * (r5) so the recall/candidate-count sweep can raise the bucket count
-    * the way a 100 TB deployment would; plane p's signs are identical at
-    * every `bits`, so raising bits REFINES the same bucketing. */
-  private[operators] def planeSignsFor(bits: Int): Seq[Seq[Double]] =
-    planeSignsRange(0, bits)
-
-  /** Planes indexed ABSOLUTELY (plane p's signs never depend on how many
-    * planes are in use), so table t of a multi-table scheme uses planes
-    * [t*bits, (t+1)*bits) and table 0 is exactly the single-table layout. */
+    * is pure arithmetic (no per-row hashing). Planes are indexed ABSOLUTELY
+    * (plane p's signs never depend on how many planes are in use), so
+    * raising the plane count REFINES the same bucketing, and table t of a
+    * multi-table scheme uses planes [t*bits, (t+1)*bits) with table 0
+    * exactly the single-table layout. */
   private[operators] def planeSignsRange(from: Int, n: Int): Seq[Seq[Double]] = {
     val md = java.security.MessageDigest.getInstance("MD5")
     (from until from + n).map { p =>
@@ -116,8 +111,6 @@ object SimilarityQueries {
       }
     }
   }
-
-  private lazy val planeSigns: Seq[Seq[Double]] = planeSignsFor(LshBits)
 
   /** Q27 — bucketed ANN: sign-LSH into 2^4 buckets, multi-probe (exact
     * bucket + all Hamming-1 neighbors), exact quantized dot inside buckets
@@ -132,9 +125,8 @@ object SimilarityQueries {
   def q27AnnLsh(spark: SparkSession, dir: String): DataFrame =
     annLshTopK(spark, dir, LshBits)
 
-  /** Scored candidate set of the sign-LSH ANN at a given plane count —
-    * exposed pre-top-k so the sweep tool can count candidates per config. */
-  private[graft] def annLshScored(spark: SparkSession, dir: String, bits: Int): DataFrame = {
+  /** Scored candidate set of the sign-LSH ANN at a given plane count. */
+  private def annLshScored(spark: SparkSession, dir: String, bits: Int): DataFrame = {
     val emb = quantized(spark, dir).withColumn("bucket", intBucketColFor(bits))
     // queries probe their own bucket plus each single-bit flip
     val probes = emb.filter(col("vec_id") < QueryCount)
@@ -209,19 +201,14 @@ object SimilarityQueries {
   val PqK = 16
   val PqRerank = 8
 
-  /** Coarse centroids: seed with the first k vectors, then one Lloyd
-    * iteration through [[graft.functions.CentroidAggregator]] — exact
-    * integer math end to end, so training is bit-deterministic (no RNG, no
-    * float drift), and the resulting centroids are a small broadcastable
-    * list. At 100 TB: train on a sample, broadcast the codebook — this
-    * exact shape. */
-  /** Full Lloyd training: `rounds` assign -> exact-integer-centroid steps
-    * from the deterministic seed codebook (rounds = 1 — seed + one step —
-    * is the q42 oracle's pinned configuration; production codebooks run a
-    * few more rounds for tighter cells). Exact integer math at every step, so
-    * training is bit-deterministic (no RNG, no float drift; the only
-    * rounding is the centroid's truncating milli-unit division, sub-ulp
-    * relative to cell distances). Each round is one codegen'd
+  /** Lloyd training: `rounds` assign -> exact-integer-centroid steps
+    * through [[graft.functions.CentroidAggregator]] from the deterministic
+    * seed codebook. Every catalog entry trains rounds = 1 (seed + one
+    * step), the q42 oracle's pinned configuration; more rounds give
+    * tighter cells, and SimilaritySpec runs 1-4. Exact integer math at
+    * every step, so training is bit-deterministic (no RNG, no float drift;
+    * the only rounding is the centroid's truncating milli-unit division,
+    * sub-ulp relative to cell distances). Each round is one codegen'd
     * [[graft.functions.NearestCellLong]] assignment projection over the
     * corpus plus one cells-row aggregate collect — the codebook stays
     * driver-side small, the train-on-sample/broadcast-codebook shape that
@@ -229,13 +216,13 @@ object SimilarityQueries {
     * on fixed seeds). SimilaritySpec pins the within-cell quantization
     * objective as non-increasing over rounds.
     *
-    * Measured caveat (RecallSweep ivf-lloyd, sf0.1): on ISOTROPIC vectors
-    * more rounds give a better codebook but WORSE fixed-budget recall
-    * (0.87 -> 0.81 at rounds 1 -> 8, cells=16/probes=2, flat candidates) —
-    * tighter cells overlap less, so a fixed probe count explores less of
-    * each query's neighborhood. Refinement pays off on genuinely clustered
-    * production embeddings; on unstructured corpora spend the budget on
-    * probes/cells instead. */
+    * Measured caveat (artifacts/RECALL_SWEEP_r10.json, `ivf-lloyd`, sf0.1):
+    * on ISOTROPIC vectors more rounds give a better codebook but WORSE
+    * fixed-budget recall (0.87 -> 0.81 at rounds 1 -> 8, cells=16/probes=2,
+    * flat candidates) — tighter cells overlap less, so a fixed probe count
+    * explores less of each query's neighborhood. Refinement pays off on
+    * genuinely clustered production embeddings; on unstructured corpora
+    * spend the budget on probes/cells instead. */
   private[graft] def trainCodebook(emb: DataFrame, cells: Int,
       rounds: Int): Array[(Int, Array[Long])] = {
     // Seed id-space-independently: the lowest `cells` vec_ids via one
@@ -326,17 +313,17 @@ object SimilarityQueries {
   def q42IvfAnn(spark: SparkSession, dir: String): DataFrame =
     ivfAnnTopK(spark, dir, IvfCells, IvfProbes)
 
-  /** Scored IVF candidates at a given (cells, probes) — pre-top-k for the
-    * sweep tool; [[q42IvfAnn]] is the fixed-config oracle entry. */
-  private[graft] def ivfAnnScored(spark: SparkSession, dir: String,
-      cells: Int, probes: Int, lloydRounds: Int = 1): DataFrame = {
+  /** Scored IVF candidates at a given (cells, probes), over a one-round
+    * codebook; [[q42IvfAnn]] is the fixed-config oracle entry. */
+  private def ivfAnnScored(spark: SparkSession, dir: String,
+      cells: Int, probes: Int): DataFrame = {
     // IVF is inherently multi-job (seed collect -> centroid agg -> assign ->
     // probe/top-k): materialize scan+quantize ONCE instead of recomputing it
     // in every job (VERDICT r4: the only top-5 query with avoidable local
     // overhead). At 100 TB the codebook trains on a SAMPLE, so the big scan
     // runs once either way — this aligns the local shape with that.
     val emb = quantizedFor(spark, dir)
-    val centroids = trainCodebook(emb, cells, lloydRounds)
+    val centroids = trainCodebook(emb, cells, 1)
     if (centroids.isEmpty) {
       // empty corpus: no seeds -> no codebook; an empty probe array would
       // type as VOID and fail analysis (EmptyInputSpec)
@@ -357,37 +344,9 @@ object SimilarityQueries {
       .withColumn("dot", graft.functions.DotProductLong(col("qa"), col("qb")))
   }
 
-  /** Build-once IVF index: persists the codebook (cell -> centroid) and
-    * the corpus cell assignment as parquet, so training and the
-    * full-corpus assignment scan run once for every consumer that follows
-    * ([[semanticDedupFromIvfIndex]], tools/RecallSweep); q42 re-derives
-    * both per call. The assignment table carries only (vec_id, cell) —
-    * vectors stay in the source table and re-join by id, so the index is
-    * tiny relative to the corpus. Like [[q42IvfAnn]], throws IllegalStateException when a non-empty
-    * corpus has fewer than `cells` vectors (ADVICE r6: intentional loud
-    * failure — pass a smaller `cells` for legitimately tiny corpora). */
-  def buildIvfIndex(spark: SparkSession, dir: String, indexDir: String,
-      cells: Int = IvfCells, lloydRounds: Int = 1): Unit = {
-    import spark.implicits._
-    val emb = Materialize.materialize(quantized(spark, dir))
-    val centroids = trainCodebook(emb, cells, lloydRounds)
-    centroids.toSeq.map { case (cell, c) => (cell, c.toSeq) }
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/codebook")
-    val assigned =
-      if (centroids.isEmpty) emb.select(col("vec_id"), lit(0).as("cell")) // empty corpus
-      else emb.withColumn("cell", nearestCellExpr(centroids)).select(col("vec_id"), col("cell"))
-    assigned.write.mode("overwrite").parquet(s"$indexDir/assignments")
-  }
-
-  /** The IVF index's (vec_id, cell) assignment table, as [[buildIvfIndex]]
-    * wrote it. */
-  def readIvfAssignments(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(s"$indexDir/assignments")
-
   private[graft] def ivfAnnTopK(spark: SparkSession, dir: String,
-      cells: Int, probes: Int, lloydRounds: Int = 1): DataFrame =
-    topKScored(ivfAnnScored(spark, dir, cells, probes, lloydRounds))
+      cells: Int, probes: Int): DataFrame =
+    topKScored(ivfAnnScored(spark, dir, cells, probes))
 
   /** Hash-table count for q107's LSH leg: 4 tables of [[LshBits]] planes
     * each — the OR-amplification configuration the r5 sweep motivated. */
@@ -400,8 +359,8 @@ object SimilarityQueries {
     * ([[annLshMultiTable]] at ([[LshBits]], [[RecallLshTables]])) against
     * the exact brute-force top-k ([[q26KnnExact]]) on the same bounded
     * query sample — the measurement a serving team reads before trading
-    * exactness for probe budget (tools/RecallSweep explores the config
-    * space; this entry pins one configuration PER FAMILY as an
+    * exactness for probe budget (artifacts/RECALL_SWEEP_r10.json records
+    * the config space; this entry pins one configuration PER FAMILY as an
     * oracle-checked row, so a codebook, PQ-codebook, or plane-table
     * regression in ANY family fails the gate, not production).
     *
@@ -1047,91 +1006,6 @@ object SimilarityQueries {
         when(col("ia") < col("ib"), col("lb")).otherwise(col("la")).as("lang_b"))
       .withColumn("same_lang", col("lang_a") === col("lang_b"))
       .orderBy(col("id_a").asc, col("id_b").asc)
-  }
-
-  /** [[q65SemanticDedup]]'s candidate stage served from a PERSISTED IVF
-    * index (VERDICT r5 #6 / r6 #2) instead of sign-LSH: the RecallSweep
-    * measured IVF dominating sign-LSH at equal candidate budget (0.96 vs
-    * 0.22 recall@5 on isotropic vectors), so a serving-shaped curation run
-    * that already maintains an IVF index ([[buildIvfIndex]]) should draw
-    * its semantic-dedup candidates from it rather than hashing planes.
-    *
-    * Candidate generation — symmetric multi-probe over unique families:
-    *  - HOME side: each unique family's cell comes from the persisted
-    *    assignment table (joined by the family's min vec_id — identical
-    *    vectors share a cell by construction), NOT recomputed: reusing the
-    *    batch assignment scan is the point of a persisted index;
-    *  - PROBE side: each family's `probes` nearest cells from the
-    *    persisted cells-row codebook (driver-collected, broadcast-sized —
-    *    the same train-small/broadcast shape as q42);
-    *  - a pair is a candidate when either member probes the other's home
-    *    cell (both directions emitted by the equi-join, collapsed by
-    *    dropDuplicates) — cell equi-join, never all-pairs, fan-out bounded
-    *    by probes x cell occupancy.
-    * The tail (exact integer dot threshold, same-text group filter, id
-    * expansion) is IDENTICAL to q65's — output rows are row-compatible by
-    * construction: any pair both generators surface carries the same
-    * (dot, lang, same_lang) values, and every emitted pair is a TRUE
-    * above-threshold cross-text pair (the dot filter is exact; candidate
-    * generation only affects recall). SimilaritySpec pins recall >= the
-    * sign-LSH form's against the brute-force truth set at sf0.001. */
-  def semanticDedupFromIvfIndex(spark: SparkSession, dir: String,
-      indexDir: String, probes: Int = IvfProbes): DataFrame = {
-    import spark.implicits._
-    val centroids = spark.read.parquet(s"$indexDir/codebook")
-      .collect().map(r => (r.getInt(0), r.getSeq[Long](1).toArray)).sortBy(_._1)
-    val q = quantized(spark, dir)
-    val uniq = q.groupBy(col("qv"))
-      .agg(min(col("vec_id")).as("uid"), count(lit(1)).as("cnt"))
-    val cand =
-      if (centroids.isEmpty)
-        // empty index (built on an empty corpus): no candidates, but keep
-        // the tail so the output schema matches q65 exactly
-        Seq.empty[(Long, Long, Long)].toDF("ua", "ub", "dot")
-      else {
-        val home = uniq
-          .join(readIvfAssignments(spark, indexDir),
-            uniq("uid") === col("vec_id"))
-          .select(col("uid").as("hb"), col("qv").as("qb"), col("cell"))
-        val probed = uniq
-          .select(col("uid").as("pa"), col("qv"),
-            explode(slice(sort_array(array(cellScores(centroids): _*)), 1,
-              math.min(probes, centroids.length))).as("probe"))
-          .select(col("pa"), col("qv").as("qa"), col("probe.cell").as("pcell"))
-        val cross = probed
-          .join(home, col("pcell") === col("cell") && col("pa") =!= col("hb"))
-          .select(
-            least(col("pa"), col("hb")).as("ua"),
-            greatest(col("pa"), col("hb")).as("ub"),
-            graft.functions.DotProductLong(col("qa"), col("qb")).as("dot"))
-          .dropDuplicates("ua", "ub")
-        val self = uniq.filter(col("cnt") > 1)
-          .select(col("uid").as("ua"), col("uid").as("ub"),
-            graft.functions.DotProductLong(col("qv"), col("qv")).as("dot"))
-        cross.unionAll(self).filter(col("dot") > NearDupThreshold)
-      }
-    semanticDedupExpand(spark, dir, q, uniq, cand)
-  }
-
-  /** Brute-force q65 — the recall DENOMINATOR for the sweep tool and specs:
-    * every unique-family pair scored exactly (theta join on uid order →
-    * BNLJ by construction, declared baseline like q26), then the identical
-    * tail. Never the production path; candidates-by-bucket is the whole
-    * point of q65/[[semanticDedupFromIvfIndex]]. */
-  private[graft] def semanticDedupBruteForce(spark: SparkSession, dir: String): DataFrame = {
-    val q = quantized(spark, dir)
-    val uniq = q.groupBy(col("qv"))
-      .agg(min(col("vec_id")).as("uid"), count(lit(1)).as("cnt"))
-    val l = uniq.select(col("uid").as("ua"), col("qv").as("qa"))
-    val r = uniq.select(col("uid").as("ub"), col("qv").as("qb"))
-    val cross = l.join(r, col("ua") < col("ub"))
-      .select(col("ua"), col("ub"),
-        graft.functions.DotProductLong(col("qa"), col("qb")).as("dot"))
-    val self = uniq.filter(col("cnt") > 1)
-      .select(col("uid").as("ua"), col("uid").as("ub"),
-        graft.functions.DotProductLong(col("qv"), col("qv")).as("dot"))
-    semanticDedupExpand(spark, dir, q, uniq,
-      cross.unionAll(self).filter(col("dot") > NearDupThreshold))
   }
 
   val all: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(

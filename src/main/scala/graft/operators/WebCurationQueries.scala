@@ -169,8 +169,7 @@ object WebCurationQueries {
     // (sampling then touches only the cheap enrichment concat) and
     // projecting the regexes AFTER the sort evaluates them once; a
     // projection preserves per-partition order, doc_id is unique, so rows
-    // and order are identical. piiRedact keeps the unsorted contract for
-    // its other consumers.
+    // and order are identical.
     // The partition count is PINNED (repartitionByRange(defaultParallelism)
     // + sortWithinPartitions == orderBy's physical plan with an explicit
     // width): a plain orderBy lets AQE coalesce the range shuffle to ~one
@@ -180,26 +179,18 @@ object WebCurationQueries {
     // scales with the cluster, so the pin is scale-adaptive, not a local
     // constant (the q33/q63 shard discipline). Applies to every §1.7
     // sort-below-projection entry (q29/q31/q67/q84/q87/q90/q105).
-    val docs = Tables.documents(spark, dir)
-    piiCensusProjection(docs.filter(col("text").isNotNull)
+    def n(re: String) = size(regexp_extract_all(col("etext"), lit(re), lit(0))).cast("long")
+    Tables.documents(spark, dir).filter(col("text").isNotNull)
       .select(col("doc_id"), withPiiText.as("etext"))
       .repartitionByRange(spark.sparkContext.defaultParallelism, col("doc_id").asc)
-      .sortWithinPartitions(col("doc_id").asc))
-  }
-
-  /** The PII census + scrub projection over a pre-arranged (doc_id, etext)
-    * frame — ONE body shared by [[q84PiiRedact]] (which sorts below it) and
-    * [[piiRedact]] (unsorted contract), so the catalog entry and the
-    * spec-tested helper cannot drift (ADVICE r16). */
-  private def piiCensusProjection(e: DataFrame): DataFrame = {
-    def n(re: String) = size(regexp_extract_all(col("etext"), lit(re), lit(0))).cast("long")
-    e.select(
-      col("doc_id"),
-      n(EmailRe).as("n_email"),
-      n(PhoneRe).as("n_phone"),
-      n(IpRe).as("n_ip"),
-      n(SsnRe).as("n_ssn"),
-      scrubText(col("etext")).as("redacted"))
+      .sortWithinPartitions(col("doc_id").asc)
+      .select(
+        col("doc_id"),
+        n(EmailRe).as("n_email"),
+        n(PhoneRe).as("n_phone"),
+        n(IpRe).as("n_ip"),
+        n(SsnRe).as("n_ssn"),
+        scrubText(col("etext")).as("redacted"))
   }
 
   /** The redaction chain over any string column (no enrichment; null in →
@@ -224,12 +215,6 @@ object WebCurationQueries {
     * pins replay == batch). */
   def piiScrub(docs: DataFrame): DataFrame =
     docs.withColumn("text", scrubText(col("text")))
-
-  /** The census+redaction over any document frame (split out for reuse and
-    * constructed-corpus specs). */
-  private[graft] def piiRedact(docs: DataFrame): DataFrame =
-    piiCensusProjection(docs.filter(col("text").isNotNull)
-      .select(col("doc_id"), withPiiText.as("etext")))
 
   // ---- Q85: URL extraction + domain census ----
 
@@ -367,12 +352,6 @@ object WebCurationQueries {
     * vectorized RE2), which is the entry's declared job — the PII/URL
     * machinery IS the operator. Pure scan-riding codegen otherwise;
     * parallelizes by split at cluster scale. Floor. */
-  /** Session flag: when true, q88's stage-2 quality gate additionally
-    * requires the q102 learned classifier's keep (rules AND model — the
-    * CCNet composition). Default FALSE, so the oracle-pinned q88 output
-    * is unchanged unless a deployment opts in. */
-  private[graft] val UseClassifierConf = "spark.graft.quality.useClassifier"
-
   def q88WebCuration(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).filter(col("text").isNotNull)
       .select(col("doc_id"), col("source"), col("text"),
@@ -389,32 +368,12 @@ object WebCurationQueries {
     // 9 java.util.regex passes over the text. Measured at sf0.1
     // (shared-session bench, this host): 1.42 → see OPTIMIZATION_r16.md;
     // plan: 2 scans × regex-projection → 1 (plans/r16/q88_web_curation_*).
-    val ruleFlagged = Materialize.materialize(docs.select(
+    val flagged = Materialize.materialize(docs.select(
       col("doc_id"), col("source"),
       (nHits(EmailRe) + nHits(PhoneRe) + nHits(IpRe) + nHits(SsnRe) > 0).as("has_pii"),
       size(split(scrubText(col("etext")), " ")).cast("long").as("n_tokens"),
       regexp_extract(col("etext"), DomainRe, 1).as("first_domain"),
       qualityKeep(col("text")).as("q_keep")))
-
-    // optional stage 2b: the learned gate (q102) composed onto the rules.
-    // Unscorable-doc POLICY (ADVICE r10): classifierScores only emits a
-    // row for docs with >= 2 normalized words (a bigram model has no
-    // evidence otherwise), so the left join leaves model_keep null there
-    // and the coalesce(..., false) REJECTS them — deliberate: with the
-    // learned gate on, "no evidence of quality" means drop, mirroring
-    // q102's own keep-threshold contract. Rules-only behavior for short
-    // docs is the flag-OFF path; flip the coalesce to lit(true) only if
-    // that policy changes, and re-pin ClassifierSpec's monotonicity test.
-    val flagged =
-      if (!spark.conf.getOption(UseClassifierConf).contains("true")) ruleFlagged
-      else {
-        val scored = classifierScores(Tables.documents(spark, dir))
-          .select(col("doc_id"), col("keep").as("model_keep"))
-        ruleFlagged.join(scored, Seq("doc_id"), "left")
-          .withColumn("q_keep",
-            col("q_keep") && coalesce(col("model_keep"), lit(false)))
-          .drop("model_keep")
-      }
 
     // stage 3: cap slots per first_domain over quality SURVIVORS (an
     // evicted slot would otherwise be wasted on a doc stage 2 drops)

@@ -614,11 +614,11 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
 
   test("cluster resolution under reliable checkpointing (recovery-safe mode)") {
     import spark.implicits._
-    // spark.graft.cc.checkpointDir flips every per-round materialization
+    // spark.graft.checkpointDir flips every per-round materialization
     // from localCheckpoint (executor blocks — lost with the executor) to
     // reliable checkpoint files that survive executor loss on a cluster
     val ckptDir = java.nio.file.Files.createTempDirectory("cc_ckpt").toString
-    spark.conf.set("spark.graft.cc.checkpointDir", ckptDir)
+    spark.conf.set(Materialize.ConfKey, ckptDir)
     try {
       val chain = (0L until 100L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
       val got = DedupQueries.resolveClusters(chain).collect()
@@ -630,7 +630,7 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
         else if (d.getName.startsWith("part-")) 1L else 0L
       assert(rddFiles(new java.io.File(ckptDir)) > 0,
         "reliable mode must persist checkpoint part files")
-    } finally spark.conf.unset("spark.graft.cc.checkpointDir")
+    } finally spark.conf.unset(Materialize.ConfKey)
   }
 
   test("canonical-selection census+rejoin form is output-identical to the " +

@@ -56,20 +56,6 @@ class MaterializeSpec extends AnyFunSuite with SparkTestSession {
     } finally SessionArtifacts.clear()
   }
 
-  test("legacy cc conf key still switches the shared helper") {
-    val ckptDir =
-      java.nio.file.Files.createTempDirectory("graft_ckpt_legacy").toString
-    spark.conf.set(Materialize.LegacyConfKey, ckptDir)
-    try {
-      import spark.implicits._
-      val got = DedupQueries.resolveClusters(
-        Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")).collect()
-      assert(got.length == 3)
-      assert(partFiles(new java.io.File(ckptDir)) > 0,
-        "legacy key must still persist checkpoint part files")
-    } finally spark.conf.unset(Materialize.LegacyConfKey)
-  }
-
   test("switching to a checkpoint dir that PREFIXES the old one still " +
       "re-points the checkpoint location (no substring false-positive)") {
     import spark.implicits._

@@ -10,16 +10,17 @@ import org.scalatest.funsuite.AnyFunSuite
 class ScaleToolsSpec extends AnyFunSuite with SparkTestSession {
 
   test("dynamic partition pruning fires for a selective dim filter") {
-    import graft.sources.Sinks
-    // fact partitioned by event_type (the Sinks write discipline), dim
+    import spark.implicits._
+    // fact partitioned by event_type (the events table's five types), dim
     // filtered to ONE type: the fact scan must be pruned at RUNTIME by the
     // dim-side filter result (DPP) — at 100 TB this is the difference
     // between scanning one partition and scanning the table
     val out = java.nio.file.Files.createTempDirectory("graft_dpp").toString + "/events"
-    Sinks.writePartitioned(
-      Tables.events(spark, "/root/testdata/sf0.001"), out, Seq("event_type"))
+    val types = Seq("click", "error", "purchase", "signup", "view")
+    (0L until 1000L).map(i => (i, types((i % types.length).toInt)))
+      .toDF("event_id", "event_type")
+      .write.partitionBy("event_type").parquet(out)
     val fact = spark.read.parquet(out)
-    import spark.implicits._
     // dim must be a SOURCE with a selective predicate (a plan-time local
     // relation folds the filter away and DPP sees nothing to reuse)
     val dimPath = java.nio.file.Files.createTempDirectory("graft_dpp_dim").toString

@@ -547,122 +547,6 @@ class SimilaritySpec extends AnyFunSuite with SparkTestSession {
     assert(got.toSeq == Seq((3L, 4L, 1000000L, "en", "fr", false)), got.toSeq)
   }
 
-  test("IVF codebook seeding is id-space independent: vec_ids offset by " +
-      "10^9 train a FULL codebook and serve identical top-k") {
-    // VERDICT r5 "what's wrong" #1: the old `vec_id < cells` seed filter
-    // silently produced an empty codebook on any corpus whose ids don't
-    // start near 0. Same vectors, ids shifted into snowflake territory:
-    // the trained codebook, the assignments, and the served top-k must all
-    // be identical (modulo the id shift) to the dense-id corpus.
-    val dir = "/root/testdata/sf0.001"
-    val offset = 1000000000L
-    val tmp = java.nio.file.Files.createTempDirectory("ivfoffset").toString
-    spark.read.parquet(s"$dir/embeddings.parquet")
-      .withColumn("vec_id", col("vec_id") + lit(offset))
-      .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
-    val idxDense = java.nio.file.Files.createTempDirectory("ivfd").toString
-    val idxShift = java.nio.file.Files.createTempDirectory("ivfs").toString
-    SimilarityQueries.buildIvfIndex(spark, dir, idxDense)
-    SimilarityQueries.buildIvfIndex(spark, tmp, idxShift)
-    def codebook(idx: String) = spark.read.parquet(s"$idx/codebook")
-      .collect().map(r => (r.getInt(0), r.getSeq[Long](1).toSeq)).sortBy(_._1).toSeq
-    val cbShift = codebook(idxShift)
-    assert(cbShift.length == SimilarityQueries.IvfCells,
-      s"offset ids must still seed a FULL codebook, got ${cbShift.length}")
-    assert(cbShift == codebook(idxDense),
-      "codebook must depend on vectors, not the id space")
-    def assignments(idx: String, shift: Long) =
-      spark.read.parquet(s"$idx/assignments").collect()
-        .map(r => (r.getLong(0) - shift) -> r.getInt(1)).toMap
-    assert(assignments(idxShift, offset) == assignments(idxDense, 0L))
-    // serving: semantic dedup drawn from the shift-trained index over the
-    // shifted corpus (documents shifted with it, doc_id == vec_id) names
-    // the same pairs, with the same values, as the dense-trained index —
-    // pins the home-cell join and the probe path end-to-end
-    spark.read.parquet(s"$dir/documents.parquet")
-      .withColumn("doc_id", col("doc_id") + lit(offset))
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    def serve(corpus: String, idx: String, shift: Long) = SimilarityQueries
-      .semanticDedupFromIvfIndex(spark, corpus, idx).collect()
-      .map(r => (r.getLong(0) - shift, r.getLong(1) - shift) +: r.toSeq.drop(2)).toSeq
-    val served = serve(tmp, idxShift, offset)
-    assert(served == serve(dir, idxDense, 0L) && served.nonEmpty)
-  }
-
-  test("q65 from a persisted IVF index: exact on the constructed corpus, " +
-      "row-compatible and recall-measured vs sign-LSH at sf0.001") {
-    import spark.implicits._
-    // constructed corpus (same shape as the q65 drop-path test): identical
-    // vectors share a cell by construction, so the index-backed candidates
-    // must surface the one true cross-text pair and nothing else
-    val a = Array.fill(64)(0.125f)
-    val b = Array.tabulate(64)(i => if (i < 32) 0.125f else -0.125f)
-    val d = Array.fill(64)(-0.125f)
-    val emb = Seq(
-      1L -> a, 2L -> a, 3L -> b, 4L -> b,
-      5L -> Array.tabulate(64)(i => if (i % 2 == 0) 0.125f else -0.125f),
-      6L -> d, 7L -> d
-    ).map { case (id, v) => (id, v.toSeq, 0) }
-    val docs = Seq(
-      (1L, "alpha shared text", "en"), (2L, "alpha shared text", "en"),
-      (3L, "bravo wording", "en"), (4L, "charlie other words", "fr"),
-      (5L, "delta", "en"),
-      (6L, null: String, "en"), (7L, "golf text", "en"))
-    val tmp = java.nio.file.Files.createTempDirectory("q65ivf").toString
-    emb.toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
-    docs.toDF("doc_id", "text", "lang")
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val idxTiny = java.nio.file.Files.createTempDirectory("q65ivfidx").toString
-    SimilarityQueries.buildIvfIndex(spark, tmp, idxTiny, cells = 4)
-    val gotTiny = SimilarityQueries
-      .semanticDedupFromIvfIndex(spark, tmp, idxTiny, probes = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getString(3), r.getString(4), r.getBoolean(5)))
-    assert(gotTiny.toSeq == Seq((3L, 4L, 1000000L, "en", "fr", false)),
-      gotTiny.toSeq)
-
-    // sf0.001: both generators are exact past candidates (subset of the
-    // brute-force truth set), rows they share are value-identical, and the
-    // index-backed recall clears the sweep-measured LSH recall
-    def quant(v: Array[Float]): Array[Long] =
-      v.map(x => math.round(x.toDouble * 1000))
-    val vs = vectors.map { case (id, v) => id -> quant(v) }
-    val texts = Tables.documents(spark, dir)
-      .select("doc_id", "text").collect()
-      .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
-    val ids = vs.keys.filter(texts.contains).toSeq.sorted
-    val truth = (for {
-      i <- ids.indices.iterator; j <- (i + 1 until ids.length).iterator
-      (ia, ib) = (ids(i), ids(j))
-      if texts(ia).isDefined && texts(ib).isDefined && texts(ia) != texts(ib)
-      dot = vs(ia).zip(vs(ib)).map { case (x, y) => x * y }.sum
-      if dot > SimilarityQueries.NearDupThreshold
-    } yield (ia, ib)).toSet
-    assert(truth.nonEmpty, "sf0.001 must contain cross-text near-dups")
-    val lsh = SimilarityQueries.q65SemanticDedup(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val idx = java.nio.file.Files.createTempDirectory("q65ivfsf").toString
-    SimilarityQueries.buildIvfIndex(spark, dir, idx)
-    val ivf = SimilarityQueries.semanticDedupFromIvfIndex(spark, dir, idx)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(lsh.subsetOf(truth), s"LSH emitted false pairs: ${lsh.diff(truth)}")
-    assert(ivf.subsetOf(truth), s"IVF emitted false pairs: ${ivf.diff(truth)}")
-    val (lshRecall, ivfRecall) =
-      (lsh.size.toDouble / truth.size, ivf.size.toDouble / truth.size)
-    assert(ivfRecall >= lshRecall,
-      f"IVF-index recall $ivfRecall%.3f must clear sign-LSH $lshRecall%.3f " +
-        s"(RecallSweep: 0.96 vs 0.22 at equal candidates)")
-    // row-compatibility: pairs surfaced by BOTH carry identical values
-    val lshRows = SimilarityQueries.q65SemanticDedup(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.toSeq).toMap
-    val ivfRows = SimilarityQueries.semanticDedupFromIvfIndex(spark, dir, idx)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.toSeq).toMap
-    val shared = lshRows.keySet.intersect(ivfRows.keySet)
-    assert(shared.nonEmpty)
-    assert(shared.forall(k => lshRows(k) == ivfRows(k)))
-  }
-
   test("IVF seeding clamps to min(cells, corpus size) with a warning (VERDICT r7 #7)") {
     import spark.implicits._
     // 3 vectors, cells=8: train 3 cells — one per vector after one Lloyd

@@ -12,20 +12,26 @@ import org.scalatest.funsuite.AnyFunSuite
 class WebCurationSpec extends AnyFunSuite with SparkTestSession {
   import spark.implicits._
 
+  /** q84 over a temp corpus of these (doc_id, text) rows, written as the
+    * `documents.parquet` table q84 reads. */
+  private def q84Of(df: org.apache.spark.sql.DataFrame): Array[Row] = {
+    val dir = java.nio.file.Files.createTempDirectory("q84").toString
+    df.write.parquet(s"$dir/documents.parquet")
+    WebCurationQueries.q84PiiRedact(spark, dir).collect()
+  }
+
   private def docs(rows: (Long, String)*) =
     rows.toDF("doc_id", "text")
 
   test("q84 enrichment strata produce exactly the expected per-type counts") {
     // doc 60 is divisible by 3,4,5,6 -> one of each; doc 7 by none; doc 9 email only
-    val out = WebCurationQueries.piiRedact(docs(60L -> "plain words", 7L -> "plain", 9L -> "x"))
-      .orderBy("doc_id").collect()
+    val out = q84Of(docs(60L -> "plain words", 7L -> "plain", 9L -> "x"))
     assert(out.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq ===
       Seq((7L, 0L, 0L, 0L, 0L), (9L, 1L, 0L, 0L, 0L), (60L, 1L, 1L, 1L, 1L)))
   }
 
   test("q84 redaction removes every injected PII token") {
-    val out = WebCurationQueries.piiRedact(docs((0L to 120L).map(i => i -> "w w w"): _*))
-      .collect()
+    val out = q84Of(docs((0L to 120L).map(i => i -> "w w w"): _*))
     out.foreach { r =>
       val red = r.getString(5)
       assert(!red.contains("@"), s"doc ${r.getLong(0)}: unredacted email in '$red'")
@@ -42,7 +48,7 @@ class WebCurationSpec extends AnyFunSuite with SparkTestSession {
   test("q84 drops null-text docs and handles negative doc_ids totally") {
     val df = Seq((java.lang.Long.valueOf(3L), null: String), (java.lang.Long.valueOf(-6L), "neg doc"))
       .toDF("doc_id", "text")
-    val out = WebCurationQueries.piiRedact(df).collect()
+    val out = q84Of(df)
     assert(out.map(_.getLong(0)).toSeq === Seq(-6L))  // no crash, null dropped
   }
 
@@ -158,22 +164,6 @@ class WebCurationSpec extends AnyFunSuite with SparkTestSession {
       .toDF("doc_id", "t")
       .select(WebCurationQueries.normalizeText(col("t"))).collect()(0).getString(0)
     assert(got == "the quick brownfox jumps 42 times")
-  }
-
-  test("q88 classifier flag tightens the quality gate monotonically") {
-    val dir = "/root/testdata/sf0.001"
-    val off = WebCurationQueries.q88WebCuration(spark, dir).collect()
-      .map(r => r.getString(0) -> r.getLong(3)).toMap
-    spark.conf.set(WebCurationQueries.UseClassifierConf, "true")
-    try {
-      val on = WebCurationQueries.q88WebCuration(spark, dir).collect()
-        .map(r => r.getString(0) -> r.getLong(3)).toMap
-      assert(on.keySet === off.keySet)
-      // rules AND model can only shrink the survivor count, and the
-      // model must actually bite somewhere on the real corpus
-      assert(on.forall { case (src, n) => n <= off(src) })
-      assert(on.values.sum < off.values.sum)
-    } finally spark.conf.unset(WebCurationQueries.UseClassifierConf)
   }
 
   test("q87 mean-word-len band is a strict integer comparison (no float drift)") {

@@ -1,85 +1,13 @@
 package graft.sources
 
 import graft.SparkTestSession
-import graft.operators.Tables
-import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.functions._
+import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
-/** Partitioned-write discipline: layout, file bounds, round-trip, and the
-  * plan-level proof that readback filters become partition pruning. */
-class SinksSpec extends AnyFunSuite with SparkTestSession with AdaptiveSparkPlanHelper {
-  private val dir = "/root/testdata/sf0.001"
-  private val out = Files.createTempDirectory("graft_sinks").toString
-
-  private lazy val written: Unit = Sinks.writePartitioned(
-    Tables.events(spark, dir), out, Seq("event_type"),
-    filesPerPartition = 2, maxRecordsPerFile = 100)
-
-  test("layout: one directory per partition value, bounded files inside") {
-    written
-    val dirs = Files.list(Paths.get(out)).iterator().asScala
-      .filter(p => Files.isDirectory(p)).map(_.getFileName.toString).toSet
-    assert(dirs == Set("click", "error", "purchase", "signup", "view")
-      .map(v => s"event_type=$v"))
-    dirs.foreach { d =>
-      val files = Files.list(Paths.get(out, d)).iterator().asScala
-        .count(_.getFileName.toString.endsWith(".parquet"))
-      // ~200 rows per type at sf0.001, cap 100/file, 2 salt buckets => 2..4
-      assert(files >= 2 && files <= 6, s"$d has $files files")
-    }
-  }
-
-  test("round-trip: partitioned copy equals the source") {
-    written
-    val src = Tables.events(spark, dir)
-    val back = spark.read.parquet(out)
-    assert(back.count() == src.count())
-    val a = src.groupBy(col("event_type")).agg(sum(col("value")).as("s"))
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val b = back.groupBy(col("event_type")).agg(sum(col("value")).as("s"))
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(a.keySet == b.keySet)
-    a.foreach { case (k, v) => assert(math.abs(v - b(k)) < 1e-6) }
-  }
-
-  test("readback filter on the partition column prunes at the plan level") {
-    written
-    val q = spark.read.parquet(out).filter(col("event_type") === "click")
-    val n = q.count()
-    assert(n > 0)
-    val scans = collectWithSubqueries(q.queryExecution.executedPlan) {
-      case s: FileSourceScanExec => s
-    }
-    assert(scans.nonEmpty)
-    val scan = scans.head
-    // the predicate must be a partition filter (directory pruning), not a
-    // data filter evaluated per row
-    assert(scan.partitionFilters.exists(_.toString.contains("event_type")),
-      s"partitionFilters=${scan.partitionFilters}")
-    // and the scan reads ONLY the matching directory's files
-    val selected = scan.relation.location.listFiles(scan.partitionFilters, Nil)
-      .flatMap(_.files).map(_.getPath.toString)
-    assert(selected.nonEmpty && selected.forall(_.contains("event_type=click")),
-      selected.mkString(", "))
-  }
-
-  test("compact collapses small files and preserves the data") {
-    import spark.implicits._
-    val p = Files.createTempDirectory("graft_compact").toString + "/t"
-    (1L to 1000L).toDF("value").repartition(40).write.parquet(p)
-    val before = spark.read.parquet(p)
-      .select("value").as[Long].collect().sorted.toSeq
-    val (nBefore, nAfter) = Sinks.compact(spark, p, targetRecordsPerFile = 600)
-    assert(nBefore >= 40, s"expected many small files, got $nBefore")
-    assert(nAfter == 2, s"1000 rows at 600/file must compact to 2, got $nAfter")
-    val after = spark.read.parquet(p)
-      .select("value").as[Long].collect().sorted.toSeq
-    assert(after == before)
-  }
+/** The exactly-once streaming sink and its batch-id keyed writers: replay
+  * and restart deliver each row once, and the sharded writer's layout
+  * follows the q73 manifest rule. */
+class SinksSpec extends AnyFunSuite with SparkTestSession {
 
   test("foreachBatch sink delivers exactly once across replays and restarts") {
     import spark.implicits._
@@ -148,37 +76,5 @@ class SinksSpec extends AnyFunSuite with SparkTestSession with AdaptiveSparkPlan
     Sinks.writeShardedBatchIdempotent(
       docs.take(25).toDF("doc_id", "text"), 0L, sink)
     assert(readBack().size == docs.size, "replayed batch must not duplicate")
-  }
-
-  test("compact preserves a partitioned layout: replay overwrite still " +
-      "replaces its own batch after compaction") {
-    import spark.implicits._
-    val p = Files.createTempDirectory("graft_compact_part").toString + "/t"
-    Sinks.writeBatchIdempotent(Seq(1L, 2L).toDF("value"), 0L, p)
-    Sinks.writeBatchIdempotent(Seq(3L, 4L).toDF("value"), 1L, p)
-    Sinks.compact(spark, p, targetRecordsPerFile = 100)
-    val dirs = Files.list(Paths.get(p)).iterator().asScala
-      .filter(d => Files.isDirectory(d)).map(_.getFileName.toString).toSet
-    assert(dirs == Set("batch_id=0", "batch_id=1"),
-      s"compaction must keep the Hive layout, got $dirs")
-    // the exactly-once contract survives: a replayed batch REPLACES its
-    // partition (a flattening compactor would leave the old rows behind)
-    Sinks.writeBatchIdempotent(Seq(1L, 2L).toDF("value"), 0L, p)
-    val vals = spark.read.parquet(p).select("value").as[Long]
-      .collect().toSeq.sorted
-    assert(vals == Seq(1L, 2L, 3L, 4L), s"replay after compact: $vals")
-  }
-
-  test("compact auto-recovers a swap stranded by a crash between renames") {
-    import spark.implicits._
-    val p = Files.createTempDirectory("graft_compact_crash").toString + "/t"
-    (1L to 10L).toDF("value").repartition(4).write.parquet(p)
-    // the crash window: live dir renamed away, compacted dir never landed
-    Files.move(Paths.get(p), Paths.get(p + "__old"))
-    val (_, after) = Sinks.compact(spark, p, targetRecordsPerFile = 100)
-    assert(after == 1, s"recovered dir must compact to one file, got $after")
-    val vals = spark.read.parquet(p).select("value").as[Long]
-      .collect().toSeq.sorted
-    assert(vals == (1L to 10L).toSeq)
   }
 }

@@ -1,41 +1,71 @@
 #!/usr/bin/env python3
-"""Caller scan: list the src/main members that no surface calls.
+"""Caller scan: list the src/main members that no surface reaches.
 
-For each `def` or `class` declared in src/main (lines with `override` are
-skipped), the member is printed when its name appears nowhere else in
-src/main — in no other file, and in its own file nowhere but on a
-declaration line — in no perfbench/scala file, and in no tools/ script.
-A private helper that its own file calls counts as called. Each printed
-line carries the member's count of src/test references, so a member only
-specs reach (a parity reference, a test seam) reads apart from one nothing
-reaches at all.
+A member is a `def`, `val`, `lazy val`, `var`, `object`, `class` or `trait`
+declared at the start of a line at template level in src/main: at the top
+of a file, or directly inside an `object`, `class` or `trait` (a
+declaration inside a `def` or `val` body is part of that body, not a
+member of its own). Its body is the declaration line and every following
+line indented deeper, plus same-indent closing brackets and continuation
+lines (`) {`, `.map`, `extends`, `else`, ...); a container's own body
+leaves out the bodies of its members.
+
+The scan is a reachability walk. Its roots are:
+  - every `def main`;
+  - `SparkEntry`'s `catalog`, `queries`, `oracleSql` and `entry`;
+  - every member that a perfbench/scala file names;
+  - the `graft.…` classes a tools/ script launches (a tools/ script counts
+    for nothing else, so a word like "compact" in a script hides nothing).
+A member is live when the body of a live member names it. A live member
+makes its containers live, and a live container makes its `override`
+and `implicit` members and its `apply`/`unapply`/`update` live, since the
+compiler or Spark calls those without naming them. Every member not
+reached is printed, with its count of src/test references, so a member
+only specs reach (a parity reference, a test seam) reads apart from one
+nothing reaches at all. A dead container is printed alone, not with each
+of its members.
 
 Scala sources are matched with their `//` and `/* */` comments (scaladoc
 included) stripped, so a name that only a comment mentions is not a
 caller. String and character literals are kept whole, so a `//` inside
 one (an `s3a://` path) does not start a comment; line numbers are kept.
-The match is by word: a name that another member shares still hides a
-caller-less member. tools/ scripts are matched as they are. The scan finds
-candidates; it does not prove a member live.
+The match is by word: a name that a live member shares still hides a
+dead member. The scan finds candidates; it does not prove a member live.
 
 Usage: python3 tools/caller_scan.py   (from anywhere; paths are relative
 to the repository root, the parent of this script's directory)
+Tests: python3 -m unittest discover -s tools -p 'test_*.py'
 """
 import pathlib
 import re
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
-DECL = re.compile(r"^(?!.*\boverride\b).*\b(?:def|class)\s+([A-Za-z_]\w*)", re.M)
+DECL = re.compile(
+    r"^[ \t]*(?:@\w+(?:\([^)\n]*\))?\s+)*"
+    r"((?:(?:private|protected)(?:\[\w+\])?\s+|override\s+|implicit\s+|final\s+"
+    r"|sealed\s+|abstract\s+|lazy\s+|case\s+)*)"
+    r"(def|val|var|object|class|trait)\s+([A-Za-z_]\w*)", re.M)
+WORD = re.compile(r"[A-Za-z_]\w*")
+CONTAINERS = {"object", "class", "trait"}
+# members the compiler calls without naming them at the call site
+IMPLICIT_CALLS = {"apply", "unapply", "unapplySeq", "update"}
+# a same-indent line that continues the member above it
+CONTINUATION = re.compile(
+    r"[)}\]]|\.|(?:extends|with|else|catch|finally|yield|match)\b|\|\||&&|=>")
+LAUNCH = re.compile(r"\bgraft\.(?:\w+\.)*(\w+)")
+ENTRY_ROOTS = {"catalog", "queries", "oracleSql", "entry"}
 # the next place a literal or a comment can start
 SPECIAL = re.compile(r"\"|'|/[/*]")
 # a character literal: 'a', '\n', '\u0041'
 CHAR = re.compile(r"'(?:\\u[0-9A-Fa-f]{4}|\\.|[^'\\\n])'")
 
 
-def strip_comments(src):
+def strip_comments(src, literals=None):
     """Scala source with its comments removed; each block comment leaves
-    its newlines behind, and string and character literals stay whole."""
-    out, i, n = [], 0, len(src)
+    its newlines behind, and string and character literals stay whole.
+    When `literals` is a list, the (start, end) offsets of every
+    multi-line string literal in the result are appended to it."""
+    out, size, i, n = [], 0, 0, len(src)
     while True:
         m = SPECIAL.search(src, i)
         if not m:
@@ -43,22 +73,28 @@ def strip_comments(src):
             return "".join(out)
         k = m.start()
         out.append(src[i:k])
+        size += k - i
         if src.startswith('"""', k):
             j = src.find('"""', k + 3)
             j = n if j < 0 else j + 3
             while j < n and src[j] == '"':  # a literal ending in quotes
                 j += 1
             out.append(src[k:j])
+            if literals is not None:
+                literals.append((size, size + j - k))
+            size += j - k
         elif src[k] == '"':
             j = k + 1
             while j < n and src[j] not in '"\n':
                 j += 2 if src[j] == "\\" else 1
             j = min(j + 1, n)
             out.append(src[k:j])
+            size += j - k
         elif src[k] == "'":
             c = CHAR.match(src, k)
             j = c.end() if c else k + 1
             out.append(src[k:j])
+            size += j - k
         elif src.startswith("//", k):
             j = src.find("\n", k)
             j = n if j < 0 else j
@@ -72,34 +108,146 @@ def strip_comments(src):
                 else:
                     j += 1
             out.append("\n" * src.count("\n", k, j))
+            size += src.count("\n", k, j)
         i = j
 
 
-def files(pattern):
-    return sorted(p for p in ROOT.glob(pattern) if p.is_file())
+class Member:
+    def __init__(self, path, line, kind, mods, name):
+        self.path, self.line, self.kind, self.name = path, line, kind, name
+        self.mods = mods.split()
+        self.end = line          # last line of the body (inclusive), 1-based
+        self.owner = None        # the enclosing member, None at file level
+        self.children = []       # template-level members declared inside
+        self.text = ""           # own body, members' bodies left out
+
+    def auto_live(self):
+        """Called without being named, once its container is live."""
+        return ("override" in self.mods or "implicit" in self.mods
+                or self.name in IMPLICIT_CALLS)
+
+
+def members_of(path, text, literals):
+    """The template-level members declared in one stripped source."""
+    lines = text.split("\n")
+    inside = set()  # 0-based lines that begin inside a multi-line literal
+    for a, b in literals:
+        first = text.count("\n", 0, a)
+        inside.update(range(first + 1, text.count("\n", 0, b) + 1))
+
+    def indent(i):
+        s = lines[i]
+        return None if i in inside or not s.strip() else len(s) - len(s.lstrip())
+
+    decls = []
+    for m in DECL.finditer(text):
+        line = text.count("\n", 0, m.start())
+        d = Member(path, line + 1, m.group(2), m.group(1), m.group(3))
+        own = indent(line)
+        j = line + 1
+        while j < len(lines):
+            ind = indent(j)
+            if ind is None or ind > own or (
+                    ind == own and CONTINUATION.match(lines[j].lstrip())):
+                j += 1
+                continue
+            break
+        while j - 1 > line and not lines[j - 1].strip():  # trailing blanks
+            j -= 1
+        d.end = j
+        decls.append(d)
+    # innermost enclosing declaration; only template-level ones are members
+    stack, found = [], []
+    for d in decls:
+        while stack and stack[-1].end < d.line:
+            stack.pop()
+        parent = stack[-1] if stack else None
+        stack.append(d)
+        if parent is not None and parent.kind not in CONTAINERS:
+            continue  # a local of a def/val body
+        if parent is not None and parent not in found:
+            continue  # nested in a local
+        d.owner = parent
+        if parent is not None:
+            parent.children.append(d)
+        found.append(d)
+    for d in found:
+        body = lines[d.line - 1:d.end]
+        for c in d.children:
+            for k in range(c.line - 1, c.end):
+                body[k - d.line + 1] = ""
+        d.text = "\n".join(body)
+    return found
+
+
+def files(root, pattern):
+    return sorted(p for p in root.glob(pattern) if p.is_file())
+
+
+def read_scala(path, literals=None):
+    return strip_comments(path.read_text(), literals)
+
+
+def scan(root):
+    """The report lines for the repository at `root`, in file order."""
+    members = []
+    for path in files(root, "src/main/**/*.scala"):
+        literals = []
+        text = read_scala(path, literals)
+        members += members_of(path, text, literals)
+    by_name = {}
+    for m in members:
+        by_name.setdefault(m.name, []).append(m)
+
+    live, work = set(), []
+
+    def mark(m):
+        if m in live:
+            return
+        live.add(m)
+        work.append(m)
+        if m.owner is not None:
+            mark(m.owner)
+
+    def mark_words(text):
+        for w in set(WORD.findall(text)):
+            for m in by_name.get(w, ()):
+                mark(m)
+
+    for m in members:
+        if m.kind == "def" and m.name == "main" or (
+                m.path.name == "SparkEntry.scala" and m.name in ENTRY_ROOTS
+                and m.owner is not None and m.owner.name == "SparkEntry"):
+            mark(m)
+    for path in files(root, "perfbench/scala/**/*.scala"):
+        mark_words(read_scala(path))
+    for path in files(root, "tools/*"):
+        for cls in set(LAUNCH.findall(path.read_text(errors="replace"))):
+            for m in by_name.get(cls, ()):
+                if m.kind in CONTAINERS:
+                    mark(m)
+    while work:
+        m = work.pop()
+        mark_words(m.text)
+        for c in m.children:
+            if c.auto_live():
+                mark(c)
+
+    tests = [read_scala(p) for p in files(root, "src/test/**/*.scala")]
+    out = []
+    for m in members:
+        if m in live or (m.owner is not None and m.owner not in live):
+            continue
+        word = re.compile(r"\b%s\b" % re.escape(m.name))
+        n_test = sum(len(word.findall(t)) for t in tests)
+        out.append(f"{m.path.relative_to(root)}:{m.line} {m.name} "
+                   f"(src/test references: {n_test})")
+    return out
 
 
 def main():
-    main_files = files("src/main/**/*.scala")
-    callers = files("perfbench/scala/**/*.scala") + files("tools/*")
-    tests = files("src/test/**/*.scala")
-    text = {p: p.read_text() for p in main_files + callers + tests}
-    text = {p: strip_comments(t) if p.suffix == ".scala" else t
-            for p, t in text.items()}
-    for path in main_files:
-        for m in DECL.finditer(text[path]):
-            name = m.group(1)
-            word = re.compile(r"\b%s\b" % re.escape(name))
-            decls = len(re.findall(
-                r"\b(?:def|class|object|val|var|type)\s+%s\b" % re.escape(name),
-                text[path]))
-            if len(word.findall(text[path])) > decls:
-                continue
-            if any(word.search(text[q]) for q in main_files + callers if q != path):
-                continue
-            n_test = sum(len(word.findall(text[q])) for q in tests)
-            line = text[path].count("\n", 0, m.start()) + 1
-            print(f"{path.relative_to(ROOT)}:{line} {name} (src/test references: {n_test})")
+    for line in scan(ROOT):
+        print(line)
 
 
 if __name__ == "__main__":

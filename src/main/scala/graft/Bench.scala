@@ -366,7 +366,7 @@ object Bench {
     // LAST stdout line: compact summary under the driver's ~2 KB tail
     // capture.
     println(compactSummary(results, failed, sf, loadBefore, loadAfter,
-      paired, cpus, sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")))
+      paired, cpus, spark.sparkContext.master))
     spark.stop()
   }
 }

@@ -191,17 +191,6 @@ object AnalyticsQueries {
     * the writer's layout cannot diverge. */
   val ShardHexDigits = 1
 
-  /** Q73 — deterministic shard manifest: the WRITER step of a training-data
-    * pipeline — every doc is assigned to one of 16^[[ShardHexDigits]]
-    * output shards by a pure hash of its key (decorrelated from doc_id
-    * order, so time- or source-clustered corpora spread uniformly), and the
-    * manifest records per-shard doc/token/char volume + language spread —
-    * the numbers a downstream loader needs to plan balanced reads. Hash
-    * sharding is the q50/q57 discipline again (stable across engines, runs,
-    * retries; a doc never changes shard when the corpus grows). One
-    * map-side-partial aggregate over 16^[[ShardHexDigits]] uniform groups;
-    * the actual write is `df.repartition(col("shard")).write.partitionBy("shard")`
-    * — same assignment expression, shuffle-partitioned by the same key. */
   /** The shard-assignment expression shared by the manifest (q73) and the
     * streaming shard writer
     * ([[graft.sources.Sinks.writeShardedBatchIdempotent]]): the first
@@ -318,6 +307,17 @@ object AnalyticsQueries {
        |    / 1000000000.0 / ns.n_s, 6) AS kl_nats
        |FROM agg a JOIN ns USING (shard), n ORDER BY a.shard NULLS FIRST""".stripMargin
 
+  /** Q73 — deterministic shard manifest: the WRITER step of a training-data
+    * pipeline — every doc is assigned to one of 16^[[ShardHexDigits]]
+    * output shards by a pure hash of its key (decorrelated from doc_id
+    * order, so time- or source-clustered corpora spread uniformly), and the
+    * manifest records per-shard doc/token/char volume + language spread —
+    * the numbers a downstream loader needs to plan balanced reads. Hash
+    * sharding is the q50/q57 discipline again (stable across engines, runs,
+    * retries; a doc never changes shard when the corpus grows). One
+    * map-side-partial aggregate over 16^[[ShardHexDigits]] uniform groups;
+    * the actual write is `df.repartition(col("shard")).write.partitionBy("shard")`
+    * — same assignment expression, shuffle-partitioned by the same key. */
   def q73ShardStats(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .filter(col("text").isNotNull)

@@ -512,14 +512,9 @@ object DedupQueries {
     * pathological pair a straggler task, so the verify is defined over a
     * fixed prefix (the published near-dup verifiers bound the comparison
     * window the same way). 512 covers every sf document today; the cap is
-    * the contract, not a truncation bug. `spark.graft.edit.prefix`
-    * re-parameterizes it per session (oracle pinned at the default, like
-    * spans.tokens and decontam.grams); plan shape is window-independent —
-    * only the per-pair DP cost changes, quadratically in the window. */
+    * the contract, not a truncation bug, and q79's oracle SQL pins the
+    * same window. */
   val EditPrefix = 512
-  private[graft] val EditPrefixKey = "spark.graft.edit.prefix"
-  private[graft] def editPrefix(spark: SparkSession): Int =
-    spark.conf.get(EditPrefixKey, EditPrefix.toString).toInt
 
   /** Q79 — edit-distance verification of the LSH candidate pairs: the
     * sequence-aware companion of q24's set-based Jaccard (3-shingle sets
@@ -553,7 +548,7 @@ object DedupQueries {
     val uniq = docs.groupBy(col("text")).agg(min(col("doc_id")).as("doc_id"))
     val signed = signedUniquesFor(spark, dir)
     val txt = uniq.select(col("doc_id"),
-      decode(encode(substring(col("text"), 1, editPrefix(spark)), "UTF-8"),
+      decode(encode(substring(col("text"), 1, EditPrefix), "UTF-8"),
         "ISO-8859-1").as("t"))
     val usim = candidatePairs(bands(signed))
       .join(txt.select(col("doc_id").as("doc_a"), col("t").as("ta")), "doc_a")
@@ -669,10 +664,8 @@ object DedupQueries {
     * edge set has at most this many rows it is collected and closed with
     * a driver-side union-find — two longs per row, so the default bounds
     * the collect at ~3 MB, the same order as the IVF/PQ codebook and BPE
-    * merge-table collects. Tunable per session (tests force 0 to exercise
-    * the distributed loop end-to-end). */
+    * merge-table collects. */
   val CcLocalThreshold = 200000L
-  private[graft] val CcLocalThresholdKey = "spark.graft.cc.localThreshold"
 
   /** Union-find (path-halving + union-by-min) over a bounded edge list:
     * returns node -> min node id of its component, for every node that
@@ -728,8 +721,9 @@ object DedupQueries {
     * union-find, replacing the tail of distributed rounds (3-4 jobs each,
     * moving kilobytes) with one collect + one broadcast join. Labels are
     * bit-identical either way (both paths compute the per-component min
-    * node id); DedupSpec pins the parity and the specs that exercise the
-    * distributed rounds force the threshold to 0.
+    * node id); DedupSpec pins the parity, and the specs that exercise the
+    * distributed rounds pass a `localThreshold` of 0 or 300 so a small
+    * graph still runs them.
     *
     * Per-round materialization goes through the shared
     * [[Materialize.materialize]] helper: `localCheckpoint` by default
@@ -739,12 +733,11 @@ object DedupQueries {
     * iterative job, while reliable checkpoints survive executor loss and
     * cap recovery at one round of recompute (r5, VERDICT r4 next-round #7;
     * generalized to every materialization site in r6). */
-  private[operators] def resolveClusters(pairs: DataFrame): DataFrame = {
+  private[operators] def resolveClusters(pairs: DataFrame,
+      localThreshold: Long = CcLocalThreshold): DataFrame = {
     val MaxRounds = 20
     import Materialize.materialize
     val spark = pairs.sparkSession
-    val localThreshold =
-      spark.conf.get(CcLocalThresholdKey, CcLocalThreshold.toString).toLong
     val edges = materialize(
       pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
@@ -863,18 +856,9 @@ object DedupQueries {
 
   /** Span length (in words) for exact-substring dedup — the usual published
     * setting is ~50 tokens; 8 keeps the synthetic corpus' near-dup families
-    * visible at sf0.01 while the plan shape is length-independent. Override
-    * per session with `spark.graft.spans.tokens` (VERDICT r6 #7) — the
-    * oracle entries pin the default, so the conf is for production runs
-    * and 50-token Bench runs, not the gate. */
+    * visible at sf0.01 while the plan shape is length-independent. The
+    * q71/q77 oracle SQL pins the same length. */
   val SpanTokens = 8
-  private[graft] val SpanTokensKey = "spark.graft.spans.tokens"
-
-  /** The session's span length: [[SpanTokens]] unless overridden. Plan
-    * shape (and therefore every scale property) is length-independent —
-    * only the ngram kernel's window width changes. */
-  private[graft] def spanTokens(spark: SparkSession): Int =
-    spark.conf.get(SpanTokensKey, SpanTokens.toString).toInt
 
   /** Flag threshold: a doc is `cloned` when >= 50% of its spans also occur
     * in some other document. */
@@ -925,8 +909,8 @@ object DedupQueries {
   private[graft] def spanDupFlags(docs: DataFrame): DataFrame = {
     val withSpans = docs.filter(col("text").isNotNull)
       .select(col("doc_id"),
-        array_distinct(graft.functions.WordNGrams(col("text"),
-          spanTokens(docs.sparkSession))).as("spans"))
+        array_distinct(graft.functions.WordNGrams(col("text"), SpanTokens))
+          .as("spans"))
       .filter(size(col("spans")) > 0)
     val totals = withSpans
       .select(col("doc_id"), size(col("spans")).cast("long").as("n_spans"))
@@ -993,20 +977,19 @@ object DedupQueries {
     spanDedup(Tables.documents(spark, dir)).orderBy(col("doc_id").asc)
 
   /** Positional per-occurrence span-hash stream — step 1 of q77. */
-  private[graft] def occurrenceSpans(docs: DataFrame, nTokens: Int): DataFrame =
+  private[graft] def occurrenceSpans(docs: DataFrame): DataFrame =
     docs.filter(col("text").isNotNull)
       .select(col("doc_id"),
-        posexplode(graft.functions.WordNGrams(col("text"), nTokens))
+        posexplode(graft.functions.WordNGrams(col("text"), SpanTokens))
           .as(Seq("spos", "span")))
       .select(col("doc_id"), col("spos"), md5(col("span")).as("h"))
 
   /** The drop stage over any document frame — (doc_id, n_words, n_removed,
     * cleaned_text), one row per non-null-text doc. */
   private[graft] def spanDedup(docs: DataFrame): DataFrame = {
-    val nTokens = spanTokens(docs.sparkSession)
     val text = docs.filter(col("text").isNotNull)
       .select(col("doc_id"), col("text"))
-    val spanStarts = occurrenceSpans(text, nTokens)
+    val spanStarts = occurrenceSpans(text)
     // "shared by >= 2 distinct docs" only needs min != max — a
     // single-phase, fully map-side-combinable aggregate, where
     // countDistinct(doc_id) paid a two-phase expand (r14 ruling)
@@ -1016,14 +999,14 @@ object DedupQueries {
       .filter(col("maxd") =!= col("keeper"))
       .select(col("h"), col("keeper"))
     removeCovered(text, spanStarts.join(census, "h")
-      .filter(col("doc_id") =!= col("keeper")), nTokens)
+      .filter(col("doc_id") =!= col("keeper")))
   }
 
   /** The rebuild stage of [[spanDedup]]: drop every word position a
     * removed occurrence (doc_id, spos) covers, given the (doc_id, text)
     * rows. */
-  private[graft] def removeCovered(text: DataFrame, removedOcc: DataFrame,
-      nTokens: Int): DataFrame = {
+  private[graft] def removeCovered(text: DataFrame,
+      removedOcc: DataFrame): DataFrame = {
     // Rebuild stage (r14, VERDICT r13 #5): the document never needs
     // EXPLODING to drop positions. The r10-r13 form materialized the full
     // positional word stream (corpus-token-scale rows), anti-joined it
@@ -1041,7 +1024,7 @@ object DedupQueries {
     // (1.59x) — both inside the 2x bar (VERDICT r13 #5 closed).
     val removeSets = removedOcc
       .select(col("doc_id"),
-        explode(sequence(col("spos"), col("spos") + lit(nTokens - 1)))
+        explode(sequence(col("spos"), col("spos") + lit(SpanTokens - 1)))
           .as("pos"))
       .groupBy(col("doc_id"))
       .agg(collect_set(col("pos")).as("rm"))
@@ -1093,7 +1076,7 @@ object DedupQueries {
     val census = Tables.documents(spark, dir)
       .filter(col("text").isNotNull)
       .select(col("source"), explode(array_distinct(
-        graft.functions.WordNGrams(col("text"), spanTokens(spark)))).as("span"))
+        graft.functions.WordNGrams(col("text"), SpanTokens))).as("span"))
       .select(col("source"), md5(col("span")).as("h"))
       .groupBy(col("h"))
       .agg(array_sort(collect_set(col("source"))).as("srcs"))
@@ -1397,23 +1380,15 @@ object DedupQueries {
     * the plain anti-join form. The `mightContainString` probe is a Scala
     * UDF deliberately: Spark's BloomFilterMightContain expression is
     * internal to runtime filtering and not a public surface, and the probe
-    * sits on the already-narrow arrival side, outside any shuffle.
-    *
-    * `expectedKeys` sizes the filter without an extra counting pass when
-    * the caller knows the corpus cardinality (at 100 TB it comes from table
-    * stats); <= 0 falls back to one count() job. */
+    * sits on the already-narrow arrival side, outside any shuffle. */
   private[graft] def bloomGatedMembership(spark: SparkSession,
-      probes: DataFrame, keys: DataFrame,
-      expectedKeys: Long = -1L): DataFrame = {
-    // stat.bloomFilter NPEs on a zero-row frame (null aggregation buffer),
-    // and an empty corpus has no members anyway — the emptiness check is a
-    // limit-1 job, NOT trusted to expectedKeys (stale table stats with a
-    // truncated table would otherwise hit the NPE path)
-    if (keys.isEmpty) {
-      probes.select(col("doc_id"), lit(false).as("is_dup"))
-    } else {
-      val n = if (expectedKeys > 0) expectedKeys else keys.count()
-    val bf = keys.stat.bloomFilter("tkey", math.max(n, 1L), BloomFpp)
+      probes: DataFrame, keys: DataFrame): DataFrame = {
+    // one count() sizes the filter; stat.bloomFilter NPEs on a zero-row
+    // frame (null aggregation buffer), and an empty corpus has no members
+    // anyway
+    val n = keys.count()
+    if (n == 0L) return probes.select(col("doc_id"), lit(false).as("is_dup"))
+    val bf = keys.stat.bloomFilter("tkey", n, BloomFpp)
     val bcast = spark.sparkContext.broadcast(bf)
     val mightContain = udf((k: String) => k != null && bcast.value.mightContainString(k))
     val maybeKeys = probes.filter(mightContain(col("tkey")))
@@ -1426,7 +1401,6 @@ object DedupQueries {
       .join(confirmed, Seq("tkey"), "left")
       .select(col("doc_id"),
         coalesce(col("is_dup"), lit(false)).as("is_dup"))
-    }
   }
 
   /** Q81 — PRIORITY-aware canonical selection: within each exact-duplicate

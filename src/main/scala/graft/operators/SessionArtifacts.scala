@@ -34,7 +34,7 @@ object SessionArtifacts {
   val Quantized = Kind("quantized", "embeddings")
   val EncodedPq = Kind("encoded_pq", "embeddings")
   val PqCodebooks = Kind("pq_codebooks", "embeddings")
-  def tokenizer(rounds: Int): Kind = Kind(s"tokenizer_r$rounds", "documents")
+  val Tokenizer = Kind("tokenizer", "documents")
 
   private final case class Entry(stamp: Seq[(String, Long, Long)], value: Any, pins: Seq[RDD[_]])
 

@@ -201,30 +201,27 @@ object SimilarityQueries {
   val PqK = 16
   val PqRerank = 8
 
-  /** Lloyd training: `rounds` assign -> exact-integer-centroid steps
-    * through [[graft.functions.CentroidAggregator]] from the deterministic
-    * seed codebook. Every catalog entry trains rounds = 1 (seed + one
-    * step), the q42 oracle's pinned configuration; more rounds give
-    * tighter cells, and SimilaritySpec runs 1-4. Exact integer math at
-    * every step, so training is bit-deterministic (no RNG, no float drift;
-    * the only rounding is the centroid's truncating milli-unit division,
-    * sub-ulp relative to cell distances). Each round is one codegen'd
+  /** Codebook training: the deterministic seed codebook plus ONE Lloyd
+    * assign -> exact-integer-centroid step through
+    * [[graft.functions.CentroidAggregator]], the q42 oracle's pinned
+    * configuration. Exact integer math throughout, so training is
+    * bit-deterministic (no RNG, no float drift; the only rounding is the
+    * centroid's truncating milli-unit division, sub-ulp relative to cell
+    * distances). The step is one codegen'd
     * [[graft.functions.NearestCellLong]] assignment projection over the
     * corpus plus one cells-row aggregate collect — the codebook stays
     * driver-side small, the train-on-sample/broadcast-codebook shape that
     * holds at 100 TB. Cells that lose all members drop out (standard Lloyd
-    * on fixed seeds). SimilaritySpec pins the within-cell quantization
-    * objective as non-increasing over rounds.
+    * on fixed seeds).
     *
-    * Measured caveat (artifacts/RECALL_SWEEP_r10.json, `ivf-lloyd`, sf0.1):
+    * Why one step (artifacts/RECALL_SWEEP_r10.json, `ivf-lloyd`, sf0.1):
     * on ISOTROPIC vectors more rounds give a better codebook but WORSE
     * fixed-budget recall (0.87 -> 0.81 at rounds 1 -> 8, cells=16/probes=2,
     * flat candidates) — tighter cells overlap less, so a fixed probe count
-    * explores less of each query's neighborhood. Refinement pays off on
-    * genuinely clustered production embeddings; on unstructured corpora
-    * spend the budget on probes/cells instead. */
-  private[graft] def trainCodebook(emb: DataFrame, cells: Int,
-      rounds: Int): Array[(Int, Array[Long])] = {
+    * explores less of each query's neighborhood. On unstructured corpora
+    * the budget belongs to probes/cells instead. */
+  private[graft] def trainCodebook(emb: DataFrame,
+      cells: Int): Array[(Int, Array[Long])] = {
     // Seed id-space-independently: the lowest `cells` vec_ids via one
     // bounded TakeOrderedAndProject job — NOT `vec_id < cells`. Production
     // id spaces (snowflake ids, sharded offsets) don't start near 0; the
@@ -250,18 +247,12 @@ object SimilarityQueries {
         s"[ivf] corpus has only ${seeds.length} vectors for $cells cells; " +
           s"training ${seeds.length} cells")
     val centroid = udaf(graft.functions.CentroidAggregator)
-    var cb = seeds
-    var r = 0
-    while (r < rounds) {
-      cb = emb.withColumn("cell", nearestCellExpr(cb))
-        .groupBy(col("cell"))
-        .agg(centroid(col("embedding")).as("c"))
-        .collect()
-        .map(row => (row.getInt(0), row.getSeq[Long](1).toArray))
-        .sortBy(_._1)
-      r += 1
-    }
-    cb
+    emb.withColumn("cell", nearestCellExpr(seeds))
+      .groupBy(col("cell"))
+      .agg(centroid(col("embedding")).as("c"))
+      .collect()
+      .map(row => (row.getInt(0), row.getSeq[Long](1).toArray))
+      .sortBy(_._1)
   }
 
   /** Distance-ranked (distance, cell) structs for every centroid — each
@@ -323,7 +314,7 @@ object SimilarityQueries {
     // overhead). At 100 TB the codebook trains on a SAMPLE, so the big scan
     // runs once either way — this aligns the local shape with that.
     val emb = quantizedFor(spark, dir)
-    val centroids = trainCodebook(emb, cells, 1)
+    val centroids = trainCodebook(emb, cells)
     if (centroids.isEmpty) {
       // empty corpus: no seeds -> no codebook; an empty probe array would
       // type as VOID and fail analysis (EmptyInputSpec)
@@ -425,7 +416,7 @@ object SimilarityQueries {
     * broadcast crossJoin (the q109 discipline). */
   def q114IvfBalance(spark: SparkSession, dir: String): DataFrame = {
     val emb = quantizedFor(spark, dir)
-    val centroids = trainCodebook(emb, IvfCells, 1)
+    val centroids = trainCodebook(emb, IvfCells)
     if (centroids.isEmpty) {
       import spark.implicits._
       return Seq.empty[(Long, Long, Long)].toDF("cell", "n_vecs", "share_milli")
@@ -621,7 +612,7 @@ object SimilarityQueries {
     // serving window (VERDICT r13 #3), and (cell, 8 code argmins) per
     // vector is the pipeline's expensive projection
     val (coarse, pq) = SessionArtifacts.value(spark, SessionArtifacts.PqCodebooks, dir)(
-      (trainCodebook(emb, IvfCells, 1), trainPqCodebooks(emb)))
+      (trainCodebook(emb, IvfCells), trainPqCodebooks(emb)))
     if (coarse.isEmpty || pq.isEmpty) return emptyPqResult(spark)
     val corpus = SessionArtifacts.frame(spark, SessionArtifacts.EncodedPq, dir)(
       encodePq(emb, coarse, pq).withColumnRenamed("vec_id", "neighbor_id"))

@@ -331,18 +331,14 @@ object TextQueries {
   val DecontamMod = 10L
   val DecontamRes = 7L
 
-  /** Q66 — benchmark decontamination: for every training document, count the
-    * distinct word-3-grams it shares with the held-out benchmark set — the
-    * pre-training step that keeps eval data out of the training corpus
-    * (n-gram overlap is the standard contamination test). Plan shape:
-    * 3-grams via the native [[graft.functions.WordNGrams]] kernel riding
-    * the scan, per-doc array_distinct
-    * BEFORE the explode (caps the exploded stream at distinct grams),
-    * benchmark grams distinct-ed then BROADCAST — eval suites are MBs even
-    * when the corpus is 100 TB, so the contamination probe is a map-side
-    * hash lookup; the only shuffles are the two per-doc count aggregates on
-    * uniform doc_id keys. Integer hit-rate (permille, truncating DIV) keeps
-    * the output hash-checkable. */
+  /** Gram length for the decontamination family, the length q66's oracle
+    * SQL pins (short grams are the sf-testdata-visible setting; published
+    * decontamination runs 8–13-word grams, GPT-3's 13-gram overlap filter
+    * and its descendants). Plan shape is length-independent: longer grams
+    * mean FEWER rows after the per-doc distinct (fewer docs clear the
+    * n-word floor) and a smaller benchmark gram set to broadcast. */
+  val DecontamGrams = 3
+
   /** (doc_id, gram) stream of per-document DISTINCT word-3-grams — the
     * contamination probe's unit of comparison. One codegen'd projection
     * over the native [[graft.functions.WordNGrams]] kernel (r5: replaced
@@ -350,22 +346,11 @@ object TextQueries {
     * interpreted lambdas per gram per doc; the kernel emits zero-copy byte
     * slices in one scan). Rides the scan; works identically on a batch or
     * streaming frame; short/empty docs vanish at the explode. */
-  /** Gram length for the decontamination family. Default 3 — the oracle
-    * pin (short grams are the sf-testdata-visible setting); published
-    * decontamination runs 8–13-word grams (GPT-3's 13-gram overlap filter
-    * and its descendants), one conf away. Plan shape is
-    * length-independent: longer grams mean FEWER rows after the per-doc
-    * distinct (fewer docs clear the n-word floor) and a smaller benchmark
-    * gram set to broadcast. */
-  private[graft] val DecontamGramsKey = "spark.graft.decontam.grams"
-  private[graft] def decontamGrams(df: DataFrame): Int =
-    df.sparkSession.conf.get(DecontamGramsKey, "3").toInt
-
   def docGrams3(docs: DataFrame): DataFrame =
     docs
       .filter(col("text").isNotNull)
       .select(col("doc_id"), explode(array_distinct(
-        graft.functions.WordNGrams(col("text"), decontamGrams(docs)))).as("gram"))
+        graft.functions.WordNGrams(col("text"), DecontamGrams))).as("gram"))
 
   /** Distinct word-3-gram set of a benchmark/eval frame — needs only a
     * `text` column, so ANY external eval-suite table (its own parquet, a
@@ -374,7 +359,7 @@ object TextQueries {
   def benchmarkGrams(benchmark: DataFrame): DataFrame =
     benchmark.filter(col("text").isNotNull)
       .select(explode(array_distinct(
-        graft.functions.WordNGrams(col("text"), decontamGrams(benchmark)))).as("gram"))
+        graft.functions.WordNGrams(col("text"), DecontamGrams))).as("gram"))
       .distinct()
 
   /** Per-train-doc contamination counts against an EXTERNAL benchmark
@@ -394,6 +379,18 @@ object TextQueries {
         col("n_grams"))
   }
 
+  /** Q66 — benchmark decontamination: for every training document, count the
+    * distinct word-3-grams it shares with the held-out benchmark set — the
+    * pre-training step that keeps eval data out of the training corpus
+    * (n-gram overlap is the standard contamination test). Plan shape:
+    * 3-grams via the native [[graft.functions.WordNGrams]] kernel riding
+    * the scan, per-doc array_distinct
+    * BEFORE the explode (caps the exploded stream at distinct grams),
+    * benchmark grams distinct-ed then BROADCAST — eval suites are MBs even
+    * when the corpus is 100 TB, so the contamination probe is a map-side
+    * hash lookup; the only shuffles are the two per-doc count aggregates on
+    * uniform doc_id keys. Integer hit-rate (permille, truncating DIV) keeps
+    * the output hash-checkable. */
   def q66Decontamination(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val bench = docs.filter(col("doc_id") % DecontamMod === DecontamRes)
@@ -644,7 +641,7 @@ object TextQueries {
   // ---- The persisted tokenizer ARTIFACT (train-once / apply-many) ----
 
   /** One trained BPE merge, in application order. The whole tokenizer is
-    * `rounds` of these — a bounded artifact like an IVF codebook. */
+    * ≤ [[BpeRounds]] of these — a bounded artifact like an IVF codebook. */
   final case class BpeMerge(step: Int, pair: String, merged: String, n: Long)
 
   /** Set to a directory to make q104/q106/q108 apply a FROZEN tokenizer
@@ -657,14 +654,14 @@ object TextQueries {
     * tokenizer artifact — the [[DedupQueries.buildNearDupIndex]]
     * build-once discipline applied to the tokenizer (VERDICT r10 #1): the
     * expensive pass (N census rounds over the vocabulary) runs ONCE at
-    * build time; every downstream consumer loads ≤ `rounds` rows and is
-    * pure apply. coalesce(1): the artifact is ≤ `rounds` rows. */
+    * build time; every downstream consumer loads ≤ [[BpeRounds]] rows and
+    * is pure apply. coalesce(1): the artifact is ≤ [[BpeRounds]] rows. */
   def buildBpeTokenizer(spark: SparkSession, dir: String,
-      tokenizerDir: String, rounds: Int = BpeRounds): Unit =
-    bpeTrain(Tables.documents(spark, dir).filter(col("text").isNotNull), rounds)
+      tokenizerDir: String): Unit =
+    q101BpeTrain(spark, dir)
       .coalesce(1).write.mode("overwrite").parquet(s"$tokenizerDir/merges")
 
-  /** Load a persisted tokenizer: ≤ `rounds` rows, ordered by step — the
+  /** Load a persisted tokenizer: ≤ [[BpeRounds]] rows, ordered by step — the
     * bounded-collect discipline (an IVF codebook read, not a data read). */
   def loadBpeMerges(spark: SparkSession, tokenizerDir: String): Seq[BpeMerge] =
     spark.read.parquet(s"$tokenizerDir/merges")
@@ -685,13 +682,11 @@ object TextQueries {
     * with the same tokenizer; retraining inline cost them 3 × 8 Materialize
     * rounds in their timed windows (VERDICT r10 #1). q101, whose job is to
     * time training, calls [[bpeTrain]] directly. */
-  private[graft] def tokenizerFor(spark: SparkSession, dir: String,
-      rounds: Int): Seq[BpeMerge] =
+  private[graft] def tokenizerFor(spark: SparkSession, dir: String): Seq[BpeMerge] =
     spark.conf.getOption(BpeDirKey) match {
       case Some(td) => loadBpeMerges(spark, td)
-      case None => SessionArtifacts.value(spark, SessionArtifacts.tokenizer(rounds), dir)(
-        bpeTrain(Tables.documents(spark, dir).filter(col("text").isNotNull), rounds)
-          .collect().map(rowToMerge).toSeq)
+      case None => SessionArtifacts.value(spark, SessionArtifacts.Tokenizer, dir)(
+        q101BpeTrain(spark, dir).collect().map(rowToMerge).toSeq)
     }
 
   /** The q104 catalog body: resolve the tokenizer (artifact / cache),
@@ -699,7 +694,7 @@ object TextQueries {
   private[graft] def bpeEncode(spark: SparkSession, dir: String): DataFrame =
     bpeTokenCountsWith(
       Tables.documents(spark, dir).filter(col("text").isNotNull),
-      tokenizerFor(spark, dir, BpeRounds))
+      tokenizerFor(spark, dir))
       .orderBy(col("doc_id"))
 
   /** Train-inline form kept for specs that exercise constructed corpora
@@ -843,7 +838,7 @@ object TextQueries {
     * — the shard manifest a packing job writes. */
   def q108TokenPacking(spark: SparkSession, dir: String): DataFrame =
     tokenPackingWith(Tables.documents(spark, dir).filter(col("text").isNotNull),
-      tokenizerFor(spark, dir, BpeRounds), TokenPackBudget)
+      tokenizerFor(spark, dir), TokenPackBudget)
 
   /** Train-inline form for constructed-corpus specs. */
   private[graft] def tokenPacking(docs: DataFrame, rounds: Int,
@@ -902,7 +897,7 @@ object TextQueries {
   def q106TokenizerFertility(spark: SparkSession, dir: String): DataFrame =
     tokenizerFertilityWith(
       Tables.documents(spark, dir).filter(col("text").isNotNull),
-      tokenizerFor(spark, dir, BpeRounds))
+      tokenizerFor(spark, dir))
 
   /** Train-inline form for constructed-corpus specs. */
   private[graft] def tokenizerFertility(docs: DataFrame, rounds: Int): DataFrame =

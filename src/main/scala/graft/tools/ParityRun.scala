@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.core._
 import graft.kernel.Estimator
-import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.{Encoders, SparkSession}
 
 /** Scala half of the randomized differential parity harness
   * (tools/parity_diff.py drives it; VERDICT r7 next-round #1).
@@ -40,18 +40,23 @@ object ParityRun {
         }
     }
 
+  /** The sweep: one outcome JSON line per case of the JSONL (optionally
+    * gzipped) file at `inPath`. */
+  def sweep(spark: SparkSession, inPath: String): Array[String] = {
+    import spark.implicits._
+    spark.read
+      .schema(Encoders.product[ParityCase].schema)
+      .json(inPath)
+      .as[ParityCase]
+      .map(runOne).toJSON.collect()
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: ParityRun <inputs.jsonl> <outputs.jsonl>")
     val Array(inPath, outPath) = args
     val cpus = graft.Env.cpus
     val spark = graft.Sessions.build(s"local[$cpus]", cpus, "graft-parity")
-    import spark.implicits._
-
-    val cases = spark.read
-      .schema(Encoders.product[ParityCase].schema)
-      .json(inPath)
-      .as[ParityCase]
-    val outs = cases.map(runOne).toJSON.collect()
+    val outs = sweep(spark, inPath)
 
     java.nio.file.Files.write(
       java.nio.file.Paths.get(outPath),

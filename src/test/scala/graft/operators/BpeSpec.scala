@@ -222,18 +222,18 @@ class BpeSpec extends AnyFunSuite with SparkTestSession {
   test("session tokenizer cache is a pure memoization of training") {
     val dir = "/root/testdata/sf0.001"
     SessionArtifacts.clear()
-    val cached = TextQueries.tokenizerFor(spark, dir, TextQueries.BpeRounds)
+    val cached = TextQueries.tokenizerFor(spark, dir)
     assert(cached === trainMerges(dir))
     // second resolve returns the identical artifact without retraining
-    assert(TextQueries.tokenizerFor(spark, dir, TextQueries.BpeRounds) eq cached)
+    assert(TextQueries.tokenizerFor(spark, dir) eq cached)
     // per session: another session misses, the original still hits
-    val kind = SessionArtifacts.tokenizer(TextQueries.BpeRounds).name
+    val kind = SessionArtifacts.Tokenizer.name
     def count(i: Int) = SessionArtifacts.counters(kind)(i)
     val (hits, misses) = (count(0), count(1))
     val other = spark.newSession()
-    assert(TextQueries.tokenizerFor(other, dir, TextQueries.BpeRounds) === cached)
+    assert(TextQueries.tokenizerFor(other, dir) === cached)
     assert((count(0), count(1)) == ((hits, misses + 1)))
-    assert(TextQueries.tokenizerFor(spark, dir, TextQueries.BpeRounds) eq cached)
+    assert(TextQueries.tokenizerFor(spark, dir) eq cached)
     assert((count(0), count(1)) == ((hits + 1, misses + 1)))
     SessionArtifacts.invalidate(other, dir)
   }

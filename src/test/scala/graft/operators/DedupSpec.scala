@@ -32,21 +32,20 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
   private def docSpans(docs: DataFrame): DataFrame =
     docs.filter(F.col("text").isNotNull)
       .select(F.col("doc_id"), F.explode(F.array_distinct(graft.functions.WordNGrams(
-        F.col("text"), DedupQueries.spanTokens(docs.sparkSession)))).as("span"))
+        F.col("text"), DedupQueries.SpanTokens))).as("span"))
       .select(F.col("doc_id"), F.md5(F.col("span")).as("h"))
 
   /** q77's window twin: keeper and duplicated-ness from window aggregates
     * over the h-partition instead of the census rejoin, then the same
     * rebuild stage as [[DedupQueries.spanDedup]]. */
   private def spanDedupWindow(docs: DataFrame): DataFrame = {
-    val nTokens = DedupQueries.spanTokens(docs.sparkSession)
     val text = docs.filter(F.col("text").isNotNull).select(F.col("doc_id"), F.col("text"))
     val w = Window.partitionBy(F.col("h"))
-    val removed = DedupQueries.occurrenceSpans(text, nTokens)
+    val removed = DedupQueries.occurrenceSpans(text)
       .withColumn("keeper", F.min(F.col("doc_id")).over(w))
       .withColumn("maxd", F.max(F.col("doc_id")).over(w))
       .filter(F.col("maxd") =!= F.col("keeper") && F.col("doc_id") =!= F.col("keeper"))
-    DedupQueries.removeCovered(text, removed, nTokens)
+    DedupQueries.removeCovered(text, removed)
   }
 
   /** The un-gated twin of [[DedupQueries.q80BloomDedup]]: plain
@@ -357,16 +356,13 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     // contraction must collapse it within O(log n) rounds. Threshold 0
     // forces the distributed loop (the default would local-finish a
     // 500-edge graph immediately and test nothing).
-    spark.conf.set(DedupQueries.CcLocalThresholdKey, "0")
-    try {
-      val chain = (0L until 500L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-      val got = DedupQueries.resolveClusters(chain).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
-      assert(got.length == 501)
-      assert(got.forall(_._2 == 0L), "every node must reach cluster 0")
-      assert(got.forall(_._3 == 501L))
-      assert(got.count(_._4) == 1 && got.find(_._4).get._1 == 0L)
-    } finally spark.conf.unset(DedupQueries.CcLocalThresholdKey)
+    val chain = (0L until 500L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val got = DedupQueries.resolveClusters(chain, localThreshold = 0L).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
+    assert(got.length == 501)
+    assert(got.forall(_._2 == 0L), "every node must reach cluster 0")
+    assert(got.forall(_._3 == 501L))
+    assert(got.count(_._4) == 1 && got.find(_._4).get._1 == 0L)
   }
 
   test("local union-find finish is output-identical to the distributed " +
@@ -382,12 +378,9 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     val local = DedupQueries.resolveClusters(pairs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
       .sortBy(_._1)
-    spark.conf.set(DedupQueries.CcLocalThresholdKey, "0")
-    val dist =
-      try DedupQueries.resolveClusters(pairs).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
-        .sortBy(_._1)
-      finally spark.conf.unset(DedupQueries.CcLocalThresholdKey)
+    val dist = DedupQueries.resolveClusters(pairs, localThreshold = 0L).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
+      .sortBy(_._1)
     assert(local.toSeq == dist.toSeq)
     assert(local.find(_._1 == 1000L).get._2 == 700L, "min id is the root")
   }
@@ -399,14 +392,11 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     // it, so the loop runs distributed rounds until contraction shrinks
     // the graph under 300 rows, then the union-find closes it — the exact
     // at-scale trajectory. Output must match the pure-distributed run.
-    spark.conf.set(DedupQueries.CcLocalThresholdKey, "300")
-    try {
-      val chain = (0L until 500L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-      val got = DedupQueries.resolveClusters(chain).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
-      assert(got.length == 501)
-      assert(got.forall(_._2 == 0L) && got.forall(_._3 == 501L))
-    } finally spark.conf.unset(DedupQueries.CcLocalThresholdKey)
+    val chain = (0L until 500L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val got = DedupQueries.resolveClusters(chain, localThreshold = 300L).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
+    assert(got.length == 501)
+    assert(got.forall(_._2 == 0L) && got.forall(_._3 == 501L))
   }
 
   test("collapse-first q24 equals the naive per-id-pair formulation on a " +
@@ -667,11 +657,11 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     assert(plan.contains("HashAggregate"), plan)
   }
 
-  test("spark.graft.spans.tokens re-parameterizes q71/q77 span length " +
-      "(oracle default 8 untouched)") {
+  test("q71/q77 spans are SpanTokens = 8 words: a shared 4-word passage " +
+      "is no duplicated span") {
     import spark.implicits._
-    // two docs sharing a 4-word passage: invisible at the default 8-token
-    // span, caught at tokens=4
+    // two docs sharing a 4-word passage: below the 8-token span, so
+    // neither is flagged and q77 removes nothing
     val tmp = java.nio.file.Files.createTempDirectory("spantok").toString
     Seq(
       (1L, "shared four word span plus tail one"),
@@ -681,17 +671,9 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     val at8 = DedupQueries.q71ExactSpans(spark, tmp).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toMap
     assert(at8.values.forall(_ == 0L), s"no 8-token span is shared: $at8")
-    spark.conf.set(DedupQueries.SpanTokensKey, "4")
-    try {
-      val at4 = DedupQueries.q71ExactSpans(spark, tmp).collect()
-        .map(r => (r.getLong(0), r.getLong(2))).toMap
-      assert(at4(1L) >= 1L && at4(2L) >= 1L,
-        s"the 4-word passage must count as duplicated at tokens=4: $at4")
-      val dedup = DedupQueries.q77SpanDedup(spark, tmp).collect()
-        .map(r => (r.getLong(0), r.getLong(2))).toMap
-      // doc 1 is the keeper (min doc_id): doc 2 loses the 4 covered words
-      assert(dedup(1L) == 0L && dedup(2L) == 4L, s"$dedup")
-    } finally spark.conf.unset(DedupQueries.SpanTokensKey)
+    val dedup = DedupQueries.q77SpanDedup(spark, tmp).collect()
+      .map(r => (r.getLong(0), r.getLong(2))).toMap
+    assert(dedup == Map(1L -> 0L, 2L -> 0L), s"$dedup")
   }
 
   test("q77 census and window formulations are row-identical on the real corpus") {
@@ -788,24 +770,20 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
-  test("spark.graft.edit.prefix re-parameterizes the verify window " +
-      "(oracle default 512 untouched)") {
+  test("q79 verifies the first EditPrefix = 512 chars: a divergence past " +
+      "the window scores sim 1000") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("editpfx").toString
     // identical first ~600 chars (100 shared words), doc 2 differs only in
-    // the final word: inside the default 512-char window the texts look
-    // identical (sim 1000); a window past the divergence sees the edit
+    // the final word: inside the 512-char window the texts look identical
     val shared = (0 until 100).map(i => f"word$i%03d").mkString(" ")
     Seq((1L, s"$shared tail"), (2L, s"$shared differs"))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    def sim(): Long = DedupQueries.q79EditVerify(spark, tmp).collect()
+    val sim = DedupQueries.q79EditVerify(spark, tmp).collect()
       .map(r => r.getLong(2)).headOption.getOrElse(
         fail("expected the pair to be an LSH candidate"))
-    assert(sim() == 1000L, "identical inside the default window")
-    spark.conf.set(DedupQueries.EditPrefixKey, "2000")
-    try assert(sim() < 1000L, "the divergent tail is inside a 2000-char window")
-    finally spark.conf.unset(DedupQueries.EditPrefixKey)
+    assert(sim == 1000L, "identical inside the 512-char window")
   }
 
   test("priority canonical selection keeps the best-SOURCE copy, not the " +
@@ -851,15 +829,14 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     assert(census == flags(canonicalFlagWindow(docs, priority)), "forms must agree")
   }
 
-  test("bloom membership with stale expectedKeys over an actually-empty " +
-      "corpus returns all-new instead of NPEing") {
+  test("bloom membership over an empty corpus returns all-new instead " +
+      "of NPEing") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col => c, md5 => m}
     val probes = Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text")
       .select(c("doc_id"), m(c("text")).as("tkey"))
     val empty = Seq.empty[String].toDF("tkey")
-    val got = DedupQueries.bloomGatedMembership(spark, probes, empty,
-        expectedKeys = 1000000000L)
+    val got = DedupQueries.bloomGatedMembership(spark, probes, empty)
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toMap
     assert(got == Map(1L -> false, 2L -> false))
   }

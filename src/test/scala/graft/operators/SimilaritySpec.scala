@@ -207,7 +207,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestSession {
     val warm = SimilarityQueries.q82IvfPqAnn(spark, dir).collect()
       .map(_.toString).toSeq
     DedupQueries.signedUniquesFor(spark, dir)
-    TextQueries.tokenizerFor(spark, dir, TextQueries.BpeRounds)
+    TextQueries.tokenizerFor(spark, dir)
     val misses0 = SessionArtifacts.counters.map { case (k, c) => k -> c(1) }
     SessionArtifacts.invalidate(spark, dir)
     val rederived = SimilarityQueries.q82IvfPqAnn(spark, dir).collect()
@@ -215,10 +215,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTestSession {
     assert(warm == rederived, "post-invalidation rerun must reproduce")
     // every kind was dropped, not only the three the q82 path reads
     DedupQueries.signedUniquesFor(spark, dir)
-    TextQueries.tokenizerFor(spark, dir, TextQueries.BpeRounds)
+    TextQueries.tokenizerFor(spark, dir)
     val misses = SessionArtifacts.counters.map { case (k, c) => k -> (c(1) - misses0(k)) }
     Seq("quantized", "pq_codebooks", "encoded_pq", "signed_uniques",
-      s"tokenizer_r${TextQueries.BpeRounds}")
+      SessionArtifacts.Tokenizer.name)
       .foreach(k => assert(misses(k) == 1, s"$k was not dropped: $misses"))
     // scoped: invalidating a dir this session never touched is a no-op
     SessionArtifacts.invalidate(spark, "/nonexistent/dir")
@@ -389,29 +389,26 @@ class SimilaritySpec extends AnyFunSuite with SparkTestSession {
     assert(got.nonEmpty)
   }
 
-  test("Lloyd codebook refinement: round 1 IS the q42 codebook; the " +
-      "quantization objective never increases with more rounds") {
+  test("IVF codebook training is bit-deterministic, and its Lloyd step " +
+      "never raises the quantization objective over the seed codebook") {
     val dir = "/root/testdata/sf0.001"
     val emb = SimilarityQueries.quantized(spark, dir).localCheckpoint()
     val vecs = emb.select("qv").collect().map(_.getSeq[Long](0).toArray)
-    def objective(cb: Array[(Int, Array[Long])]): BigInt =
+    def objective(cb: Seq[Array[Long]]): BigInt =
       vecs.map { v =>
-        cb.map { case (_, c) =>
-          v.zip(c).map { case (a, b) => BigInt(a - b) * BigInt(a - b) }.sum
-        }.min
+        cb.map(c => v.zip(c).map { case (a, b) => BigInt(a - b) * BigInt(a - b) }.sum).min
       }.sum
-    val codebooks = (1 to 4).map(r =>
-      SimilarityQueries.trainCodebook(emb, SimilarityQueries.IvfCells, r))
-    val objs = codebooks.map(objective)
-    // monotone modulo the centroid's truncating milli-division (sub-ppm
-    // relative rounding; exact Lloyd is strictly non-increasing)
-    objs.sliding(2).foreach { case Seq(a, b) =>
-      assert(b <= a + a / 1000000, s"objective rose: $objs")
-    }
-    assert(objs.last <= objs.head, objs)
-    // training is bit-deterministic: same input, same codebook
-    val again = SimilarityQueries.trainCodebook(emb, SimilarityQueries.IvfCells, 3)
-    assert(again.map(_._2.toSeq).toSeq == codebooks(2).map(_._2.toSeq).toSeq)
+    // the seed codebook: the qv of the lowest IvfCells vec_ids
+    val seeds = emb.orderBy("vec_id").limit(SimilarityQueries.IvfCells)
+      .select("qv").collect().map(_.getSeq[Long](0).toArray).toSeq
+    val cb = SimilarityQueries.trainCodebook(emb, SimilarityQueries.IvfCells)
+    val (seeded, trained) = (objective(seeds), objective(cb.map(_._2).toSeq))
+    // modulo the centroid's truncating milli-division (sub-ppm relative
+    // rounding; an exact Lloyd step is non-increasing)
+    assert(trained <= seeded + seeded / 1000000, s"objective rose: $seeded -> $trained")
+    // same input, same codebook
+    val again = SimilarityQueries.trainCodebook(emb, SimilarityQueries.IvfCells)
+    assert(again.map(_._2.toSeq).toSeq == cb.map(_._2.toSeq).toSeq)
   }
 
   test("q65 property differential: collapse-first == naive composition on " +
@@ -556,7 +553,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestSession {
       (5000000001L, Seq(0L, 10L), Seq(0f, 10f)),
       (5000000002L, Seq(-10L, -10L), Seq(-10f, -10f)),
     ).toDF("vec_id", "qv", "embedding")
-    val cb = SimilarityQueries.trainCodebook(tiny, cells = 8, rounds = 1)
+    val cb = SimilarityQueries.trainCodebook(tiny, cells = 8)
     assert(cb.length == 3)
     assert(cb.map(_._1).toSeq == Seq(0, 1, 2)) // dense cell ids
     // each vector is its own nearest seed, so one Lloyd round re-derives

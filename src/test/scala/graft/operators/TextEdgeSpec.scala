@@ -350,21 +350,17 @@ class TextEdgeSpec extends AnyFunSuite with SparkTestSession {
     assert(emoji.length == 2) // sanity: the corpus really is non-BMP
   }
 
-  test("spark.graft.decontam.grams re-parameterizes the gram length " +
-      "(oracle default 3 untouched): a 3-word overlap vanishes at 5") {
+  test("decontamination compares DecontamGrams = 3-word grams: a 3-word " +
+      "overlap hits") {
     import spark.implicits._
-    // train doc shares exactly 3 consecutive words with the benchmark —
-    // contaminated at the default 3-gram, clean at 5-gram (the published
-    // 8-13-gram regimes are stricter still)
+    // the train doc shares exactly 3 consecutive words with the benchmark:
+    // one of its five 3-grams
     val train = Seq((1L, "alpha shared three words beta gamma delta"))
       .toDF("doc_id", "text")
     val bench = Seq((2L, "totally different frame with shared three words inside"))
       .toDF("doc_id", "text")
-    def hits(): Long = TextQueries.contaminationCounts(train, bench)
-      .filter($"n_hits" > 0).count()
-    assert(hits() == 1L, "3-word overlap must hit at the default 3-gram")
-    spark.conf.set(TextQueries.DecontamGramsKey, "5")
-    try assert(hits() == 0L, "a 3-word overlap is invisible to 5-grams")
-    finally spark.conf.unset(TextQueries.DecontamGramsKey)
+    val got = TextQueries.contaminationCounts(train, bench).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(got == Seq((1L, 1L, 5L)), s"(doc_id, n_hits, n_grams): $got")
   }
 }

@@ -25,6 +25,12 @@ only specs reach (a parity reference, a test seam) reads apart from one
 nothing reaches at all. A dead container is printed alone, not with each
 of its members.
 
+After the members, the scan prints one `conf` line per `spark.graft.*`
+session key that src/main names in a string literal: where it is named,
+and how many `conf.set(...)`/`.config(...)` calls in src/test set it, by
+the literal or by the name of the `val` that holds it. A key only specs
+set is a tuning knob no surface varies.
+
 Scala sources are matched with their `//` and `/* */` comments (scaladoc
 included) stripped, so a name that only a comment mentions is not a
 caller. String and character literals are kept whole, so a `//` inside
@@ -58,6 +64,12 @@ ENTRY_ROOTS = {"catalog", "queries", "oracleSql", "entry"}
 SPECIAL = re.compile(r"\"|'|/[/*]")
 # a character literal: 'a', '\n', '\u0041'
 CHAR = re.compile(r"'(?:\\u[0-9A-Fa-f]{4}|\\.|[^'\\\n])'")
+# a spark.graft.* key literal, with the val that holds it, if any
+CONF_KEY = re.compile(
+    r"(?:\bval\s+(\w+)\s*(?::[^=\n]*)?=\s*)?\"(spark\.graft\.[\w.]+)\"")
+# a session-conf setter and its first argument: a literal or a name
+CONF_SET = re.compile(
+    r"\.(?:conf\.set|config)\(\s*(?:\"(spark\.graft\.[\w.]+)\"|(?:\w+\.)*(\w+))")
 
 
 def strip_comments(src, literals=None):
@@ -245,8 +257,27 @@ def scan(root):
     return out
 
 
+def conf_keys(root):
+    """One line per spark.graft.* key src/main names, in file order."""
+    found = []  # (path, line, key, holding val or None)
+    for path in files(root, "src/main/**/*.scala"):
+        text = read_scala(path)
+        for m in CONF_KEY.finditer(text):
+            line = text.count("\n", 0, m.start(2)) + 1
+            found.append((path, line, m.group(2), m.group(1)))
+    setters = [m.groups() for p in files(root, "src/test/**/*.scala")
+               for m in CONF_SET.finditer(read_scala(p))]
+    out = []
+    for path, line, key, holder in found:
+        n_set = sum(1 for lit, name in setters
+                    if lit == key or (holder is not None and name == holder))
+        out.append(f"conf {path.relative_to(root)}:{line} {key} "
+                   f"(src/test setters: {n_set})")
+    return out
+
+
 def main():
-    for line in scan(ROOT):
+    for line in scan(ROOT) + conf_keys(ROOT):
         print(line)
 
 

@@ -152,6 +152,35 @@ class CallerScanTest(unittest.TestCase):
             """)
         self.assertEqual(self.listed(), {})
 
+    def test_conf_keys_listed_with_their_spec_setter_counts(self):
+        self.write("src/main/scala/demo/Ops.scala", """\
+            package demo
+
+            object Ops {
+              // "spark.graft.commented" is named by a comment only
+              private[demo] val DirKey = "spark.graft.dir"
+              def live(x: Int): Int =
+                spark.conf.get("spark.graft.knob", "8").toInt +
+                  spark.conf.get(DirKey).length + x
+            }
+            """)
+        self.write("src/test/scala/demo/OpsSpec.scala", """\
+            package demo
+            class OpsSpec {
+              spark.conf.set(Ops.DirKey, "/tmp/a")
+              spark.conf.set("spark.graft.dir", "/tmp/b")
+              spark.conf.unset(Ops.DirKey)
+              SparkSession.builder().config("spark.graft.knob", "4")
+            }
+            """)
+        self.assertEqual(caller_scan.conf_keys(self.root), [
+            "conf src/main/scala/demo/Ops.scala:5 spark.graft.dir "
+            "(src/test setters: 2)",
+            "conf src/main/scala/demo/Ops.scala:7 spark.graft.knob "
+            "(src/test setters: 1)"])
+        # conf lines stay out of the member scan
+        self.assertEqual(self.listed(), {})
+
 
 if __name__ == "__main__":
     unittest.main()

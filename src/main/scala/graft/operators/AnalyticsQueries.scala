@@ -125,15 +125,6 @@ object AnalyticsQueries {
       .orderBy(col("user_id").asc, col("sess_id").asc)
   }
 
-  /** Q57 — deterministic train/val/test split: assignment from the first
-    * md5 hex byte of the doc key — 'cd' = 205/256 ≈ 80% train, 'e6' = 230
-    * /256 ≈ +10% val, remainder test. Like q50 this is a per-row pure
-    * function of the key: stable across engines, runs, partitionings, and
-    * retries, and — the property that matters operationally — ADDING new
-    * documents never reassigns an existing one (no shuffling docs across
-    * the train/test boundary as the corpus grows, which would leak test
-    * data into training). The split predicate is a plain filter, so at
-    * 100 TB each consumer pipeline pushes it into the parquet scan. */
   /** q57's deterministic split verdict for a doc_id — shared with q113's
     * leakage audit so retuning the boundaries ('cd'/'e6' — ~80/10/10)
     * cannot leave the audit checking a split the pipeline no longer uses
@@ -143,6 +134,15 @@ object AnalyticsQueries {
     when(h < "cd", "train").when(h < "e6", "val").otherwise("test")
   }
 
+  /** Q57 — deterministic train/val/test split: assignment from the first
+    * md5 hex byte of the doc key — 'cd' = 205/256 ≈ 80% train, 'e6' = 230
+    * /256 ≈ +10% val, remainder test. Like q50 this is a per-row pure
+    * function of the key: stable across engines, runs, partitionings, and
+    * retries, and — the property that matters operationally — ADDING new
+    * documents never reassigns an existing one (no shuffling docs across
+    * the train/test boundary as the corpus grows, which would leak test
+    * data into training). The split predicate is a plain filter, so at
+    * 100 TB each consumer pipeline pushes it into the parquet scan. */
   def q57TrainTestSplit(spark: SparkSession, dir: String): DataFrame = {
     Tables.documents(spark, dir)
       .withColumn("split", splitCol)

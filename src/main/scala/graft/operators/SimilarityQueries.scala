@@ -24,9 +24,9 @@ object SimilarityQueries {
   val QueryCount = 20
   val TopK = 5
 
-  /** Quantized vector column: BIGINT per dim, exact in both engines. */
   /** Milli-quantization of a float embedding column — the shared integer
-    * representation every similarity op scores in. try_cast, not cast:
+    * representation every similarity op scores in: BIGINT per dim, exact
+    * in both engines. try_cast, not cast:
     * Catalyst fuses this projection with the [[finiteVec]] filter and
     * subexpression elimination can evaluate it on rows the filter is
     * about to DROP — an ANSI cast of a NaN/Inf component would then kill

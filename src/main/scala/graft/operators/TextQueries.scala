@@ -497,13 +497,19 @@ object TextQueries {
     * non-overlapping, which IS BPE's greedy merge order, and the brackets
     * make a symbol-boundary-crossing match impossible.
     *
-    * Scale shape: one corpus scan builds the vocab census; every round is
-    * one vocab-sized census job + a 1-ROW collect (the argmax — the q95
-    * bounded-collect discipline) + a narrow projection, with the vocab
-    * [[Materialize]]d every [[BpeCheckpointEvery]] rounds (bounded-depth
-    * lineage cut — ≤ 3 chained `replace` projections — so the loop stays
-    * reliable-checkpoint safe on a cluster without paying a checkpoint
-    * round-trip per round; r17, VERDICT r16 #3).
+    * Scale shape: the corpus-sized work (normalize, split, the (word, freq)
+    * group-by) is one distributed aggregate; its result is collected ONCE
+    * and every merge round runs on the driver in [[trainMerges]]. The
+    * census grows with the number of distinct words, not with corpus
+    * bytes: a round over sf0.1's 31 words is microseconds of driver work
+    * where a distributed round paid two jobs and ~50 ms of planning, a
+    * constructed census of 10^6 distinct words (7.4 M chars) trained 8
+    * rounds in about 5 s on one core of a 4-core host, and the loop needs
+    * no checkpoint. The reference `learn_bpe.py` holds the same table in
+    * one process. Here the driver heap bounds the census: the collected
+    * rows, the encoded words and one round's pair counts are all held
+    * there at once (DEPLOY.md). BpeSpec keeps the distributed round loop
+    * as the parity reference.
     * Like q94, the entry is EAGER at construction (the loop must run to
     * know the merges). Early-exhaustion (no pairs left) stops the loop;
     * the oracle's per-round scalar subqueries go empty at the same round,
@@ -512,73 +518,56 @@ object TextQueries {
     bpeTrain(Tables.documents(spark, dir).filter(col("text").isNotNull), BpeRounds)
 
   /** The q101 body over ANY (text) frame: the tokenizer builds and
-    * BpeSpec's hand-computed corpora train through it. At [[BpeRounds]] = 8
-    * a call pays 3 checkpoint jobs: the vocab census, then the vocab after
-    * rounds 3 and 6 (none after the final round). */
+    * BpeSpec's hand-computed corpora train through it. One job collects
+    * the vocab census; no round runs a job or a checkpoint. */
   private[graft] def bpeTrain(docs: DataFrame, rounds: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    var vocab = Materialize.materialize(docs
+    val vocab = docs
       .select(explode(split(WebCurationQueries.normalizeText(col("text")), " ")).as("word"))
       .filter(col("word") =!= "")
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-      .select(regexp_replace(col("word"), "(.)", "<$1>").as("enc"), col("freq")))
-    val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-    var r = 1
-    var exhausted = false
-    // r17 (VERDICT r16 #3, guide §2.4/§5): the r16 form Materialized the
-    // vocab after EVERY merge — 8 synchronous vocab-sized checkpoint jobs
-    // per call, one of them (after the final round) never read again. A
-    // merge is ONE narrow `replace` projection, so letting up to
-    // [[BpeCheckpointEvery]] of them chain keeps lineage bounded (≤ 3
-    // projections above the last checkpoint — still reliable-checkpoint
-    // safe on a cluster) while each round's census job re-evaluates at most
-    // 2 cheap replaces instead of paying a checkpoint round-trip per round.
-    // The data is identical at every round (same logical vocab), so merges
-    // — and the oracle hashes — are bit-for-bit unchanged.
-    var sinceCheckpoint = 0
-    while (r <= rounds && !exhausted) {
-      // The pair lambda stays here: routing this vocab-sized census through
-      // adjacentGrams measured q101 no faster (perfbench batch_loops, median
-      // 0.96 -> 1.02 s over 6 interleaved pairs). Each round's plan is new
-      // code (the merged literals change), so the likely cause is compiling
-      // the larger fused stage every round.
-      val top = vocab
-        .select(col("freq"),
-          split(expr("substring(enc, 2, length(enc) - 2)"), "><").as("s"))
-        .filter(size(col("s")) >= 2)
-        .select(col("freq"), explode(expr(
-          "transform(sequence(1, size(s) - 1), i -> concat('<', element_at(s, i), '><', element_at(s, i + 1), '>'))"))
-          .as("pair"))
-        .groupBy(col("pair")).agg(sum(col("freq")).as("n"))
-        .orderBy(col("n").desc, col("pair").asc)
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val pair = top(0).getString(0)
-        val mergedEnc = pair.replace("><", "") // "<a><b>" -> "<ab>"
-        merges += ((r, pair, mergedEnc.substring(1, mergedEnc.length - 1),
-          top(0).getLong(1)))
-        val next = vocab.select(
-          replace(col("enc"), lit(pair), lit(mergedEnc)).as("enc"), col("freq"))
-        sinceCheckpoint += 1
-        // no checkpoint after the final round: the loop exits and the
-        // frame is never read again (the r16 form paid that job for nothing)
-        vocab =
-          if (sinceCheckpoint >= BpeCheckpointEvery && r < rounds) {
-            sinceCheckpoint = 0
-            Materialize.materialize(next)
-          } else next
-        r += 1
-      }
-    }
-    merges.toSeq.toDF("step", "pair", "merged", "n").orderBy(col("step").asc)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    trainMerges(vocab, rounds).toDF("step", "pair", "merged", "n").orderBy(col("step").asc)
   }
 
-  /** Merge rounds allowed to chain lazily between vocab checkpoints in
-    * [[bpeTrain]] — bounds lineage depth (cluster restartability) while
-    * cutting the per-round checkpoint round-trip (r17, VERDICT r16 #3). */
-  private val BpeCheckpointEvery = 3
+  /** The merge rounds over a collected (word, freq) census, in the
+    * oracle's arithmetic: bracket-encode each word, sum `freq` per
+    * adjacent pair as Long, take the argmax by (n desc, pair asc) — String
+    * order is byte order on the [a-z0-9&lt;&gt;] alphabet, as in Spark
+    * and DuckDB — and apply it with a left-to-right non-overlapping
+    * `replace`. Stops early when no word has two symbols left. */
+  private[operators] def trainMerges(vocab: Seq[(String, Long)],
+      rounds: Int): Seq[(Int, String, String, Long)] = {
+    val enc = vocab.map { case (w, _) => w.flatMap(c => s"<$c>") }.toArray
+    val freq = vocab.map(_._2).toArray
+    val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
+    var exhausted = false
+    while (merges.length < rounds && !exhausted) {
+      val counts = scala.collection.mutable.HashMap[String, Long]().withDefaultValue(0L)
+      for (i <- enc.indices) {
+        // each pair is two neighbouring symbols; symbol k spans from its
+        // '<' to the next one, so a pair is a substring of the encoding
+        val e = enc(i)
+        var a = 0
+        var b = e.indexOf('<', 1)
+        while (b > 0) {
+          val c = e.indexOf('<', b + 1)
+          counts(e.substring(a, if (c < 0) e.length else c)) += freq(i)
+          a = b
+          b = c
+        }
+      }
+      if (counts.isEmpty) exhausted = true
+      else {
+        val (pair, n) = counts.minBy { case (p, n) => (-n, p) }
+        val mergedEnc = pair.replace("><", "") // "<a><b>" -> "<ab>"
+        merges += ((merges.length + 1, pair, mergedEnc.substring(1, mergedEnc.length - 1), n))
+        for (i <- enc.indices) enc(i) = enc(i).replace(pair, mergedEnc)
+      }
+    }
+    merges.toSeq
+  }
 
   /** DuckDB twin of [[q101BpeTrain]], generated by the same round loop
     * (the q95 CTE-stage discipline): per round a pair census, a LIMIT 1
@@ -679,8 +668,8 @@ object TextQueries {
   /** The tokenizer for a catalog entry: the frozen artifact when
     * [[BpeDirKey]] is set, else trained once per session
     * ([[SessionArtifacts]]). q104, q106 and q108 tokenize the same corpus
-    * with the same tokenizer; retraining inline cost them 3 × 8 Materialize
-    * rounds in their timed windows (VERDICT r10 #1). q101, whose job is to
+    * with the same tokenizer; retraining inline cost them three trainings
+    * in their timed windows (VERDICT r10 #1). q101, whose job is to
     * time training, calls [[bpeTrain]] directly. */
   private[graft] def tokenizerFor(spark: SparkSession, dir: String): Seq[BpeMerge] =
     spark.conf.getOption(BpeDirKey) match {
@@ -1528,9 +1517,9 @@ object TextQueries {
     * Scale shape: the heavy work — q116's census chain — runs ONCE,
     * distributed; the iteration state is |domains| rows (a catalog-sized
     * dimension), so the seed COLLECTS like a codebook / q101 merge table
-    * (the bounded-collect discipline; q101 itself collects one row per
-    * training round) and the [[DoremiRounds]] integer rounds run
-    * driver-side — a distributed loop here would pay a checkpoint
+    * (the bounded-collect discipline; q101 collects its word census the
+    * same way) and the [[DoremiRounds]] integer rounds run driver-side,
+    * as q101's merge rounds do — a distributed loop here would pay a checkpoint
     * round-trip per round to move ≤ a few hundred integers (measured:
     * the Materialize-per-round form spent ~1.4 s of its 2.35 s sf0.1
     * wall on 20-row checkpoints). Output is (rounds+1)·|domains| rows

@@ -524,7 +524,7 @@ object WebCurationQueries {
     * the weight census, and scoring; the rarityScores discipline). The
     * class totals are a 1-row broadcast; the weight table is ≤ 4096 rows
     * — scoring is a BROADCAST hash join + one groupBy(doc_id). Nothing
-    * driver-side; eager at build like q94/q101 (the Materialize).
+    * driver-side; eager at build like q94 (the Materialize).
     * Precondition: both classes non-empty (a one-class corpus divides by
     * zero — Spark yields NULL, DuckDB errors). Docs with < 1 bigram drop
     * (declared, mirrored in the oracle). */

@@ -10,9 +10,48 @@ import org.scalatest.funsuite.AnyFunSuite
 class BpeSpec extends AnyFunSuite with SparkTestSession {
   import spark.implicits._
 
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
+
   private def train(texts: Seq[String], rounds: Int) =
-    TextQueries.bpeTrain(texts.toDF("text"), rounds).collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
+    rows(TextQueries.bpeTrain(texts.toDF("text"), rounds))
+
+  /** The distributed round loop q101 ran before it trained on the driver,
+    * kept as the parity reference: per round one vocab-sized pair census,
+    * a 1-row argmax collect and a `replace` re-encode of the Materialized
+    * census (≤ `rounds` chained projections). */
+  private def distributedTrain(docs: org.apache.spark.sql.DataFrame, rounds: Int) = {
+    import org.apache.spark.sql.functions._
+    var vocab = Materialize.materialize(docs
+      .select(explode(split(WebCurationQueries.normalizeText(col("text")), " ")).as("word"))
+      .filter(col("word") =!= "")
+      .groupBy(col("word")).agg(count(lit(1)).as("freq"))
+      .select(regexp_replace(col("word"), "(.)", "<$1>").as("enc"), col("freq")))
+    val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
+    var exhausted = false
+    while (merges.length < rounds && !exhausted) {
+      val top = vocab
+        .select(col("freq"),
+          split(expr("substring(enc, 2, length(enc) - 2)"), "><").as("s"))
+        .filter(size(col("s")) >= 2)
+        .select(col("freq"), explode(expr(
+          "transform(sequence(1, size(s) - 1), i -> concat('<', element_at(s, i), '><', element_at(s, i + 1), '>'))"))
+          .as("pair"))
+        .groupBy(col("pair")).agg(sum(col("freq")).as("n"))
+        .orderBy(col("n").desc, col("pair").asc)
+        .limit(1).collect()
+      if (top.isEmpty) exhausted = true
+      else {
+        val pair = top(0).getString(0)
+        val mergedEnc = pair.replace("><", "")
+        merges += ((merges.length + 1, pair,
+          mergedEnc.substring(1, mergedEnc.length - 1), top(0).getLong(1)))
+        vocab = vocab.select(
+          replace(col("enc"), lit(pair), lit(mergedEnc)).as("enc"), col("freq"))
+      }
+    }
+    merges.toSeq
+  }
 
   test("merge sequence matches hand computation, including ties and merged symbols") {
     // vocab: low:3 lower:1 newest:1
@@ -60,6 +99,27 @@ class BpeSpec extends AnyFunSuite with SparkTestSession {
     val got = train(Seq("LOW! low", "l-o-w"), 1)
     // vocab: low:2, low:1 -> 'low':2 plus 'low' from stripped dashes = 3
     assert(got === Seq((1, "<l><o>", "lo", 3L)))
+  }
+
+  test("driver training equals the distributed round loop (real corpora, merge-made top pairs, ties)") {
+    import org.apache.spark.sql.functions.col
+    for (sf <- Seq("sf0.001", "sf0.01")) {
+      val docs = Tables.documents(spark, s"/root/testdata/$sf").filter(col("text").isNotNull)
+      val got = rows(TextQueries.bpeTrain(docs, TextQueries.BpeRounds))
+      assert(got.length === TextQueries.BpeRounds, sf)
+      assert(got === distributedTrain(docs, TextQueries.BpeRounds), sf)
+    }
+    // (o,w)=6 wins r1; r2's top pair (l,ow)=5 exists only after that
+    // merge; rounds 4, 6-8 and 10-12 each pick among 2 to 10 pairs tied at
+    // the top count, so the (n desc, pair asc) tie-break decides them
+    val texts = Seq("low lower", "low newest", "low", "widest newer wider",
+      "the lowest tower")
+    val docs = texts.toDF("text")
+    val got = train(texts, 12)
+    assert(got.take(4) === Seq((1, "<o><w>", "ow", 6L), (2, "<l><ow>", "low", 5L),
+      (3, "<e><r>", "er", 4L), (4, "<e><s>", "es", 3L)))
+    assert(got.length === 12)
+    assert(got === distributedTrain(docs, 12))
   }
 
   private def encode(docs: Seq[(Long, String)], rounds: Int) =
